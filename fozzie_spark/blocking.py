@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame, functions as F
 #: auto prefix-filter gate (see `use_prefix_filter`): inputs whose combined
 #: distinct-key count is below this use the round-2 share-any-gram join —
 #: the prefix machinery's fixed-cost stages (global gram-df aggregation,
-#: per-key sort, second profile join) don't amortize on small inputs, and
-#: the post-filter candidate set is IDENTICAL either way.
+#: per-key sort, second profile join) don't amortize on small inputs. The
+#: two routes emit DIFFERENT candidate sets (each a lossless superset of
+#: the matches); the matches after exact scoring are identical.
 PREFIX_AUTO_KEY_THRESHOLD = 50_000
 #: inputs whose optimizer plan stats exceed this many bytes skip the count
 #: job entirely and go straight to the prefix path (stats unknown => large)
@@ -51,7 +52,7 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
 #: semanticHash fingerprints the logical plan, so in-place mutation of the
 #: same external path is the only staleness case (same caveat the resume
 #: fingerprint in checkpoint.py documents).
-_PREFIX_DECISION_CACHE: dict[tuple, bool] = {}
+_PREFIX_DECISION_CACHE: dict[tuple, dict] = {}
 _PREFIX_CACHE_MAX = 4096
 
 #: tiny-input cross route (see `use_tiny_cross`): when BOTH sides'
@@ -90,27 +91,44 @@ def _union_count(lkeys: DataFrame, rkeys: DataFrame) -> int:
     return total
 
 
-def use_tiny_cross(lkeys: DataFrame, rkeys: DataFrame) -> bool:
-    """True iff the combined distinct-key count is small enough that the
-    scored cross product is the cheapest physical plan (candidate
-    SUPERSET; the exact scorers keep match results identical). Stats
-    first: a side estimated past the bytes gate answers False without any
-    job; small plans pay one memoized count shared with
-    `use_prefix_filter`."""
+def _decision(gate: str, keys, sizes, threshold: int, route: str) -> dict:
+    """Structured record of one auto-gate decision: the gate, what it
+    measured (combined distinct keys when it counted, else None; each
+    side's plan-stats bytes, None when unknown), its threshold, the route."""
+    return {"gate": gate, "keys": keys, "plan_bytes": sizes,
+            "threshold": threshold, "route": route}
+
+
+def tiny_cross_gate(lkeys: DataFrame, rkeys: DataFrame) -> dict:
+    """Decision record of the tiny-input cross gate: route "tiny_cross"
+    iff the combined distinct-key count is small enough that the scored
+    cross product is the cheapest physical plan (candidate SUPERSET; the
+    exact scorers keep match results identical), else "index". Stats
+    first: a side estimated past the bytes gate declines without any job;
+    small plans pay one memoized count shared with `prefix_gate`."""
     sizes = [_plan_size_bytes(df) for df in (lkeys, rkeys)]
     if any(sz is None or sz > _TINY_CROSS_BYTES_THRESHOLD for sz in sizes):
-        return False
-    return _union_count(lkeys, rkeys) <= TINY_CROSS_KEY_THRESHOLD
+        return _decision("tiny_cross", None, sizes, TINY_CROSS_KEY_THRESHOLD, "index")
+    n = _union_count(lkeys, rkeys)
+    route = "tiny_cross" if n <= TINY_CROSS_KEY_THRESHOLD else "index"
+    return _decision("tiny_cross", n, sizes, TINY_CROSS_KEY_THRESHOLD, route)
 
 
-def use_prefix_filter(lkeys: DataFrame, rkeys: DataFrame) -> bool:
-    """Resolve prefix_mode='auto': True => run the Ed-Join/PPJoin prefix
-    machinery, False => the share-any-gram join is already cheap enough.
+def use_tiny_cross(lkeys: DataFrame, rkeys: DataFrame) -> bool:
+    """True iff `tiny_cross_gate` routes to the scored cross product."""
+    return tiny_cross_gate(lkeys, rkeys)["route"] == "tiny_cross"
+
+
+def prefix_gate(lkeys: DataFrame, rkeys: DataFrame) -> dict:
+    """Decision record resolving prefix_mode='auto': route "prefix" =>
+    run the Ed-Join/PPJoin prefix machinery, "share_any_gram" => the
+    share-any-gram join is already cheap enough.
 
     Decision costs nothing at scale: optimizer plan stats (propagated from
     the parquet scan sizes) short-circuit known-large inputs to the prefix
-    path WITHOUT running a job; small-by-stats plans pay two cheap count
-    jobs, and unknown-stats plans (e.g. LogicalRDD from createDataFrame —
+    path WITHOUT running a job; small-by-stats plans pay one memoized
+    count job (`_union_count`, shared with the tiny-cross gate), and
+    unknown-stats plans (e.g. LogicalRDD from createDataFrame —
     driver-resident, so counting is trivial) also resolve by counting.
     Resolved decisions are memoized per input-plan pair, so repeated joins
     over the same inputs count once.
@@ -128,15 +146,23 @@ def use_prefix_filter(lkeys: DataFrame, rkeys: DataFrame) -> bool:
         return _PREFIX_DECISION_CACHE[cache_key]
     sizes = [_plan_size_bytes(df) for df in (lkeys, rkeys)]
     if any(sz is not None and sz > PREFIX_AUTO_BYTES_THRESHOLD for sz in sizes):
-        decision = True
+        decision = _decision(
+            "prefix_auto", None, sizes, PREFIX_AUTO_BYTES_THRESHOLD, "prefix"
+        )
     else:
-        # one memoized job, shared with the tiny-cross gate
-        decision = _union_count(lkeys, rkeys) >= PREFIX_AUTO_KEY_THRESHOLD
+        n = _union_count(lkeys, rkeys)
+        route = "prefix" if n >= PREFIX_AUTO_KEY_THRESHOLD else "share_any_gram"
+        decision = _decision("prefix_auto", n, sizes, PREFIX_AUTO_KEY_THRESHOLD, route)
     if cache_key is not None:
         if len(_PREFIX_DECISION_CACHE) >= _PREFIX_CACHE_MAX:
             _PREFIX_DECISION_CACHE.clear()
         _PREFIX_DECISION_CACHE[cache_key] = decision
     return decision
+
+
+def use_prefix_filter(lkeys: DataFrame, rkeys: DataFrame) -> bool:
+    """True iff `prefix_gate` routes prefix_mode='auto' to the prefix plans."""
+    return prefix_gate(lkeys, rkeys)["route"] == "prefix"
 
 
 def qgrams_col(col: str, q: int):
@@ -156,6 +182,21 @@ def _gram_counts(keys: DataFrame, key: str, q: int) -> DataFrame:
         keys.select(key, F.explode(qgrams_col(key, q)).alias("__fz_g"))
         .groupBy(key, "__fz_g")
         .agg(F.count(F.lit(1)).alias("__fz_c"))
+    )
+
+
+def _gram_overlap(lkeys: DataFrame, rkeys: DataFrame, lkey: str, rkey: str, q: int, term):
+    """(lkey, rkey, __fz_m) for every pair sharing at least one q-gram, with
+    __fz_m = SUM over the shared grams of term(left count, right count):
+    F.least gives the multiset overlap, a product the count-vector dot
+    product. The exact integer aggregate the share-any-gram routes verify
+    their candidates with."""
+    lg = _gram_counts(lkeys, lkey, q).withColumnRenamed("__fz_c", "__fz_cl")
+    rg = _gram_counts(rkeys, rkey, q).withColumnRenamed("__fz_c", "__fz_cr")
+    return (
+        lg.join(rg, "__fz_g")
+        .groupBy(lkey, rkey)
+        .agg(F.sum(term(F.col("__fz_cl"), F.col("__fz_cr"))).alias("__fz_m"))
     )
 
 
@@ -317,20 +358,14 @@ def edit_candidates(
 
     if prefix_mode == "simple":
         # share-any-gram inverted index + SUM(min(count)) threshold
-        lg = _gram_counts(lkeys, lkey, q).withColumnRenamed("__fz_c", "__fz_cl")
-        rg = _gram_counts(rkeys, rkey, q).withColumnRenamed("__fz_c", "__fz_cr")
-        shared = (
-            lg.join(rg, "__fz_g")
-            .groupBy(lkey, rkey)
-            .agg(F.sum(F.least("__fz_cl", "__fz_cr")).alias("__fz_shared"))
-        )
         long_pairs = (
-            shared.withColumn("__fz_ll", F.length(lkey))
+            _gram_overlap(lkeys, rkeys, lkey, rkey, q, F.least)
+            .withColumn("__fz_ll", F.length(lkey))
             .withColumn("__fz_rl", F.length(rkey))
             .filter(F.greatest("__fz_ll", "__fz_rl") >= short_cut)
             .filter(F.abs(F.col("__fz_ll") - F.col("__fz_rl")) <= tau)
             .filter(
-                F.col("__fz_shared")
+                F.col("__fz_m")
                 >= F.greatest("__fz_ll", "__fz_rl") - q + 1 - damage * tau
             )
             .select(lkey, rkey)
@@ -397,6 +432,10 @@ def ngram_candidates(
     AllPairs for cosine) and the round-2 share-any-gram join; the candidate
     sets differ but the post-verification MATCHES are identical, and 'auto'
     routes small inputs to the cheaper simple plan (`use_prefix_filter`).
+    The share-any-gram join verifies each pair on integer aggregates of the
+    join itself (shared-gram count, multiset overlap, dot product), so it
+    emits the pairs within tau (up to 1e-9 float slack) plus the
+    small/empty-profile blocks — not every pair that shares a gram.
     """
     if method == "cosine" and max_distance >= 1.0:
         return lkeys.select(lkey).crossJoin(rkeys.select(rkey))
@@ -434,17 +473,33 @@ def ngram_candidates(
         )
         return pairs.unionByName(_empty_profile_pairs(lsets, rsets, lkey, rkey, q))
 
-    lx = lsets.select(lkey, F.size("__fz_gs").alias("__fz_nl"), F.explode("__fz_gs").alias("__fz_g"))
-    rx = rsets.select(rkey, F.size("__fz_gs2").alias("__fz_nr"), F.explode("__fz_gs2").alias("__fz_g"))
-    pairs = lx.join(rx, "__fz_g").select(lkey, rkey, "__fz_nl", "__fz_nr").distinct()
-
     if method == "jaccard":
-        # reached at tau >= 1 (every shared-gram pair matches; size bound
-        # vacuous) or in 'simple' mode (small input: share-any-gram join)
-        pairs = pairs.filter(
-            F.lit(1.0)
-            - F.least("__fz_nl", "__fz_nr") / F.greatest("__fz_nl", "__fz_nr")
-            <= max_distance
+        # share-any-gram join — reached at tau >= 1 or in 'simple' mode —
+        # verified exactly: grams are distinct per key, so a pair's join
+        # rows count |A ∩ B| (the shared-gram count the reference's index
+        # scores from, jaccard.rs:118-177). The size-bound prune
+        # 1 - min/max <= tau reads only the two set sizes and runs inside
+        # the join, before the count.
+        lx = lsets.select(
+            lkey, F.size("__fz_gs").alias("__fz_nl"), F.explode("__fz_gs").alias("__fz_g")
+        )
+        rx = rsets.select(
+            rkey, F.size("__fz_gs2").alias("__fz_nr"), F.explode("__fz_gs2").alias("__fz_g")
+        )
+        inter = F.col("__fz_i").cast("double")
+        pairs = (
+            lx.join(rx, "__fz_g")
+            .filter(
+                F.lit(1.0)
+                - F.least("__fz_nl", "__fz_nr") / F.greatest("__fz_nl", "__fz_nr")
+                <= max_distance
+            )
+            .groupBy(lkey, rkey, "__fz_nl", "__fz_nr")
+            .agg(F.count(F.lit(1)).alias("__fz_i"))
+            .filter(
+                F.lit(1.0) - inter / (F.col("__fz_nl") + F.col("__fz_nr") - inter)
+                <= max_distance + 1e-9
+            )
         )
         extra = _empty_profile_pairs(lsets, rsets, lkey, rkey, q)
         return pairs.select(lkey, rkey).unionByName(extra)
@@ -470,32 +525,56 @@ def ngram_candidates(
             .select(lkey, rkey)
         )
         if prefix_mode == "simple":
-            cand = pairs.select(lkey, rkey)
+            # share-any-gram join verified exactly: the qgram distance is
+            # the multiset L1 distance t1 + t2 - 2 * SUM(min(c1, c2))
+            cand = (
+                _gram_overlap(lkeys, rkeys, lkey, rkey, q, F.least)
+                .join(lc, lkey)
+                .join(rc, rkey)
+                .filter(F.col("__fz_tl") + F.col("__fz_tr") - 2 * F.col("__fz_m") <= tau)
+            )
         else:
             # PREFIX-FILTERED index: each distinct gram missing from the
             # other side contributes >= 1 to the qgram distance, so dist <=
             # tau bounds either side's distinct-set difference by tau —
             # rarity-ordered prefixes of length tau + 1 must intersect
             # (lossless; pairs with NO shared gram have dist T1 + T2,
-            # covered by the `small` block).
+            # covered by the `small` block). Prune: qgram dist >= |t1 - t2|.
             lp, rp = _rarity_prefix_tokens(
                 lkeys, rkeys, lkey, rkey, q, lambda n: F.least(n, F.lit(int(tau) + 1))
             )
-            cand = lp.join(rp, "__fz_g").select(lkey, rkey).distinct()
-        # prune: qgram dist >= |t1 - t2|
-        sized = (
-            cand.join(lc, lkey)
-            .join(rc, rkey)
-            .filter(F.abs(F.col("__fz_tl") - F.col("__fz_tr")) <= tau)
-            .select(lkey, rkey)
-        )
-        return sized.unionByName(small).distinct()
+            cand = (
+                lp.join(rp, "__fz_g")
+                .select(lkey, rkey)
+                .distinct()
+                .join(lc, lkey)
+                .join(rc, rkey)
+                .filter(F.abs(F.col("__fz_tl") - F.col("__fz_tr")) <= tau)
+            )
+        return cand.select(lkey, rkey).unionByName(small).distinct()
 
     # cosine (tau < 1)
     if prefix_mode == "simple":
-        # small input: shared-gram pairs (the reference's index shape,
-        # jaccard.rs:118-177 applied to cosine)
-        return pairs.select(lkey, rkey)
+        # share-any-gram join (the reference's index shape, jaccard.rs:
+        # 118-177 applied to cosine) verified exactly on the count-vector
+        # dot product: dist <= tau <=> a.b >= (1 - tau) * |a| * |b|
+        def _sq_norm(keys: DataFrame, key: str, alias: str) -> DataFrame:
+            return (
+                _gram_counts(keys, key, q)
+                .groupBy(key)
+                .agg(F.sum(F.col("__fz_c") * F.col("__fz_c")).alias(alias))
+            )
+
+        return (
+            _gram_overlap(lkeys, rkeys, lkey, rkey, q, lambda a, b: a * b)
+            .join(_sq_norm(lkeys, lkey, "__fz_sl"), lkey)
+            .join(_sq_norm(rkeys, rkey, "__fz_sr"), rkey)
+            .filter(
+                F.col("__fz_m")
+                >= F.lit(1.0 - max_distance) * F.sqrt("__fz_sl") * F.sqrt("__fz_sr") - 1e-9
+            )
+            .select(lkey, rkey)
+        )
     return _cosine_prefix_candidates(lkeys, rkeys, lkey, rkey, max_distance, q)
 
 

@@ -15,14 +15,20 @@ Catalyst executes as shuffled-hash/broadcast joins with AQE skew handling.
 
 from __future__ import annotations
 
+import logging
+import threading
+
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from fozzie_spark import blocking
 from fozzie_spark.distances import EDIT_METHODS, METHODS, NGRAM_METHODS
 from fozzie_spark.merge import materialize
 from fozzie_spark.scoring import score_string_pairs, string_distance_udf
 from fozzie_spark.util import F64_EPS, normalize_by
+
+_log = logging.getLogger("fozzie_spark.joins")
 
 _NUMERIC_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double", "decimal")
 
@@ -125,9 +131,18 @@ def fuzzy_string_join(
     `prefix_mode` ('auto' | 'prefix' | 'simple'): physical strategy for the
     gram-index blocking stage. 'prefix' runs the hot-gram-proof
     Ed-Join/PPJoin/AllPairs prefix filters (the 100-TB plan); 'simple' runs
-    the two-shuffle share-any-gram join (fastest on small inputs); 'auto'
-    routes by input size (blocking.use_prefix_filter). Match results are
-    identical in every mode.
+    the share-any-gram join with an exact integer verify (fastest on small
+    inputs); 'auto' routes by combined distinct-key count
+    (blocking.prefix_gate: 'simple' below 50k keys). Whatever the mode,
+    inputs of at most 1k combined distinct keys take the scored cross
+    product instead (blocking.tiny_cross_gate). The candidate sets differ
+    between routes; the match results are identical.
+
+    Each call logs one decision record at DEBUG on logger
+    "fozzie_spark.joins" (the deciding gate, the key count it measured,
+    its threshold and the chosen route, also as `record.fz_decision`),
+    and a second one carrying the observed `raw_candidates` once the
+    returned frame's first action has run.
     """
     if method not in METHODS:
         raise ValueError(f"unknown method {method!r}")
@@ -156,10 +171,19 @@ def fuzzy_string_join(
     # gram sit at distance exactly 1.0 and are NOT emitted, a property of
     # the share-a-gram index itself — so that combination keeps its
     # blocking path.
+    if method == "jaccard" and max_distance >= 1:
+        decision = {"gate": None, "keys": None, "plan_bytes": None, "threshold": None,
+                    "route": "share_any_gram"}
+    else:
+        decision = blocking.tiny_cross_gate(l0, r0)
     if (
-        not (method == "jaccard" and max_distance >= 1)
-        and blocking.use_tiny_cross(l0, r0)
+        decision["route"] != "tiny_cross"
+        and prefix_mode == "auto"
+        and _prefix_gated(method, max_distance, gram_filter)
     ):
+        decision = blocking.prefix_gate(l0, r0)
+        prefix_mode = "prefix" if decision["route"] == "prefix" else "simple"
+    if decision["route"] == "tiny_cross":
         cand = l0.crossJoin(r0)
     elif method in EDIT_METHODS:
         cand = blocking.edit_candidates(
@@ -177,6 +201,23 @@ def fuzzy_string_join(
         cand = blocking.jaro_candidates(
             l0, r0, "__fz_l0", "__fz_r0", max_distance, prefix_weight=prefix_weight
         )
+
+    # end of blocking: every scorer below runs once per DISTINCT candidate.
+    # The scoring filters are deterministic and read only the key columns,
+    # so without this CollectMetrics node Catalyst pushes them below the
+    # builders' dedup and into the raw gram-join condition (one exact
+    # score per raw join row); it does not push filters through it. The
+    # q-gram scorers are interpreted lambda stacks, so scoring every raw
+    # join row dominated those joins; lv's banded levenshtein is cheap and
+    # used to prune the raw join, so lv's count aggregate now sees every
+    # raw row instead.
+    obs = Observation()
+    cand = cand.observe(obs, F.count(F.lit(1)).alias("raw_candidates"))
+    if _log.isEnabledFor(logging.DEBUG):
+        record = {"method": method, **decision, "prefix_mode": prefix_mode}
+        _log.debug("fuzzy_string_join decision: %s", record, extra={"fz_decision": record})
+        # the count exists only once the caller's first action has run
+        threading.Thread(target=_log_observed, args=(obs, record), daemon=True).start()
 
     pairs = _expand_tuples(cand, lkeys, rkeys, len(by_pairs))
     if scoring_partitions:
@@ -196,6 +237,29 @@ def fuzzy_string_join(
     dist_names = _dist_names(distance_col, by_pairs)
     matches = _finalize(matches, internal, dist_names)
     return materialize(left, right, by_pairs, matches, how, dist_names, suffixes)
+
+
+def _prefix_gated(method: str, max_distance: float, gram_filter: bool) -> bool:
+    """True iff the method's candidate builder runs a gram index whose
+    physical plan `prefix_mode` picks (the prefix_auto gate applies)."""
+    if method in EDIT_METHODS:
+        return gram_filter and method != "hamming"
+    # jaccard at tau >= 1 always takes the share-any-gram join; cosine at
+    # tau >= 1 is the cross join
+    return method == "qgram" or (method in NGRAM_METHODS and max_distance < 1)
+
+
+def _log_observed(obs: Observation, record: dict) -> None:
+    """Log `record` again with the observed raw candidate count. Blocks
+    until the observed frame's first action has finished; a frame that
+    never runs (or whose empty candidate subtree AQE prunes) leaves its
+    daemon thread waiting until the session stops or the process exits."""
+    try:
+        record = {**record, "raw_candidates": obs.get["raw_candidates"]}
+    except Py4JError:
+        _log.debug("fuzzy_string_join: no observed count for %s", record, exc_info=True)
+        return
+    _log.debug("fuzzy_string_join observed: %s", record, extra={"fz_decision": record})
 
 
 def _make_directional(base, how):

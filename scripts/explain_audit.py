@@ -1,7 +1,9 @@
 """Physical-plan audit for the headline queries: prints each plan's
 operator inventory and flags the anti-patterns the engine promises to
 avoid (CartesianProduct / BroadcastNestedLoopJoin on paths that must be
-equi-joins, missing whole-stage codegen, full-column parquet scans).
+equi-joins, an exact string scorer evaluated inside a join condition —
+once per raw join row instead of once per distinct candidate — missing
+whole-stage codegen, full-column parquet scans).
 
     python scripts/explain_audit.py [sf_dir]
 """
@@ -15,6 +17,16 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+#: expressions only the exact string scorers (scoring.jvm_distance_col)
+#: build: lv's banded levenshtein, and the q-gram scorers' per-pair gram
+#: arrays computed from the key strings inside a set/multiset operation
+_SCORER = re.compile(
+    r"levenshtein\(|array_intersect\(CASE WHEN|array_distinct\(concat\(CASE WHEN"
+    r"|aggregate\(CASE WHEN \(length\("
+)
+_JOIN_LINE = re.compile(r"(\w*HashJoin|SortMergeJoin|BroadcastNestedLoopJoin|CartesianProduct) ")
+
+
 def audit(name: str, df, allow_bnlj: bool = False) -> dict:
     plan = df._jdf.queryExecution().executedPlan().toString()
     flags = []
@@ -22,6 +34,8 @@ def audit(name: str, df, allow_bnlj: bool = False) -> dict:
         flags.append("CartesianProduct")
     if not allow_bnlj and "BroadcastNestedLoopJoin" in plan:
         flags.append("BroadcastNestedLoopJoin")
+    if any(_JOIN_LINE.search(ln) and _SCORER.search(ln) for ln in plan.splitlines()):
+        flags.append("ScorerInJoinCondition")
     joins = sorted(set(re.findall(r"(\w*HashJoin|SortMergeJoin\w*|BroadcastNestedLoopJoin|CartesianProduct)", plan)))
     scans = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     print(f"{name}: joins={joins} "
@@ -74,6 +88,19 @@ def main() -> int:
         fz.fuzzy_string_join(names, names, by="name", method="jaccard",
                              max_distance=0.4, q=2),
         allow_bnlj=True,
+    ))
+    # the share-any-gram route: the same names as an unknown-stats frame
+    # (a driver-local relation), which the tiny-cross gate declines
+    names_local = spark.createDataFrame(names.collect(), names.schema)
+    results.append(audit(
+        "string_jaccard (share-any-gram route)",
+        fz.fuzzy_string_join(names_local, names_local, by="name", method="jaccard",
+                             max_distance=0.4, q=2),
+    ))
+    results.append(audit(
+        "string_cosine (share-any-gram route)",
+        fz.fuzzy_string_join(names_local, names_local, by="name", method="cosine",
+                             max_distance=0.3, q=2),
     ))
     results.append(audit(
         "jaccard_dedup",

@@ -101,9 +101,12 @@ def test_prefix_auto_gate(spark, monkeypatch):
 def test_string_join_modes_agree(spark):
     import fozzie_spark as fz
 
-    vals = ["Liam", "Laim", "Olivia", "Olive", "Emma", "Emmma", "ab", "x", "", "Smelia"]
+    # "" and " " have empty 2-gram profiles
+    vals = ["Liam", "Laim", "Olivia", "Olive", "Emma", "Emmma", "ab", "x", "", " ", "Smelia"]
     df = kdf(spark, vals, "name")
-    for method, tau in (("lv", 1), ("osa", 1), ("jaccard", 0.4), ("qgram", 2), ("cosine", 0.5)):
+    for method, tau in (
+        ("lv", 1), ("osa", 1), ("jaccard", 0.4), ("jaccard", 1.0), ("qgram", 2), ("cosine", 0.5),
+    ):
         outs = []
         for mode in ("simple", "prefix"):
             out = fz.fuzzy_string_join(
@@ -112,6 +115,115 @@ def test_string_join_modes_agree(spark):
             )
             outs.append({tuple(r) for r in out.collect()})
         assert outs[0] == outs[1], (method, tau)
+        if method == "jaccard" and tau == 1.0:
+            # the reference's tau >= 1 quirk: pairs sharing no gram sit at
+            # distance 1.0 and are not emitted; empty profiles match at 0.0
+            pairs = {(a, b) for a, b, _ in outs[0]}
+            assert ("Liam", "Laim") not in pairs and ("ab", "x") not in pairs
+            assert {("", " "), ("x", ""), ("Olivia", "Olive")} <= pairs
+
+
+def _below_collect_metrics(plan: str) -> str:
+    """The subtree under the (single) CollectMetrics node of a plan string."""
+    import re
+
+    lines = plan.splitlines()
+    at = [i for i, line in enumerate(lines) if "CollectMetrics" in line]
+    assert len(at) == 1, plan
+    col = lines[at[0]].index("CollectMetrics")
+    out = []
+    for line in lines[at[0] + 1:]:
+        node = re.search(r"[+:]- ", line)
+        if node is None or node.end() <= col:
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+def test_string_join_scores_after_blocking(spark):
+    """The exact scorer runs once per distinct candidate: no scorer
+    expression sits below the CollectMetrics node that ends blocking
+    (otherwise Catalyst pushes the deterministic score filter into the
+    raw gram-join condition and scores every raw join row)."""
+    import fozzie_spark as fz
+
+    vals = [f"{w}{i % 7}" for i, w in enumerate(
+        ["Liam", "Laim", "Olivia", "Olive", "Emma", "Emmma", "Amelia", "Smelia"] * 3
+    )]
+    df = kdf(spark, vals, "name")
+    # scorer expressions the candidate builders never produce
+    markers = {
+        "jaccard": "array_intersect", "lv": "levenshtein(",
+        "qgram": "array_distinct(concat(", "cosine": "aggregate(CASE WHEN (length(",
+    }
+    cases = [(m, tau, mode) for m, tau in (("jaccard", 0.4), ("qgram", 2), ("cosine", 0.5))
+             for mode in ("simple", "prefix")] + [("lv", 1, "simple")]
+    for method, tau, mode in cases:
+        out = fz.fuzzy_string_join(
+            df, df, by="name", method=method, max_distance=tau, q=2,
+            distance_col="d", prefix_mode=mode,
+        )
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert markers[method] in plan, (method, mode)
+        assert markers[method] not in _below_collect_metrics(plan), (method, mode)
+        n = out.count()
+        rows = out.collect()
+        assert n == len(rows) and n >= len(vals), (method, mode)
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, out.collect())), (method, mode)
+
+
+def test_share_any_gram_verify_exact(spark):
+    """The 'simple' (share-any-gram) q-gram route verifies each candidate
+    on integer aggregates of the join: jaccard emits exactly the pairs
+    within tau (1e-9 slack) — empty profiles included, at distance 0 —
+    and qgram/cosine emit a superset of the matches inside the old
+    share-any-gram candidate set."""
+    import random
+
+    rng = random.Random(7)
+    vals = sorted({
+        "".join(rng.choice("abcde") for _ in range(rng.randint(0, 9))) for _ in range(260)
+    })
+    assert 150 <= len(vals) <= 260 and "" in vals
+    # createDataFrame frames have unknown plan stats: no tiny-cross route
+    ldf, rdf = kdf(spark, vals, "__fz_l0"), kdf(spark, vals, "__fz_r0")
+    profiles = {v: D.qgram_profile(v, 2) for v in vals}
+
+    def dist(method):
+        return {
+            (a, b): d
+            for a in vals
+            for b, d in zip(vals, D.score_batch(method, [a] * len(vals), vals, q=2))
+        }
+
+    def cands(method, tau):
+        rows = blocking.ngram_candidates(
+            ldf, rdf, "__fz_l0", "__fz_r0", method, tau, q=2, prefix_mode="simple"
+        ).collect()
+        got = {tuple(r) for r in rows}
+        assert len(got) == len(rows), (method, tau)
+        return got
+
+    d = dist("jaccard")
+    for tau in (0.3, 0.6):
+        got = cands("jaccard", tau)
+        assert got == {p for p, x in d.items() if x <= tau + 1e-9}, tau
+        assert {(a, b) for a in vals for b in vals if len(a) < 2 and len(b) < 2} <= got
+
+    share = {(a, b) for a in vals for b in vals if profiles[a].keys() & profiles[b].keys()}
+    for method, tau in (("qgram", 2), ("qgram", 4), ("cosine", 0.3), ("cosine", 0.5)):
+        d = dist(method)
+        if method == "qgram":
+            t = {v: sum(p.values()) for v, p in profiles.items()}
+            old = {(a, b) for a, b in share if abs(t[a] - t[b]) <= tau} | {
+                (a, b) for a in vals for b in vals if t[a] + t[b] <= tau
+            }
+        else:
+            old = share
+        matches = {p for p, x in d.items() if x <= tau}
+        got = cands(method, tau)
+        assert matches <= got <= old, (method, tau, sorted(matches - got)[:3])
+        assert len(got) < len(old), (method, tau)
 
 
 def test_band_candidates_superset(spark):
@@ -667,6 +779,44 @@ def test_cosine_ids_sig_bin_bound_lossless(spark):
     # bin_words without the signature path is refused
     with pytest.raises(ValueError, match="bin_words requires sig_words"):
         blocking.cosine_candidates_ids(prof, "kid", tau, bin_words=8)
+
+
+def test_string_join_decision_record(spark, caplog):
+    """One DEBUG decision record per fuzzy_string_join call on logger
+    fozzie_spark.joins, and a second with the observed raw candidate count
+    once the frame's first action has run."""
+    import logging
+    import time
+
+    import fozzie_spark as fz
+
+    blocking._PREFIX_DECISION_CACHE.clear()
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.joins")
+    df = kdf(spark, [f"name{i:03d}" for i in range(30)], "name")
+    out = fz.fuzzy_string_join(df, df, by="name", method="jaccard", max_distance=0.3, q=2)
+    recs = [r.fz_decision for r in caplog.records if hasattr(r, "fz_decision")]
+    assert recs == [{
+        "method": "jaccard", "gate": "prefix_auto", "keys": 60, "plan_bytes": [None, None],
+        "threshold": blocking.PREFIX_AUTO_KEY_THRESHOLD, "route": "share_any_gram",
+        "prefix_mode": "simple",
+    }]
+    n = out.count()
+    for _ in range(100):
+        recs = [r.fz_decision for r in caplog.records if hasattr(r, "fz_decision")]
+        if len(recs) == 2:
+            break
+        time.sleep(0.05)
+    assert len(recs) == 2 and recs[1] == {**recs[0], "raw_candidates": recs[1]["raw_candidates"]}
+    assert n <= recs[1]["raw_candidates"] < 30 * 30
+
+    # the tiny-cross gate decides small known-stats inputs
+    caplog.clear()
+    small = spark.range(0, 40).select(F.concat(F.lit("k"), F.col("id")).alias("name"))
+    fz.fuzzy_string_join(small, small, by="name", method="lv", max_distance=1)
+    (rec,) = [r.fz_decision for r in caplog.records if hasattr(r, "fz_decision")]
+    assert (rec["gate"], rec["keys"], rec["threshold"], rec["route"]) == (
+        "tiny_cross", 80, blocking.TINY_CROSS_KEY_THRESHOLD, "tiny_cross"
+    )
 
 
 def test_use_tiny_cross_gate(spark):
