@@ -595,11 +595,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- connected components (over jaccard dedup edges) -----------------------
     def _cc(s, d):
         edges = textops.jaccard_dedup_pairs(_docs(s, d), "doc_id", "text", 3, 0.6)
-        # explicit precontract=False: in-memory edge plans carry inflated
-        # join-product size estimates that would misfire the auto gate
-        return connected_components(
-            edges, "id1", "id2", precontract=False
-        ).select("node", "component")
+        return connected_components(edges, "id1", "id2").select("node", "component")
 
     q["connected_components"] = _cc
 

@@ -630,7 +630,7 @@ def embedding_near_dedup(
         df, id_col, vec_col, min_cosine=min_cosine, strategy=strategy,
         n_planes=n_planes, bands=bands, seed=seed,
     ).select("id1", "id2")
-    cc = connected_components(pairs, "id1", "id2", precontract=False).select(
+    cc = connected_components(pairs, "id1", "id2").select(
         F.col("node").alias(id_col), F.col("component").alias("__fz_comp")
     )
     w = Window.partitionBy("dup_group")

@@ -13,15 +13,11 @@ where component = the minimum node id in the component.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import logging
 
+from pyspark.sql import DataFrame, Observation, functions as F
 
-def _fingerprint(edges: DataFrame) -> tuple:
-    # (count, order-independent hash sum) — enough to detect any edge-set
-    # change between rounds (collision odds negligible); one scan, two
-    # aggregate expressions
-    row = edges.agg(*_fingerprint_aggs(edges.schema))
-    return tuple(row.first())[:2]
+_log = logging.getLogger("fozzie_spark.cluster")
 
 
 def _payload_bytes_col(dt, col):
@@ -44,6 +40,9 @@ def _payload_bytes_col(dt, col):
 
 
 def _fingerprint_aggs(schema) -> list:
+    # (count, order-independent hash sum) — enough to detect any edge-set
+    # change between rounds (collision odds negligible) — plus the exact
+    # payload octets the driver-finish budget is checked against
     return [
         F.count(F.lit(1)).alias("__fz_n"),
         F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("__fz_h"),
@@ -75,78 +74,6 @@ def _unpersist_ids(spark, ids) -> None:
         rdd = jmap.get(rid)
         if rdd is not None:
             rdd.unpersist(False)
-
-
-def _local_contract(edges: DataFrame) -> DataFrame:
-    """Partition-local union-find pre-contraction (Arrow-batched
-    mapInPandas): collapse every connected subgraph that lives inside one
-    partition to star edges (node -> local minimum) BEFORE the global
-    large-star/small-star rounds.
-
-    Why: the rounds are latency-bound serial job submissions — the clusters
-    stage puts a level-independent floor on every run (~21 s at 1M
-    entities). Contraction shrinks the edge set to <= one edge per distinct
-    node per partition AND collapses long intra-partition min-chains, so
-    the alternating rounds start closer to convergence and finish in fewer
-    rounds. Pure streaming pass, one dict per partition (bounded by the
-    partition's distinct nodes), no shuffle.
-
-    Correctness: contracting edges connected within a partition preserves
-    global components — every original edge maps to a path through the
-    local root, and every emitted edge is derived from original paths. The
-    final component ids (global min per component) are therefore
-    bit-identical with or without the pass.
-
-    Node ids may be scalars (long/string) or structs (er_pipeline's 128-bit
-    kid): struct cells arrive as field-ordered dicts and are compared as
-    value tuples — the same lexicographic order Spark gives the struct.
-    """
-    schema = edges.schema
-    is_struct = hasattr(schema["u"].dataType, "fields")
-    fields = [f.name for f in schema["u"].dataType.fields] if is_struct else None
-
-    def contract(batches):
-        import pandas as pd
-
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf["u"], pdf["v"]):
-                ka = tuple(a[f] for f in fields) if is_struct else a
-                kb = tuple(b[f] for f in fields) if is_struct else b
-                if ka not in parent:
-                    parent[ka] = ka
-                if kb not in parent:
-                    parent[kb] = kb
-                ra, rb = find(ka), find(kb)
-                if ra == rb:
-                    continue
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra  # union by min: root stays the minimum
-
-        out_u, out_v = [], []
-        for k in list(parent):
-            r = find(k)
-            if r != k:
-                out_u.append(k)
-                out_v.append(r)
-        if not out_u:
-            return
-        if is_struct:
-            out_u = [dict(zip(fields, t)) for t in out_u]
-            out_v = [dict(zip(fields, t)) for t in out_v]
-        yield pd.DataFrame({"u": out_u, "v": out_v})
-
-    return edges.mapInPandas(contract, schema)
 
 
 def _np_field_arrays(col, dt):
@@ -270,36 +197,12 @@ def _driver_components(edges: DataFrame):
     return lab, take
 
 
-def _driver_finish(edges: DataFrame) -> DataFrame:
-    """Finish a SMALL star-edge set on the driver in one pass.
-
-    The alternating rounds are latency-bound serial job submissions
-    (~3 s/round on this box regardless of parallelism) — once a round's
-    materialized edge set fits the bytes gate, running more rounds to move
-    the last labels is pure serial floor. Returns the CONVERGED star set
-    (node -> component min) as a local-relation DataFrame — bit-identical
-    to what the remaining rounds would produce, since component id = min
-    node either way.
-
-    At 100 TB this never fires: the star-edge count stays ~#nodes, far
-    above any sane gate, and the rounds proceed exactly as before.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    spark = edges.sparkSession
-    lab, take = _driver_components(edges)
-    nonroot = np.nonzero(lab != np.arange(len(lab), dtype=np.int64))[0]
-    out = pa.table({"u": take(nonroot), "v": take(lab[nonroot])})
-    return spark.createDataFrame(out)
-
-
 def _driver_finish_assign(edges: DataFrame) -> DataFrame:
-    """PRE-round fast path: when the INPUT edge set is provably tiny by
-    optimizer plan stats, skip the rounds, the distinct, and the all-nodes
-    join entirely — label the raw (null/self-loop-filtered) edges on the
-    driver and return the full (node, component) assignment. Every node
-    appears in some edge, so the dense-encoded universe IS all_nodes."""
+    """Label a SMALL edge set on the driver (one Arrow collect) and return
+    the full (node, component) assignment as a driver-local relation.
+    Every node appears in some edge, so the dense-encoded universe is the
+    node set. The large/small-star rounds keep the node set and the
+    components, so a round's output labels exactly like the input edges."""
     import numpy as np
     import pyarrow as pa
 
@@ -361,29 +264,38 @@ def connected_components(
     max_iter: int = 30,
     checkpoint_every: int = 1,
     checkpoint_dir: str | None = None,
-    precontract: bool = False,
     driver_finish_bytes: int | None = 256 << 20,
 ) -> DataFrame:
     """(node, component) for every node appearing in `edges`.
 
     Edges are undirected; self-loops ignored. Component id = min node id.
 
-    driver_finish_bytes: the serial-floor killer, two gates, both
-    bytes-aware (never row counts — the round-4 broadcast-gate lesson):
-    (a) PRE-round — if optimizer plan stats prove the input edge set is
-    under driver_finish_bytes/4 (stats track on-disk bytes; the /4 margin
-    covers decode expansion), skip the rounds, the distinct, and the
-    all-nodes join entirely and label the collected edges on the driver
-    (`_driver_finish_assign`); unknown stats (LogicalRDD sentinel) never
-    fire it. (b) POST-round — once a round's materialized star-edge set
-    weighs in under driver_finish_bytes of exact octet-measured payload
-    (fused into the round's Observation), the remaining rounds are
-    finished on the driver (`_driver_finish`) instead of paying ~3 s of
-    serial job latency per round. Components are bit-identical through
-    every path (pinned in tests). 0/None disables both. The gate must stay
-    comfortably under spark.driver.maxResultSize (default 1g): the finish
-    collects the gated edge set through the driver once. At 100 TB neither
-    gate fires (star edges stay ~#nodes) and rounds proceed unchanged.
+    driver_finish_bytes: the budget for labelling the edge set on the
+    driver instead of paying ~3 s of serial job latency per star round.
+    One decision, bytes-aware (never row counts — the round-4
+    broadcast-gate lesson):
+    - "stats_assign": optimizer plan stats prove the input edges are under
+      driver_finish_bytes/4 (stats track on-disk bytes; the /4 margin
+      covers decode expansion). The raw edges are collected and labelled
+      with no Spark round at all.
+    - otherwise the distinct edge set is persisted once and its exact
+      payload octets are measured in the same job. Plan stats of a
+      candidate join are a product estimate, often inflated by orders of
+      magnitude, so they cannot prove an edge set large. "measured_assign":
+      the payload fits driver_finish_bytes; the cached edges are labelled
+      on the driver and freed.
+    - "rounds": the cached edges feed the large-star/small-star rounds and
+      are freed once the first round is checkpointed (never, with
+      checkpoint_every=0: they back the uncut lineage). As soon as a round's
+      star-edge payload (measured in the round's own job) fits
+      driver_finish_bytes, the rest is labelled on the driver.
+    Components are bit-identical on every route (pinned in tests). 0/None
+    disables the driver finish: no stats check, no measure, rounds only.
+    The budget must stay comfortably under spark.driver.maxResultSize
+    (default 1g; see `driver_finish_budget`). One DEBUG record per call on
+    logger `fozzie_spark.cluster` (`record.fz_decision`) holds the plan
+    bytes, the measured edges and payload, the threshold, the route, the
+    round count and whether a round was finished on the driver.
 
     Lineage is cut each `checkpoint_every` rounds. Default: localCheckpoint
     (executor-memory blocks — fast, but NOT tolerant to executor loss).
@@ -399,52 +311,37 @@ def connected_components(
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v"))
     )
-    sz = None
+    record = {"gate": "cc_driver_finish", "plan_bytes": None, "edges": None,
+              "payload_bytes": None, "threshold": driver_finish_bytes,
+              "route": None, "rounds": 0, "post_round_finish": False}
+
+    def decided(route, out):
+        record["route"] = route
+        _log.debug("connected_components decision: %s", record, extra={"fz_decision": record})
+        return out
+
+    spark = edges.sparkSession
+    e, cached = raw.distinct(), None
     if driver_finish_bytes:
         from fozzie_spark.blocking import _plan_size_bytes
 
-        sz = _plan_size_bytes(raw)
+        record["plan_bytes"] = sz = _plan_size_bytes(raw)
         if sz is not None and sz <= driver_finish_bytes // 4:
-            return _driver_finish_assign(raw)
-    e = raw.distinct()
-    if driver_finish_bytes and sz is None:
-        # Unknown plan stats (LogicalRDD / join-product sentinel) mean the
-        # edge lineage may be an arbitrarily expensive candidate pipeline
-        # (near_dedup's minhash candidate join): the round loop would
-        # otherwise execute it at least TWICE — round 0 fuses the distinct
-        # into the first star job, and the final all-nodes join scans the
-        # raw edges again (measured +11 s on the sf0.1 near_dedup bench).
-        # Materialize the distinct edge set ONCE and measure exact payload
-        # octets in the same job; when it fits the driver gate, finish the
-        # whole assignment on the driver (components bit-identical —
-        # distinct does not change the graph) and free the cache before
-        # returning. Past the gate the persisted frame backs the rounds
-        # and the all-nodes join; its blocks are freed by the caller /
-        # ContextCleaner, the same contract as the round checkpoints.
-        e = e.persist()
-        row = e.agg(*_fingerprint_aggs(e.schema)).first()
-        if row[0] and row[2] is not None and row[2] <= driver_finish_bytes:
+            return decided("stats_assign", _driver_finish_assign(raw))
+        # one job runs the edge lineage (e.g. near_dedup's minhash
+        # candidate join) into the cache and measures it
+        e = cached = e.persist()
+        n, _, nbytes = e.agg(*_fingerprint_aggs(e.schema)).first()
+        record.update(edges=n, payload_bytes=nbytes)
+        if not n or nbytes <= driver_finish_bytes:
             out = _driver_finish_assign(e)
             e.unpersist()
-            return out
-    all_nodes = e.select(F.col("u").alias("node")).union(e.select("v")).distinct()
-    if precontract:
-        # OFF by default after measurement: the pass pays Python-worker
-        # spin-up per partition (~6-10 s on a 256-edge set), is a wash at
-        # 5M long-keyed parquet edges (47-66 s both ways), and is HARMFUL
-        # on struct-keyed (kid) edge tables — per-row struct<->dict Arrow
-        # conversion added ~18-30 s to the 1M-entity clusters stage. The
-        # alternating rounds alone are the right default; opt in only for
-        # graphs with long intra-partition chains over scalar node ids
-        # (components are provably identical either way — pinned in
-        # tests/test_pipeline.py).
-        e = _local_contract(e)
-
-    from pyspark.sql import Observation
+            return decided("measured_assign", out)
 
     prev_fp, prev_path, prev_ids = None, None, set()
     for i in range(max_iter):
         e = _small_star(_large_star(e))
+        record["rounds"] = i + 1
         if checkpoint_every and i % checkpoint_every == 0:
             # FUSE the convergence fingerprint into the checkpoint's own
             # materialization action (Observation metrics are collected as
@@ -457,20 +354,22 @@ def connected_components(
             if checkpoint_dir:
                 path = f"{checkpoint_dir.rstrip('/')}/cc_round_{i}"
                 e.write.mode("overwrite").parquet(path)
-                e = e.sparkSession.read.parquet(path)
+                e = spark.read.parquet(path)
                 if prev_path:  # this round is durable; the one before is dead
-                    _rm_path(e.sparkSession, prev_path)
+                    _rm_path(spark, prev_path)
                 prev_path = path
             else:
                 # localCheckpoint pins executor blocks; free the previous
                 # round's as soon as this round is materialized (only the
                 # LAST round's blocks back the returned DataFrame — the
                 # caller frees those, or ContextCleaner does on GC)
-                spark = e.sparkSession
                 before = _persistent_ids(spark)
                 e = e.localCheckpoint(eager=True)
                 _unpersist_ids(spark, prev_ids)
                 prev_ids = _persistent_ids(spark) - before
+            if cached is not None:  # the lineage is cut: the input is dead
+                cached.unpersist()
+                cached = None
             m = obs.get
             fp, nbytes = (m["__fz_n"], m["__fz_h"]), m["__fz_b"]
         else:
@@ -479,21 +378,20 @@ def connected_components(
         if fp == prev_fp:
             break
         prev_fp = fp
-        if driver_finish_bytes and fp[0] and nbytes is not None and nbytes <= driver_finish_bytes:
-            e = _driver_finish(e)
+        if driver_finish_bytes and fp[0] and nbytes <= driver_finish_bytes:
+            out = _driver_finish_assign(e)
             # the finished frame is a driver-local relation: every round
             # artifact (blocks or stage tables) is now dead
-            spark = e.sparkSession
             _unpersist_ids(spark, prev_ids)
-            prev_ids = set()
             if prev_path:
                 _rm_path(spark, prev_path)
-                prev_path = None
-            break
+            if cached is not None:
+                cached.unpersist()
+            record["post_round_finish"] = True
+            return decided("rounds", out)
 
-    # converged: star edges point big -> component min
+    # converged star set: every non-root points at its component min, and
+    # every root is some edge's target
     assign = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    return (
-        all_nodes.join(assign, "node", "left")
-        .select("node", F.coalesce("component", "node").alias("component"))
-    )
+    roots = e.select(F.col("v").alias("node")).distinct()
+    return decided("rounds", assign.union(roots.select("node", F.col("node").alias("component"))))

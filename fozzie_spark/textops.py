@@ -224,11 +224,7 @@ def near_dedup(
         )
     else:
         raise ValueError(f"unknown near_dedup method {method!r}")
-    # precontract off: the pair plan's join-product size ESTIMATE is huge
-    # while the actual near-dup edge set is tiny relative to the corpus —
-    # the auto gate would misfire on the inflated stats and pay the
-    # Python-pass spin-up for nothing (cluster.connected_components doc)
-    cc = connected_components(pairs, "id1", "id2", precontract=False).select(
+    cc = connected_components(pairs, "id1", "id2").select(
         F.col("node").alias(id_col), F.col("component").alias("__fz_comp")
     )
     w = Window.partitionBy("dup_group")

@@ -2,8 +2,9 @@
 operator inventory and flags the anti-patterns the engine promises to
 avoid (CartesianProduct / BroadcastNestedLoopJoin on paths that must be
 equi-joins, an exact string scorer evaluated inside a join condition —
-once per raw join row instead of once per distinct candidate — missing
-whole-stage codegen, full-column parquet scans).
+once per raw join row instead of once per distinct candidate — a grouping
+result that reruns its candidate lineage, missing whole-stage codegen,
+full-column parquet scans).
 
     python scripts/explain_audit.py [sf_dir]
 """
@@ -24,12 +25,19 @@ _SCORER = re.compile(
     r"levenshtein\(|array_intersect\(CASE WHEN|array_distinct\(concat\(CASE WHEN"
     r"|aggregate\(CASE WHEN \(length\("
 )
+#: the minhash candidate lineage: the signature aggregate and the band
+#: self-join (minhash_lsh_pairs)
+_MINHASH_LINEAGE = re.compile(
+    r"min\(xxhash64\(|(HashJoin|SortMergeJoin)\w* \[band#\d+, bh#\d+\]"
+)
 _JOIN_LINE = re.compile(r"(\w*HashJoin|SortMergeJoin|BroadcastNestedLoopJoin|CartesianProduct) ")
 
 
-def audit(name: str, df, allow_bnlj: bool = False) -> dict:
+def audit(name: str, df, allow_bnlj: bool = False, lineage_cut: bool = False) -> dict:
     plan = df._jdf.queryExecution().executedPlan().toString()
     flags = []
+    if lineage_cut and _MINHASH_LINEAGE.search(plan):
+        flags.append("CandidateLineageRecomputed")
     if "CartesianProduct" in plan:
         flags.append("CartesianProduct")
     if not allow_bnlj and "BroadcastNestedLoopJoin" in plan:
@@ -109,6 +117,14 @@ def main() -> int:
     results.append(audit(
         "minhash_dedup",
         textops.minhash_dedup_pairs(docs, "doc_id", "text", 64, 16, 3, 0.6),
+    ))
+    # connected components materializes the candidate edges once; the
+    # grouping it returns must not run the candidate lineage again
+    results.append(audit(
+        "near_dedup (grouping plan)",
+        textops.near_dedup(docs, "doc_id", "text", max_distance=0.6,
+                           num_hashes=16, bands=8),
+        lineage_cut=True,
     ))
     results.append(audit(
         "lsh_cosine_pairs",

@@ -273,46 +273,6 @@ def test_pipeline_qgram_and_cosine_methods(spark, tmp_path):
     assert os.path.getmtime(os.path.join(ck, "pairs.manifest.json")) > mtimes["pairs"]
 
 
-def test_cc_precontract_equivalence(spark):
-    # partition-local union-find pre-contraction must leave component
-    # assignments bit-identical on adversarial shapes: long chains split
-    # across partitions, stars, islands — for long, string, AND struct
-    # (kid-style) node ids
-    import random
-
-    rng = random.Random(23)
-    edges = [(i, i + 1) for i in range(60)]                     # one long chain
-    edges += [(1000 + rng.randint(0, 40), 1000 + rng.randint(0, 40)) for _ in range(80)]
-    edges += [(2000, 2001), (3000, 3001), (3001, 3002)]
-    rng.shuffle(edges)
-    df = spark.createDataFrame(edges, "src long, dst long").repartition(7)
-    base = {r["node"]: r["component"]
-            for r in connected_components(df, precontract=False).collect()}
-    fast = {r["node"]: r["component"]
-            for r in connected_components(df, precontract=True).collect()}
-    assert base == fast
-
-    sdf = spark.createDataFrame(
-        [(f"n{a}", f"n{b}") for a, b in edges], "src string, dst string"
-    ).repartition(5)
-    sb = {r["node"]: r["component"]
-          for r in connected_components(sdf, precontract=False).collect()}
-    sf_ = {r["node"]: r["component"]
-           for r in connected_components(sdf, precontract=True).collect()}
-    assert sb == sf_
-
-    # struct node ids (the er_pipeline kid shape) — incl. negative h1/h2
-    kdf_ = spark.createDataFrame(
-        [((a * 7 - 100, -a), (b * 7 - 100, -b)) for a, b in edges],
-        "src struct<h1:long,h2:long>, dst struct<h1:long,h2:long>",
-    ).repartition(4)
-    kb = {tuple(r["node"]): tuple(r["component"])
-          for r in connected_components(kdf_, precontract=False).collect()}
-    kf = {tuple(r["node"]): tuple(r["component"])
-          for r in connected_components(kdf_, precontract=True).collect()}
-    assert kb == kf
-
-
 def test_driver_finish_budget_tracks_max_result_size(spark):
     # the finisher's collect budget derives from the LIVE
     # spark.driver.maxResultSize so a default-config (1g) session can never
@@ -330,12 +290,19 @@ def test_driver_finish_budget_tracks_max_result_size(spark):
     assert 0 < b <= 512 << 20
 
 
-def test_cc_driver_finish_equivalence(spark):
+def _cc_decisions(caplog):
+    return [r.fz_decision for r in caplog.records if hasattr(r, "fz_decision")]
+
+
+def test_cc_driver_finish_equivalence(spark, caplog):
     # the bytes-gated driver finisher must leave component assignments
     # bit-identical to full-rounds convergence for every node-id shape the
     # engine ships: long, string, struct<long,long> (kid), and a struct
     # with a string field (the generic Python-object path)
+    import logging
     import random
+
+    from fozzie_spark.blocking import _plan_size_bytes
 
     rng = random.Random(41)
     edges = [(i, i + 1) for i in range(80)]                     # long chain
@@ -379,6 +346,81 @@ def test_cc_driver_finish_equivalence(spark):
         == {tuple(r["node"]): tuple(r["component"])
             for r in connected_components(gdf).collect()}
     )
+
+    # candidate edge plans (near_dedup's minhash band self-join) carry a
+    # KNOWN but inflated join-product size estimate: plan stats cannot
+    # prove them tiny, yet the real edge set fits the driver budget. The
+    # measured edge set must be labelled on the driver with no star round,
+    # bit-identical to full-rounds convergence, for every node-id shape
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.cluster")
+    budget = 64 << 10
+    xs = spark.range(0, 120).select(F.col("id").alias("x"))
+    ys = spark.range(0, 120).select(F.col("id").alias("y"))
+    # chains of 10 (x -> x+1 inside each decade), bridged every 30 ids
+    step, bridge = F.col("y") == F.col("x") + 1, F.col("y") == F.col("x") + 25
+    link = xs.join(ys, step | ((F.col("x") % 30 == 0) & bridge))
+    link = link.where((F.col("x") % 10 != 9) | bridge)
+    shapes = {
+        "long": (F.col("x"), F.col("y")),
+        "string": (F.concat(F.lit("n"), F.col("x")), F.concat(F.lit("n"), F.col("y"))),
+        "struct": (F.struct((F.col("x") * 3 - 7000).alias("h1"), (-F.col("x")).alias("h2")),
+                   F.struct((F.col("y") * 3 - 7000).alias("h1"), (-F.col("y")).alias("h2"))),
+    }
+    for name, (s_col, d_col) in shapes.items():
+        cand = link.select(s_col.alias("src"), d_col.alias("dst"))
+        assert _plan_size_bytes(cand) > budget // 4, name
+
+        def comps(**kw):
+            return {r["node"]: r["component"]
+                    for r in connected_components(cand, **kw).collect()}
+
+        caplog.clear()
+        got = comps(driver_finish_bytes=budget)
+        (rec,) = _cc_decisions(caplog)
+        assert rec["route"] == "measured_assign" and rec["rounds"] == 0, (name, rec)
+        assert rec["plan_bytes"] > budget // 4 and 0 < rec["payload_bytes"] <= budget
+        assert rec["edges"] == cand.distinct().count()
+        assert got == comps(driver_finish_bytes=0), name
+        assert len(got) == 120
+
+
+def test_cc_rounds_free_the_cached_edges(spark, caplog, tmp_path):
+    # past the budget the measured (cached) edge frame feeds the rounds and
+    # is freed once round 0 is checkpointed: after collect() only the last
+    # round's blocks stay persisted (none with checkpoint_dir, none once a
+    # round was finished on the driver). Budget 1 runs every round; 2 KB
+    # is under the input payload (a 24-clique) but over round 0's stars
+    import logging
+
+    from fozzie_spark.cluster import _persistent_ids
+
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.cluster")
+    edges = [(i, i + 1) for i in range(40)] + [(100, 101), (102, 101), (300, 200)]
+    edges += [(500 + i, 500 + j) for i in range(24) for j in range(i + 1, 24)]
+    df = spark.createDataFrame(edges, "src long, dst long").repartition(3)
+    base = {r["node"]: r["component"]
+            for r in connected_components(df, driver_finish_bytes=0).collect()}
+    jsc = spark.sparkContext._jsc
+    for ck in (None, tmp_path):
+        for budget, finished in ((1, False), (2048, True)):
+            ck_dir = str(ck / f"b{budget}") if ck else None
+            before = _persistent_ids(spark)
+            caplog.clear()
+            out = connected_components(df, driver_finish_bytes=budget, checkpoint_dir=ck_dir)
+            assert {r["node"]: r["component"] for r in out.collect()} == base
+            (rec,) = _cc_decisions(caplog)
+            assert (rec["route"], rec["post_round_finish"]) == ("rounds", finished)
+            assert rec["edges"] == len(edges) and rec["payload_bytes"] > budget
+            assert rec["rounds"] == 1 if finished else rec["rounds"] > 1
+            leaked = _persistent_ids(spark) - before
+            if ck or finished:
+                assert not leaked
+            else:
+                assert leaked and all(
+                    jsc.getPersistentRDDs().get(i).rdd().isLocallyCheckpointed() for i in leaked
+                )
+            if ck and finished:
+                assert not os.listdir(ck_dir)
 
 
 def test_pipeline_jw_method(spark, tmp_path):
