@@ -45,6 +45,7 @@ def main() -> int:
         temporal_join,
         textops,
     )
+    from fozzie_spark.checkpoint import _shuffle_totals
     from fozzie_spark.pipeline import er_pipeline
     from fozzie_spark.synth import synth_documents
 
@@ -55,24 +56,13 @@ def main() -> int:
     extras: dict[str, float] = {}
     shuffle_bytes: dict[str, dict[str, int]] = {}
 
-    def _shuffle_totals() -> tuple[int, int]:
-        """Cumulative (read, write) shuffle bytes from the app status store —
-        per-query deltas catch plan regressions wall time can hide."""
-        store = spark.sparkContext._jsc.sc().statusStore()
-        lst = store.executorList(False)
-        r = w = 0
-        for i in range(lst.size()):
-            e = lst.apply(i)
-            r += e.totalShuffleRead()
-            w += e.totalShuffleWrite()
-        return r, w
-
+    # per-query shuffle deltas catch plan regressions wall time can hide
     def bench(name, fn):
-        r0, w0 = _shuffle_totals()
+        r0, w0 = _shuffle_totals(spark)
         t0 = time.time()
         n = fn()
         timings[name] = round(time.time() - t0, 3)
-        r1, w1 = _shuffle_totals()
+        r1, w1 = _shuffle_totals(spark)
         shuffle_bytes[name] = {"read": r1 - r0, "write": w1 - w0}
         print(
             f"{name}: {timings[name]}s ({n} rows, "
@@ -150,7 +140,7 @@ def main() -> int:
     # of the LSH path), so the recall probe must not itself go quadratic
     # with sf
     emb_s = emb.where(F.col("vec_id") < 500)
-    r0, w0 = _shuffle_totals()
+    r0, w0 = _shuffle_totals(spark)
     t0 = time.time()
     exact_pairs = {
         (r["id1"], r["id2"])
@@ -163,7 +153,7 @@ def main() -> int:
                                       n_planes=16, bands=8).collect()
     }
     timings["lsh_pairs"] = round(time.time() - t0, 3)
-    r1, w1 = _shuffle_totals()
+    r1, w1 = _shuffle_totals(spark)
     shuffle_bytes["lsh_pairs"] = {"read": r1 - r0, "write": w1 - w0}
     extras["lsh_recall"] = round(len(lsh_pairs & exact_pairs) / max(len(exact_pairs), 1), 4)
     print(f"lsh_pairs: {timings['lsh_pairs']}s recall={extras['lsh_recall']}", file=sys.stderr)
@@ -189,14 +179,14 @@ def main() -> int:
     # 8. the ER pipeline on a synthetic corpus scaled by sf
     n_entities = max(int(500_000 * float(sf)), 500)
     ckpt = tempfile.mkdtemp(prefix="fz_bench_er_")
-    r0, w0 = _shuffle_totals()
+    r0, w0 = _shuffle_totals(spark)
     t0 = time.time()
     out = er_pipeline(
         spark, synth_documents(spark, n_entities), checkpoint_dir=ckpt, resume=False
     )
     runner = out["runner"]
     timings["er_pipeline"] = round(time.time() - t0, 3)
-    r1, w1 = _shuffle_totals()
+    r1, w1 = _shuffle_totals(spark)
     shuffle_bytes["er_pipeline"] = {"read": r1 - r0, "write": w1 - w0}
     stage_walls = {
         st: runner.manifests[st]["wall_s"]

@@ -119,6 +119,12 @@ def use_tiny_cross(lkeys: DataFrame, rkeys: DataFrame) -> bool:
     return tiny_cross_gate(lkeys, rkeys)["route"] == "tiny_cross"
 
 
+def prefix_by_keys(n_keys: int) -> bool:
+    """The prefix_auto rule on a measured distinct-key count (both join
+    sides combined): True => the prefix plans, False => share-any-gram."""
+    return n_keys >= PREFIX_AUTO_KEY_THRESHOLD
+
+
 def prefix_gate(lkeys: DataFrame, rkeys: DataFrame) -> dict:
     """Decision record resolving prefix_mode='auto': route "prefix" =>
     run the Ed-Join/PPJoin prefix machinery, "share_any_gram" => the
@@ -151,7 +157,7 @@ def prefix_gate(lkeys: DataFrame, rkeys: DataFrame) -> dict:
         )
     else:
         n = _union_count(lkeys, rkeys)
-        route = "prefix" if n >= PREFIX_AUTO_KEY_THRESHOLD else "share_any_gram"
+        route = "prefix" if prefix_by_keys(n) else "share_any_gram"
         decision = _decision("prefix_auto", n, sizes, PREFIX_AUTO_KEY_THRESHOLD, route)
     if cache_key is not None:
         if len(_PREFIX_DECISION_CACHE) >= _PREFIX_CACHE_MAX:
@@ -300,7 +306,6 @@ def edit_candidates(
     max_distance: float,
     method: str = "levenshtein",
     q: int = 2,
-    gram_filter: bool = True,
     prefix_mode: str = "auto",
 ) -> DataFrame:
     """Candidates for edit-distance methods (lv/osa/dl/lcs/hamming).
@@ -337,12 +342,6 @@ def edit_candidates(
     if method == "hamming":
         # unequal lengths never match (hamming.rs:26-31): exact-length block
         return l.join(r, F.col("__fz_ll") == F.col("__fz_rl")).select(lkey, rkey)
-
-    if not gram_filter:
-        le = l.withColumn(
-            "__fz_bl", F.explode(F.sequence(F.col("__fz_ll") - tau, F.col("__fz_ll") + tau))
-        )
-        return le.join(r, F.col("__fz_bl") == F.col("__fz_rl")).select(lkey, rkey)
 
     short_cut = q + damage * tau  # strings >= this length are prunable by grams
 
@@ -758,7 +757,6 @@ def cosine_candidates_ids(
     prefix_mode: str = "prefix",
     sig_words: int = 0,
     max_gram_df: int | None = None,
-    bin_words: int = 0,
 ) -> DataFrame:
     """SELF-join multiset-cosine candidates over a precomputed profile
     frame — the id-keyed twin of `_cosine_prefix_candidates` (weighted
@@ -780,35 +778,14 @@ def cosine_candidates_ids(
     dot <= s*cmax1*cmax2) runs INSIDE the candidate join, before the
     pair stream hits the distinct's shuffle.
 
-    bin_words > 0 (requires sig_words): the JOIN-TIME BIN BOUND — the
-    edges stage's 128-bin gram-mass refine at reduced resolution, moved
-    INSIDE the candidate join. Each key carries `bin_words` pre-sqrt'd
-    per-bin L2 masses of its normalized gram weights (bin = xxhash64(g)
-    mod bin_words, computed map-side per key, riding the token rows like
-    the Bloom words), and per joined row
-
-        dot(x̂, ŷ) = Σ_k Σ_{g in bin k} x̂_g ŷ_g <= Σ_k ‖x̂_k‖·‖ŷ_k‖
-
-    (per-bin Cauchy-Schwarz) — rows with bound < t die inside the join.
-    The bound is a PAIR property (same value on every duplicate row), so
-    a pruned pair loses ALL its rows before the distinct's exchange: this
-    attacks the candidate-distinct sort spill directly, unlike per-row
-    positional bounds (measured r6: PPJoin-style positional prefix/suffix
-    bounds pruned 6 of 3.64M candidate pairs on the er-cosine corpus and
-    cost 3x pairs-stage wall from the probe-side agg they require —
-    rejected; see BENCH/BASELINE.md negative results).
-
     Returns distinct (id_col, id_col+"2") pairs with id < id2.
     """
     if max_distance >= 1.0:
         raise ValueError("cosine_candidates_ids requires max_distance < 1")
     id2 = id_col + "2"
     t = 1.0 - float(max_distance)
-    if bin_words and not sig_words:
-        raise ValueError("bin_words requires sig_words (the er signature path)")
     sigw = [f"__fz_sig{i}" for i in range(sig_words)]
-    binc = ["__fz_bins"] if bin_words else []
-    stat_names = ["__fz_nrm", "__fz_cx", *sigw, *binc] if sig_words else []
+    stat_names = ["__fz_nrm", "__fz_cx", *sigw] if sig_words else []
     nrm = F.sqrt(
         F.aggregate(
             F.map_values("__fz_cm").cast("array<double>"),
@@ -821,28 +798,8 @@ def cosine_candidates_ids(
         if sig_words
         else []
     )
-    if bin_words:
-        # pre-sqrt'd per-bin L2 masses of the key's NORMALIZED weights —
-        # one O(bin_words * g) map-side expression per key; the division
-        # by the norm distributes out of the per-bin sums
-        bins = F.transform(
-            F.sequence(F.lit(0), F.lit(bin_words - 1)),
-            lambda k: F.sqrt(
-                F.aggregate(
-                    F.map_entries("__fz_cm"),
-                    F.lit(0.0),
-                    lambda acc, e: acc
-                    + F.when(
-                        F.pmod(F.xxhash64(e["key"]), F.lit(bin_words)) == k,
-                        e["value"].cast("double") * e["value"].cast("double"),
-                    ).otherwise(F.lit(0.0)),
-                )
-            )
-            / nrm,
-        )
-        carry0 = [*carry0, bins.alias("__fz_bins")]
     # prefix mode ships only (id, gram, weight) through the stats join and
-    # the prefix groupBy; the per-key stats (norm, cmax, Bloom words, bins)
+    # the prefix groupBy; the per-key stats (norm, cmax, Bloom words)
     # re-attach ONCE per key after the aggregation — carrying ~100 B of
     # stat payload on every token row through two exchanges was measurable
     # against the whole builder wall. The simple path still carries them
@@ -974,13 +931,6 @@ def cosine_candidates_ids(
             - F.lit(1e-9)
         )
         joined = joined.where(_popcount_cut(s_min, sig_words))
-    if bin_words:
-        bin_dot = F.aggregate(
-            F.zip_with("__fz_bins", "__fz_bins_2", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        joined = joined.where(bin_dot >= F.lit(t - 1e-9))
     return (
         joined.select(
             F.least(id_col, id2).alias(id_col), F.greatest(id_col, id2).alias(id2)

@@ -112,8 +112,6 @@ def fuzzy_string_join(
     max_prefix: int = 0,
     prefix_weight: float = 0.0,
     suffixes: tuple[str, str] = (".x", ".y"),
-    gram_filter: bool = True,
-    scoring_partitions: int | None = None,
     prefix_mode: str = "auto",
 ) -> DataFrame:
     """Fuzzy string join — Spark equivalent of fozzie_string_join
@@ -123,10 +121,6 @@ def fuzzy_string_join(
     Multi-key: candidates are generated on the FIRST key only, then every
     key is scored with the same method/threshold and all must pass
     (string/mod.rs:82-127).
-
-    `scoring_partitions`: salted round-robin repartition of the candidate
-    pairs before the Arrow scorer — use when blocking keys are skewed so
-    one hot block would pin the scoring stage to a few tasks.
 
     `prefix_mode` ('auto' | 'prefix' | 'simple'): physical strategy for the
     gram-index blocking stage. 'prefix' runs the hot-gram-proof
@@ -179,7 +173,7 @@ def fuzzy_string_join(
     if (
         decision["route"] != "tiny_cross"
         and prefix_mode == "auto"
-        and _prefix_gated(method, max_distance, gram_filter)
+        and _prefix_gated(method, max_distance)
     ):
         decision = blocking.prefix_gate(l0, r0)
         prefix_mode = "prefix" if decision["route"] == "prefix" else "simple"
@@ -188,7 +182,7 @@ def fuzzy_string_join(
     elif method in EDIT_METHODS:
         cand = blocking.edit_candidates(
             l0, r0, "__fz_l0", "__fz_r0", max_distance, method=method, q=q,
-            gram_filter=gram_filter, prefix_mode=prefix_mode,
+            prefix_mode=prefix_mode,
         )
     elif method in NGRAM_METHODS:
         cand = blocking.ngram_candidates(
@@ -220,8 +214,6 @@ def fuzzy_string_join(
         threading.Thread(target=_log_observed, args=(obs, record), daemon=True).start()
 
     pairs = _expand_tuples(cand, lkeys, rkeys, len(by_pairs))
-    if scoring_partitions:
-        pairs = pairs.repartition(scoring_partitions)
     col_pairs = [(f"__fz_l{i}", f"__fz_r{i}") for i in range(len(by_pairs))]
     internal = [f"__fz_D{i}" for i in range(len(by_pairs))]
     matches = score_string_pairs(
@@ -239,11 +231,11 @@ def fuzzy_string_join(
     return materialize(left, right, by_pairs, matches, how, dist_names, suffixes)
 
 
-def _prefix_gated(method: str, max_distance: float, gram_filter: bool) -> bool:
+def _prefix_gated(method: str, max_distance: float) -> bool:
     """True iff the method's candidate builder runs a gram index whose
     physical plan `prefix_mode` picks (the prefix_auto gate applies)."""
     if method in EDIT_METHODS:
-        return gram_filter and method != "hamming"
+        return method != "hamming"
     # jaccard at tau >= 1 always takes the share-any-gram join; cosine at
     # tau >= 1 is the cross join
     return method == "qgram" or (method in NGRAM_METHODS and max_distance < 1)

@@ -223,9 +223,9 @@ def test_pipeline_edit_method_short_keys(spark, tmp_path):
 
 
 def test_pipeline_qgram_and_cosine_methods(spark, tmp_path):
-    # profile-distance methods route through blocking.ngram_candidates and
-    # verify JVM-side in the edges stage; near-dup texts must co-cluster,
-    # distinct texts must not
+    # profile-distance methods route through the id-keyed builders
+    # (blocking.qgram_candidates_ids / cosine_candidates_ids) and verify in
+    # the edges stage; near-dup texts must co-cluster, distinct texts must not
     def doc(i, text):
         return (f"d{i}", [{"kind": "text", "text": text, "media_ref": None, "offset": 0}])
 
@@ -546,6 +546,51 @@ def test_pipeline_hot_key_skew(spark, tmp_path):
     m = pairwise_f1(truth.join(pred, "doc_id"), truth_col="t", pred_col="p")
     assert m["f1"] >= 0.99, m
     docs.unpersist()
+
+
+@pytest.mark.parametrize("method", ["qgram", "lv", "jw"])
+def test_pipeline_hot_token_valve(spark, tmp_path, caplog, method):
+    # the hot-token df valve, for the q-gram, edit and jaro families: with
+    # the cap forced below the boilerplate df (60 hot docs) the capped
+    # tokens leave the index and the sorted-neighborhood pass runs. Every
+    # edge is exactly verified, so the capped run's edges are a subset of
+    # the lossless uncapped run's, from fewer raw candidates. Each run logs
+    # one decision record and leaves no persisted RDD and no chunk staging
+    # directory behind
+    import logging
+
+    from fozzie_spark.cluster import _persistent_ids
+    from fozzie_spark.synth import synth_documents_skewed
+
+    params = {"qgram": {"max_distance": 6, "q": 3}, "lv": {"max_distance": 2, "q": 3},
+              "jw": {"max_distance": 0.25}}[method]
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+    docs = synth_documents_skewed(spark, 20, hot_docs=60, hot_exact=10)
+    runs = {}
+    for name, cap in (("capped", 20), ("uncapped", None)):
+        ck = tmp_path / name
+        before = _persistent_ids(spark)
+        caplog.clear()
+        out = er_pipeline(spark, docs, checkpoint_dir=str(ck), method=method,
+                          max_gram_df=cap, resume=False, **params)
+        edges = {(tuple(r["kid"]), tuple(r["kid2"])) for r in out["edges"].collect()}
+        (rec,) = [r.fz_decision for r in caplog.records if hasattr(r, "fz_decision")]
+        runs[name] = (edges, out["runner"].metric("pairs", "raw_candidates"), rec)
+        # earlier tests' leftovers may be cleaned up meanwhile: only new ids count
+        assert not _persistent_ids(spark) - before, name
+        assert not (ck / "edges_chunks").exists(), name
+
+    (e_cap, raw_cap, rec_cap), (e_full, raw_full, rec_full) = runs["capped"], runs["uncapped"]
+    assert e_cap <= e_full and e_cap, (len(e_cap), len(e_full))
+    assert raw_cap < raw_full, (raw_cap, raw_full)
+    assert rec_cap["gate"] == rec_full["gate"] == "hot_token_cap"
+    assert (rec_cap["route"], rec_cap["threshold"]) == ("capped_sn", 20)
+    assert rec_cap["capped_tokens"] > 0
+    assert (rec_full["route"], rec_full["threshold"], rec_full["capped_tokens"]) == (
+        "uncapped", None, 0)
+    if method == "qgram":
+        assert rec_cap["prefix_mode"] == rec_full["prefix_mode"] == "simple"
+        assert rec_cap["keys"] == rec_full["keys"] > 0
 
 
 def test_edge_refine_lossless_vs_bruteforce(spark, tmp_path):

@@ -30,16 +30,6 @@ def test_inner_lv(test_df, whoops):
     assert row["int_col"] is None and row["real_col"] == 7.0
 
 
-def test_inner_lv_no_gram_filter(test_df, whoops):
-    out = fuzzy_string_join(
-        test_df, whoops, by={"Name": "Name"}, method="lv", how="inner",
-        max_distance=1, distance_col="d", gram_filter=False,
-    )
-    assert [p[:2] for p in pairs_of(out, "d")] == sorted(
-        [("Oliver", "Olive"), ("James", "Jams"), ("Emma", "Emma"), ("Amelia", "Smelia")]
-    )
-
-
 # test_fozzie_string_inner_join.R:231-246
 def test_inner_jw(test_df, whoops):
     out = fuzzy_string_join(
