@@ -16,6 +16,10 @@ fingerprint into run_config (er_pipeline passes the input plan's
 semanticHash) so a different input invalidates too; NOT covered: in-place
 mutation of the same input path between runs — resuming over that returns
 the stale stage outputs, same as any path-keyed cache.
+
+Parquet stage tables read back with the schema of the frame just written
+(recorded in the manifest for the resume path): a bare parquet load starts
+a schema-inference job per stage, for an answer the run already holds.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def _hash_config(obj) -> str:
@@ -73,6 +78,14 @@ class StageRunner:
     def _paths(self, name: str) -> tuple[str, str]:
         return f"{self.base_dir}/{name}", f"{self.base_dir}/{name}.manifest.json"
 
+    def _load(self, data_path: str, schema: StructType | None) -> DataFrame:
+        """Read a stage table back; a known schema spares parquet its
+        schema-inference job. Other formats keep the bare load."""
+        reader = self.spark.read.format(self.table_format)
+        if schema is not None and self.table_format == "parquet":
+            reader = reader.schema(schema)
+        return reader.load(data_path)
+
     def stage(
         self,
         name: str,
@@ -99,7 +112,8 @@ class StageRunner:
                 manifest = json.load(f)
             if manifest.get("config_hash") == chash:
                 self.manifests[name] = manifest
-                return self.spark.read.format(self.table_format).load(data_path)
+                schema = manifest.get("schema")
+                return self._load(data_path, schema and StructType.fromJson(schema))
 
         t0 = time.time()
         sh_r0, sh_w0 = _shuffle_totals(self.spark)
@@ -111,7 +125,7 @@ class StageRunner:
             df = result
         df.write.format(self.table_format).mode("overwrite").save(data_path)
         sh_r1, sh_w1 = _shuffle_totals(self.spark)
-        out = self.spark.read.format(self.table_format).load(data_path)
+        out = self._load(data_path, df.schema)
 
         metrics: dict = {
             "shuffle_read_bytes": sh_r1 - sh_r0,
@@ -135,6 +149,7 @@ class StageRunner:
             "metrics": metrics,
             "path": data_path,
             "depends_on": list(depends_on),
+            "schema": out.schema.jsonValue(),
         }
         tmp = manifest_path + ".tmp"
         with open(tmp, "w") as f:

@@ -81,7 +81,6 @@ def main(argv=None) -> int:
         default="auto",
         help="hot-gram df cap: integer, 'none', or 'auto' = max(10000, n_keys//8)",
     )
-    p.add_argument("--salt-partitions", type=int)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument(
         "--no-partition-metrics",
@@ -140,7 +139,6 @@ def main(argv=None) -> int:
         max_distance=args.max_distance,
         q=args.q,
         max_gram_df=mgd,
-        salt_partitions=args.salt_partitions,
         resume=not args.no_resume,
         reliable_cc=args.reliable_cc,
         collect_metrics=not args.no_partition_metrics,

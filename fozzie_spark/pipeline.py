@@ -11,7 +11,7 @@ text+media documents:
                         the stage manifest)
     stage 3   edges     Arrow-batched pairwise scoring, threshold
     stage 4   clusters  large-star/small-star connected components
-    stage 5   assign    docs join key->entity; spans carried untouched
+    stage 5   entities  docs join key->entity; spans carried untouched
 
 Clustering runs in KEY space (distinct key values), so identical texts
 cluster for free; doc assignment is one equi-join at the end. Every stage
@@ -28,7 +28,6 @@ Scale levers (100 TB story):
   joins anywhere
 - hot q-grams (power-law!) are neutralized by PPJoin prefix + positional
   filtering (lossless for jaccard) with `max_gram_df` as a safety valve
-- the pair join is salted by repartition(salt_partitions) when requested
 - scoring touches only distinct key pairs (dedup-before-score)
 """
 
@@ -174,7 +173,6 @@ def er_pipeline(
     prefix_weight: float = 0.0,
     max_prefix: int = 0,
     max_gram_df: int | None | str = "auto",
-    salt_partitions: int | None = None,
     sn_window: int | None = 10,
     resume: bool = True,
     table_format: str = "parquet",
@@ -238,7 +236,6 @@ def er_pipeline(
         "prefix_weight": prefix_weight,
         "max_prefix": max_prefix,
         "max_gram_df": max_gram_df,
-        "salt_partitions": salt_partitions,
         "sn_window": sn_window,
         "ids": "xxh64x2",
         # input identity folded into the resume hash: same checkpoint_dir +
@@ -344,28 +341,37 @@ def er_pipeline(
         uniq = base.persist()
     _stage_persists: list[DataFrame] = []  # freed after the pairs stage writes
 
-    _uniq_stats: list[tuple[int, int]] = []
+    _uniq_stats: list[tuple[int, int, int]] = []
+    # keys the gram index cannot pair losslessly: empty profiles for
+    # jaccard, shorter than q + damage*tau for the edit family
+    short_cut = (
+        q if method == "jaccard" and max_distance < 1.0
+        else q + _EDIT_DAMAGE[method](q) * int(max_distance) if method in _EDIT_DAMAGE
+        else None
+    )
 
     def _n_uniq() -> int:
         return _uniq_stat()[0]
 
-    def _uniq_stat() -> tuple[int, int]:
-        """(distinct keys, total key bytes), computed ONCE per run in one
-        job over the persisted `uniq`. Broadcast gates use BOTH: a
-        broadcast build collects its child to the driver as task results,
-        so a count-only gate breaks on kilobyte document keys — the 1.5M
-        probe died at spark.driver.maxResultSize with ~3.7M keys that were
-        comfortably under the old 5M-row gate."""
+    def _uniq_stat() -> tuple[int, int, int]:
+        """(distinct keys, total key bytes, keys shorter than `short_cut`),
+        computed ONCE per run in one job over the persisted `uniq`.
+        Broadcast gates use the first two: a broadcast build collects its
+        child to the driver as task results, so a count-only gate breaks
+        on kilobyte document keys — the 1.5M probe died at
+        spark.driver.maxResultSize with ~3.7M keys that were comfortably
+        under the old 5M-row gate."""
         if not _uniq_stats:
             # octet_length, not length: the gate must measure UTF-8 BYTES —
             # char counts under-estimate non-ASCII keys by up to 4x
             row = uniq.agg(
-                F.count(F.lit(1)), F.sum(F.octet_length("key"))
+                F.count(F.lit(1)), F.sum(F.octet_length("key")),
+                F.count_if(F.length("key") < short_cut) if short_cut else F.lit(0),
             ).first()
-            _uniq_stats.append((int(row[0]), int(row[1] or 0)))
+            _uniq_stats.append((int(row[0]), int(row[1] or 0), int(row[2])))
         return _uniq_stats[0]
 
-    def _hot_token_valve(token_df: DataFrame, **detail):
+    def _hot_token_valve(token_df: DataFrame, reused: bool = False, **detail):
         """The hot-token df valve every blocking family shares. Tokens
         (q-grams, or jaro's (char, occurrence) tokens) are power-law
         distributed, and a share-a-token join is quadratic in the hottest
@@ -382,11 +388,19 @@ def er_pipeline(
         lossless on their own, and the SN pass (a sampling job, a window
         and a join) is skipped.
 
+        Tokens are distinct within a key, so df <= distinct keys: a cap at
+        or past that count provably caps nothing and runs no count job (on
+        "auto": up to 10_000 keys). `reused`: the caller reads `token_df`
+        too, so a count persists it in place (freed with the stage).
+
         Logs one DEBUG decision record on logger "fozzie_spark.pipeline"
         (also as `record.fz_decision`; `detail` rides along) and returns
         (cap, capped token count, SN pairs or None)."""
         cap = max(10_000, _n_uniq() // 8) if max_gram_df == "auto" else max_gram_df
-        n_capped = token_df.where(F.col("df") > cap).count() if cap else 0
+        proven = not cap or cap >= _n_uniq()
+        if not proven and reused:
+            _stage_persists.append(token_df.persist())
+        n_capped = 0 if proven else token_df.where(F.col("df") > cap).count()
         sn = None
         if sn_window and n_capped:
             sn = B.sorted_neighborhood_candidates(
@@ -397,9 +411,10 @@ def er_pipeline(
         route = "uncapped" if not n_capped else "capped_sn" if sn is not None else "capped"
         record = {
             "method": method, "gate": "hot_token_cap",
-            # the key count only when an earlier gate already measured it
+            # None only when the cap is off and no gate measured the keys
             "keys": _uniq_stats[0][0] if _uniq_stats else None,
-            "threshold": cap, "capped_tokens": n_capped, "route": route, **detail,
+            "threshold": cap, "capped_tokens": n_capped,
+            "capped_count": "proven" if proven else "counted", "route": route, **detail,
         }
         _log.debug("er_pipeline pairs decision: %s", record, extra={"fz_decision": record})
         return cap, n_capped, sn
@@ -516,15 +531,15 @@ def er_pipeline(
             "kid", "n", *([] if positional else sig_cols),
             F.explode("gs").alias("g"),
         )
-        # the per-gram df table is small (bounded by distinct grams);
-        # persisted because two consumers need it (the valve's
-        # did-the-cap-trigger probe, and the df lookup join)
-        gram_df_all = (
-            grams.select("g").groupBy("g").agg(F.count(F.lit(1)).alias("df")).persist()
+        # the per-gram df table is small (bounded by distinct grams); the
+        # valve persists it when its count job makes a second consumer
+        gram_df_all = grams.select("g").groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+        # complementary candidates: the valve's SN pairs, and the short-key
+        # block, planned only when the stats job found short keys
+        n_short = _uniq_stat()[2]
+        cap, _, sn = _hot_token_valve(
+            gram_df_all, reused=True, short_keys=n_short, short_key_block=n_short > 0
         )
-        _stage_persists.append(gram_df_all)
-        # complementary candidates: the valve's SN pairs, then short keys
-        cap, _, extra = _hot_token_valve(gram_df_all)
         gram_df = gram_df_all.where(F.col("df") <= cap) if cap else gram_df_all
         # broadcast so the exploded gram rows don't shuffle for the df
         # lookup; LEFT join — capped grams keep a null df so the prefix
@@ -598,8 +613,6 @@ def er_pipeline(
         right = grams.select(
             "g", *[F.col(c).alias(a) for c, a in right_cols.items()]
         )
-        if salt_partitions:
-            grams = grams.repartition(salt_partitions, "g")
         cand = grams.join(right, "g").where(F.col("kid") < F.col("kid2"))
         # size-bound prune: jaccard_sim >= t needs min/max >= t
         cand = cand.where(F.least("n", "n2") >= F.ceil(F.lit(t) * F.greatest("n", "n2")))
@@ -627,39 +640,74 @@ def er_pipeline(
             cand = cand.where(shared_bits >= F.greatest(F.floor(alpha_b / 2) - 2, F.lit(1)))
         cand = cand.select("kid", "kid2")
 
-        if method == "jaccard" and max_distance < 1.0:
+        if sn is not None and bloom:
+            # the SN pairs get the same Bloom cut (they are mostly
+            # non-matches: rank-adjacent != similar) via two broadcast
+            # probes. Measured trade at 50k entities: the two broadcast
+            # builds cost ~1.3 s, but skipping the cut sends window*keys
+            # extra pairs into the EXACT verifier (q-gram extraction over
+            # ~1 kB key strings per pair) at ~8 s — the cut wins at every
+            # scale. Empty-profile pairs (n = 0 both sides) are definite
+            # matches (jaccard dist 0), skip the test.
+            sig_df = uniq.select("kid", "n", *sig_cols)  # from the cache
+            a = sig_df.select(
+                "kid", F.col("n").alias("na"),
+                *[F.col(f"s{i}").alias(f"xa{i}") for i in range(NSIG)],
+            )
+            b = sig_df.select(
+                F.col("kid").alias("kid2"), F.col("n").alias("nb"),
+                *[F.col(f"s{i}").alias(f"xb{i}") for i in range(NSIG)],
+            )
+            if _n_uniq() < 8_000_000:
+                a, b = F.broadcast(a), F.broadcast(b)
+            alpha_x = F.ceil(F.lit(t / (1.0 + t)) * (F.col("na") + F.col("nb")))
+            shared_x = sum(
+                F.bit_count(F.col(f"xa{i}").bitwiseAND(F.col(f"xb{i}")))
+                for i in range(NSIG)
+            )
+            sn = (
+                sn.join(a, "kid")
+                .join(b, "kid2")
+                .where(
+                    (shared_x >= F.greatest(F.floor(alpha_x / 2) - 2, F.lit(1)))
+                    | ((F.col("na") == 0) & (F.col("nb") == 0))
+                )
+                .select("kid", "kid2")
+            )
+        if sn is not None:
+            cand = cand.unionByName(sn)
+
+        if n_short and method == "jaccard":
             # short-key block: keys shorter than q have EMPTY gram profiles,
             # never enter the inverted index, and jaccard(empty, empty) = 0
-            # — a definite match. Pair all empty-profile keys via an
-            # equi-join on floor(len/q) (identically 0 for them, but
-            # data-derived so Catalyst plans a hash join, not a BNLJ).
+            # — a definite match, so no Bloom cut. Pair all empty-profile
+            # keys via an equi-join on floor(len/q) (identically 0 for them,
+            # but data-derived so Catalyst plans a hash join, not a BNLJ).
             # Their pair count is the TRUE result size, not blocking slop.
-            sl = uniq.where(F.length("key") < q).select(
+            sl = uniq.where(F.length("key") < short_cut).select(
                 "kid", F.floor(F.length("key") / q).alias("__zb")
             )
-            sp = (
+            cand = cand.unionByName(
                 sl.join(sl.select(F.col("kid").alias("kid2"), "__zb"), "__zb")
                 .where(F.col("kid") < F.col("kid2"))
                 .select("kid", "kid2")
             )
-            extra = sp if extra is None else extra.unionByName(sp)
-
-        if method in _EDIT_DAMAGE:
+        elif n_short:
             # edit-family short-key block: the share-a-gram index is lossless
             # only for keys of length >= q + damage*tau (a tau-edit pair then
             # MUST share a gram, Gravano et al. VLDB'01); shorter keys are
             # paired by a length-band equi-join (|len diff| <= tau bounds any
             # edit pair) — mirrors blocking.edit_candidates' short path.
-            # Negligible volume here: ER keys are documents, not names.
-            tau_i = int(max_distance)
-            short_cut = q + _EDIT_DAMAGE[method](q) * tau_i
+            # Negligible volume here: ER keys are documents, not names. The
+            # edges stage verifies these pairs exactly.
+            band = 0 if method == "hamming" else int(max_distance)
             sl = uniq.where(F.length("key") < short_cut).select(
                 "kid", F.length("key").alias("__len")
             )
-            lo = F.col("__len") - (0 if method == "hamming" else tau_i)
-            hi = F.col("__len") + (0 if method == "hamming" else tau_i)
-            sp = (
-                sl.withColumn("__lb", F.explode(F.sequence(lo, hi)))
+            cand = cand.unionByName(
+                sl.withColumn(
+                    "__lb", F.explode(F.sequence(F.col("__len") - band, F.col("__len") + band))
+                )
                 .join(
                     sl.select(F.col("kid").alias("kid2"), F.col("__len").alias("__lb")),
                     "__lb",
@@ -667,44 +715,6 @@ def er_pipeline(
                 .where(F.col("kid") < F.col("kid2"))
                 .select("kid", "kid2")
             )
-            extra = sp if extra is None else extra.unionByName(sp)
-
-        if extra is not None:
-            if bloom:
-                # the complementary pairs get the same Bloom cut (they are
-                # mostly non-matches: rank-adjacent != similar) via two
-                # broadcast probes. Measured trade at 50k entities: the two
-                # broadcast builds cost ~1.3 s, but skipping the cut sends
-                # window*keys extra pairs into the EXACT verifier (q-gram
-                # extraction over ~1 kB key strings per pair) at ~8 s — the
-                # cut wins at every scale. Empty-profile pairs (n = 0 both
-                # sides) are definite matches (jaccard dist 0), skip the test.
-                sig_df = uniq.select("kid", "n", *sig_cols)  # from the cache
-                a = sig_df.select(
-                    "kid", F.col("n").alias("na"),
-                    *[F.col(f"s{i}").alias(f"xa{i}") for i in range(NSIG)],
-                )
-                b = sig_df.select(
-                    F.col("kid").alias("kid2"), F.col("n").alias("nb"),
-                    *[F.col(f"s{i}").alias(f"xb{i}") for i in range(NSIG)],
-                )
-                if _n_uniq() < 8_000_000:
-                    a, b = F.broadcast(a), F.broadcast(b)
-                alpha_x = F.ceil(F.lit(t / (1.0 + t)) * (F.col("na") + F.col("nb")))
-                shared_x = sum(
-                    F.bit_count(F.col(f"xa{i}").bitwiseAND(F.col(f"xb{i}")))
-                    for i in range(NSIG)
-                )
-                extra = (
-                    extra.join(a, "kid")
-                    .join(b, "kid2")
-                    .where(
-                        (shared_x >= F.greatest(F.floor(alpha_x / 2) - 2, F.lit(1)))
-                        | ((F.col("na") == 0) & (F.col("nb") == 0))
-                    )
-                    .select("kid", "kid2")
-                )
-            cand = cand.unionByName(extra)
 
         # Pair dedup happens HERE, after the inline Bloom cut: deduplicating
         # 10^8-9 raw candidates would be a full shuffle of the pair stream;
@@ -718,8 +728,9 @@ def er_pipeline(
         # IS sound: one shared gram => one shared bit. The exact verifier in
         # the edges stage rescores every survivor, so an (astronomically
         # rare) false negative costs one candidate — the same failure class
-        # as the minhash-LSH band curve. Sorted-neighborhood and short-key
-        # pairs above bypass the Bloom cut (tiny volumes, exact verify).
+        # as the minhash-LSH band curve. The sorted-neighborhood pairs above
+        # take the same cut; the short-key pairs skip it (definite matches
+        # for jaccard, exactly verified for the edit family).
         return cand.select("kid", "kid2").distinct(), obs
 
     pairs = runner.stage("pairs", _pairs, params=params, depends_on=("keys",))
@@ -888,7 +899,7 @@ def er_pipeline(
             )
             udf = string_distance_udf(method, max_distance=max_distance, **extra)
             dist = udf(F.col("__k1"), F.col("__k2"))
-        n_u, key_bytes = _uniq_stat()
+        n_u, key_bytes, _ = _uniq_stat()
         # the dictionaries carry the key text (or its gram array — same
         # order of magnitude) PLUS the mass-signature arrays (MASS_BINS
         # doubles/key on qgram/cosine), so gate on BYTES as well as rows:

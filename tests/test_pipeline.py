@@ -168,9 +168,18 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
     assert [p for p in os.listdir(ck2) if p.startswith("cc_round_")] == []
 
 
-def test_pipeline_short_key_recall(spark, tmp_path):
+def _pairs_decision(caplog):
+    (rec,) = [r.fz_decision for r in caplog.records if hasattr(r, "fz_decision")]
+    return rec
+
+
+def test_pipeline_short_key_recall(spark, tmp_path, caplog):
     # texts SHORTER than q have empty gram profiles — the dedicated
     # short-key block must still pair them (jaccard(empty, empty) = 0)
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+
     def doc(i, text):
         return (f"d{i}", [{"kind": "text", "text": text, "media_ref": None, "offset": 0}])
 
@@ -184,6 +193,8 @@ def test_pipeline_short_key_recall(spark, tmp_path):
     ent = {r["doc_id"]: r["entity_id"] for r in out["entities"].collect()}
     # both sub-q texts have empty profiles => jaccard dist 0 => one entity
     assert ent["d0"] == ent["d1"] != ent["d2"]
+    rec = _pairs_decision(caplog)
+    assert (rec["short_keys"], rec["short_key_block"]) == (2, True), rec
 
 
 def test_pipeline_input_change_invalidates_resume(spark, tmp_path):
@@ -197,9 +208,13 @@ def test_pipeline_input_change_invalidates_resume(spark, tmp_path):
     assert out2["entities"].count() == docs2.count() != n1
 
 
-def test_pipeline_edit_method_short_keys(spark, tmp_path):
+def test_pipeline_edit_method_short_keys(spark, tmp_path, caplog):
     # edit-family methods: keys shorter than q + q*tau share NO gram yet can
     # be within distance tau — the length-band short-key block must pair them
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+
     def doc(i, text):
         return (f"d{i}", [{"kind": "text", "text": text, "media_ref": None, "offset": 0}])
 
@@ -213,6 +228,9 @@ def test_pipeline_edit_method_short_keys(spark, tmp_path):
     )
     ent = {r["doc_id"]: r["entity_id"] for r in out["entities"].collect()}
     assert ent["d0"] == ent["d1"] and ent["d2"] != ent["d0"]
+    # the two 4-char keys are under q + q*tau = 8 chars, the 12-char one not
+    rec = _pairs_decision(caplog)
+    assert (rec["short_keys"], rec["short_key_block"]) == (2, True), rec
 
     import pytest as _pytest
 
@@ -591,6 +609,29 @@ def test_pipeline_hot_token_valve(spark, tmp_path, caplog, method):
     if method == "qgram":
         assert rec_cap["prefix_mode"] == rec_full["prefix_mode"] == "simple"
         assert rec_cap["keys"] == rec_full["keys"] > 0
+
+
+def test_pipeline_valve_proven_uncapped(spark, tmp_path, caplog):
+    # no token can pass the auto cap max(10_000, keys // 8) while there are
+    # at most 10_000 distinct keys (a token's df counts distinct keys): the
+    # valve takes the uncapped route with no count job, and nothing is
+    # persisted for a count that never runs. The synthetic keys are all
+    # longer than q, so the short-key block is not planned either
+    import logging
+
+    from fozzie_spark.cluster import _persistent_ids
+
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+    docs = synth_documents(spark, 60, seed=3)
+    before = _persistent_ids(spark)
+    out = er_pipeline(spark, docs, checkpoint_dir=str(tmp_path), resume=False)
+    assert out["entities"].count() == docs.count()
+    assert not _persistent_ids(spark) - before
+    rec = _pairs_decision(caplog)
+    assert (rec["method"], rec["route"], rec["capped_tokens"]) == ("jaccard", "uncapped", 0)
+    assert rec["capped_count"] == "proven" and rec["threshold"] == 10_000
+    assert 0 < rec["keys"] <= 10_000
+    assert (rec["short_keys"], rec["short_key_block"]) == (0, False), rec
 
 
 def test_edge_refine_lossless_vs_bruteforce(spark, tmp_path):
