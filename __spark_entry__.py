@@ -1090,8 +1090,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["er_entities"] = _er
 
     def _er_cosine(s, d):
-        # the qgram/cosine ER path (blocking.ngram_candidates -> kid pairs
-        # -> JVM cosine verify -> CC). Oracle: each sidecar'd edge is
+        # the qgram/cosine ER path (blocking.cosine_candidates_ids -> kid
+        # pairs -> two-tier signature refine + Arrow-UDF cosine verify ->
+        # CC). Oracle: each sidecar'd edge is
         # RE-SCORED in DuckDB (multiset q-gram cosine over the full key
         # texts — any false-positive edge or wrong threshold breaks the
         # match) and clustering is re-derived independently with a

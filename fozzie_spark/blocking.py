@@ -14,9 +14,16 @@ Blocking families (SURVEY.md §2.2/§4):
 - grid cells for k-D distance joins
 - overlap bins for interval joins (replaces the reference's interval tree)
 
+The id-keyed SELF-join builders behind `pipeline.er_pipeline` run over a
+per-key profile frame (fixed-width ids + token arrays, never key
+strings), one per method family: `jaccard_candidates_ids`,
+`edit_candidates_ids`, `qgram_candidates_ids`, `cosine_candidates_ids`
+and `jaro_candidates_ids`. They share one prefix self-join (`_self_join`)
+and one 512-bit Bloom signature (`_bloom_sig_cols`, cut by
+`_popcount_cut`).
+
 Each candidate join is an equi-join on a generated block key, so Catalyst
-plans a shuffled hash / sort-merge join; hot keys can be salted upstream by
-`pairs.salt_repartition`.
+plans a shuffled hash / sort-merge join.
 """
 
 from __future__ import annotations
@@ -298,6 +305,12 @@ def _rarity_prefix_tokens(
     return _prefix(lx, lkey), _prefix(rx, rkey)
 
 
+def edit_damage(method: str, q: int) -> int:
+    """q-grams one edit can destroy: q for a substitution, insertion or
+    deletion, q + 1 for a transposition (osa / dl)."""
+    return q + 1 if method in ("osa", "damerau_levenshtein", "dl") else q
+
+
 def edit_candidates(
     lkeys: DataFrame,
     rkeys: DataFrame,
@@ -335,7 +348,7 @@ def edit_candidates(
     Returns distinct (lkey, rkey) pairs.
     """
     tau = int(max_distance)
-    damage = (q + 1) if method in ("osa", "damerau_levenshtein", "dl") else q
+    damage = edit_damage(method, q)
     l = lkeys.select(lkey).withColumn("__fz_ll", F.length(lkey))
     r = rkeys.select(rkey).withColumn("__fz_rl", F.length(rkey))
 
@@ -608,21 +621,258 @@ def _head_len(s_col, b_field: str, sq_field: str, t_eff: float, t_sq: float):
     )
 
 
-def _popcount_cut(s_min, sig_words: int, suffix: str = "_2"):
-    """Count-scaled Bloom AND+popcount pass predicate over carried
-    signature words __fz_sig{i} / __fz_sig{i}<suffix>.
+#: 512-bit Bloom signature = 8 longs; grams are PARTITIONED across the 8
+#: words by hash so each word stays sparse (~n/8 grams -> low AND noise)
+NSIG = 8
+#: the signature's column names on a profile frame
+SIG_COLS = [f"__fz_sig{i}" for i in range(NSIG)]
+
+
+def _sig_bit(h, i: int):
+    """A gram's bit in Bloom word i, from its xxhash64 `h`: bit
+    (h >> 3) mod 64 when h mod NSIG == i, else 0."""
+    return F.when(
+        F.pmod(h, F.lit(NSIG)) == i,
+        # shiftleft via call_function: the PySpark wrapper only takes
+        # literal bit counts, the SQL fn any int column
+        F.call_function(
+            "shiftleft", F.lit(1).cast("long"), F.pmod(F.shiftright(h, 3), F.lit(64)).cast("int")
+        ),
+    ).otherwise(F.lit(0).cast("long"))
+
+
+def _bloom_sig_cols(gs_col, hashed: bool = False) -> list:
+    """SIG_COLS Column list: the 512-bit gram Bloom signature over a
+    distinct-gram array column, as pure JVM expressions. hashed=True means
+    `gs_col` already holds the xxhash64'd gram array — each word then
+    aggregates over the SAME hash array instead of re-hashing the grams
+    NSIG times (values are identical either way)."""
+    hashed = gs_col if hashed else F.transform(gs_col, lambda g: F.xxhash64(g))
+
+    def _word(i):
+        return F.aggregate(
+            hashed, F.lit(0).cast("long"), lambda acc, g: acc.bitwiseOR(_sig_bit(g, i))
+        )
+
+    return [_word(i).alias(c) for i, c in enumerate(SIG_COLS)]
+
+
+def _popcount_cut(s_min):
+    """Count-scaled Bloom AND+popcount pass predicate over the signature
+    words SIG_COLS and their "_2" twins (the right side of a pair).
 
     A pair whose true match requires s_min shared DISTINCT grams must
     share >= max(floor(s_min/2)-2, 1) signature bits; s_min < 1 always
-    passes. Same astronomically-safe collision analysis as the jaccard
-    pairs-stage cut (s distinct grams collapsing into <= floor(s_min/2)-2
-    of 512 bins: < 1e-12 at s_min=8, vanishing beyond; s_min <= 7 clamps
-    to 1 shared bit, which one shared gram guarantees)."""
-    shared = sum(
-        F.bit_count(F.col(f"__fz_sig{i}").bitwiseAND(F.col(f"__fz_sig{i}{suffix}")))
-        for i in range(sig_words)
-    )
+    passes. The clamp-to-1 case (s_min <= 7) is sound: one shared gram =>
+    one shared bit. Past it the cut is not strictly lossless: s distinct
+    grams collapse into <= floor(s_min/2)-2 of the 512 bins with
+    probability < C(512,k)*(k/512)^s — < 1e-12 per pair at s_min=8,
+    vanishing faster beyond. Every survivor is rescored exactly, so an
+    (astronomically rare) false negative costs one candidate — the same
+    failure class as the minhash-LSH band curve."""
+    shared = sum(F.bit_count(F.col(c).bitwiseAND(F.col(c + "_2"))) for c in SIG_COLS)
     return (s_min < 1) | (shared >= F.greatest(F.floor(s_min / 2) - 2, F.lit(1)))
+
+
+def jaccard_sig_cut(t: float):
+    """The jaccard Bloom cut over `__fz_n` / `__fz_n_2` (distinct-gram
+    counts) and the signature words: a pair with jaccard_sim >= t shares
+    >= ceil(t/(1+t) * (n1 + n2)) distinct grams, floored at one shared bit
+    (t <= 0 keeps the one-shared-gram floor)."""
+    alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("__fz_n") + F.col("__fz_n_2")))
+    return _popcount_cut(F.greatest(alpha, F.lit(1)))
+
+
+def token_df(prof: DataFrame, tokens) -> DataFrame:
+    """(__fz_g, __fz_df): the document frequency of every token in the
+    token-array column `tokens` of `prof` (tokens are distinct per row)."""
+    return (
+        prof.select(F.explode(tokens).alias("__fz_g"))
+        .groupBy("__fz_g")
+        .agg(F.count(F.lit(1)).alias("__fz_df"))
+    )
+
+
+def _self_join(lp: DataFrame, id_col: str, token_col: str, cached: list | None) -> DataFrame:
+    """Self-join of a token frame on `token_col`, one ordered direction
+    (id < id2). The right side's id is renamed id_col + "2" and its other
+    columns get the suffix "_2".
+
+    Catalyst does not reuse an exchange across the rename projection, so
+    both sides would compute the whole token -> df -> per-key sort ->
+    prefix chain (measured at 50k entities: raw-candidate job 17.6 s vs
+    10.2 s for one chain). `lp` is therefore persisted once and appended
+    to `cached`, the caller's free list (freed after the pairs are
+    written). cached=None joins without persisting — for frames that are
+    a filter over the caller's already-cached profile."""
+    if cached is not None:
+        lp = lp.persist()
+        cached.append(lp)
+    id2 = id_col + "2"
+    rp = lp.select(
+        [F.col(c).alias(id2 if c == id_col else c if c == token_col else c + "_2")
+         for c in lp.columns]
+    )
+    return lp.join(rp, token_col).where(F.col(id_col) < F.col(id2))
+
+
+def _observe(df: DataFrame, obs) -> DataFrame:
+    """Attach the caller's `raw_candidates` row count to `df`, collected
+    by the action that writes the pairs (no extra job)."""
+    return df if obs is None else df.observe(obs, F.count(F.lit(1)).alias("raw_candidates"))
+
+
+def _finish(pairs: DataFrame, obs, extra: DataFrame | None) -> DataFrame:
+    """Tail of the builders that emit distinct pairs: observe them, then
+    union the caller's `extra` pairs (the sorted-neighborhood pass) under
+    one more distinct. Without `extra` the builder's own distinct holds."""
+    pairs = _observe(pairs, obs)
+    return pairs if extra is None else pairs.unionByName(extra).distinct()
+
+
+def jaccard_candidates_ids(
+    prof: DataFrame,
+    id_col: str,
+    max_distance: float,
+    gram_df: DataFrame,
+    max_gram_df: int | None = None,
+    short_keys: bool = True,
+    *,
+    cached: list,
+    obs=None,
+    extra: DataFrame | None = None,
+) -> DataFrame:
+    """SELF-join jaccard candidates over a precomputed profile frame —
+    PPJoin (Chaudhuri et al. ICDE'06 / Xiao et al. WWW'08), lossless:
+    order each key's distinct grams by global rarity; keys with
+    jaccard_sim >= t = 1 - max_distance share a gram within their first
+    n - ceil(t*n) + 1 grams, and the positional filter bounds the best
+    possible overlap from the prefix positions of the shared gram:
+        1 + min(n - rn, n2 - rn2) >= ceil(t/(1+t) * (n + n2)).
+    At t <= 0 every gram is indexed (the τ >= 1 share-a-gram quirk: pairs
+    with no shared gram are not emitted).
+
+    `prof` columns: `id_col`, `__fz_gs` (distinct q-grams), `__fz_n` (their
+    count) and the Bloom words SIG_COLS. `gram_df` is the `token_df` of
+    `__fz_gs`; grams past `max_gram_df` leave the index while the sizes
+    and signatures stay full-profile. The signature rides the prefix rows,
+    so `jaccard_sig_cut` runs inside the candidate join before the pair
+    stream reaches the distinct's shuffle (>99% of non-matches die there).
+    `short_keys`: plan the empty-profile block (keys shorter than q;
+    jaccard(empty, empty) = 0, a definite match; only at t > 0).
+    `cached` receives the persisted prefix frame, `obs` the raw
+    candidate count (join rows before the Bloom cut), and `extra` pairs
+    join the final distinct.
+
+    Returns distinct (id_col, id_col+"2") pairs with id < id2.
+    """
+    t = 1.0 - max_distance
+    positional = t > 0
+    id2 = id_col + "2"
+    gdf = gram_df.where(F.col("__fz_df") <= max_gram_df) if max_gram_df else gram_df
+    # broadcast so the exploded gram rows don't shuffle for the df lookup;
+    # LEFT join — capped grams keep a null df so the prefix ranking drops
+    # them while the signature aggregation still sees the FULL profile
+    grams = prof.select(
+        id_col, "__fz_n", *([] if positional else SIG_COLS), F.explode("__fz_gs").alias("__fz_g")
+    ).join(F.broadcast(gdf), "__fz_g", "left")
+    if positional:
+        # rank grams by rarity per key WITHOUT a window: one groupBy, a
+        # per-key sort, a posexplode of just the prefix. The Bloom words
+        # are RE-AGGREGATED as map-side-combining bit_or()s over all the
+        # key's grams (the same values as the profile's words), so the
+        # groupBy shuffles (id, df, g) rows and 8 partially combined longs
+        # per key, not 64 B of signature per gram row. collect_list skips
+        # the capped grams' nulls.
+        h = F.xxhash64("__fz_g")
+        agg = grams.groupBy(id_col).agg(
+            F.array_sort(
+                F.collect_list(F.when(F.col("__fz_df").isNotNull(), F.struct("__fz_df", "__fz_g")))
+            ).alias("__fz_s"),
+            F.first("__fz_n").alias("__fz_n"),
+            *[F.bit_or(_sig_bit(h, i)).alias(c) for i, c in enumerate(SIG_COLS)],
+        )
+        plen = (F.col("__fz_n") - F.ceil(F.lit(t) * F.col("__fz_n")) + 1).cast("int")
+        lp = agg.select(
+            id_col, "__fz_n", *SIG_COLS,
+            F.posexplode(F.slice("__fz_s", 1, plen)).alias("__fz_p", "__fz_e"),
+        ).select(
+            id_col, "__fz_n", *SIG_COLS,
+            F.col("__fz_e.__fz_g").alias("__fz_g"), (F.col("__fz_p") + 1).alias("__fz_rn"),
+        )
+    else:
+        lp = grams.where(F.col("__fz_df").isNotNull()).select(
+            id_col, "__fz_n", *SIG_COLS, "__fz_g"
+        )
+    cand = _self_join(lp, id_col, "__fz_g", cached)
+    if positional:
+        n, n2 = F.col("__fz_n"), F.col("__fz_n_2")
+        cand = cand.where(
+            # size bound: jaccard_sim >= t needs min/max >= t
+            (F.least(n, n2) >= F.ceil(F.lit(t) * F.greatest(n, n2)))
+            & (
+                F.lit(1) + F.least(n - F.col("__fz_rn"), n2 - F.col("__fz_rn_2"))
+                >= F.ceil(F.lit(t / (1.0 + t)) * (n + n2))
+            )
+        )
+    # gram rows imply n, n2 >= 1: no both-empty clause in the cut
+    cand = _observe(cand, obs).where(jaccard_sig_cut(t)).select(id_col, id2)
+    if short_keys and positional:
+        # empty profiles never enter the index; equi-join them on the
+        # (all-0) count so Catalyst plans a hash join, not a BNLJ. Their
+        # pair count is the TRUE result size, not blocking slop
+        empty = prof.where(F.col("__fz_n") == 0).select(id_col, "__fz_n")
+        cand = cand.unionByName(_self_join(empty, id_col, "__fz_n", None).select(id_col, id2))
+    return (cand if extra is None else cand.unionByName(extra)).distinct()
+
+
+def edit_candidates_ids(
+    prof: DataFrame,
+    id_col: str,
+    max_distance: float,
+    gram_df: DataFrame,
+    method: str,
+    q: int,
+    max_gram_df: int | None = None,
+    short_keys: bool = True,
+    *,
+    cached: list,
+    obs=None,
+    extra: DataFrame | None = None,
+) -> DataFrame:
+    """SELF-join edit-family candidates (lv/osa/dl/lcs/hamming) over a
+    precomputed profile frame: every pair sharing an (uncapped) q-gram.
+    Lossless for keys of length >= q + edit_damage*tau — a tau-edit pair
+    of them MUST share a gram (Gravano et al. VLDB'01); shorter keys are
+    paired by a length-band block (|len diff| <= tau bounds any edit pair,
+    hamming pairs equal lengths only), the id-keyed twin of
+    `edit_candidates`' short path.
+
+    `prof` columns: `id_col`, `__fz_gs` (distinct q-grams), `__fz_kn` (key
+    length). `gram_df`, `max_gram_df`, `cached`, `obs` (raw candidates =
+    gram join rows) and `extra` as in `jaccard_candidates_ids`;
+    `short_keys` plans the length-band block.
+
+    Returns distinct (id_col, id_col+"2") pairs with id < id2.
+    """
+    id2 = id_col + "2"
+    tau = int(max_distance)
+    gdf = gram_df.where(F.col("__fz_df") <= max_gram_df) if max_gram_df else gram_df
+    tok = prof.select(id_col, F.explode("__fz_gs").alias("__fz_g")).join(
+        F.broadcast(gdf.select("__fz_g")), "__fz_g"
+    )
+    cand = _observe(_self_join(tok, id_col, "__fz_g", cached), obs).select(id_col, id2)
+    if short_keys:
+        band = 0 if method == "hamming" else tau
+        kn = F.col("__fz_kn")
+        sl = prof.where(kn < q + edit_damage(method, q) * tau).select(id_col, "__fz_kn")
+        cand = cand.unionByName(
+            sl.select(id_col, F.explode(F.sequence(kn - band, kn + band)).alias("__fz_lb"))
+            .join(sl.select(F.col(id_col).alias(id2), kn.alias("__fz_lb")), "__fz_lb")
+            .where(F.col(id_col) < F.col(id2))
+            .select(id_col, id2)
+        )
+    return (cand if extra is None else cand.unionByName(extra)).distinct()
 
 
 def qgram_candidates_ids(
@@ -630,8 +880,11 @@ def qgram_candidates_ids(
     id_col: str,
     max_distance: float,
     prefix_mode: str = "prefix",
-    sig_words: int = 0,
     max_gram_df: int | None = None,
+    *,
+    cached: list,
+    obs=None,
+    extra: DataFrame | None = None,
 ) -> DataFrame:
     """SELF-join qgram-distance candidates over a precomputed profile frame,
     shuffling only fixed-width ids + grams — never key strings (the
@@ -639,43 +892,35 @@ def qgram_candidates_ids(
 
     `prof` columns: `id_col` (orderable; er passes the 128-bit kid struct),
     `__fz_gs` (array of DISTINCT q-grams), `__fz_tc` (total multiset gram
-    count). Same theorems as `ngram_candidates`'s qgram branch: each
-    distinct gram missing from the other side contributes >= 1 to the
-    distance, so dist <= tau forces the rarity-ordered tau+1 prefixes to
-    intersect (lossless); no-shared-gram pairs (dist = tc1 + tc2) are
-    covered by the small-profile block; |tc1 - tc2| <= tau prunes inline.
-
-    sig_words > 0: `prof` also carries Bloom words __fz_sig0..N-1 (the
-    pipeline's 512-bit gram signature); they ride the exploded token rows
-    (the jaccard pairs-stage design — sequential shuffle bytes beat 2
-    random broadcast probes per raw candidate) and the count-scaled
-    popcount cut (`_popcount_cut`, s_min = ceil((n1 + n2 - tau)/2) from
+    count) and the Bloom words SIG_COLS. Same theorems as
+    `ngram_candidates`'s qgram branch: each distinct gram missing from the
+    other side contributes >= 1 to the distance, so dist <= tau forces the
+    rarity-ordered tau+1 prefixes to intersect (lossless); no-shared-gram
+    pairs (dist = tc1 + tc2) are covered by the small-profile block;
+    |tc1 - tc2| <= tau prunes inline. The Bloom words ride the token rows
+    (sequential shuffle bytes beat 2 random broadcast probes per raw
+    candidate) and the popcount cut (s_min = ceil((n1 + n2 - tau)/2) from
     the per-missing-gram L1 cost) runs INSIDE the candidate join, before
-    the pair stream hits the distinct's shuffle.
+    the pair stream hits the distinct's shuffle. `cached`, `obs` (raw
+    candidates = the distinct pairs) and `extra` as in
+    `jaccard_candidates_ids`.
 
     Returns distinct (id_col, id_col+"2") pairs with id < id2.
     """
     tau = max_distance
     id2 = id_col + "2"
-    sigw = [f"__fz_sig{i}" for i in range(sig_words)]
-    counts = prof.select(id_col, F.col("__fz_tc"))
     zb = F.floor(F.col("__fz_tc") / F.lit(int(tau) + 1))
-    small_side = counts.filter(F.col("__fz_tc") <= tau).select(
-        id_col, "__fz_tc", zb.alias("__fz_zb")
-    )
+    small_side = prof.filter(F.col("__fz_tc") <= tau).select(id_col, "__fz_tc", zb.alias("__fz_zb"))
     small = (
-        small_side.join(
-            small_side.select(
-                F.col(id_col).alias(id2), F.col("__fz_tc").alias("__fz_tc2"), "__fz_zb"
-            ),
-            "__fz_zb",
-        )
-        .filter((F.col(id_col) < F.col(id2)) & (F.col("__fz_tc") + F.col("__fz_tc2") <= tau))
+        _self_join(small_side, id_col, "__fz_zb", None)
+        .where(F.col("__fz_tc") + F.col("__fz_tc_2") <= tau)
         .select(id_col, id2)
     )
-    carry = ["__fz_tc", F.size("__fz_gs").alias("__fz_n"), *sigw] if sig_words else []
-    tok = prof.select(id_col, *carry, F.explode("__fz_gs").alias("__fz_g"))
-    carry_names = ["__fz_tc", "__fz_n", *sigw] if sig_words else []
+    carry = ["__fz_tc", "__fz_n", *SIG_COLS]
+    tok = prof.select(
+        id_col, "__fz_tc", F.size("__fz_gs").alias("__fz_n"), *SIG_COLS,
+        F.explode("__fz_gs").alias("__fz_g"),
+    )
     if max_gram_df and prefix_mode == "simple":
         # hot-gram df cap (approximate valve — see cosine_candidates_ids);
         # __fz_n / __fz_tc / the Bloom words stay FULL-profile, so every
@@ -701,53 +946,23 @@ def qgram_candidates_ids(
             # free cap (see cosine_candidates_ids): surviving grams keep
             # the same df, every profile stat stays full-profile
             ranked = ranked.where(F.col("__fz_df") <= max_gram_df)
-        agg = (
-            ranked
-            .groupBy(id_col)
-            .agg(
-                F.array_sort(F.collect_list(F.struct("__fz_df", "__fz_g"))).alias("__fz_s"),
-                *[F.first(c).alias(c) for c in carry_names],
-            )
+        agg = ranked.groupBy(id_col).agg(
+            F.array_sort(F.collect_list(F.struct("__fz_df", "__fz_g"))).alias("__fz_s"),
+            *[F.first(c).alias(c) for c in carry],
         )
         plen = F.least(F.size("__fz_s"), F.lit(int(tau) + 1)).cast("int")
         lp = agg.select(
-            id_col, *carry_names, F.explode(F.slice("__fz_s", 1, plen)).alias("__fz_e")
-        ).select(id_col, *carry_names, F.col("__fz_e.__fz_g").alias("__fz_g"))
-    if sig_words:
-        ren = {id_col: id2, **{c: c + "_2" for c in carry_names}}
-        rp = lp.select(
-            [F.col(c).alias(ren.get(c, c)) for c in lp.columns]
-        )
-        s_min = F.ceil(
-            (F.col("__fz_n") + F.col("__fz_n_2") - F.lit(float(tau))) / 2 - F.lit(1e-9)
-        )
-        return (
-            lp.join(rp, "__fz_g")
-            .where(
-                (F.col(id_col) < F.col(id2))
-                & (F.abs(F.col("__fz_tc") - F.col("__fz_tc_2")) <= tau)
-                & _popcount_cut(s_min, sig_words)
-            )
-            .select(id_col, id2)
-            .unionByName(small)
-            .distinct()
-        )
-    cand = (
-        lp.join(lp.select(F.col(id_col).alias(id2), "__fz_g"), "__fz_g")
-        .where(F.col(id_col) < F.col(id2))
+            id_col, *carry, F.explode(F.slice("__fz_s", 1, plen)).alias("__fz_e")
+        ).select(id_col, *carry, F.col("__fz_e.__fz_g").alias("__fz_g"))
+    s_min = F.ceil((F.col("__fz_n") + F.col("__fz_n_2") - F.lit(float(tau))) / 2 - F.lit(1e-9))
+    pairs = (
+        _self_join(lp, id_col, "__fz_g", cached)
+        .where((F.abs(F.col("__fz_tc") - F.col("__fz_tc_2")) <= tau) & _popcount_cut(s_min))
         .select(id_col, id2)
+        .unionByName(small)
         .distinct()
     )
-    sized = (
-        cand.join(counts, id_col)
-        .join(
-            counts.select(F.col(id_col).alias(id2), F.col("__fz_tc").alias("__fz_tc2")),
-            id2,
-        )
-        .filter(F.abs(F.col("__fz_tc") - F.col("__fz_tc2")) <= tau)
-        .select(id_col, id2)
-    )
-    return sized.unionByName(small).distinct()
+    return _finish(pairs, obs, extra)
 
 
 def cosine_candidates_ids(
@@ -755,28 +970,33 @@ def cosine_candidates_ids(
     id_col: str,
     max_distance: float,
     prefix_mode: str = "prefix",
-    sig_words: int = 0,
     max_gram_df: int | None = None,
+    *,
+    cached: list,
+    obs=None,
+    extra: DataFrame | None = None,
 ) -> DataFrame:
     """SELF-join multiset-cosine candidates over a precomputed profile
     frame — the id-keyed twin of `_cosine_prefix_candidates` (weighted
     AllPairs, Bayardo WWW'07); shuffles ids + grams, never key strings.
 
     `prof` columns: `id_col` (orderable), `__fz_cm` (map gram -> multiset
-    count). prefix mode joins GLOBAL-ORDER PREFIX x PREFIX (see the inline
-    derivation at the join below) — r6 change from the r5 all-tokens x
-    greedy-suffix form: the shared total order lets the join keep one
-    ordered direction (id < id2) and cuts the hot-gram join terms from
-    df(g)·df_kept(g) to df_kept(g)², at the price of a head-constrained
-    (instead of per-key greedy knapsack) unindex set. Empty profiles have
-    no tokens and cosine dist 1.0 — unreachable at tau < 1 (callers
-    refuse tau >= 1).
+    count) and the Bloom words SIG_COLS. prefix mode joins GLOBAL-ORDER
+    PREFIX x PREFIX (see the inline derivation at the join below) — r6
+    change from the r5 all-tokens x greedy-suffix form: the shared total
+    order lets the join keep one ordered direction (id < id2) and cuts the
+    hot-gram join terms from df(g)·df_kept(g) to df_kept(g)², at the price
+    of a head-constrained (instead of per-key greedy knapsack) unindex
+    set. simple mode joins every token; the token sets are symmetric, so
+    one ordered direction is lossless there too. Empty profiles have no
+    tokens and cosine dist 1.0 — unreachable at tau < 1 (callers refuse
+    tau >= 1).
 
-    sig_words > 0: `prof` also carries Bloom words __fz_sig0..N-1; they
-    ride the token rows and the count-scaled popcount cut
+    The Bloom words ride the token rows and the count-scaled popcount cut
     (`_popcount_cut`, s_min = ceil(t*nrm1*nrm2/(cmax1*cmax2)) from
-    dot <= s*cmax1*cmax2) runs INSIDE the candidate join, before the
-    pair stream hits the distinct's shuffle.
+    dot <= s*cmax1*cmax2) runs INSIDE the candidate join, before the pair
+    stream hits the distinct's shuffle. `cached`, `obs` (raw candidates =
+    the distinct pairs) and `extra` as in `jaccard_candidates_ids`.
 
     Returns distinct (id_col, id_col+"2") pairs with id < id2.
     """
@@ -784,8 +1004,7 @@ def cosine_candidates_ids(
         raise ValueError("cosine_candidates_ids requires max_distance < 1")
     id2 = id_col + "2"
     t = 1.0 - float(max_distance)
-    sigw = [f"__fz_sig{i}" for i in range(sig_words)]
-    stat_names = ["__fz_nrm", "__fz_cx", *sigw] if sig_words else []
+    stat_names = ["__fz_nrm", "__fz_cx", *SIG_COLS]
     nrm = F.sqrt(
         F.aggregate(
             F.map_values("__fz_cm").cast("array<double>"),
@@ -793,32 +1012,29 @@ def cosine_candidates_ids(
             lambda acc, c: acc + c * c,
         )
     )
-    carry0 = (
-        [F.array_max(F.map_values("__fz_cm")).cast("double").alias("__fz_cx"), *sigw]
-        if sig_words
-        else []
-    )
+    carry0 = [F.array_max(F.map_values("__fz_cm")).cast("double").alias("__fz_cx"), *SIG_COLS]
     # prefix mode ships only (id, gram, weight) through the stats join and
     # the prefix groupBy; the per-key stats (norm, cmax, Bloom words)
     # re-attach ONCE per key after the aggregation — carrying ~100 B of
     # stat payload on every token row through two exchanges was measurable
     # against the whole builder wall. The simple path still carries them
     # (its candidate join reads stats straight off the token rows).
+    simple = prefix_mode == "simple"
     tok = (
         prof.select(
             id_col,
             F.explode("__fz_cm").alias("__fz_g", "__fz_c"),
             nrm.alias("__fz_nrm"),
-            *(carry0 if prefix_mode == "simple" else []),
+            *(carry0 if simple else []),
         )
         .select(
             id_col,
             "__fz_g",
             (F.col("__fz_c") / F.col("__fz_nrm")).alias("__fz_w"),
-            *(stat_names if prefix_mode == "simple" else []),
+            *(stat_names if simple else []),
         )
     )
-    if max_gram_df and prefix_mode == "simple":
+    if max_gram_df and simple:
         # hot-gram df cap (approximate valve, same contract as the
         # jaccard path): grams hotter than the cap are dropped from BOTH
         # the probe and index token streams — a pair whose entire overlap
@@ -837,15 +1053,8 @@ def cosine_candidates_ids(
             .select("__fz_g")
         )
         tok = tok.join(F.broadcast(keep), "__fz_g")
-    if prefix_mode == "simple":
-        indexed = tok.select(
-            F.col(id_col).alias(id2),
-            "__fz_g",
-            *[F.col(c).alias(c + "_2") for c in stat_names],
-        )
-        joined = tok.select(id_col, "__fz_g", *stat_names).join(indexed, "__fz_g").where(
-            F.col(id_col) != F.col(id2)
-        )
+    if simple:
+        lp = tok.select(id_col, "__fz_g", *stat_names)
     else:
         # GLOBAL-ORDER prefix x prefix self-join (Bayardo WWW'07 self-join
         # form; Vernica et al. SIGMOD'10 for the distributed shape): one
@@ -857,9 +1066,11 @@ def cosine_candidates_ids(
         # common gram g* must sit in BOTH prefixes (if g* fell in either
         # key's hot head, every common gram would too — the order is
         # shared — and that head's own budget caps the similarity under
-        # t), so prefix x prefix is a lossless candidate superset. vs the
-        # r5 all-tokens x suffix join this cuts the raw joined-row volume
-        # from Σ_g df(g)·df_kept(g) to Σ_g df_kept(g)² AND the per-pair
+        # t), so prefix x prefix is a lossless candidate superset, and the
+        # symmetric join finds every pair at g* in BOTH directions, so one
+        # ordered direction (id < id2) is lossless. vs the r5 all-tokens x
+        # suffix join this cuts the raw joined-row volume from
+        # Σ_g df(g)·df_kept(g) to Σ_g df_kept(g)² AND the per-pair
         # duplicate factor to the common-prefix gram count — the
         # join-time attack on the candidate-distinct sort spill (the 200k
         # er-cosine disk envelope).
@@ -895,48 +1106,31 @@ def cosine_candidates_ids(
                 )
             ).alias("__fz_s"),
         )
-        if stat_names:
-            # per-key stats re-attach here, once per key (no broadcast
-            # hint: the stat frame is one narrow row per key off the
-            # caller's cached profile — AQE broadcasts it when small and
-            # falls back to a bounded shuffle join at scale)
-            statf = prof.select(
-                id_col, nrm.alias("__fz_nrm"), *carry0
-            )
-            agg = agg.join(statf, id_col)
-
+        # per-key stats re-attach here, once per key (no broadcast hint:
+        # the stat frame is one narrow row per key off the caller's
+        # cached profile — AQE broadcasts it when small and falls back to
+        # a bounded shuffle join at scale)
+        agg = agg.join(prof.select(id_col, nrm.alias("__fz_nrm"), *carry0), id_col)
         p = _head_len(F.col("__fz_s"), "b", "sq", t_eff, t_sq)
-        kept = agg.select(
+        lp = agg.select(
             id_col,
             *stat_names,
             F.explode(
                 F.slice("__fz_s", p + 1, F.greatest(F.size("__fz_s") - p, F.lit(0)))
             ).alias("__fz_e"),
         ).select(id_col, *stat_names, F.col("__fz_e.g").alias("__fz_g"))
-        right = kept.select(
-            F.col(id_col).alias(id2),
-            *[F.col(c).alias(c + "_2") for c in stat_names],
-            "__fz_g",
-        )
-        # id < id2, not id != id2: the symmetric kept x kept join finds
-        # every pair at g* in BOTH directions, so keeping one ordered
-        # direction is lossless and HALVES the pre-distinct row volume
-        # (the r5 all-tokens x suffix join only guaranteed >= 1 direction
-        # and had to keep both)
-        joined = kept.join(right, "__fz_g").where(F.col(id_col) < F.col(id2))
-    if sig_words:
-        s_min = F.ceil(
-            F.lit(t) * F.col("__fz_nrm") * F.col("__fz_nrm_2")
-            / (F.col("__fz_cx") * F.col("__fz_cx_2"))
-            - F.lit(1e-9)
-        )
-        joined = joined.where(_popcount_cut(s_min, sig_words))
-    return (
-        joined.select(
-            F.least(id_col, id2).alias(id_col), F.greatest(id_col, id2).alias(id2)
-        )
+    s_min = F.ceil(
+        F.lit(t) * F.col("__fz_nrm") * F.col("__fz_nrm_2")
+        / (F.col("__fz_cx") * F.col("__fz_cx_2"))
+        - F.lit(1e-9)
+    )
+    pairs = (
+        _self_join(lp, id_col, "__fz_g", cached)
+        .where(_popcount_cut(s_min))
+        .select(id_col, id2)
         .distinct()
     )
+    return _finish(pairs, obs, extra)
 
 
 def _cosine_prefix_candidates(
@@ -1084,6 +1278,10 @@ def jaro_candidates_ids(
     max_distance: float,
     prefix_weight: float = 0.0,
     max_token_df: int | None = None,
+    *,
+    cached: list,
+    obs=None,
+    extra: DataFrame | None = None,
 ) -> DataFrame:
     """SELF-join jaro/jw candidates over a precomputed profile frame — the
     id-keyed twin of `jaro_candidates` (same (char, occurrence)-token
@@ -1104,6 +1302,9 @@ def jaro_candidates_ids(
     direction. Only valid in the provable regime (s = 1 - tau > 1/3 and
     prefix_weight >= 0 under the reference's ADDITIVE jw quirk) — raises
     outside it, because an id-keyed cross join is never the right fallback.
+
+    `cached`, `obs` (raw candidates = the distinct pairs) and `extra` as
+    in `jaccard_candidates_ids`.
 
     Returns distinct (id_col, id_col+"2") pairs with id < id2, including
     the both-empty block (jaro dist 0).
@@ -1153,21 +1354,17 @@ def jaro_candidates_ids(
     lp = agg.select(
         id_col, "__fz_kn", F.explode(F.slice("__fz_s", 1, plen)).alias("__fz_e")
     ).select(id_col, "__fz_kn", F.col("__fz_e.__fz_t").alias("__fz_t"))
-    rp = lp.select(
-        F.col(id_col).alias(id2), F.col("__fz_kn").alias("__fz_kn2"), "__fz_t"
-    )
     pairs = (
-        lp.join(rp, "__fz_t")
-        .where(F.col(id_col) < F.col(id2))
-        .select(id_col, id2, "__fz_kn", "__fz_kn2")
+        _self_join(lp, id_col, "__fz_t", cached)
+        .select(id_col, id2, "__fz_kn", "__fz_kn_2")
         .distinct()
         .where(
-            F.least("__fz_kn", "__fz_kn2")
+            F.least("__fz_kn", "__fz_kn_2")
             >= F.ceil(
                 F.lit(3 * s - 1)
                 * F.col("__fz_kn")
-                * F.col("__fz_kn2")
-                / (F.col("__fz_kn") + F.col("__fz_kn2"))
+                * F.col("__fz_kn_2")
+                / (F.col("__fz_kn") + F.col("__fz_kn_2"))
                 - F.lit(1e-9)
             )
         )
@@ -1176,12 +1373,8 @@ def jaro_candidates_ids(
     # both-empty pairs: jaro dist 0, no tokens — equi-join on the (all-0)
     # length column so Catalyst plans a hash join, not a BNLJ
     el = prof.where(F.col("__fz_kn") == 0).select(id_col, "__fz_kn")
-    empties = (
-        el.join(el.select(F.col(id_col).alias(id2), "__fz_kn"), "__fz_kn")
-        .where(F.col(id_col) < F.col(id2))
-        .select(id_col, id2)
-    )
-    return pairs.unionByName(empties).distinct()
+    empties = _self_join(el, id_col, "__fz_kn", None).select(id_col, id2)
+    return _finish(pairs.unionByName(empties).distinct(), obs, extra)
 
 
 def jaro_candidates(

@@ -3,8 +3,9 @@ operator inventory and flags the anti-patterns the engine promises to
 avoid (CartesianProduct / BroadcastNestedLoopJoin on paths that must be
 equi-joins, an exact string scorer evaluated inside a join condition —
 once per raw join row instead of once per distinct candidate — a grouping
-result that reruns its candidate lineage, missing whole-stage codegen,
-full-column parquet scans).
+result that reruns its candidate lineage, a candidate self-join whose two
+sides each compute their own prefix aggregate, missing whole-stage
+codegen, full-column parquet scans).
 
     python scripts/explain_audit.py [sf_dir]
 """
@@ -31,13 +32,32 @@ _MINHASH_LINEAGE = re.compile(
     r"min\(xxhash64\(|(HashJoin|SortMergeJoin)\w* \[band#\d+, bh#\d+\]"
 )
 _JOIN_LINE = re.compile(r"(\w*HashJoin|SortMergeJoin|BroadcastNestedLoopJoin|CartesianProduct) ")
+#: the final per-key prefix aggregate of an id-keyed builder (the rarity
+#: sort's collect_list; partial aggregates excluded)
+_PREFIX_AGG = re.compile(r"Aggregate\(keys=.*(?<!partial_)collect_list\(")
 
 
-def audit(name: str, df, allow_bnlj: bool = False, lineage_cut: bool = False) -> dict:
+def _outside_caches(plan: str) -> list[str]:
+    """Plan lines minus the cached plans printed under each
+    InMemoryRelation: what the query itself computes."""
+    out, skip = [], None
+    for ln in plan.splitlines():
+        indent = len(ln) - len(ln.lstrip(" :+-"))
+        if skip is not None and indent > skip:
+            continue
+        skip = indent if "InMemoryRelation" in ln else None
+        out.append(ln)
+    return out
+
+
+def audit(name: str, df, allow_bnlj: bool = False, lineage_cut: bool = False,
+          self_join: bool = False) -> dict:
     plan = df._jdf.queryExecution().executedPlan().toString()
     flags = []
     if lineage_cut and _MINHASH_LINEAGE.search(plan):
         flags.append("CandidateLineageRecomputed")
+    if self_join and sum(bool(_PREFIX_AGG.search(ln)) for ln in _outside_caches(plan)) > 1:
+        flags.append("PrefixChainRecomputed")
     if "CartesianProduct" in plan:
         flags.append("CartesianProduct")
     if not allow_bnlj and "BroadcastNestedLoopJoin" in plan:
@@ -146,32 +166,39 @@ def main() -> int:
             by={"s": "s2", "e": "e2t"}, maxgap=60, unit="seconds",
         ),
     ))
-    # id-keyed ER candidate builders (kids + grams shuffle, no key strings,
-    # no cross joins)
+    # id-keyed ER candidate builders in the er_pipeline configuration:
+    # Bloom words on the profile, prefix mode (kids + tokens shuffle, no
+    # key strings, no cross joins, each prefix chain computed once)
     from fozzie_spark import blocking as B
 
     keys = docs.select(
         F.xxhash64("text").alias("kid"), F.col("text").alias("key")
     ).distinct()
+    gs = F.array_distinct(B.qgrams_col("key", 3))
+    sigs = B._bloom_sig_cols(gs)
+    kn = F.length("key").cast("int").alias("__fz_kn")
+    cached = []
+    prof_jc = keys.select("kid", gs.alias("__fz_gs"), F.size(gs).alias("__fz_n"), *sigs)
+    prof_lv = keys.select("kid", gs.alias("__fz_gs"), kn)
     prof_q = keys.select(
-        "kid",
-        F.array_distinct(B.qgrams_col("key", 3)).alias("__fz_gs"),
-        F.size(B.qgrams_col("key", 3)).alias("__fz_tc"),
+        "kid", gs.alias("__fz_gs"), F.size(B.qgrams_col("key", 3)).alias("__fz_tc"), *sigs
     )
-    results.append(audit(
-        "er_qgram_ids", B.qgram_candidates_ids(prof_q, "kid", 4, prefix_mode="prefix")
-    ))
-    prof_c = keys.select("kid", B._count_map_col("key", 3).alias("__fz_cm"))
-    results.append(audit(
-        "er_cosine_ids", B.cosine_candidates_ids(prof_c, "kid", 0.25, prefix_mode="prefix")
-    ))
-    prof_j = keys.select(
-        "kid", F.length("key").cast("int").alias("__fz_kn"),
-        B.char_occurrence_tokens("key").alias("__fz_ts"),
-    )
-    results.append(audit(
-        "er_jw_ids", B.jaro_candidates_ids(prof_j, "kid", 0.25)
-    ))
+    prof_c = keys.select("kid", B._count_map_col("key", 3).alias("__fz_cm"), *sigs)
+    prof_j = keys.select("kid", kn, B.char_occurrence_tokens("key").alias("__fz_ts"))
+    for name, cand in (
+        ("er_jaccard_ids", B.jaccard_candidates_ids(
+            prof_jc, "kid", 0.6, B.token_df(prof_jc, "__fz_gs"), cached=cached)),
+        ("er_lv_ids", B.edit_candidates_ids(
+            prof_lv, "kid", 2, B.token_df(prof_lv, "__fz_gs"), "lv", 3, cached=cached)),
+        ("er_qgram_ids", B.qgram_candidates_ids(
+            prof_q, "kid", 4, prefix_mode="prefix", cached=cached)),
+        ("er_cosine_ids", B.cosine_candidates_ids(
+            prof_c, "kid", 0.25, prefix_mode="prefix", cached=cached)),
+        ("er_jw_ids", B.jaro_candidates_ids(prof_j, "kid", 0.25, cached=cached)),
+    ):
+        results.append(audit(name, cand, self_join=True))
+    for f in cached:
+        f.unpersist()
     bad = [r["name"] for r in results if r["flags"]]
     print("AUDIT:", "FAIL " + ",".join(bad) if bad else "all plans clean")
     spark.stop()

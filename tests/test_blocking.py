@@ -501,24 +501,39 @@ def test_prefix_auto_decision_cached(spark, monkeypatch):
         assert blocking.use_prefix_filter(names, names) is False
 
 
+def _id_pairs(build, *args, **kw):
+    """Run an id-keyed builder; return its (kid, kid2) set and free the
+    frames it persisted."""
+    cached = []
+    try:
+        return {(r["kid"], r["kid2"]) for r in build(*args, cached=cached, **kw).collect()}
+    finally:
+        for f in cached:
+            f.unpersist()
+
+
 def test_id_keyed_ngram_builders_lossless(spark):
-    # qgram_candidates_ids / cosine_candidates_ids (the er_pipeline id-keyed
-    # blocking path: kids + grams shuffle, never key strings) must be a
-    # SUPERSET of the brute-force match set in both physical modes
+    # the er_pipeline id-keyed builders (kids + grams shuffle, never key
+    # strings) over profiles carrying the Bloom words, as er_pipeline
+    # builds them: qgram / cosine in both physical modes, jaccard and the
+    # edit family, each a SUPERSET of the brute-force match set (incl.
+    # empty and short keys) with id < id2
     import collections
     import math
     import random
 
-    from fozzie_spark.blocking import _count_map_col, qgrams_col
+    from fozzie_spark.blocking import SIG_COLS, _bloom_sig_cols, _count_map_col, qgrams_col
 
     rnd = random.Random(5)
-    base = ["abcdefg", "abcdxfg", "zzzzzzz", "qwerty", "qwertz", "ab", "", "abab", "baba", "a"]
+    base = ["abcdefg", "abcdxfg", "zzzzzzz", "qwerty", "qwertz", "ab", "", "abab", "baba", "a",
+            "b", "ba"]
     keys = sorted(
         set(base)
         | {"".join(rnd.choice("abcd") for _ in range(rnd.randint(0, 10))) for _ in range(60)}
     )
     q = 2
     df = spark.createDataFrame(list(enumerate(keys)), "kid long, key string")
+    gs = F.array_distinct(qgrams_col("key", q))
 
     def grams(s):
         return [s[i:i + q] for i in range(len(s) - q + 1)]
@@ -536,45 +551,62 @@ def test_id_keyed_ngram_builders_lossless(spark):
         nb = math.sqrt(sum(v * v for v in cb.values()))
         return 1.0 - dot / (na * nb)
 
+    def jac_dist(a, b):
+        sa, sb = set(grams(a)), set(grams(b))
+        return 0.0 if not sa and not sb else 1.0 - len(sa & sb) / len(sa | sb)
+
+    def truth(dist, tau):
+        pairs = {
+            (i, j)
+            for i in range(len(keys))
+            for j in range(i + 1, len(keys))
+            if dist(keys[i], keys[j]) <= tau
+        }
+        assert pairs  # non-vacuous
+        return pairs
+
+    def check(got, true, what):
+        assert true <= got, f"{what}: missing {sorted(true - got)[:5]}"
+        assert all(a < b for a, b in got), what
+
     tau_q = 4
     prof_q = df.select(
-        "kid",
-        F.array_distinct(qgrams_col("key", q)).alias("__fz_gs"),
-        F.size(qgrams_col("key", q)).alias("__fz_tc"),
+        "kid", gs.alias("__fz_gs"), F.size(qgrams_col("key", q)).alias("__fz_tc"),
+        *_bloom_sig_cols(gs),
     )
-    true_q = {
-        (i, j)
-        for i in range(len(keys))
-        for j in range(i + 1, len(keys))
-        if qgram_dist(keys[i], keys[j]) <= tau_q
-    }
-    assert true_q  # non-vacuous (incl. small-profile pairs like "" vs "ab")
+    true_q = truth(qgram_dist, tau_q)  # incl. small-profile pairs like "" vs "ab"
     for mode in ("prefix", "simple"):
-        got = {
-            (r["kid"], r["kid2"])
-            for r in blocking.qgram_candidates_ids(
-                prof_q, "kid", tau_q, prefix_mode=mode
-            ).collect()
-        }
-        assert true_q <= got, f"qgram {mode}: missing {sorted(true_q - got)[:5]}"
+        got = _id_pairs(blocking.qgram_candidates_ids, prof_q, "kid", tau_q, prefix_mode=mode)
+        check(got, true_q, f"qgram {mode}")
 
     tau_c = 0.4
-    prof_c = df.select("kid", _count_map_col("key", q).alias("__fz_cm"))
-    true_c = {
-        (i, j)
-        for i in range(len(keys))
-        for j in range(i + 1, len(keys))
-        if cos_dist(keys[i], keys[j]) <= tau_c
-    }
-    assert true_c
+    prof_c = df.select("kid", _count_map_col("key", q).alias("__fz_cm"), *_bloom_sig_cols(gs))
+    true_c = truth(cos_dist, tau_c)
     for mode in ("prefix", "simple"):
-        got = {
-            (r["kid"], r["kid2"])
-            for r in blocking.cosine_candidates_ids(
-                prof_c, "kid", tau_c, prefix_mode=mode
-            ).collect()
-        }
-        assert true_c <= got, f"cosine {mode}: missing {sorted(true_c - got)[:5]}"
+        got = _id_pairs(blocking.cosine_candidates_ids, prof_c, "kid", tau_c, prefix_mode=mode)
+        check(got, true_c, f"cosine {mode}")
+
+    prof_j = df.select("kid", gs.alias("__fz_gs"), F.size(gs).alias("__fz_n"), *_bloom_sig_cols(gs))
+    gdf = blocking.token_df(prof_j, "__fz_gs")
+    assert set(prof_j.columns) >= set(SIG_COLS)
+    for tau_j in (0.4, 0.7):
+        got = _id_pairs(blocking.jaccard_candidates_ids, prof_j, "kid", tau_j, gdf)
+        true_j = truth(jac_dist, tau_j)
+        assert any(keys[i] == "" or keys[j] == "" for i, j in true_j)  # empty profiles
+        check(got, true_j, f"jaccard {tau_j}")
+
+    prof_e = df.select("kid", gs.alias("__fz_gs"), F.length("key").cast("int").alias("__fz_kn"))
+    gdf = blocking.token_df(prof_e, "__fz_gs")
+    for method, tau_e in (("lv", 1), ("lv", 2), ("osa", 1), ("hamming", 1), ("lcs", 2)):
+        got = _id_pairs(
+            blocking.edit_candidates_ids, prof_e, "kid", tau_e, gdf, method, q
+        )
+        true_e = truth(
+            lambda a, b: D.score_batch(method, [a], [b], max_distance=tau_e)[0], tau_e
+        )
+        # short keys share no gram with their matches ("a" vs "b")
+        assert any(min(len(keys[i]), len(keys[j])) < q for i, j in true_e), method
+        check(got, true_e, f"{method} {tau_e}")
 
 
 def _py_jaro(s1, s2):
@@ -632,10 +664,7 @@ def test_id_keyed_jaro_builder_lossless_and_equivalent(spark):
         F.length("key").cast("int").alias("__fz_kn"),
         blocking.char_occurrence_tokens("key").alias("__fz_ts"),
     )
-    got = {
-        (r["kid"], r["kid2"])
-        for r in blocking.jaro_candidates_ids(prof, "kid", tau).collect()
-    }
+    got = _id_pairs(blocking.jaro_candidates_ids, prof, "kid", tau)
     true_pairs = {
         (i, j)
         for i in range(len(keys))
@@ -658,9 +687,9 @@ def test_id_keyed_jaro_builder_lossless_and_equivalent(spark):
 
     # outside the provable regime there is no id-keyed fallback: refuse
     with pytest.raises(ValueError, match="provable regime"):
-        blocking.jaro_candidates_ids(prof, "kid", 0.7)
+        blocking.jaro_candidates_ids(prof, "kid", 0.7, cached=[])
     with pytest.raises(ValueError, match="provable regime"):
-        blocking.jaro_candidates_ids(prof, "kid", tau, prefix_weight=-0.1)
+        blocking.jaro_candidates_ids(prof, "kid", tau, prefix_weight=-0.1, cached=[])
 
 
 def test_id_keyed_jaro_builder_no_key_strings_in_shuffles(spark):
@@ -675,8 +704,11 @@ def test_id_keyed_jaro_builder_no_key_strings_in_shuffles(spark):
         F.length("key").cast("int").alias("__fz_kn"),
         blocking.char_occurrence_tokens("key").alias("__fz_ts"),
     )
-    cand = blocking.jaro_candidates_ids(prof, "kid", 0.25)
+    cached = []
+    cand = blocking.jaro_candidates_ids(prof, "kid", 0.25, cached=cached)
     plan = cand._jdf.queryExecution().executedPlan().toString()
+    for f in cached:
+        f.unpersist()
     import re
 
     for part in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
@@ -689,35 +721,38 @@ def test_popcount_cut_boundary(spark):
     # Bloom bit, so the cut is lossless); s_min >= 8 enters the
     # probabilistic >= floor(s_min/2) - 2 regime (collision odds < 1e-12).
     # Walk the 7 -> 8 boundary so the not-strictly-lossless regime can
-    # never silently move (VERDICT r5 'what's wrong' #3).
-    from fozzie_spark.blocking import _popcount_cut
+    # never silently move (VERDICT r5 'what's wrong' #3). The cut reads all
+    # NSIG signature words; the shared bits sit in word 0, the rest are 0.
+    from fozzie_spark.blocking import NSIG, SIG_COLS, _popcount_cut
 
-    one_bit = spark.createDataFrame([(1, 1)], "__fz_sig0 long, __fz_sig0_2 long")
-    no_bits = spark.createDataFrame([(1, 2)], "__fz_sig0 long, __fz_sig0_2 long")
-    two_bits = spark.createDataFrame([(3, 3)], "__fz_sig0 long, __fz_sig0_2 long")
+    schema = ", ".join(f"{c} long, {c}_2 long" for c in SIG_COLS)
+
+    def words(a, b):
+        return spark.createDataFrame([(a, b) + (0, 0) * (NSIG - 1)], schema)
+
+    one_bit, no_bits, two_bits = words(1, 1), words(1, 2), words(3, 3)
     # s_min < 1: always passes, even with zero shared bits
-    assert no_bits.where(_popcount_cut(F.lit(0), 1)).count() == 1
+    assert no_bits.where(_popcount_cut(F.lit(0))).count() == 1
     # deterministic regime: every s_min in 1..7 requires exactly 1 bit
     for s_min in range(1, 8):
-        assert one_bit.where(_popcount_cut(F.lit(s_min), 1)).count() == 1, s_min
-        assert no_bits.where(_popcount_cut(F.lit(s_min), 1)).count() == 0, s_min
+        assert one_bit.where(_popcount_cut(F.lit(s_min))).count() == 1, s_min
+        assert no_bits.where(_popcount_cut(F.lit(s_min))).count() == 0, s_min
     # boundary: s_min = 8 is the FIRST value requiring 2 shared bits
-    assert one_bit.where(_popcount_cut(F.lit(8), 1)).count() == 0
-    assert two_bits.where(_popcount_cut(F.lit(8), 1)).count() == 1
+    assert one_bit.where(_popcount_cut(F.lit(8))).count() == 0
+    assert two_bits.where(_popcount_cut(F.lit(8))).count() == 1
     # and the floor keeps scaling: s_min = 14 requires floor(14/2)-2 = 5
-    assert two_bits.where(_popcount_cut(F.lit(14), 1)).count() == 0
+    assert two_bits.where(_popcount_cut(F.lit(14))).count() == 0
 
 
 def test_cosine_ids_sig_cut_lossless(spark):
     # the er-path configuration of cosine_candidates_ids — prefix mode with
-    # the Bloom popcount cut (sig_words=NSIG) inside the candidate join —
-    # must stay a superset of the true cosine match set
+    # the Bloom popcount cut inside the candidate join — must stay a
+    # superset of the true cosine match set
     import collections
     import math
     import random
 
-    from fozzie_spark.blocking import _count_map_col
-    from fozzie_spark.pipeline import NSIG, _bloom_sig_cols
+    from fozzie_spark.blocking import _bloom_sig_cols, _count_map_col
 
     rnd = random.Random(23)
     # dense alphabetic gram space (the er-cosine killer regime): short
@@ -732,8 +767,6 @@ def test_cosine_ids_sig_cut_lossless(spark):
         "kid",
         _count_map_col("key", q).alias("__fz_cm"),
         *_bloom_sig_cols(F.array_distinct(blocking.qgrams_col("key", q))),
-    ).select(
-        "kid", "__fz_cm", *[F.col(f"s{i}").alias(f"__fz_sig{i}") for i in range(NSIG)]
     )
 
     def grams(s):
@@ -755,12 +788,7 @@ def test_cosine_ids_sig_cut_lossless(spark):
         if cos_dist(keys[i], keys[j]) <= tau
     }
     assert true_c
-    got = {
-        (r["kid"], r["kid2"])
-        for r in blocking.cosine_candidates_ids(
-            prof, "kid", tau, prefix_mode="prefix", sig_words=NSIG
-        ).collect()
-    }
+    got = _id_pairs(blocking.cosine_candidates_ids, prof, "kid", tau, prefix_mode="prefix")
     assert true_c <= got, f"missing {sorted(true_c - got)[:5]}"
 
 

@@ -611,6 +611,46 @@ def test_pipeline_hot_token_valve(spark, tmp_path, caplog, method):
         assert rec_cap["keys"] == rec_full["keys"] > 0
 
 
+@pytest.mark.parametrize("method", ["qgram", "cosine", "jaccard", "lv", "jw"])
+def test_pipeline_prefix_route(spark, tmp_path, caplog, monkeypatch, method):
+    # the qgram/cosine builders take the prefix route from 25k distinct
+    # keys on; with the gate at 0 a small corpus takes it. Its edges must
+    # equal the share-any-gram (simple) route's, and the decision record
+    # must name the route. Every family's run must leave no persisted RDD
+    # behind: the builders persist their prefix frames for the self-join
+    import logging
+
+    from fozzie_spark import blocking
+    from fozzie_spark.cluster import _persistent_ids
+    from fozzie_spark.synth import synth_documents_skewed
+
+    params = {"qgram": {"max_distance": 6, "q": 3}, "cosine": {"max_distance": 0.25, "q": 3},
+              "jaccard": {}, "lv": {"max_distance": 2, "q": 3},
+              "jw": {"max_distance": 0.25}}[method]
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+    docs = synth_documents_skewed(spark, 20, hot_docs=30, hot_exact=10)
+    routes = ("simple", "prefix") if method in ("qgram", "cosine") else ("prefix",)
+    edges = {}
+    for route in routes:
+        monkeypatch.setattr(
+            blocking, "PREFIX_AUTO_KEY_THRESHOLD", 0 if route == "prefix" else 50_000
+        )
+        before = _persistent_ids(spark)
+        caplog.clear()
+        out = er_pipeline(spark, docs, checkpoint_dir=str(tmp_path / route), method=method,
+                          resume=False, **params)
+        edges[route] = {(tuple(r["kid"]), tuple(r["kid2"]), r["dist"])
+                        for r in out["edges"].collect()}
+        rec = _pairs_decision(caplog)
+        # earlier tests' leftovers may be cleaned up meanwhile: only new ids count
+        assert not _persistent_ids(spark) - before, route
+        if method in ("qgram", "cosine"):
+            assert rec["prefix_mode"] == route, rec
+    assert edges["prefix"], method
+    if method in ("qgram", "cosine"):
+        assert edges["prefix"] == edges["simple"]
+
+
 def test_pipeline_valve_proven_uncapped(spark, tmp_path, caplog):
     # no token can pass the auto cap max(10_000, keys // 8) while there are
     # at most 10_000 distinct keys (a token's df counts distinct keys): the
