@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine threshold/top-k: JVM-side dot products via
-  F.zip_with + F.aggregate — correct baseline, O(n*m) but fully
+- brute-force cosine threshold/top-k: JVM-side dot products via the SQL
+  zip_with + aggregate functions — correct baseline, O(n*m) but fully
   distributed and codegen'd; right answer for re-ranking and small probes.
 - LSH (random hyperplane) bucketing: the scale path — signature via one
   vectorized NumPy matmul in a pandas UDF, candidates from equi-joins on
@@ -16,6 +16,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
+
+from fozzie_spark.util import sql_ident, sql_lit
 
 _log = logging.getLogger("fozzie_spark.ann")
 
@@ -105,26 +107,24 @@ def _exceeds_rows(df: DataFrame, threshold: int, row_bytes: int | None = None) -
     return n > threshold
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+def _dot(a: str, b: str) -> str:
+    """SQL text: dot product of the vector columns `a`, `b`."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+def _norm(a: str) -> str:
+    """SQL text: L2 norm of the vector column `a`."""
+    return f"sqrt(aggregate(transform({a}, x -> x * x), 0.0D, (acc, x) -> acc + x))"
 
 
-def cosine_similarity_col(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _cosine_from_norms(a, b, na, nb):
-    """cosine with the per-row norms precomputed ONCE per side instead of
-    once per PAIR: `cosine_similarity_col` re-evaluates both norm
-    aggregations for every joined row, tripling the higher-order-function
+def _cosine_from_norms(a: str, b: str, na: str, nb: str) -> str:
+    """SQL text: cosine with the per-row norms precomputed ONCE per side
+    instead of once per PAIR: norms inside the pair expression would be
+    re-evaluated for every joined row, tripling the higher-order-function
     work of a quadratic scoring join. Same expressions, same evaluation
     order — results are bit-identical (guide §2.3: don't compute per pair
     what is a per-row property)."""
-    return _dot(a, b) / (na * nb)
+    return f"{_dot(a, b)} / ({na} * {nb})"
 
 
 def _spread_small(df: DataFrame, max_bytes: int = 1 << 30) -> DataFrame:
@@ -192,27 +192,17 @@ def cosine_pairs(
         return lsh_cosine_pairs(
             df, id_col, vec_col, min_cosine, n_planes, bands, seed, other=other
         )
-    a = _spread_small(
-        df.select(F.col(id_col).alias("id1"), F.col(vec_col).alias("v1"))
-    ).withColumn("__fz_na", _norm(F.col("v1")))
-    if other is None:
-        b = df.select(
-            F.col(id_col).alias("id2"), F.col(vec_col).alias("v2")
-        ).withColumn("__fz_nb", _norm(F.col("v2")))
-        pairs = a.join(b, F.col("id1") < F.col("id2"))
-    else:
-        b = other.select(
-            F.col(id_col).alias("id2"), F.col(vec_col).alias("v2")
-        ).withColumn("__fz_nb", _norm(F.col("v2")))
-        pairs = a.crossJoin(b)
+    i, v = sql_ident(id_col), sql_ident(vec_col)
+    a = _spread_small(df.selectExpr(f"{i} AS id1", f"{v} AS v1")).withColumn(
+        "__fz_na", F.expr(_norm("v1"))
+    )
+    b = (df if other is None else other).selectExpr(f"{i} AS id2", f"{v} AS v2").withColumn(
+        "__fz_nb", F.expr(_norm("v2"))
+    )
+    pairs = a.join(b, F.expr("id1 < id2")) if other is None else a.crossJoin(b)
     return (
-        pairs.withColumn(
-            "cosine",
-            _cosine_from_norms(
-                F.col("v1"), F.col("v2"), F.col("__fz_na"), F.col("__fz_nb")
-            ),
-        )
-        .where(F.col("cosine") >= min_cosine)
+        pairs.withColumn("cosine", F.expr(_cosine_from_norms("v1", "v2", "__fz_na", "__fz_nb")))
+        .where(f"cosine >= {sql_lit(min_cosine)}")
         .select("id1", "id2", "cosine")
     )
 
@@ -256,8 +246,6 @@ def cosine_topk(
     probes x corpus crossJoin. The decision is logged
     (logger "fozzie_spark.ann"); pass strategy="exact" to opt out.
     """
-    from pyspark.sql import Window
-
     if strategy not in ("exact", "lsh", "auto"):
         raise ValueError(f"unknown strategy {strategy!r}")
     if strategy == "auto":
@@ -272,20 +260,18 @@ def cosine_topk(
 
     if strategy == "lsh":
         qs = _banded(lsh_signatures(queries, id_col, vec_col, n_planes, seed, dim=dim),
-                     n_planes, bands).select(
-            F.col("id").alias("query_id"), F.col("v").alias("qv"), "band", "bh",
-            _norm(F.col("v")).alias("__fz_nq"),
+                     n_planes, bands).selectExpr(
+            "id AS query_id", "v AS qv", "band", "bh", f"{_norm('v')} AS __fz_nq"
         )
         cs = _banded(lsh_signatures(corpus, id_col, vec_col, n_planes, seed, dim=dim),
-                     n_planes, bands).select(
-            F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "band", "bh",
-            _norm(F.col("v")).alias("__fz_nc"),
+                     n_planes, bands).selectExpr(
+            "id AS neighbor_id", "v AS cv", "band", "bh", f"{_norm('v')} AS __fz_nc"
         )
 
         def _probe(probes):
             return (
                 probes.join(cs, ["band", "bh"])
-                .where(F.col("query_id") != F.col("neighbor_id"))
+                .where("query_id != neighbor_id")
                 .select("query_id", "neighbor_id", "qv", "cv", "__fz_nq", "__fz_nc")
                 .distinct()
             )
@@ -296,44 +282,39 @@ def cosine_topk(
             # buckets (including zero — queries absent from the band join).
             # Only they re-probe, at every band hash one bit-flip away.
             r = max(1, n_planes // bands)
-            have = scored.groupBy("query_id").agg(F.count(F.lit(1)).alias("__fz_cnt"))
+            have = scored.groupBy("query_id").agg(F.expr("count(1) AS __fz_cnt"))
             starved = (
                 qs.select("query_id")
                 .distinct()
                 .join(have, "query_id", "left")
-                .where(F.coalesce("__fz_cnt", F.lit(0)) < k)
+                .where(f"coalesce(__fz_cnt, 0) < {k}")
                 .select("query_id")
             )
-            flips = qs.join(starved, "query_id").select(
-                "query_id",
-                "qv",
-                "__fz_nq",
-                "band",
-                F.explode(
-                    F.array(*[F.col("bh").bitwiseXOR(F.lit(1 << i)) for i in range(r)])
-                ).alias("bh"),
+            flips = qs.join(starved, "query_id").selectExpr(
+                "query_id", "qv", "__fz_nq", "band",
+                f"explode(array({', '.join(f'bh ^ {1 << i}' for i in range(r))})) AS bh",
             )
             scored = scored.unionByName(_probe(flips)).distinct()
     else:
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("__fz_nq"),
+        i, v = sql_ident(id_col), sql_ident(vec_col)
+        q = queries.selectExpr(f"{i} AS query_id", f"{v} AS qv", f"{_norm(v)} AS __fz_nq")
+        c = _spread_small(corpus.selectExpr(f"{i} AS neighbor_id", f"{v} AS cv")).withColumn(
+            "__fz_nc", F.expr(_norm("cv"))
         )
-        c = _spread_small(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-        ).withColumn("__fz_nc", _norm(F.col("cv")))
-        scored = q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id"))
+        scored = q.crossJoin(c).where("query_id != neighbor_id")
+    return _rank_topk(scored, k)
 
-    scored = scored.withColumn(
-        "cosine",
-        _cosine_from_norms(
-            F.col("qv"), F.col("cv"), F.col("__fz_nq"), F.col("__fz_nc")
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank) for the k best-scored
+    candidates per query (columns qv/cv and their norms __fz_nq/__fz_nc);
+    ties break by (cosine desc, neighbor_id asc)."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        scored.withColumn("cosine", F.expr(_cosine_from_norms("qv", "cv", "__fz_nq", "__fz_nc")))
+        .withColumn("rank", F.expr(
+            "row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC)"
+        ))
+        .where(f"rank <= {k}")
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -374,29 +355,21 @@ def lsh_signatures(
             out |= bits[:, b].astype(np.int64) << b
         return pd.Series(out)
 
-    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).withColumn(
-        "sig", sig_udf(F.col("v"))
+    return df.selectExpr(f"{sql_ident(id_col)} AS id", f"{sql_ident(vec_col)} AS v").withColumn(
+        "sig", sig_udf("v")
     )
 
 
 def _banded(sigs: DataFrame, n_planes: int, bands: int) -> DataFrame:
     """(id, v, band, bh): one row per signature band (the LSH bucket key)."""
     r = max(1, n_planes // bands)
-    return sigs.select(
-        "id",
-        "v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sig", b * r).bitwiseAND(F.lit((1 << r) - 1)).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "v", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    bb = ", ".join(
+        f"named_struct('band', {b}, 'bh', shiftright(sig, {b * r}) & {(1 << r) - 1})"
+        for b in range(bands)
+    )
+    return sigs.selectExpr("id", "v", f"explode(array({bb})) AS bb").selectExpr(
+        "id", "v", "bb.band AS band", "bb.bh AS bh"
+    )
 
 
 def lsh_cosine_pairs(
@@ -419,36 +392,30 @@ def lsh_cosine_pairs(
     hyperplanes so buckets align)."""
     sigs = lsh_signatures(df, id_col, vec_col, n_planes, seed, dim=dim)
     # per-SIDE norms computed before the band join so the verify step reads
-    # them as columns — `cosine_similarity_col` would re-aggregate both
-    # norms per candidate pair (bit-identical either way)
-    banded = _banded(sigs, n_planes, bands).withColumn("__fz_n", _norm(F.col("v")))
+    # them as columns instead of re-aggregating both norms per candidate
+    # pair (bit-identical either way)
+    banded = _banded(sigs, n_planes, bands).withColumn("__fz_n", F.expr(_norm("v")))
     if other is None:
-        right, pred = banded, F.col("a.id") < F.col("b.id")
+        right, pred = banded, "a.id < b.id"
     else:
         right = _banded(
             lsh_signatures(other, id_col, vec_col, n_planes, seed, dim=dim),
             n_planes, bands,
-        ).withColumn("__fz_n", _norm(F.col("v")))
-        pred = F.lit(True)
+        ).withColumn("__fz_n", F.expr(_norm("v")))
+        pred = "true"
     cand = (
         banded.alias("a")
         .join(right.alias("b"), ["band", "bh"])
         .where(pred)
-        .select(
-            F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
-            F.col("a.v").alias("v1"), F.col("b.v").alias("v2"),
-            F.col("a.__fz_n").alias("__fz_na"), F.col("b.__fz_n").alias("__fz_nb"),
+        .selectExpr(
+            "a.id AS id1", "b.id AS id2", "a.v AS v1", "b.v AS v2",
+            "a.__fz_n AS __fz_na", "b.__fz_n AS __fz_nb",
         )
         .distinct()
     )
     return (
-        cand.withColumn(
-            "cosine",
-            _cosine_from_norms(
-                F.col("v1"), F.col("v2"), F.col("__fz_na"), F.col("__fz_nb")
-            ),
-        )
-        .where(F.col("cosine") >= min_cosine)
+        cand.withColumn("cosine", F.expr(_cosine_from_norms("v1", "v2", "__fz_na", "__fz_nb")))
+        .where(f"cosine >= {sql_lit(min_cosine)}")
         .select("id1", "id2", "cosine")
     )
 
@@ -561,8 +528,6 @@ def ivf_topk(
     `cosine_topk(strategy="exact")` exactly (pinned in tests/test_ann.py).
     Output: (query_id, neighbor_id, cosine, rank).
     """
-    from pyspark.sql import Window
-
     cent = _kmeans_centroids(
         corpus, id_col, vec_col, n_cells, seed, sample_size=sample_size, iters=iters
     )
@@ -576,34 +541,19 @@ def ivf_topk(
             StructField("rank", IntegerType()),
         ])
         return queries.sparkSession.createDataFrame([], schema)
-    cs = ivf_assign(corpus, id_col, vec_col, cent, n_probe=1).select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "cell",
-        _norm(F.col("v")).alias("__fz_nc"),
+    cs = ivf_assign(corpus, id_col, vec_col, cent, n_probe=1).selectExpr(
+        "id AS neighbor_id", "v AS cv", "cell", f"{_norm('v')} AS __fz_nc"
     )
-    qs = ivf_assign(queries, id_col, vec_col, cent, n_probe=n_probe).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), "cell",
-        _norm(F.col("v")).alias("__fz_nq"),
+    qs = ivf_assign(queries, id_col, vec_col, cent, n_probe=n_probe).selectExpr(
+        "id AS query_id", "v AS qv", "cell", f"{_norm('v')} AS __fz_nq"
     )
     scored = (
         qs.join(cs, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
+        .where("query_id != neighbor_id")
         .select("query_id", "neighbor_id", "qv", "cv", "__fz_nq", "__fz_nc")
         .distinct()
-        .withColumn(
-            "cosine",
-            _cosine_from_norms(
-                F.col("qv"), F.col("cv"), F.col("__fz_nq"), F.col("__fz_nc")
-            ),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def embedding_near_dedup(
@@ -622,22 +572,10 @@ def embedding_near_dedup(
     embedding column instead of text. strategy follows cosine_pairs
     ("auto" routes to the LSH-bucketed path above the row threshold;
     "exact" for oracle-exact grouping at any size)."""
-    from pyspark.sql import Window
-
-    from fozzie_spark.cluster import connected_components
+    from fozzie_spark.textops import dup_groups
 
     pairs = cosine_pairs(
         df, id_col, vec_col, min_cosine=min_cosine, strategy=strategy,
         n_planes=n_planes, bands=bands, seed=seed,
     ).select("id1", "id2")
-    cc = connected_components(pairs, "id1", "id2").select(
-        F.col("node").alias(id_col), F.col("component").alias("__fz_comp")
-    )
-    w = Window.partitionBy("dup_group")
-    return (
-        df.join(cc, id_col, "left")
-        .withColumn("dup_group", F.coalesce("__fz_comp", F.col(id_col)))
-        .drop("__fz_comp")
-        .withColumn("group_size", F.count(F.lit(1)).over(w))
-        .withColumn("is_canonical", F.col(id_col) == F.min(id_col).over(w))
-    )
+    return dup_groups(df, pairs, id_col)

@@ -19,7 +19,7 @@ per-key profile frame (fixed-width ids + token arrays, never key
 strings), one per method family: `jaccard_candidates_ids`,
 `edit_candidates_ids`, `qgram_candidates_ids`, `cosine_candidates_ids`
 and `jaro_candidates_ids`. They share one prefix self-join (`_self_join`)
-and one 512-bit Bloom signature (`_bloom_sig_cols`, cut by
+and one 512-bit Bloom signature (`_bloom_sig_sql`, cut by
 `_popcount_cut`).
 
 Each candidate join is an equi-join on a generated block key, so Catalyst
@@ -29,6 +29,8 @@ plans a shuffled hash / sort-merge join.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from fozzie_spark.util import sql_ident, sql_lit
 
 #: auto prefix-filter gate (see `use_prefix_filter`): inputs whose combined
 #: distinct-key count is below this use the round-2 share-any-gram join —
@@ -86,11 +88,7 @@ def _union_count(lkeys: DataFrame, rkeys: DataFrame) -> int:
         cache_key = None
     if cache_key is not None and cache_key in _UNION_COUNT_CACHE:
         return _UNION_COUNT_CACHE[cache_key]
-    total = (
-        lkeys.select(F.lit(1).alias("__fz_one"))
-        .unionByName(rkeys.select(F.lit(1).alias("__fz_one")))
-        .count()
-    )
+    total = lkeys.selectExpr("1 AS __fz_one").unionByName(rkeys.selectExpr("1 AS __fz_one")).count()
     if cache_key is not None:
         if len(_UNION_COUNT_CACHE) >= _PREFIX_CACHE_MAX:
             _UNION_COUNT_CACHE.clear()
@@ -178,43 +176,41 @@ def use_prefix_filter(lkeys: DataFrame, rkeys: DataFrame) -> bool:
     return prefix_gate(lkeys, rkeys)["route"] == "prefix"
 
 
-def qgrams_col(col: str, q: int):
-    """Array of character q-grams; strings shorter than q => empty array.
+def qgrams_sql(col: str, q: int) -> str:
+    """SQL text: array of character q-grams of column `col`; strings
+    shorter than q => empty array.
 
     Mirrors the reference's char-window extraction (utils.rs:81-99).
     """
-    return F.when(
-        F.length(F.col(col)) >= q,
-        F.expr(f"transform(sequence(1, length({col}) - {q} + 1), i -> substring({col}, i, {q}))"),
-    ).otherwise(F.array().cast("array<string>"))
+    c = sql_ident(col)
+    return (
+        f"CASE WHEN length({c}) >= {q} THEN transform(sequence(1, length({c}) - {q} + 1), "
+        f"i -> substring({c}, i, {q})) ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
 
 
 def _gram_counts(keys: DataFrame, key: str, q: int) -> DataFrame:
     """(key, gram, cnt) multiset profile per distinct key value."""
     return (
-        keys.select(key, F.explode(qgrams_col(key, q)).alias("__fz_g"))
+        keys.selectExpr(sql_ident(key), f"explode({qgrams_sql(key, q)}) AS __fz_g")
         .groupBy(key, "__fz_g")
-        .agg(F.count(F.lit(1)).alias("__fz_c"))
+        .agg(F.expr("count(1) AS __fz_c"))
     )
 
 
-def _gram_overlap(lkeys: DataFrame, rkeys: DataFrame, lkey: str, rkey: str, q: int, term):
+def _gram_overlap(lkeys: DataFrame, rkeys: DataFrame, lkey: str, rkey: str, q: int, term: str):
     """(lkey, rkey, __fz_m) for every pair sharing at least one q-gram, with
-    __fz_m = SUM over the shared grams of term(left count, right count):
-    F.least gives the multiset overlap, a product the count-vector dot
-    product. The exact integer aggregate the share-any-gram routes verify
-    their candidates with."""
+    __fz_m = SUM over the shared grams of `term`, SQL text over the left
+    and right counts __fz_cl / __fz_cr: their least gives the multiset
+    overlap, their product the count-vector dot product. The exact integer
+    aggregate the share-any-gram routes verify their candidates with."""
     lg = _gram_counts(lkeys, lkey, q).withColumnRenamed("__fz_c", "__fz_cl")
     rg = _gram_counts(rkeys, rkey, q).withColumnRenamed("__fz_c", "__fz_cr")
-    return (
-        lg.join(rg, "__fz_g")
-        .groupBy(lkey, rkey)
-        .agg(F.sum(term(F.col("__fz_cl"), F.col("__fz_cr"))).alias("__fz_m"))
-    )
+    return lg.join(rg, "__fz_g").groupBy(lkey, rkey).agg(F.expr(f"sum({term}) AS __fz_m"))
 
 
-def _count_map_col(col: str, q: int):
-    """map<gram, multiset count> per key, built as pure JVM expressions.
+def _count_map_sql(col: str, q: int) -> str:
+    """SQL text: map<gram, multiset count> per key, pure JVM expressions.
 
     Sorted-run form: sort the gram array once, find the run boundaries,
     and read distinct grams + counts off them — O(g log g) per key. The
@@ -226,46 +222,34 @@ def _count_map_col(col: str, q: int):
     joins/sorts, integer counts exact either way) — the only observable
     drift is the summation order of downstream floating-point profile
     aggregates (norms, binned masses), all of which feed LOSSLESS bounds
-    with 1e-9 slack and exact re-verification, never results."""
-    ga = qgrams_col(col, q)
+    with 1e-9 slack and exact re-verification, never results.
 
-    # A lambda that references an outer COLUMN EXPRESSION gets that
-    # expression inlined and re-evaluated per element (an early form
-    # re-sorted the array once per index — measured 20x SLOWER than the
-    # O(g²) filter). Bind each computed array once as a lambda variable
-    # via transform over a one-element array.
-    def _bind(expr, fn):
-        return F.element_at(F.transform(F.array(expr), fn), 1)
-
-    def _from_sorted(s):
-        # 1-based positions where a run of equal grams ENDS in `s`
-        ends = F.filter(
-            F.sequence(F.lit(1), F.size(s)),
-            lambda i: F.try_element_at(s, i + 1).isNull()
-            | (F.element_at(s, i) != F.try_element_at(s, i + 1)),
-        )
-
-        def _from_ends(e):
-            sa = F.transform(e, lambda i: F.element_at(s, i))
-            counts = F.zip_with(
-                e,
-                F.concat(
-                    F.array(F.lit(0)),
-                    F.slice(e, 1, F.greatest(F.size(e) - 1, F.lit(0))),
-                ),
-                lambda x, p: x - p,
-            )
-            return F.map_from_arrays(sa, counts)
-
-        return _bind(ends, _from_ends)
-
-    return F.when(
-        F.length(F.col(col)) >= q, _bind(F.array_sort(ga), _from_sorted)
-    ).otherwise(
-        F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<int>")
-        )
+    A lambda that references an outer expression gets it inlined and
+    re-evaluated per element (an early form re-sorted the array once per
+    index — measured 20x SLOWER than the O(g²) filter), so each computed
+    array is BOUND once as a lambda variable via transform over a
+    one-element array: `s` the sorted grams, `e` the 1-based positions
+    where a run of equal grams ends."""
+    ends = (
+        "filter(sequence(1, size(s)), "
+        "i -> try_element_at(s, i + 1) IS NULL OR element_at(s, i) != try_element_at(s, i + 1))"
     )
+    from_ends = (
+        "map_from_arrays(transform(e, i -> element_at(s, i)), zip_with(e, "
+        "concat(array(0), slice(e, 1, greatest(size(e) - 1, 0))), (x, p) -> x - p))"
+    )
+    return (
+        f"CASE WHEN length({sql_ident(col)}) >= {q} THEN element_at(transform("
+        f"array(array_sort({qgrams_sql(col, q)})), "
+        f"s -> element_at(transform(array({ends}), e -> {from_ends}), 1)), 1) "
+        "ELSE map_from_arrays(CAST(array() AS ARRAY<STRING>), CAST(array() AS ARRAY<INT>)) END"
+    )
+
+
+def _norm_sql(cm: str) -> str:
+    """SQL text: the L2 norm of the count map `cm` (SQL text)."""
+    values = f"CAST(map_values({cm}) AS ARRAY<DOUBLE>)"
+    return f"sqrt(aggregate({values}, 0.0D, (acc, c) -> acc + c * c))"
 
 
 def _rarity_prefix_tokens(
@@ -276,31 +260,35 @@ def _rarity_prefix_tokens(
     Each key's distinct grams are ranked by GLOBAL rarity (document
     frequency over BOTH sides — the prefix theorem needs one shared total
     order); only the first `plen(n)` grams per key survive, where `plen`
-    maps the distinct-gram count column to the admissible prefix length.
-    Hot grams are the most frequent, so they sort last and almost never
-    land in a prefix — THE property that keeps the candidate equi-join
+    maps SQL text of the distinct-gram count to SQL text of the admissible
+    prefix length. Hot grams are the most frequent, so they sort last and
+    almost never land in a prefix — THE property that keeps the candidate equi-join
     sub-quadratic under power-law gram frequencies (Chaudhuri et al.
     ICDE'06; Xiao et al. WWW'08/VLDB'08).
     """
-    lx = lkeys.select(lkey, F.explode(F.array_distinct(qgrams_col(lkey, q))).alias("__fz_g"))
-    rx = rkeys.select(rkey, F.explode(F.array_distinct(qgrams_col(rkey, q))).alias("__fz_g"))
+    def _grams(keys: DataFrame, key: str) -> DataFrame:
+        return keys.selectExpr(
+            sql_ident(key), f"explode(array_distinct({qgrams_sql(key, q)})) AS __fz_g"
+        )
+
+    lx, rx = _grams(lkeys, lkey), _grams(rkeys, rkey)
     gram_df = (
         lx.select("__fz_g")
         .unionByName(rx.select("__fz_g"))
         .groupBy("__fz_g")
-        .agg(F.count(F.lit(1)).alias("__fz_df"))
+        .agg(F.expr("count(1) AS __fz_df"))
     )
 
     def _prefix(ex: DataFrame, key: str) -> DataFrame:
         agg = (
             ex.join(gram_df, "__fz_g")
             .groupBy(key)
-            .agg(F.array_sort(F.collect_list(F.struct("__fz_df", "__fz_g"))).alias("__fz_s"))
+            .agg(F.expr("array_sort(collect_list(struct(__fz_df, __fz_g))) AS __fz_s"))
         )
-        n = F.size("__fz_s")
-        return agg.select(
-            key, F.explode(F.slice("__fz_s", 1, plen(n).cast("int"))).alias("__fz_e")
-        ).select(key, F.col("__fz_e.__fz_g").alias("__fz_g"))
+        k = sql_ident(key)
+        return agg.selectExpr(
+            k, f"explode(slice(__fz_s, 1, CAST({plen('size(__fz_s)')} AS INT))) AS __fz_e"
+        ).selectExpr(k, "__fz_e.__fz_g AS __fz_g")
 
     return _prefix(lx, lkey), _prefix(rx, rkey)
 
@@ -349,70 +337,65 @@ def edit_candidates(
     """
     tau = int(max_distance)
     damage = edit_damage(method, q)
-    l = lkeys.select(lkey).withColumn("__fz_ll", F.length(lkey))
-    r = rkeys.select(rkey).withColumn("__fz_rl", F.length(rkey))
+    lk, rk = sql_ident(lkey), sql_ident(rkey)
+    l = lkeys.selectExpr(lk, f"length({lk}) AS __fz_ll")
+    r = rkeys.selectExpr(rk, f"length({rk}) AS __fz_rl")
 
     if method == "hamming":
         # unequal lengths never match (hamming.rs:26-31): exact-length block
-        return l.join(r, F.col("__fz_ll") == F.col("__fz_rl")).select(lkey, rkey)
+        return l.join(r, F.expr("__fz_ll = __fz_rl")).select(lkey, rkey)
 
     short_cut = q + damage * tau  # strings >= this length are prunable by grams
 
     # short path: band join restricted to both-short keys
-    ls = l.filter(F.col("__fz_ll") < short_cut).withColumn(
-        "__fz_bl", F.explode(F.sequence(F.col("__fz_ll") - tau, F.col("__fz_ll") + tau))
+    ls = l.where(f"__fz_ll < {short_cut}").selectExpr(
+        "*", f"explode(sequence(__fz_ll - {tau}, __fz_ll + {tau})) AS __fz_bl"
     )
-    rs = r.filter(F.col("__fz_rl") < short_cut)
-    short_pairs = ls.join(rs, F.col("__fz_bl") == F.col("__fz_rl")).select(lkey, rkey)
+    rs = r.where(f"__fz_rl < {short_cut}")
+    short_pairs = ls.join(rs, F.expr("__fz_bl = __fz_rl")).select(lkey, rkey)
+
+    def long_cut(pairs: DataFrame, shared: str) -> DataFrame:
+        """The gram path's length bounds and count threshold."""
+        return (
+            pairs.where(f"greatest(__fz_ll, __fz_rl) >= {short_cut}")
+            .where(f"abs(__fz_ll - __fz_rl) <= {tau}")
+            .where(f"{shared} >= greatest(__fz_ll, __fz_rl) - {q} + 1 - {damage * tau}")
+            .select(lkey, rkey)
+        )
 
     if prefix_mode == "auto":
         prefix_mode = "prefix" if use_prefix_filter(lkeys, rkeys) else "simple"
 
     if prefix_mode == "simple":
         # share-any-gram inverted index + SUM(min(count)) threshold
-        long_pairs = (
-            _gram_overlap(lkeys, rkeys, lkey, rkey, q, F.least)
-            .withColumn("__fz_ll", F.length(lkey))
-            .withColumn("__fz_rl", F.length(rkey))
-            .filter(F.greatest("__fz_ll", "__fz_rl") >= short_cut)
-            .filter(F.abs(F.col("__fz_ll") - F.col("__fz_rl")) <= tau)
-            .filter(
-                F.col("__fz_m")
-                >= F.greatest("__fz_ll", "__fz_rl") - q + 1 - damage * tau
-            )
-            .select(lkey, rkey)
+        long_pairs = long_cut(
+            _gram_overlap(lkeys, rkeys, lkey, rkey, q, "least(__fz_cl, __fz_cr)")
+            .withColumn("__fz_ll", F.expr(f"length({lk})"))
+            .withColumn("__fz_rl", F.expr(f"length({rk})")),
+            "__fz_m",
         )
         return short_pairs.unionByName(long_pairs)
 
     lp, rp = _rarity_prefix_tokens(
-        lkeys, rkeys, lkey, rkey, q, lambda n: F.least(n, F.lit(damage * tau + 1))
+        lkeys, rkeys, lkey, rkey, q, lambda n: f"least({n}, {damage * tau + 1})"
     )
     cand0 = lp.join(rp, "__fz_g").select(lkey, rkey).distinct()
-    lprof = lkeys.select(
-        lkey,
-        F.array_distinct(qgrams_col(lkey, q)).alias("__fz_sa"),
-        _count_map_col(lkey, q).alias("__fz_ml"),
-        F.length(lkey).alias("__fz_ll"),
+
+    def _prof(keys: DataFrame, key: str, sa: str, m: str, ln: str) -> DataFrame:
+        k = sql_ident(key)
+        return keys.selectExpr(
+            k, f"array_distinct({qgrams_sql(key, q)}) AS {sa}",
+            f"{_count_map_sql(key, q)} AS {m}", f"length({k}) AS {ln}",
+        )
+
+    shared = (
+        "aggregate(array_intersect(__fz_sa, __fz_sb), 0, "
+        "(acc, g) -> acc + least(element_at(__fz_ml, g), element_at(__fz_mr, g)))"
     )
-    rprof = rkeys.select(
-        rkey,
-        F.array_distinct(qgrams_col(rkey, q)).alias("__fz_sb"),
-        _count_map_col(rkey, q).alias("__fz_mr"),
-        F.length(rkey).alias("__fz_rl"),
-    )
-    shared = F.aggregate(
-        F.array_intersect("__fz_sa", "__fz_sb"),
-        F.lit(0),
-        lambda acc, g: acc
-        + F.least(F.element_at("__fz_ml", g), F.element_at("__fz_mr", g)),
-    )
-    long_pairs = (
-        cand0.join(lprof, lkey)
-        .join(rprof, rkey)
-        .filter(F.greatest("__fz_ll", "__fz_rl") >= short_cut)
-        .filter(F.abs(F.col("__fz_ll") - F.col("__fz_rl")) <= tau)
-        .filter(shared >= F.greatest("__fz_ll", "__fz_rl") - q + 1 - damage * tau)
-        .select(lkey, rkey)
+    long_pairs = long_cut(
+        cand0.join(_prof(lkeys, lkey, "__fz_sa", "__fz_ml", "__fz_ll"), lkey)
+        .join(_prof(rkeys, rkey, "__fz_sb", "__fz_mr", "__fz_rl"), rkey),
+        shared,
     )
     return short_pairs.unionByName(long_pairs)
 
@@ -455,8 +438,13 @@ def ngram_candidates(
     if prefix_mode == "auto":
         prefix_mode = "prefix" if use_prefix_filter(lkeys, rkeys) else "simple"
 
-    lsets = lkeys.select(lkey, F.array_distinct(qgrams_col(lkey, q)).alias("__fz_gs"))
-    rsets = rkeys.select(rkey, F.array_distinct(qgrams_col(rkey, q)).alias("__fz_gs2"))
+    lk, rk = sql_ident(lkey), sql_ident(rkey)
+    lsets = lkeys.selectExpr(lk, f"array_distinct({qgrams_sql(lkey, q)}) AS __fz_gs")
+    rsets = rkeys.selectExpr(rk, f"array_distinct({qgrams_sql(rkey, q)}) AS __fz_gs2")
+    # size-bound prune: best-case jaccard distance 1 - min/max must be <= tau
+    size_bound = (
+        f"1.0D - least(__fz_nl, __fz_nr) / greatest(__fz_nl, __fz_nr) <= {sql_lit(max_distance)}"
+    )
 
     if method == "jaccard" and max_distance < 1.0 and prefix_mode == "prefix":
         # PREFIX-FILTERED index (PPJoin): jaccard_sim >= t = 1 - tau forces
@@ -465,24 +453,14 @@ def ngram_candidates(
         # share-any-gram join. (At tau >= 1 the share-any-gram path below
         # keeps the reference's quirk: pairs with NO shared gram sit at
         # dist exactly 1.0 and are not emitted, jaccard.rs:118-158.)
-        t = 1.0 - max_distance
+        t = sql_lit(1.0 - max_distance)
         lp, rp = _rarity_prefix_tokens(
-            lkeys, rkeys, lkey, rkey, q, lambda n: n - F.ceil(F.lit(t) * n) + 1
+            lkeys, rkeys, lkey, rkey, q, lambda n: f"{n} - ceil({t} * {n}) + 1"
         )
         cand = lp.join(rp, "__fz_g").select(lkey, rkey).distinct()
-        ln = lsets.select(lkey, F.size("__fz_gs").alias("__fz_nl"))
-        rn = rsets.select(rkey, F.size("__fz_gs2").alias("__fz_nr"))
-        pairs = (
-            cand.join(ln, lkey)
-            .join(rn, rkey)
-            # size-bound prune: best-case distance 1 - min/max must be <= tau
-            .filter(
-                F.lit(1.0)
-                - F.least("__fz_nl", "__fz_nr") / F.greatest("__fz_nl", "__fz_nr")
-                <= max_distance
-            )
-            .select(lkey, rkey)
-        )
+        ln = lsets.selectExpr(lk, "size(__fz_gs) AS __fz_nl")
+        rn = rsets.selectExpr(rk, "size(__fz_gs2) AS __fz_nr")
+        pairs = cand.join(ln, lkey).join(rn, rkey).where(size_bound).select(lkey, rkey)
         return pairs.unionByName(_empty_profile_pairs(lsets, rsets, lkey, rkey, q))
 
     if method == "jaccard":
@@ -492,25 +470,16 @@ def ngram_candidates(
         # scores from, jaccard.rs:118-177). The size-bound prune
         # 1 - min/max <= tau reads only the two set sizes and runs inside
         # the join, before the count.
-        lx = lsets.select(
-            lkey, F.size("__fz_gs").alias("__fz_nl"), F.explode("__fz_gs").alias("__fz_g")
-        )
-        rx = rsets.select(
-            rkey, F.size("__fz_gs2").alias("__fz_nr"), F.explode("__fz_gs2").alias("__fz_g")
-        )
-        inter = F.col("__fz_i").cast("double")
+        lx = lsets.selectExpr(lk, "size(__fz_gs) AS __fz_nl", "explode(__fz_gs) AS __fz_g")
+        rx = rsets.selectExpr(rk, "size(__fz_gs2) AS __fz_nr", "explode(__fz_gs2) AS __fz_g")
+        inter = "CAST(__fz_i AS DOUBLE)"
         pairs = (
             lx.join(rx, "__fz_g")
-            .filter(
-                F.lit(1.0)
-                - F.least("__fz_nl", "__fz_nr") / F.greatest("__fz_nl", "__fz_nr")
-                <= max_distance
-            )
+            .where(size_bound)
             .groupBy(lkey, rkey, "__fz_nl", "__fz_nr")
-            .agg(F.count(F.lit(1)).alias("__fz_i"))
-            .filter(
-                F.lit(1.0) - inter / (F.col("__fz_nl") + F.col("__fz_nr") - inter)
-                <= max_distance + 1e-9
+            .agg(F.expr("count(1) AS __fz_i"))
+            .where(
+                f"1.0D - {inter} / (__fz_nl + __fz_nr - {inter}) <= {sql_lit(max_distance + 1e-9)}"
             )
         )
         extra = _empty_profile_pairs(lsets, rsets, lkey, rkey, q)
@@ -518,32 +487,32 @@ def ngram_candidates(
 
     if method == "qgram":
         # total-count profiles (multiset sizes), not distinct sizes
-        lc = lkeys.select(lkey, F.size(qgrams_col(lkey, q)).alias("__fz_tl"))
-        rc = rkeys.select(rkey, F.size(qgrams_col(rkey, q)).alias("__fz_tr"))
-        tau = max_distance
+        lc = lkeys.selectExpr(lk, f"size({qgrams_sql(lkey, q)}) AS __fz_tl")
+        rc = rkeys.selectExpr(rk, f"size({qgrams_sql(rkey, q)}) AS __fz_tr")
+        tau = sql_lit(max_distance)
         # small-profile block: pairs whose profiles are small enough to match
         # with NO shared gram (dist = t1 + t2 <= tau). Joined on the
         # data-derived floor(t/(tau+1)) (identically 0 for them) so Catalyst
         # plans a hash join, not a BNLJ; the pair volume is the true result.
-        zb = lambda c: F.floor(F.col(c) / F.lit(int(tau) + 1))  # noqa: E731
+        zb = int(max_distance) + 1
         small = (
-            lc.filter(F.col("__fz_tl") <= tau)
-            .withColumn("__fz_zb", zb("__fz_tl"))
+            lc.where(f"__fz_tl <= {tau}")
+            .selectExpr("*", f"floor(__fz_tl / {zb}) AS __fz_zb")
             .join(
-                rc.filter(F.col("__fz_tr") <= tau).withColumn("__fz_zb", zb("__fz_tr")),
+                rc.where(f"__fz_tr <= {tau}").selectExpr("*", f"floor(__fz_tr / {zb}) AS __fz_zb"),
                 "__fz_zb",
             )
-            .filter(F.col("__fz_tl") + F.col("__fz_tr") <= tau)
+            .where(f"__fz_tl + __fz_tr <= {tau}")
             .select(lkey, rkey)
         )
         if prefix_mode == "simple":
             # share-any-gram join verified exactly: the qgram distance is
             # the multiset L1 distance t1 + t2 - 2 * SUM(min(c1, c2))
             cand = (
-                _gram_overlap(lkeys, rkeys, lkey, rkey, q, F.least)
+                _gram_overlap(lkeys, rkeys, lkey, rkey, q, "least(__fz_cl, __fz_cr)")
                 .join(lc, lkey)
                 .join(rc, rkey)
-                .filter(F.col("__fz_tl") + F.col("__fz_tr") - 2 * F.col("__fz_m") <= tau)
+                .where(f"__fz_tl + __fz_tr - 2 * __fz_m <= {tau}")
             )
         else:
             # PREFIX-FILTERED index: each distinct gram missing from the
@@ -553,7 +522,7 @@ def ngram_candidates(
             # (lossless; pairs with NO shared gram have dist T1 + T2,
             # covered by the `small` block). Prune: qgram dist >= |t1 - t2|.
             lp, rp = _rarity_prefix_tokens(
-                lkeys, rkeys, lkey, rkey, q, lambda n: F.least(n, F.lit(int(tau) + 1))
+                lkeys, rkeys, lkey, rkey, q, lambda n: f"least({n}, {int(max_distance) + 1})"
             )
             cand = (
                 lp.join(rp, "__fz_g")
@@ -561,7 +530,7 @@ def ngram_candidates(
                 .distinct()
                 .join(lc, lkey)
                 .join(rc, rkey)
-                .filter(F.abs(F.col("__fz_tl") - F.col("__fz_tr")) <= tau)
+                .where(f"abs(__fz_tl - __fz_tr) <= {tau}")
             )
         return cand.select(lkey, rkey).unionByName(small).distinct()
 
@@ -571,53 +540,37 @@ def ngram_candidates(
         # 118-177 applied to cosine) verified exactly on the count-vector
         # dot product: dist <= tau <=> a.b >= (1 - tau) * |a| * |b|
         def _sq_norm(keys: DataFrame, key: str, alias: str) -> DataFrame:
-            return (
-                _gram_counts(keys, key, q)
-                .groupBy(key)
-                .agg(F.sum(F.col("__fz_c") * F.col("__fz_c")).alias(alias))
+            return _gram_counts(keys, key, q).groupBy(key).agg(
+                F.expr(f"sum(__fz_c * __fz_c) AS {alias}")
             )
 
         return (
-            _gram_overlap(lkeys, rkeys, lkey, rkey, q, lambda a, b: a * b)
+            _gram_overlap(lkeys, rkeys, lkey, rkey, q, "__fz_cl * __fz_cr")
             .join(_sq_norm(lkeys, lkey, "__fz_sl"), lkey)
             .join(_sq_norm(rkeys, rkey, "__fz_sr"), rkey)
-            .filter(
-                F.col("__fz_m")
-                >= F.lit(1.0 - max_distance) * F.sqrt("__fz_sl") * F.sqrt("__fz_sr") - 1e-9
+            .where(
+                f"__fz_m >= {sql_lit(1.0 - max_distance)} * sqrt(__fz_sl) * sqrt(__fz_sr) - 1.0E-9D"
             )
             .select(lkey, rkey)
         )
     return _cosine_prefix_candidates(lkeys, rkeys, lkey, rkey, max_distance, q)
 
 
-def _head_len(s_col, b_field: str, sq_field: str, t_eff: float, t_sq: float):
-    """Count of positions in the sorted struct array whose RUNNING bound
-    sums stay admissible: position i is counted iff cum(b)[0..i] < t_eff
-    OR cum(sq)[0..i] < t_sq. One O(g) aggregate carrying (cum_b, cum_sq,
-    count) — the previous form built two cumulative-sum ARRAYS by
-    per-element concat, O(g²) copies per key (measured as a double-digit
-    share of the cosine candidate stage at document gram counts). The
-    additions run in the same element order, so the counted positions are
-    bit-identical."""
-    return F.aggregate(
-        s_col,
-        F.struct(
-            F.lit(0.0).alias("cb"), F.lit(0.0).alias("cq"),
-            F.lit(0).cast("int").alias("p"),
-        ),
-        lambda acc, x: F.struct(
-            (acc["cb"] + x[b_field]).alias("cb"),
-            (acc["cq"] + x[sq_field]).alias("cq"),
-            (
-                acc["p"]
-                + F.when(
-                    ((acc["cb"] + x[b_field]) < F.lit(t_eff))
-                    | ((acc["cq"] + x[sq_field]) < F.lit(t_sq)),
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-            ).cast("int").alias("p"),
-        ),
-        lambda acc: acc["p"],
+def _head_len(s_col: str, b_field: str, sq_field: str, t_eff: float, t_sq: float) -> str:
+    """SQL text: count of positions in the sorted struct array `s_col`
+    whose RUNNING bound sums stay admissible: position i is counted iff
+    cum(b)[0..i] < t_eff OR cum(sq)[0..i] < t_sq. One O(g) aggregate
+    carrying (cum_b, cum_sq, count) — the previous form built two
+    cumulative-sum ARRAYS by per-element concat, O(g²) copies per key
+    (measured as a double-digit share of the cosine candidate stage at
+    document gram counts). The additions run in the same element order,
+    so the counted positions are bit-identical."""
+    cb, cq = f"acc.cb + x.{b_field}", f"acc.cq + x.{sq_field}"
+    return (
+        f"aggregate({s_col}, named_struct('cb', 0.0D, 'cq', 0.0D, 'p', CAST(0 AS INT)), "
+        f"(acc, x) -> named_struct('cb', {cb}, 'cq', {cq}, 'p', CAST(acc.p + CASE WHEN "
+        f"({cb}) < {sql_lit(t_eff)} OR ({cq}) < {sql_lit(t_sq)} THEN 1 ELSE 0 END AS INT)), "
+        "acc -> acc.p)"
     )
 
 
@@ -628,38 +581,32 @@ NSIG = 8
 SIG_COLS = [f"__fz_sig{i}" for i in range(NSIG)]
 
 
-def _sig_bit(h, i: int):
-    """A gram's bit in Bloom word i, from its xxhash64 `h`: bit
+def _sig_bit(h: str, i: int) -> str:
+    """SQL text: a gram's bit in Bloom word i, from its xxhash64 `h`: bit
     (h >> 3) mod 64 when h mod NSIG == i, else 0."""
-    return F.when(
-        F.pmod(h, F.lit(NSIG)) == i,
-        # shiftleft via call_function: the PySpark wrapper only takes
-        # literal bit counts, the SQL fn any int column
-        F.call_function(
-            "shiftleft", F.lit(1).cast("long"), F.pmod(F.shiftright(h, 3), F.lit(64)).cast("int")
-        ),
-    ).otherwise(F.lit(0).cast("long"))
+    return (
+        f"CASE WHEN pmod({h}, {NSIG}) = {i} THEN shiftleft(CAST(1 AS BIGINT), "
+        f"CAST(pmod(shiftright({h}, 3), 64) AS INT)) ELSE CAST(0 AS BIGINT) END"
+    )
 
 
-def _bloom_sig_cols(gs_col, hashed: bool = False) -> list:
-    """SIG_COLS Column list: the 512-bit gram Bloom signature over a
-    distinct-gram array column, as pure JVM expressions. hashed=True means
-    `gs_col` already holds the xxhash64'd gram array — each word then
-    aggregates over the SAME hash array instead of re-hashing the grams
-    NSIG times (values are identical either way)."""
-    hashed = gs_col if hashed else F.transform(gs_col, lambda g: F.xxhash64(g))
-
-    def _word(i):
-        return F.aggregate(
-            hashed, F.lit(0).cast("long"), lambda acc, g: acc.bitwiseOR(_sig_bit(g, i))
-        )
-
-    return [_word(i).alias(c) for i, c in enumerate(SIG_COLS)]
+def _bloom_sig_sql(gs: str, hashed: bool = False) -> list[str]:
+    """SIG_COLS as SQL select items: the 512-bit gram Bloom signature over
+    the distinct-gram array `gs` (SQL text), as pure JVM expressions.
+    hashed=True means `gs` already holds the xxhash64'd gram array — each
+    word then aggregates over the SAME hash array instead of re-hashing
+    the grams NSIG times (values are identical either way)."""
+    hs = gs if hashed else f"transform({gs}, g -> xxhash64(g))"
+    return [
+        f"aggregate({hs}, CAST(0 AS BIGINT), (acc, g) -> acc | {_sig_bit('g', i)}) AS {c}"
+        for i, c in enumerate(SIG_COLS)
+    ]
 
 
-def _popcount_cut(s_min):
-    """Count-scaled Bloom AND+popcount pass predicate over the signature
-    words SIG_COLS and their "_2" twins (the right side of a pair).
+def _popcount_cut(s_min: str) -> str:
+    """SQL text of the count-scaled Bloom AND+popcount pass predicate over
+    the signature words SIG_COLS and their "_2" twins (the right side of
+    a pair); `s_min` is SQL text.
 
     A pair whose true match requires s_min shared DISTINCT grams must
     share >= max(floor(s_min/2)-2, 1) signature bits; s_min < 1 always
@@ -670,26 +617,24 @@ def _popcount_cut(s_min):
     vanishing faster beyond. Every survivor is rescored exactly, so an
     (astronomically rare) false negative costs one candidate — the same
     failure class as the minhash-LSH band curve."""
-    shared = sum(F.bit_count(F.col(c).bitwiseAND(F.col(c + "_2"))) for c in SIG_COLS)
-    return (s_min < 1) | (shared >= F.greatest(F.floor(s_min / 2) - 2, F.lit(1)))
+    shared = " + ".join(f"bit_count({c} & {c}_2)" for c in SIG_COLS)
+    return f"(({s_min}) < 1 OR {shared} >= greatest(floor(({s_min}) / 2) - 2, 1))"
 
 
-def jaccard_sig_cut(t: float):
-    """The jaccard Bloom cut over `__fz_n` / `__fz_n_2` (distinct-gram
-    counts) and the signature words: a pair with jaccard_sim >= t shares
-    >= ceil(t/(1+t) * (n1 + n2)) distinct grams, floored at one shared bit
-    (t <= 0 keeps the one-shared-gram floor)."""
-    alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("__fz_n") + F.col("__fz_n_2")))
-    return _popcount_cut(F.greatest(alpha, F.lit(1)))
+def jaccard_sig_cut(t: float) -> str:
+    """SQL text of the jaccard Bloom cut over `__fz_n` / `__fz_n_2`
+    (distinct-gram counts) and the signature words: a pair with
+    jaccard_sim >= t shares >= ceil(t/(1+t) * (n1 + n2)) distinct grams,
+    floored at one shared bit (t <= 0 keeps the one-shared-gram floor)."""
+    return _popcount_cut(f"greatest(ceil({sql_lit(t / (1.0 + t))} * (__fz_n + __fz_n_2)), 1)")
 
 
-def token_df(prof: DataFrame, tokens) -> DataFrame:
+def token_df(prof: DataFrame, tokens: str) -> DataFrame:
     """(__fz_g, __fz_df): the document frequency of every token in the
-    token-array column `tokens` of `prof` (tokens are distinct per row)."""
-    return (
-        prof.select(F.explode(tokens).alias("__fz_g"))
-        .groupBy("__fz_g")
-        .agg(F.count(F.lit(1)).alias("__fz_df"))
+    token-array `tokens` (SQL text over `prof`; tokens are distinct per
+    row)."""
+    return prof.selectExpr(f"explode({tokens}) AS __fz_g").groupBy("__fz_g").agg(
+        F.expr("count(1) AS __fz_df")
     )
 
 
@@ -709,17 +654,17 @@ def _self_join(lp: DataFrame, id_col: str, token_col: str, cached: list | None) 
         lp = lp.persist()
         cached.append(lp)
     id2 = id_col + "2"
-    rp = lp.select(
-        [F.col(c).alias(id2 if c == id_col else c if c == token_col else c + "_2")
-         for c in lp.columns]
-    )
-    return lp.join(rp, token_col).where(F.col(id_col) < F.col(id2))
+    rp = lp.selectExpr(*[
+        f"{sql_ident(c)} AS {sql_ident(id2 if c == id_col else c if c == token_col else c + '_2')}"
+        for c in lp.columns
+    ])
+    return lp.join(rp, token_col).where(f"{sql_ident(id_col)} < {sql_ident(id2)}")
 
 
 def _observe(df: DataFrame, obs) -> DataFrame:
     """Attach the caller's `raw_candidates` row count to `df`, collected
     by the action that writes the pairs (no extra job)."""
-    return df if obs is None else df.observe(obs, F.count(F.lit(1)).alias("raw_candidates"))
+    return df if obs is None else df.observe(obs, F.expr("count(1) AS raw_candidates"))
 
 
 def _finish(pairs: DataFrame, obs, extra: DataFrame | None) -> DataFrame:
@@ -750,7 +695,8 @@ def jaccard_candidates_ids(
     possible overlap from the prefix positions of the shared gram:
         1 + min(n - rn, n2 - rn2) >= ceil(t/(1+t) * (n + n2)).
     At t <= 0 every gram is indexed (the τ >= 1 share-a-gram quirk: pairs
-    with no shared gram are not emitted).
+    with no shared gram are not emitted, except two empty profiles, which
+    the empty-profile block pairs as `fuzzy_string_join` does).
 
     `prof` columns: `id_col`, `__fz_gs` (distinct q-grams), `__fz_n` (their
     count) and the Bloom words SIG_COLS. `gram_df` is the `token_df` of
@@ -759,7 +705,7 @@ def jaccard_candidates_ids(
     so `jaccard_sig_cut` runs inside the candidate join before the pair
     stream reaches the distinct's shuffle (>99% of non-matches die there).
     `short_keys`: plan the empty-profile block (keys shorter than q;
-    jaccard(empty, empty) = 0, a definite match; only at t > 0).
+    jaccard(empty, empty) = 0, a definite match at any max_distance).
     `cached` receives the persisted prefix frame, `obs` the raw
     candidate count (join rows before the Bloom cut), and `extra` pairs
     join the final distinct.
@@ -769,12 +715,12 @@ def jaccard_candidates_ids(
     t = 1.0 - max_distance
     positional = t > 0
     id2 = id_col + "2"
-    gdf = gram_df.where(F.col("__fz_df") <= max_gram_df) if max_gram_df else gram_df
+    gdf = gram_df.where(f"__fz_df <= {max_gram_df}") if max_gram_df else gram_df
     # broadcast so the exploded gram rows don't shuffle for the df lookup;
     # LEFT join — capped grams keep a null df so the prefix ranking drops
     # them while the signature aggregation still sees the FULL profile
-    grams = prof.select(
-        id_col, "__fz_n", *([] if positional else SIG_COLS), F.explode("__fz_gs").alias("__fz_g")
+    grams = prof.selectExpr(
+        id_col, "__fz_n", *([] if positional else SIG_COLS), "explode(__fz_gs) AS __fz_g"
     ).join(F.broadcast(gdf), "__fz_g", "left")
     if positional:
         # rank grams by rarity per key WITHOUT a window: one groupBy, a
@@ -784,44 +730,37 @@ def jaccard_candidates_ids(
         # groupBy shuffles (id, df, g) rows and 8 partially combined longs
         # per key, not 64 B of signature per gram row. collect_list skips
         # the capped grams' nulls.
-        h = F.xxhash64("__fz_g")
-        agg = grams.groupBy(id_col).agg(
-            F.array_sort(
-                F.collect_list(F.when(F.col("__fz_df").isNotNull(), F.struct("__fz_df", "__fz_g")))
-            ).alias("__fz_s"),
-            F.first("__fz_n").alias("__fz_n"),
-            *[F.bit_or(_sig_bit(h, i)).alias(c) for i, c in enumerate(SIG_COLS)],
-        )
-        plen = (F.col("__fz_n") - F.ceil(F.lit(t) * F.col("__fz_n")) + 1).cast("int")
-        lp = agg.select(
+        agg = grams.groupBy(id_col).agg(*[F.expr(e) for e in (
+            "array_sort(collect_list(CASE WHEN __fz_df IS NOT NULL "
+            "THEN struct(__fz_df, __fz_g) END)) AS __fz_s",
+            "first(__fz_n) AS __fz_n",
+            *[f"bit_or({_sig_bit('xxhash64(__fz_g)', i)}) AS {c}" for i, c in enumerate(SIG_COLS)],
+        )])
+        lp = agg.selectExpr(
             id_col, "__fz_n", *SIG_COLS,
-            F.posexplode(F.slice("__fz_s", 1, plen)).alias("__fz_p", "__fz_e"),
-        ).select(
-            id_col, "__fz_n", *SIG_COLS,
-            F.col("__fz_e.__fz_g").alias("__fz_g"), (F.col("__fz_p") + 1).alias("__fz_rn"),
+            f"posexplode(slice(__fz_s, 1, CAST(__fz_n - ceil({sql_lit(t)} * __fz_n) + 1 AS INT))) "
+            "AS (__fz_p, __fz_e)",
+        ).selectExpr(
+            id_col, "__fz_n", *SIG_COLS, "__fz_e.__fz_g AS __fz_g", "__fz_p + 1 AS __fz_rn"
         )
     else:
-        lp = grams.where(F.col("__fz_df").isNotNull()).select(
-            id_col, "__fz_n", *SIG_COLS, "__fz_g"
-        )
+        lp = grams.where("__fz_df IS NOT NULL").select(id_col, "__fz_n", *SIG_COLS, "__fz_g")
     cand = _self_join(lp, id_col, "__fz_g", cached)
     if positional:
-        n, n2 = F.col("__fz_n"), F.col("__fz_n_2")
+        # size bound (jaccard_sim >= t needs min/max >= t), then the
+        # positional bound
         cand = cand.where(
-            # size bound: jaccard_sim >= t needs min/max >= t
-            (F.least(n, n2) >= F.ceil(F.lit(t) * F.greatest(n, n2)))
-            & (
-                F.lit(1) + F.least(n - F.col("__fz_rn"), n2 - F.col("__fz_rn_2"))
-                >= F.ceil(F.lit(t / (1.0 + t)) * (n + n2))
-            )
+            f"least(__fz_n, __fz_n_2) >= ceil({sql_lit(t)} * greatest(__fz_n, __fz_n_2)) AND "
+            "1 + least(__fz_n - __fz_rn, __fz_n_2 - __fz_rn_2) >= "
+            f"ceil({sql_lit(t / (1.0 + t))} * (__fz_n + __fz_n_2))"
         )
     # gram rows imply n, n2 >= 1: no both-empty clause in the cut
     cand = _observe(cand, obs).where(jaccard_sig_cut(t)).select(id_col, id2)
-    if short_keys and positional:
+    if short_keys:
         # empty profiles never enter the index; equi-join them on the
         # (all-0) count so Catalyst plans a hash join, not a BNLJ. Their
         # pair count is the TRUE result size, not blocking slop
-        empty = prof.where(F.col("__fz_n") == 0).select(id_col, "__fz_n")
+        empty = prof.where("__fz_n = 0").select(id_col, "__fz_n")
         cand = cand.unionByName(_self_join(empty, id_col, "__fz_n", None).select(id_col, id2))
     return (cand if extra is None else cand.unionByName(extra)).distinct()
 
@@ -857,19 +796,22 @@ def edit_candidates_ids(
     """
     id2 = id_col + "2"
     tau = int(max_distance)
-    gdf = gram_df.where(F.col("__fz_df") <= max_gram_df) if max_gram_df else gram_df
-    tok = prof.select(id_col, F.explode("__fz_gs").alias("__fz_g")).join(
-        F.broadcast(gdf.select("__fz_g")), "__fz_g"
-    )
+    tok = prof.selectExpr(id_col, "explode(__fz_gs) AS __fz_g")
+    if max_gram_df:
+        # capped grams leave the index: join the kept grams only (uncapped,
+        # the df table is not read at all)
+        kept = gram_df.where(f"__fz_df <= {max_gram_df}").select("__fz_g")
+        tok = tok.join(F.broadcast(kept), "__fz_g")
     cand = _observe(_self_join(tok, id_col, "__fz_g", cached), obs).select(id_col, id2)
     if short_keys:
         band = 0 if method == "hamming" else tau
-        kn = F.col("__fz_kn")
-        sl = prof.where(kn < q + edit_damage(method, q) * tau).select(id_col, "__fz_kn")
+        sl = prof.where(f"__fz_kn < {q + edit_damage(method, q) * tau}").select(id_col, "__fz_kn")
         cand = cand.unionByName(
-            sl.select(id_col, F.explode(F.sequence(kn - band, kn + band)).alias("__fz_lb"))
-            .join(sl.select(F.col(id_col).alias(id2), kn.alias("__fz_lb")), "__fz_lb")
-            .where(F.col(id_col) < F.col(id2))
+            sl.selectExpr(
+                id_col, f"explode(sequence(__fz_kn - {band}, __fz_kn + {band})) AS __fz_lb"
+            )
+            .join(sl.selectExpr(f"{id_col} AS {id2}", "__fz_kn AS __fz_lb"), "__fz_lb")
+            .where(f"{id_col} < {id2}")
             .select(id_col, id2)
         )
     return (cand if extra is None else cand.unionByName(extra)).distinct()
@@ -907,19 +849,19 @@ def qgram_candidates_ids(
 
     Returns distinct (id_col, id_col+"2") pairs with id < id2.
     """
-    tau = max_distance
+    tau = sql_lit(max_distance)
     id2 = id_col + "2"
-    zb = F.floor(F.col("__fz_tc") / F.lit(int(tau) + 1))
-    small_side = prof.filter(F.col("__fz_tc") <= tau).select(id_col, "__fz_tc", zb.alias("__fz_zb"))
+    small_side = prof.where(f"__fz_tc <= {tau}").selectExpr(
+        id_col, "__fz_tc", f"floor(__fz_tc / {int(max_distance) + 1}) AS __fz_zb"
+    )
     small = (
         _self_join(small_side, id_col, "__fz_zb", None)
-        .where(F.col("__fz_tc") + F.col("__fz_tc_2") <= tau)
+        .where(f"__fz_tc + __fz_tc_2 <= {tau}")
         .select(id_col, id2)
     )
     carry = ["__fz_tc", "__fz_n", *SIG_COLS]
-    tok = prof.select(
-        id_col, "__fz_tc", F.size("__fz_gs").alias("__fz_n"), *SIG_COLS,
-        F.explode("__fz_gs").alias("__fz_g"),
+    tok = prof.selectExpr(
+        id_col, "__fz_tc", "size(__fz_gs) AS __fz_n", *SIG_COLS, "explode(__fz_gs) AS __fz_g"
     )
     if max_gram_df and prefix_mode == "simple":
         # hot-gram df cap (approximate valve — see cosine_candidates_ids);
@@ -930,34 +872,32 @@ def qgram_candidates_ids(
         keep = (
             tok.select("__fz_g")
             .groupBy("__fz_g")
-            .agg(F.count(F.lit(1)).alias("__fz_df0"))
-            .where(F.col("__fz_df0") <= max_gram_df)
+            .agg(F.expr("count(1) AS __fz_df0"))
+            .where(f"__fz_df0 <= {max_gram_df}")
             .select("__fz_g")
         )
         tok = tok.join(F.broadcast(keep), "__fz_g")
     if prefix_mode == "simple":
         lp = tok
     else:
-        gram_df = tok.select(id_col, "__fz_g").groupBy("__fz_g").agg(
-            F.count(F.lit(1)).alias("__fz_df")
-        )
+        gram_df = tok.select(id_col, "__fz_g").groupBy("__fz_g").agg(F.expr("count(1) AS __fz_df"))
         ranked = tok.join(gram_df, "__fz_g")
         if max_gram_df:
             # free cap (see cosine_candidates_ids): surviving grams keep
             # the same df, every profile stat stays full-profile
-            ranked = ranked.where(F.col("__fz_df") <= max_gram_df)
-        agg = ranked.groupBy(id_col).agg(
-            F.array_sort(F.collect_list(F.struct("__fz_df", "__fz_g"))).alias("__fz_s"),
-            *[F.first(c).alias(c) for c in carry],
-        )
-        plen = F.least(F.size("__fz_s"), F.lit(int(tau) + 1)).cast("int")
-        lp = agg.select(
-            id_col, *carry, F.explode(F.slice("__fz_s", 1, plen)).alias("__fz_e")
-        ).select(id_col, *carry, F.col("__fz_e.__fz_g").alias("__fz_g"))
-    s_min = F.ceil((F.col("__fz_n") + F.col("__fz_n_2") - F.lit(float(tau))) / 2 - F.lit(1e-9))
+            ranked = ranked.where(f"__fz_df <= {max_gram_df}")
+        agg = ranked.groupBy(id_col).agg(*[F.expr(e) for e in (
+            "array_sort(collect_list(struct(__fz_df, __fz_g))) AS __fz_s",
+            *[f"first({c}) AS {c}" for c in carry],
+        )])
+        plen = f"CAST(least(size(__fz_s), {int(max_distance) + 1}) AS INT)"
+        lp = agg.selectExpr(
+            id_col, *carry, f"explode(slice(__fz_s, 1, {plen})) AS __fz_e"
+        ).selectExpr(id_col, *carry, "__fz_e.__fz_g AS __fz_g")
+    s_min = f"ceil((__fz_n + __fz_n_2 - {sql_lit(float(max_distance))}) / 2 - 1.0E-9D)"
     pairs = (
         _self_join(lp, id_col, "__fz_g", cached)
-        .where((F.abs(F.col("__fz_tc") - F.col("__fz_tc_2")) <= tau) & _popcount_cut(s_min))
+        .where(f"abs(__fz_tc - __fz_tc_2) <= {tau} AND {_popcount_cut(s_min)}")
         .select(id_col, id2)
         .unionByName(small)
         .distinct()
@@ -1005,14 +945,8 @@ def cosine_candidates_ids(
     id2 = id_col + "2"
     t = 1.0 - float(max_distance)
     stat_names = ["__fz_nrm", "__fz_cx", *SIG_COLS]
-    nrm = F.sqrt(
-        F.aggregate(
-            F.map_values("__fz_cm").cast("array<double>"),
-            F.lit(0.0),
-            lambda acc, c: acc + c * c,
-        )
-    )
-    carry0 = [F.array_max(F.map_values("__fz_cm")).cast("double").alias("__fz_cx"), *SIG_COLS]
+    nrm = _norm_sql("__fz_cm") + " AS __fz_nrm"
+    carry0 = ["CAST(array_max(map_values(__fz_cm)) AS DOUBLE) AS __fz_cx", *SIG_COLS]
     # prefix mode ships only (id, gram, weight) through the stats join and
     # the prefix groupBy; the per-key stats (norm, cmax, Bloom words)
     # re-attach ONCE per key after the aggregation — carrying ~100 B of
@@ -1020,20 +954,9 @@ def cosine_candidates_ids(
     # against the whole builder wall. The simple path still carries them
     # (its candidate join reads stats straight off the token rows).
     simple = prefix_mode == "simple"
-    tok = (
-        prof.select(
-            id_col,
-            F.explode("__fz_cm").alias("__fz_g", "__fz_c"),
-            nrm.alias("__fz_nrm"),
-            *(carry0 if simple else []),
-        )
-        .select(
-            id_col,
-            "__fz_g",
-            (F.col("__fz_c") / F.col("__fz_nrm")).alias("__fz_w"),
-            *(stat_names if simple else []),
-        )
-    )
+    tok = prof.selectExpr(
+        id_col, "explode(__fz_cm) AS (__fz_g, __fz_c)", nrm, *(carry0 if simple else []),
+    ).selectExpr(id_col, "__fz_g", "__fz_c / __fz_nrm AS __fz_w", *(stat_names if simple else []))
     if max_gram_df and simple:
         # hot-gram df cap (approximate valve, same contract as the
         # jaccard path): grams hotter than the cap are dropped from BOTH
@@ -1048,8 +971,8 @@ def cosine_candidates_ids(
         # 50k keys to drop one gram).
         keep = (
             tok.groupBy("__fz_g")
-            .agg(F.count(F.lit(1)).alias("__fz_df0"))
-            .where(F.col("__fz_df0") <= max_gram_df)
+            .agg(F.expr("count(1) AS __fz_df0"))
+            .where(f"__fz_df0 <= {max_gram_df}")
             .select("__fz_g")
         )
         tok = tok.join(F.broadcast(keep), "__fz_g")
@@ -1077,7 +1000,7 @@ def cosine_candidates_ids(
         t_eff = (1.0 - float(max_distance)) - 1e-9
         t_sq = t_eff * t_eff
         stats = tok.groupBy("__fz_g").agg(
-            F.max("__fz_w").alias("__fz_mw"), F.count(F.lit(1)).alias("__fz_df")
+            F.expr("max(__fz_w) AS __fz_mw"), F.expr("count(1) AS __fz_df")
         )
         rj = tok.join(stats, "__fz_g")
         if max_gram_df:
@@ -1086,44 +1009,25 @@ def cosine_candidates_ids(
             # every key's norm/weights untouched, so the kept prefixes are
             # bit-identical to filtering the token stream up front — minus
             # the extra groupBy + broadcast probe that needed
-            rj = rj.where(F.col("__fz_df") <= max_gram_df)
-        rj = rj.select(
-            id_col,
-            "__fz_g",
-            (F.col("__fz_w") * F.col("__fz_mw")).alias("__fz_b"),
-            (F.col("__fz_w") * F.col("__fz_w")).alias("__fz_sq"),
-            "__fz_df",
+            rj = rj.where(f"__fz_df <= {max_gram_df}")
+        rj = rj.selectExpr(
+            id_col, "__fz_g", "__fz_w * __fz_mw AS __fz_b", "__fz_w * __fz_w AS __fz_sq", "__fz_df"
         )
-        agg = rj.groupBy(id_col).agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("__fz_df")).alias("nd"),  # hot first
-                        F.col("__fz_g").alias("g"),
-                        F.col("__fz_b").alias("b"),
-                        F.col("__fz_sq").alias("sq"),
-                    )
-                )
-            ).alias("__fz_s"),
-        )
+        agg = rj.groupBy(id_col).agg(F.expr(  # hot first: (-df, g) ascending
+            "array_sort(collect_list(named_struct('nd', -__fz_df, 'g', __fz_g, 'b', __fz_b, "
+            "'sq', __fz_sq))) AS __fz_s"
+        ))
         # per-key stats re-attach here, once per key (no broadcast hint:
         # the stat frame is one narrow row per key off the caller's
         # cached profile — AQE broadcasts it when small and falls back to
         # a bounded shuffle join at scale)
-        agg = agg.join(prof.select(id_col, nrm.alias("__fz_nrm"), *carry0), id_col)
-        p = _head_len(F.col("__fz_s"), "b", "sq", t_eff, t_sq)
-        lp = agg.select(
-            id_col,
-            *stat_names,
-            F.explode(
-                F.slice("__fz_s", p + 1, F.greatest(F.size("__fz_s") - p, F.lit(0)))
-            ).alias("__fz_e"),
-        ).select(id_col, *stat_names, F.col("__fz_e.g").alias("__fz_g"))
-    s_min = F.ceil(
-        F.lit(t) * F.col("__fz_nrm") * F.col("__fz_nrm_2")
-        / (F.col("__fz_cx") * F.col("__fz_cx_2"))
-        - F.lit(1e-9)
-    )
+        agg = agg.join(prof.selectExpr(id_col, nrm, *carry0), id_col)
+        p = _head_len("__fz_s", "b", "sq", t_eff, t_sq)
+        lp = agg.selectExpr(
+            id_col, *stat_names,
+            f"explode(slice(__fz_s, {p} + 1, greatest(size(__fz_s) - {p}, 0))) AS __fz_e",
+        ).selectExpr(id_col, *stat_names, "__fz_e.g AS __fz_g")
+    s_min = f"ceil({sql_lit(t)} * __fz_nrm * __fz_nrm_2 / (__fz_cx * __fz_cx_2) - 1.0E-9D)"
     pairs = (
         _self_join(lp, id_col, "__fz_g", cached)
         .where(_popcount_cut(s_min))
@@ -1171,18 +1075,12 @@ def _cosine_prefix_candidates(
 
     def _norm_tokens(keys: DataFrame, key: str) -> DataFrame:
         """(key, gram, w) with w = multiset count / L2 norm, pure JVM."""
-        cm = _count_map_col(key, q)
-        nrm = F.sqrt(
-            F.aggregate(
-                F.map_values(cm).cast("array<double>"),
-                F.lit(0.0),
-                lambda acc, c: acc + c * c,
-            )
-        )
+        cm = _count_map_sql(key, q)
+        k = sql_ident(key)
         return (
-            keys.select(key, cm.alias("__fz_cm"), nrm.alias("__fz_nrm"))
-            .select(key, F.explode("__fz_cm").alias("__fz_g", "__fz_c"), "__fz_nrm")
-            .select(key, "__fz_g", (F.col("__fz_c") / F.col("__fz_nrm")).alias("__fz_w"))
+            keys.selectExpr(k, f"{cm} AS __fz_cm", f"{_norm_sql(cm)} AS __fz_nrm")
+            .selectExpr(k, "explode(__fz_cm) AS (__fz_g, __fz_c)", "__fz_nrm")
+            .selectExpr(k, "__fz_g", "__fz_c / __fz_nrm AS __fz_w")
         )
 
     ltok = _norm_tokens(lkeys, lkey)
@@ -1190,40 +1088,25 @@ def _cosine_prefix_candidates(
     # per-gram stats over the LEFT side (the probing side): max normalized
     # weight bounds any x̂_g; df drives the greedy unindex order
     stats = ltok.groupBy("__fz_g").agg(
-        F.max("__fz_w").alias("__fz_mw"), F.count(F.lit(1)).alias("__fz_df")
+        F.expr("max(__fz_w) AS __fz_mw"), F.expr("count(1) AS __fz_df")
     )
     # inner join: left-absent grams can't contribute to any pair — dropped
     # from the index AND from the unindex budgets for free
-    rj = rtok.join(stats, "__fz_g").select(
-        rkey,
-        "__fz_g",
-        (F.col("__fz_w") * F.col("__fz_mw")).alias("__fz_b"),
-        (F.col("__fz_w") * F.col("__fz_w")).alias("__fz_sq"),
-        "__fz_df",
+    rk = sql_ident(rkey)
+    rj = rtok.join(stats, "__fz_g").selectExpr(
+        rk, "__fz_g", "__fz_w * __fz_mw AS __fz_b", "__fz_w * __fz_w AS __fz_sq", "__fz_df"
     )
     # sort by greedy cost ratio (cheap-to-unindex first), build the running
     # bounds, index the suffix past the last position where EITHER bound
     # still admits the whole head as unindexed
-    agg = rj.groupBy(rkey).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    (F.col("__fz_b") / (F.col("__fz_df") + 1)).alias("r"),
-                    F.col("__fz_b").alias("b"),
-                    F.col("__fz_sq").alias("sq"),
-                    F.col("__fz_g").alias("g"),
-                )
-            )
-        ).alias("__fz_s")
-    )
-
-    p = _head_len(F.col("__fz_s"), "b", "sq", t_eff, t_sq)
-    indexed = agg.select(
-        rkey,
-        F.explode(F.slice("__fz_s", p + 1, F.greatest(F.size("__fz_s") - p, F.lit(0)))).alias(
-            "__fz_e"
-        ),
-    ).select(rkey, F.col("__fz_e.g").alias("__fz_g"))
+    agg = rj.groupBy(rkey).agg(F.expr(
+        "array_sort(collect_list(named_struct('r', __fz_b / (__fz_df + 1), 'b', __fz_b, "
+        "'sq', __fz_sq, 'g', __fz_g))) AS __fz_s"
+    ))
+    p = _head_len("__fz_s", "b", "sq", t_eff, t_sq)
+    indexed = agg.selectExpr(
+        rk, f"explode(slice(__fz_s, {p} + 1, greatest(size(__fz_s) - {p}, 0))) AS __fz_e"
+    ).selectExpr(rk, "__fz_e.g AS __fz_g")
     return (
         ltok.select(lkey, "__fz_g")
         .join(indexed, "__fz_g")
@@ -1238,12 +1121,9 @@ def _empty_profile_pairs(lsets, rsets, lkey: str, rkey: str, q: int):
     in the empty-key count by definition (jaccard dist 0 for all of them) —
     but joining on the data-derived floor(len/q) (identically 0) lets
     Catalyst plan a hash join instead of a BroadcastNestedLoopJoin."""
-    el = lsets.filter(F.size("__fz_gs") == 0).select(
-        lkey, F.floor(F.length(lkey) / q).alias("__fz_zb")
-    )
-    er = rsets.filter(F.size("__fz_gs2") == 0).select(
-        rkey, F.floor(F.length(rkey) / q).alias("__fz_zb")
-    )
+    lk, rk = sql_ident(lkey), sql_ident(rkey)
+    el = lsets.where("size(__fz_gs) = 0").selectExpr(lk, f"floor(length({lk}) / {q}) AS __fz_zb")
+    er = rsets.where("size(__fz_gs2) = 0").selectExpr(rk, f"floor(length({rk}) / {q}) AS __fz_zb")
     return el.join(er, "__fz_zb").select(lkey, rkey)
 
 
@@ -1253,22 +1133,17 @@ def cross_candidates(lkeys: DataFrame, rkeys: DataFrame, lkey: str, rkey: str) -
     return lkeys.select(lkey).crossJoin(rkeys.select(rkey))
 
 
-def char_occurrence_tokens(col: str):
-    """(char, occurrence) token ARRAY for a string column, one pure-JVM
-    projection: 'aab' -> ['a#1', 'a#2', 'b#1'] (order irrelevant — the
-    multiset of chars becomes a SET of tokens, so downstream prefix joins
-    stay equi-joins). The map-side twin of `jaro_candidates._tokens`, used
-    by the id-keyed jw blocking path so tokenization happens ONCE on the
-    cached profile frame and no key string ever enters a blocking shuffle."""
-    cm = _count_map_col(col, 1)
-    return F.flatten(
-        F.transform(
-            F.map_entries(cm),
-            lambda e: F.transform(
-                F.sequence(F.lit(1), e["value"]),
-                lambda k: F.concat(e["key"], F.lit("#"), k.cast("string")),
-            ),
-        )
+def char_occurrence_tokens(col: str) -> str:
+    """SQL text: (char, occurrence) token ARRAY for a string column, one
+    pure-JVM projection: 'aab' -> ['a#1', 'a#2', 'b#1'] (order irrelevant —
+    the multiset of chars becomes a SET of tokens, so downstream prefix
+    joins stay equi-joins). The map-side twin of `jaro_candidates._tokens`,
+    used by the id-keyed jw blocking path so tokenization happens ONCE on
+    the cached profile frame and no key string ever enters a blocking
+    shuffle."""
+    return (
+        f"flatten(transform(map_entries({_count_map_sql(col, 1)}), e -> transform("
+        "sequence(1, e.value), k -> concat(e.key, '#', CAST(k AS STRING)))))"
     )
 
 
@@ -1317,10 +1192,10 @@ def jaro_candidates_ids(
             f"prefix_weight={prefix_weight}"
         )
     id2 = id_col + "2"
-    tok = prof.select(id_col, "__fz_kn", F.explode("__fz_ts").alias("__fz_t"))
+    tok = prof.selectExpr(id_col, "__fz_kn", "explode(__fz_ts) AS __fz_t")
     # global token rarity (single side IS the shared order for a self-join);
     # the token-df table is tiny: |alphabet| x max per-key multiplicity
-    tok_df = tok.groupBy("__fz_t").agg(F.count(F.lit(1)).alias("__fz_df"))
+    tok_df = tok.groupBy("__fz_t").agg(F.expr("count(1) AS __fz_df"))
     tj = tok.join(F.broadcast(tok_df), "__fz_t")
     if max_token_df:
         # hot-TOKEN df cap (r7; the jw twin of the qgram/cosine hot-gram
@@ -1332,49 +1207,43 @@ def jaro_candidates_ids(
         # full key length), and the caller's sorted-neighborhood pass +
         # exact verifier own the recall for capped-overlap pairs.
         # APPROXIMATE by design, like every max_gram_df valve.
-        tj = tj.where(F.col("__fz_df") <= max_token_df)
-    agg = (
-        tj
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list(F.struct("__fz_df", "__fz_t"))).alias("__fz_s"),
-            F.first("__fz_kn").alias("__fz_kn"),
-        )
+        tj = tj.where(f"__fz_df <= {max_token_df}")
+    agg = tj.groupBy(id_col).agg(
+        F.expr("array_sort(collect_list(struct(__fz_df, __fz_t))) AS __fz_s"),
+        F.expr("first(__fz_kn) AS __fz_kn"),
     )
-    n = F.col("__fz_kn")
-    # weakest admissible partner length (from min >= max*(3s-2)), then the
-    # pairwise count bound alpha at that weakest partner; prefix = the
-    # n - alpha + 1 globally rarest tokens
-    lb_min = F.greatest(F.lit(1), F.ceil(n * F.lit(3 * s - 2)))
-    alpha = F.greatest(
-        F.lit(1),
-        F.ceil(F.lit(3 * s - 1) * n * lb_min / (n + lb_min) - F.lit(1e-9)),
-    )
-    plen = F.greatest(n - alpha + 1, F.lit(1)).cast("int")
-    lp = agg.select(
-        id_col, "__fz_kn", F.explode(F.slice("__fz_s", 1, plen)).alias("__fz_e")
-    ).select(id_col, "__fz_kn", F.col("__fz_e.__fz_t").alias("__fz_t"))
+    lp = agg.selectExpr(
+        id_col, "__fz_kn",
+        f"explode(slice(__fz_s, 1, CAST({_jaro_plen('__fz_kn', s)} AS INT))) AS __fz_e",
+    ).selectExpr(id_col, "__fz_kn", "__fz_e.__fz_t AS __fz_t")
     pairs = (
         _self_join(lp, id_col, "__fz_t", cached)
         .select(id_col, id2, "__fz_kn", "__fz_kn_2")
         .distinct()
-        .where(
-            F.least("__fz_kn", "__fz_kn_2")
-            >= F.ceil(
-                F.lit(3 * s - 1)
-                * F.col("__fz_kn")
-                * F.col("__fz_kn_2")
-                / (F.col("__fz_kn") + F.col("__fz_kn_2"))
-                - F.lit(1e-9)
-            )
-        )
+        .where(_jaro_count_bound("__fz_kn", "__fz_kn_2", s))
         .select(id_col, id2)
     )
     # both-empty pairs: jaro dist 0, no tokens — equi-join on the (all-0)
     # length column so Catalyst plans a hash join, not a BNLJ
-    el = prof.where(F.col("__fz_kn") == 0).select(id_col, "__fz_kn")
+    el = prof.where("__fz_kn = 0").select(id_col, "__fz_kn")
     empties = _self_join(el, id_col, "__fz_kn", None).select(id_col, id2)
     return _finish(pairs.unionByName(empties).distinct(), obs, extra)
+
+
+def _jaro_plen(n: str, s: float) -> str:
+    """SQL text: the jaro prefix length of a key of length `n` (SQL text)
+    at similarity s: the weakest admissible partner length (from min >=
+    max*(3s-2)), then the pairwise count bound alpha at that weakest
+    partner; prefix = the n - alpha + 1 globally rarest tokens."""
+    lb_min = f"greatest(1, ceil({n} * {sql_lit(3 * s - 2)}))"
+    alpha = f"greatest(1, ceil({sql_lit(3 * s - 1)} * {n} * {lb_min} / ({n} + {lb_min}) - 1.0E-9D))"
+    return f"greatest({n} - {alpha} + 1, 1)"
+
+
+def _jaro_count_bound(a: str, b: str, s: float) -> str:
+    """SQL text of the jaro count bound on key lengths `a`, `b`: matched
+    chars m >= (3s-1)*|a||b|/(|a|+|b|), and m <= min(|a|, |b|)."""
+    return f"least({a}, {b}) >= ceil({sql_lit(3 * s - 1)} * {a} * {b} / ({a} + {b}) - 1.0E-9D)"
 
 
 def jaro_candidates(
@@ -1414,19 +1283,12 @@ def jaro_candidates(
     def _tokens(keys: DataFrame, key: str) -> DataFrame:
         # (key, token) with token = char + '#' + occurrence (multiset -> set)
         counts = (
-            keys.select(key, F.explode(qgrams_col(key, 1)).alias("__fz_ch"))
+            keys.selectExpr(sql_ident(key), f"explode({qgrams_sql(key, 1)}) AS __fz_ch")
             .groupBy(key, "__fz_ch")
-            .agg(F.count(F.lit(1)).alias("__fz_c"))
+            .agg(F.expr("count(1) AS __fz_c"))
         )
-        return counts.select(
-            key,
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("__fz_c")),
-                    lambda k: F.concat(F.col("__fz_ch"), F.lit("#"), k.cast("string")),
-                )
-            ).alias("__fz_t"),
-        )
+        toks = "transform(sequence(1, __fz_c), k -> concat(__fz_ch, '#', CAST(k AS STRING)))"
+        return counts.selectExpr(sql_ident(key), f"explode({toks}) AS __fz_t")
 
     lt, rt = _tokens(lkeys, lkey), _tokens(rkeys, rkey)
     # global token rarity over BOTH sides (prefix theorem needs one shared
@@ -1435,51 +1297,33 @@ def jaro_candidates(
         lt.select("__fz_t")
         .unionByName(rt.select("__fz_t"))
         .groupBy("__fz_t")
-        .agg(F.count(F.lit(1)).alias("__fz_df"))
+        .agg(F.expr("count(1) AS __fz_df"))
     )
 
     def _prefix(toks: DataFrame, key: str) -> DataFrame:
-        n = F.length(key)
-        # weakest admissible partner length (from min >= max*(3s-2))
-        lb_min = F.greatest(F.lit(1), F.ceil(n * F.lit(3 * s - 2)))
-        alpha = F.greatest(
-            F.lit(1),
-            F.ceil(F.lit(3 * s - 1) * n * lb_min / (n + lb_min) - F.lit(1e-9)),
-        )
-        plen = F.greatest(n - alpha + 1, F.lit(1))
-        w = Window.partitionBy(key).orderBy(F.col("__fz_df").asc(), F.col("__fz_t").asc())
+        k = sql_ident(key)
+        w = Window.partitionBy(key).orderBy("__fz_df", "__fz_t")
         return (
             toks.join(F.broadcast(tok_df), "__fz_t")
             .withColumn("__fz_rn", F.row_number().over(w))
-            .where(F.col("__fz_rn") <= plen)
+            .where(f"__fz_rn <= {_jaro_plen(f'length({k})', s)}")
             .select(key, "__fz_t")
         )
 
+    lk, rk = sql_ident(lkey), sql_ident(rkey)
     pairs = (
         _prefix(lt, lkey)
         .join(_prefix(rt, rkey), "__fz_t")
         .select(lkey, rkey)
         .distinct()
-        .withColumn("__fz_ll", F.length(lkey))
-        .withColumn("__fz_rl", F.length(rkey))
-        .where(
-            F.least("__fz_ll", "__fz_rl")
-            >= F.ceil(
-                F.lit(3 * s - 1)
-                * F.col("__fz_ll")
-                * F.col("__fz_rl")
-                / (F.col("__fz_ll") + F.col("__fz_rl"))
-                - F.lit(1e-9)
-            )
-        )
-        .select(lkey, rkey)
+        .where(_jaro_count_bound(f"length({lk})", f"length({rk})", s))
     )
     empties = (
         lkeys.select(lkey)
-        .where(F.length(lkey) == 0)
+        .where(f"length({lk}) = 0")
         .join(
-            rkeys.select(rkey).where(F.length(rkey) == 0),
-            F.length(lkey) == F.length(rkey),  # both 0 — equi-join, not BNLJ
+            rkeys.select(rkey).where(f"length({rk}) = 0"),
+            F.expr(f"length({lk}) = length({rk})"),  # both 0 — equi-join, not BNLJ
         )
         .select(lkey, rkey)
     )
@@ -1493,21 +1337,13 @@ def band_candidates(
 
     Mirrors difference/mod.rs:19-43; O(n+m+candidates), no cross join.
     """
+    lk, rk = sql_ident(lkey), sql_ident(rkey)
     if max_distance <= 0:
-        return lkeys.select(lkey).join(rkeys.select(rkey), F.col(lkey) == F.col(rkey))
-    tau = float(max_distance)
-    l = lkeys.select(lkey).withColumn(
-        "__fz_b",
-        F.explode(
-            F.array(
-                F.floor(F.col(lkey) / tau) - 1,
-                F.floor(F.col(lkey) / tau),
-                F.floor(F.col(lkey) / tau) + 1,
-            )
-        ),
-    )
-    r = rkeys.select(rkey).withColumn("__fz_rb", F.floor(F.col(rkey) / tau))
-    return l.join(r, F.col("__fz_b") == F.col("__fz_rb")).select(lkey, rkey)
+        return lkeys.select(lkey).join(rkeys.select(rkey), F.expr(f"{lk} = {rk}"))
+    b = f"floor({lk} / {sql_lit(float(max_distance))})"
+    l = lkeys.selectExpr(lk, f"explode(array({b} - 1, {b}, {b} + 1)) AS __fz_b")
+    r = rkeys.selectExpr(rk, f"floor({rk} / {sql_lit(float(max_distance))}) AS __fz_rb")
+    return l.join(r, F.expr("__fz_b = __fz_rb")).select(lkey, rkey)
 
 
 def grid_candidates(
@@ -1563,13 +1399,17 @@ def sorted_neighborhood_candidates(
     bucket expression evaluates identically in every branch by
     construction, with the same quantile-sampling quality.
 
+    `sort_expr` is SQL text of the sort key (default: the key column);
+    its values must be strings, numbers or booleans, since the sampled
+    boundaries become SQL literals.
+
     Returns (key_col, key_col+"2") pairs with rank distance in [1, window].
     """
     from pyspark.sql import Window
 
-    sort_col = sort_expr if sort_expr is not None else F.col(key_col)
+    sort_col = sort_expr if sort_expr is not None else sql_ident(key_col)
     n_parts = num_partitions or max(keys.sparkSession.sparkContext.defaultParallelism, 2)
-    src = keys.select(key_col, sort_col.alias("__fz_sort"))
+    src = keys.selectExpr(sql_ident(key_col), f"{sort_col} AS __fz_sort")
     n = src.count()
     frac = min(1.0, (n_parts * 20.0) / max(n, 1))
     sampled = sorted(
@@ -1581,38 +1421,31 @@ def sorted_neighborhood_candidates(
     # tiny/duplicate-heavy inputs is fine — one bucket = one sorted window)
     step = max(1, len(sampled) // n_parts)
     bounds = sorted({sampled[i] for i in range(step, len(sampled), step)})[: n_parts - 1]
-    if bounds:
-        barr = F.array(*[F.lit(b) for b in bounds])
-        pid = F.size(F.filter(barr, lambda b: b < F.col("__fz_sort")))
-    else:
-        pid = F.lit(0)
-    parts = src.withColumn("__fz_pid", pid)
+    barr = ", ".join(sql_lit(b) for b in bounds)
+    pid = f"size(filter(array({barr}), b -> b < __fz_sort))" if bounds else "0"
+    parts = src.selectExpr("*", f"{pid} AS __fz_pid")
     # partition offsets as a lazy cumulative sum over the (tiny) partition
     # counts — broadcast-joined back; no driver-side collect
-    counts = parts.groupBy("__fz_pid").agg(F.count(F.lit(1)).alias("__fz_n"))
+    counts = parts.groupBy("__fz_pid").agg(F.expr("count(1) AS __fz_n"))
     off_w = Window.orderBy("__fz_pid").rowsBetween(Window.unboundedPreceding, -1)
     off_df = counts.select(
         "__fz_pid", F.coalesce(F.sum("__fz_n").over(off_w), F.lit(0)).alias("__fz_off")
     )
     w = Window.partitionBy("__fz_pid").orderBy("__fz_sort", key_col)
+    k = sql_ident(key_col)
     ranked = (
         parts.withColumn("__fz_rn", F.row_number().over(w))
         .join(F.broadcast(off_df), "__fz_pid")
-        .select(key_col, (F.col("__fz_rn") + F.col("__fz_off")).alias("__fz_rank"))
+        .selectExpr(k, "__fz_rn + __fz_off AS __fz_rank")
     )
-    bucket = F.floor(F.col("__fz_rank") / window)
-    left = ranked.withColumn("__fz_b", F.explode(F.array(bucket, bucket + 1)))
-    right = ranked.select(
-        F.col(key_col).alias(key_col + "2"),
-        F.col("__fz_rank").alias("__fz_rank2"),
-        F.floor(F.col("__fz_rank") / window).alias("__fz_b"),
+    bucket = f"floor(__fz_rank / {window})"
+    left = ranked.selectExpr("*", f"explode(array({bucket}, {bucket} + 1)) AS __fz_b")
+    right = ranked.selectExpr(
+        f"{k} AS {sql_ident(key_col + '2')}", "__fz_rank AS __fz_rank2", f"{bucket} AS __fz_b"
     )
     return (
         left.join(right, "__fz_b")
-        .where(
-            (F.col("__fz_rank2") > F.col("__fz_rank"))
-            & (F.col("__fz_rank2") - F.col("__fz_rank") <= window)
-        )
+        .where(f"__fz_rank2 > __fz_rank AND __fz_rank2 - __fz_rank <= {window}")
         .select(key_col, key_col + "2")
         .distinct()
     )

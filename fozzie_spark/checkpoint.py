@@ -188,8 +188,8 @@ class StageRunner:
             except Exception:
                 pass
         per_part = (
-            out.groupBy(F.spark_partition_id().alias("partition"))
-            .agg(F.count(F.lit(1)).alias("rows"))
+            out.groupBy(F.expr("spark_partition_id() AS partition"))
+            .agg(F.expr("count(1) AS rows"))
             .collect()
         )
         return {

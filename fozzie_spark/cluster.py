@@ -17,40 +17,38 @@ import logging
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from fozzie_spark.util import sql_ident
+
 _log = logging.getLogger("fozzie_spark.cluster")
 
 
-def _payload_bytes_col(dt, col):
-    """Per-row payload bytes of `col` of DataType `dt` — octet-aware for
-    variable-width types so the driver-finish gate measures real bytes,
-    never row counts (the round-4 broadcast-gate lesson: count-only gates
-    break on kilobyte keys)."""
+def _payload_bytes_sql(dt, col: str) -> str:
+    """SQL text: per-row payload bytes of `col` (SQL text) of DataType
+    `dt` — octet-aware for variable-width types so the driver-finish gate
+    measures real bytes, never row counts (the round-4 broadcast-gate
+    lesson: count-only gates break on kilobyte keys)."""
     name = dt.typeName()
     if name in ("string", "binary"):
-        return F.coalesce(F.octet_length(col), F.lit(0))
+        return f"coalesce(octet_length({col}), 0)"
     if hasattr(dt, "fields"):  # struct: sum the fields
-        out = F.lit(0)
-        for f in dt.fields:
-            out = out + _payload_bytes_col(f.dataType, col.getField(f.name))
-        return out
+        parts = [_payload_bytes_sql(f.dataType, f"{col}.{sql_ident(f.name)}") for f in dt.fields]
+        return "(" + " + ".join(["0", *parts]) + ")"
     fixed = {"long": 8, "double": 8, "timestamp": 8, "timestamp_ntz": 8,
              "date": 4, "integer": 4, "float": 4, "short": 2, "byte": 1,
              "boolean": 1}
-    return F.lit(fixed.get(name, 16))
+    return str(fixed.get(name, 16))
 
 
 def _fingerprint_aggs(schema) -> list:
     # (count, order-independent hash sum) — enough to detect any edge-set
     # change between rounds (collision odds negligible) — plus the exact
     # payload octets the driver-finish budget is checked against
-    return [
-        F.count(F.lit(1)).alias("__fz_n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("__fz_h"),
-        F.sum(
-            _payload_bytes_col(schema["u"].dataType, F.col("u"))
-            + _payload_bytes_col(schema["v"].dataType, F.col("v"))
-        ).alias("__fz_b"),
-    ]
+    payload = " + ".join(_payload_bytes_sql(schema[c].dataType, c) for c in ("u", "v"))
+    return [F.expr(e) for e in (
+        "count(1) AS __fz_n",
+        "sum(CAST(xxhash64(u, v) AS DECIMAL(38,0))) AS __fz_h",
+        f"sum({payload}) AS __fz_b",
+    )]
 
 
 def _rm_path(spark, path: str) -> None:
@@ -308,8 +306,8 @@ def connected_components(
     caller. (No cross-run resume: a restarted call recomputes from the
     input edges.)
     """
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v"))
+    raw = edges.selectExpr(f"{sql_ident(src)} AS u", f"{sql_ident(dst)} AS v").where(
+        "u IS NOT NULL AND v IS NOT NULL AND u != v"
     )
     record = {"gate": "cc_driver_finish", "plan_bytes": None, "edges": None,
               "payload_bytes": None, "threshold": driver_finish_bytes,

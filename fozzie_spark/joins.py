@@ -26,7 +26,7 @@ from fozzie_spark import blocking
 from fozzie_spark.distances import EDIT_METHODS, METHODS, NGRAM_METHODS
 from fozzie_spark.merge import materialize
 from fozzie_spark.scoring import score_string_pairs, string_distance_udf
-from fozzie_spark.util import F64_EPS, normalize_by
+from fozzie_spark.util import F64_EPS, normalize_by, sql_ident, sql_lit
 
 _log = logging.getLogger("fozzie_spark.joins")
 
@@ -50,17 +50,13 @@ def _key_frames(left: DataFrame, right: DataFrame, by_pairs):
     so null-key tuples are dropped here; unmatched rows still surface in
     left/right/full/anti modes via the materializer.
     """
-    lkeys = (
-        left.select(*[F.col(lc).alias(f"__fz_l{i}") for i, (lc, _) in enumerate(by_pairs)])
-        .na.drop("any")
-        .distinct()
-    )
-    rkeys = (
-        right.select(*[F.col(rc).alias(f"__fz_r{i}") for i, (_, rc) in enumerate(by_pairs)])
-        .na.drop("any")
-        .distinct()
-    )
-    return lkeys, rkeys
+    def _keys(df: DataFrame, cols: list[str], prefix: str) -> DataFrame:
+        return df.selectExpr(
+            *[f"{sql_ident(c)} AS {prefix}{i}" for i, c in enumerate(cols)]
+        ).na.drop("any").distinct()
+
+    return (_keys(left, [lc for lc, _ in by_pairs], "__fz_l"),
+            _keys(right, [rc for _, rc in by_pairs], "__fz_r"))
 
 
 def _expand_tuples(cand: DataFrame, lkeys: DataFrame, rkeys: DataFrame, k: int) -> DataFrame:
@@ -206,7 +202,7 @@ def fuzzy_string_join(
     # used to prune the raw join, so lv's count aggregate now sees every
     # raw row instead.
     obs = Observation()
-    cand = cand.observe(obs, F.count(F.lit(1)).alias("raw_candidates"))
+    cand = cand.observe(obs, F.expr("count(1) AS raw_candidates"))
     if _log.isEnabledFor(logging.DEBUG):
         record = {"method": method, **decision, "prefix_mode": prefix_mode}
         _log.debug("fuzzy_string_join decision: %s", record, extra={"fz_decision": record})
@@ -372,8 +368,8 @@ def difference_join(
     for i in range(len(by_pairs)):
         d = f"__fz_D{i}"
         pairs = pairs.withColumn(
-            d, F.abs(F.col(f"__fz_l{i}").cast("double") - F.col(f"__fz_r{i}").cast("double"))
-        ).filter(F.col(d) <= tau)
+            d, F.expr(f"abs(CAST(__fz_l{i} AS DOUBLE) - CAST(__fz_r{i} AS DOUBLE))")
+        ).where(f"{d} <= {sql_lit(tau)}")
         internal.append(d)
 
     name_pairs = _dist_name_pairs or by_pairs

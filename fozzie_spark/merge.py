@@ -19,11 +19,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from fozzie_spark.util import sql_ident
+
 HOW_MODES = ("inner", "left", "right", "full", "semi", "anti")
 
 
-def _qual(alias: str, col: str):
-    return F.col(f"{alias}.`{col}`")
+def _quals(alias: str, cols: list[str], out: dict[str, str]) -> list[str]:
+    """SQL select items: `alias`-qualified columns renamed per `out`."""
+    return [f"{alias}.{sql_ident(c)} AS {sql_ident(out[c])}" for c in cols]
+
+
+def _on(alias: str, cols: list[str], key: str):
+    """Join condition: `alias`'s columns equal the key columns key0, key1..."""
+    return F.expr(" AND ".join(f"{alias}.{sql_ident(c)} = {key}{i}" for i, c in enumerate(cols)))
 
 
 def materialize(
@@ -44,67 +52,50 @@ def materialize(
     sx, sy = suffixes
     lout = {c: (c + sx if c in set(rcols) else c) for c in lcols}
     rout = {c: (c + sy if c in set(lcols) else c) for c in rcols}
+    lby, rby = [lc for lc, _ in by_pairs], [rc for _, rc in by_pairs]
 
     L, R, M = left.alias("__fzL"), right.alias("__fzR"), matches.alias("__fzM")
-    lcond = [
-        _qual("__fzL", lc) == _qual("__fzM", f"__fz_l{i}") for i, (lc, _) in enumerate(by_pairs)
-    ]
-    rcond = [
-        _qual("__fzR", rc) == _qual("__fzM", f"__fz_r{i}") for i, (_, rc) in enumerate(by_pairs)
-    ]
+
+    def side_keys(prefix: str) -> DataFrame:
+        """The matched key tuples of one side, as __fz_k0, __fz_k1..."""
+        return matches.selectExpr(
+            *[f"{prefix}{i} AS __fz_k{i}" for i in range(len(by_pairs))]
+        ).distinct()
 
     if how in ("semi", "anti"):
-        lkeys = matches.select(
-            *[F.col(f"__fz_l{i}").alias(f"__fz_k{i}") for i in range(len(by_pairs))]
-        ).distinct()
-        cond = [
-            _qual("__fzL", lc) == F.col(f"__fz_k{i}") for i, (lc, _) in enumerate(by_pairs)
-        ]
         # semi/anti return df1 rows with ORIGINAL names (no right side in
         # the output, so no suffixing — merge/semi.rs, merge/anti.rs)
         mode = "left_semi" if how == "semi" else "left_anti"
-        return L.join(lkeys, cond, mode).select(
-            *[_qual("__fzL", c).alias(c) for c in lcols]
+        return L.join(side_keys("__fz_l"), _on("__fzL", lby, "__fz_k"), mode).selectExpr(
+            *_quals("__fzL", lcols, {c: c for c in lcols})
         )
 
     inner = (
-        L.join(M, lcond)
-        .join(R, rcond)
-        .select(
-            *[_qual("__fzL", c).alias(lout[c]) for c in lcols],
-            *[_qual("__fzR", c).alias(rout[c]) for c in rcols],
-            *[_qual("__fzM", d) for d in dist_names],
+        L.join(M, _on("__fzL", lby, "__fzM.__fz_l"))
+        .join(R, _on("__fzR", rby, "__fzM.__fz_r"))
+        .selectExpr(
+            *_quals("__fzL", lcols, lout), *_quals("__fzR", rcols, rout),
+            *[f"__fzM.{sql_ident(d)}" for d in dist_names],
         )
     )
     if how == "inner":
         return inner
 
-    rtypes = dict(zip(right.columns, [f.dataType for f in right.schema.fields]))
-    ltypes = dict(zip(left.columns, [f.dataType for f in left.schema.fields]))
+    def nulls(frame: DataFrame, cols: list[str], out: dict[str, str]) -> list:
+        types = {f.name: f.dataType for f in frame.schema.fields}
+        return [F.lit(None).cast(types[c]).alias(out[c]) for c in cols]
+
+    dist_nulls = [F.lit(None).cast("double").alias(d) for d in dist_names]
 
     def left_pad() -> DataFrame:
-        lkeys = matches.select(
-            *[F.col(f"__fz_l{i}").alias(f"__fz_k{i}") for i in range(len(by_pairs))]
-        ).distinct()
-        cond = [_qual("__fzL", lc) == F.col(f"__fz_k{i}") for i, (lc, _) in enumerate(by_pairs)]
-        unmatched = L.join(lkeys, cond, "left_anti")
-        return unmatched.select(
-            *[_qual("__fzL", c).alias(lout[c]) for c in lcols],
-            *[F.lit(None).cast(rtypes[c]).alias(rout[c]) for c in rcols],
-            *[F.lit(None).cast("double").alias(d) for d in dist_names],
-        )
+        unmatched = L.join(side_keys("__fz_l"), _on("__fzL", lby, "__fz_k"), "left_anti")
+        quals = [F.expr(e) for e in _quals("__fzL", lcols, lout)]
+        return unmatched.select(*quals, *nulls(right, rcols, rout), *dist_nulls)
 
     def right_pad() -> DataFrame:
-        rkeys = matches.select(
-            *[F.col(f"__fz_r{i}").alias(f"__fz_k{i}") for i in range(len(by_pairs))]
-        ).distinct()
-        cond = [_qual("__fzR", rc) == F.col(f"__fz_k{i}") for i, (_, rc) in enumerate(by_pairs)]
-        unmatched = R.join(rkeys, cond, "left_anti")
-        return unmatched.select(
-            *[F.lit(None).cast(ltypes[c]).alias(lout[c]) for c in lcols],
-            *[_qual("__fzR", c).alias(rout[c]) for c in rcols],
-            *[F.lit(None).cast("double").alias(d) for d in dist_names],
-        )
+        unmatched = R.join(side_keys("__fz_r"), _on("__fzR", rby, "__fz_k"), "left_anti")
+        quals = [F.expr(e) for e in _quals("__fzR", rcols, rout)]
+        return unmatched.select(*nulls(left, lcols, lout), *quals, *dist_nulls)
 
     if how == "left":
         return inner.unionByName(left_pad())

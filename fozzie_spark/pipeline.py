@@ -39,22 +39,22 @@ import logging
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from fozzie_spark import blocking as B
-from fozzie_spark.blocking import _count_map_col, qgrams_col
+from fozzie_spark.blocking import _count_map_sql, qgrams_sql
 from fozzie_spark.checkpoint import StageRunner
 from fozzie_spark.cluster import connected_components
 from fozzie_spark.distances import EDIT_METHODS
 from fozzie_spark.scoring import jvm_distance_col, string_distance_udf
 from fozzie_spark.synth import doc_text_key
+from fozzie_spark.util import sql_lit
 
 _log = logging.getLogger(__name__)
 
 
-def key_id(col):
-    """128-bit content id for a key string: struct of two independent
-    xxhash64s (orderable, groupable, fixed 16 bytes)."""
-    return F.struct(
-        F.xxhash64(col).alias("h1"), F.xxhash64(col, F.lit(0x5EED)).alias("h2")
-    )
+def key_id(key: str) -> str:
+    """SQL text: the 128-bit content id of the key string `key` (SQL
+    text), a struct of two independent xxhash64s (orderable, groupable,
+    fixed 16 bytes)."""
+    return f"named_struct('h1', xxhash64({key}), 'h2', xxhash64({key}, {0x5EED}))"
 
 
 #: edges-stage dictionary broadcast gate (bytes); a test hook and a knob
@@ -209,10 +209,9 @@ def er_pipeline(
 
     # ---- stage 1: derive keys + key ids (pure projection — no shuffle) ----
     def _keys():
-        return docs.select(
-            "doc_id",
-            doc_text_key("spans").alias("key"),
-        ).withColumn("kid", key_id(F.col("key")))
+        return docs.selectExpr("doc_id", f"{doc_text_key('spans')} AS key").selectExpr(
+            "*", f"{key_id('key')} AS kid"
+        )
 
     keys = runner.stage("keys", _keys, params={"q": q})
     # the distinct-key dictionary, EXTENDED map-side with everything the
@@ -238,46 +237,38 @@ def er_pipeline(
     #            (map_keys(cm) IS array_distinct(qgrams) in the same
     #            first-occurrence order; tc = Σ map_values(cm))
     #   stage 3: the NSIG Bloom words over one shared pre-hashed array
-    base = keys.select("key", "kid").where(F.col("key").isNotNull()).distinct()
-    _me_from_cm = F.transform(
-        F.map_entries(F.col("__fz_cm")),
-        lambda e: F.struct(
-            F.pmod(F.xxhash64(e["key"]), F.lit(MASS_BINS)).cast("int").alias("b"),
-            e["value"].cast("double").alias("c"),
-        ),
+    base = keys.select("key", "kid").where("key IS NOT NULL").distinct()
+    me_from_cm = (
+        "transform(map_entries(__fz_cm), e -> named_struct("
+        f"'b', CAST(pmod(xxhash64(e.key), {MASS_BINS}) AS INT), 'c', CAST(e.value AS DOUBLE)))"
     )
-    _gs = F.array_distinct(qgrams_col("key", q)).alias("__fz_gs")
+    gs = f"array_distinct({qgrams_sql('key', q)}) AS __fz_gs"
     if method in ("qgram", "cosine"):
-        u1 = base.select("key", "kid", _count_map_col("key", q).alias("__fz_cm"))
-        cols2 = ["key", "kid", _me_from_cm.alias("me")]
+        u1 = base.selectExpr("key", "kid", f"{_count_map_sql('key', q)} AS __fz_cm")
+        cols2 = ["key", "kid", f"{me_from_cm} AS me"]
         if method == "qgram":
             cols2 += [
-                F.map_keys("__fz_cm").alias("__fz_gs"),
-                F.aggregate(
-                    F.map_values("__fz_cm"), F.lit(0), lambda acc, c: acc + c
-                ).alias("__fz_tc"),
+                "map_keys(__fz_cm) AS __fz_gs",
+                "aggregate(map_values(__fz_cm), 0, (acc, c) -> acc + c) AS __fz_tc",
             ]
         else:
             cols2.append("__fz_cm")
-        u2 = u1.select(*cols2)
-        gs_ref = F.col("__fz_gs") if method == "qgram" else F.map_keys("__fz_cm")
-        u3 = u2.select(
-            "*",
-            F.transform(gs_ref, lambda g: F.xxhash64(g)).alias("__hs"),
-            *([F.size(gs_ref).alias("__fz_n")] if method == "qgram" else []),
+        u2 = u1.selectExpr(*cols2)
+        gs_ref = "__fz_gs" if method == "qgram" else "map_keys(__fz_cm)"
+        u3 = u2.selectExpr(
+            "*", f"transform({gs_ref}, g -> xxhash64(g)) AS __hs",
+            *([f"size({gs_ref}) AS __fz_n"] if method == "qgram" else []),
         )
     elif method == "jaccard":
-        u3 = base.select("key", "kid", _gs).select(
-            "*", F.size("__fz_gs").alias("__fz_n"),
-            F.transform("__fz_gs", lambda g: F.xxhash64(g)).alias("__hs"),
+        u3 = base.selectExpr("key", "kid", gs).selectExpr(
+            "*", "size(__fz_gs) AS __fz_n", "transform(__fz_gs, g -> xxhash64(g)) AS __hs"
         )
     if method in ("qgram", "cosine", "jaccard"):
-        uniq = u3.select(
-            *[c for c in u3.columns if c != "__hs"],
-            *B._bloom_sig_cols(F.col("__hs"), hashed=True),
+        uniq = u3.selectExpr(
+            *[c for c in u3.columns if c != "__hs"], *B._bloom_sig_sql("__hs", hashed=True)
         )
     elif method in EDIT_METHODS:
-        uniq = base.select("key", "kid", _gs)
+        uniq = base.selectExpr("key", "kid", gs)
     else:  # jaro/jw: blocking derives its own char tokens from the key
         uniq = base
     uniq = uniq.persist()
@@ -285,9 +276,10 @@ def er_pipeline(
 
     _uniq_stats: list[tuple[int, int, int]] = []
     # keys the gram index cannot pair losslessly: empty profiles for
-    # jaccard, shorter than q + damage*tau for the edit family
+    # jaccard (distance 0 to each other at any max_distance), shorter than
+    # q + damage*tau for the edit family
     short_cut = (
-        q if method == "jaccard" and max_distance < 1.0
+        q if method == "jaccard"
         else q + B.edit_damage(method, q) * int(max_distance) if method in EDIT_METHODS
         else None
     )
@@ -306,10 +298,10 @@ def er_pipeline(
         if not _uniq_stats:
             # octet_length, not length: the gate must measure UTF-8 BYTES —
             # char counts under-estimate non-ASCII keys by up to 4x
-            row = uniq.agg(
-                F.count(F.lit(1)), F.sum(F.octet_length("key")),
-                F.count_if(F.length("key") < short_cut) if short_cut else F.lit(0),
-            ).first()
+            row = uniq.agg(*[F.expr(e) for e in (
+                "count(1)", "sum(octet_length(key))",
+                f"count_if(length(key) < {short_cut})" if short_cut else "0",
+            )]).first()
             _uniq_stats.append((int(row[0]), int(row[1] or 0), int(row[2])))
         return _uniq_stats[0]
 
@@ -343,14 +335,14 @@ def er_pipeline(
         proven = not cap or cap >= _n_uniq()
         if not proven and reused:
             _stage_persists.append(token_df.persist())
-        n_capped = 0 if proven else token_df.where(F.col("__fz_df") > cap).count()
+        n_capped = 0 if proven else token_df.where(f"__fz_df > {cap}").count()
         sn = None
         if sn_window and n_capped:
             sn = B.sorted_neighborhood_candidates(
                 uniq.select("key"), "key", window=sn_window
-            ).select(
-                key_id(F.col("key")).alias("a"), key_id(F.col("key2")).alias("b")
-            ).select(F.least("a", "b").alias("kid"), F.greatest("a", "b").alias("kid2"))
+            ).selectExpr(f"{key_id('key')} AS a", f"{key_id('key2')} AS b").selectExpr(
+                "least(a, b) AS kid", "greatest(a, b) AS kid2"
+            )
         route = "uncapped" if not n_capped else "capped_sn" if sn is not None else "capped"
         record = {
             "method": method, "gate": "hot_token_cap",
@@ -389,15 +381,15 @@ def er_pipeline(
         Its sorted-neighborhood pairs (Bloom-cut here for jaccard) ride into
         the builder, which unions them under its own final distinct.
         """
-        kn = F.length("key").cast("int").alias("__fz_kn")
-        cols, tokens = {
+        kn = "CAST(length(key) AS INT) AS __fz_kn"
+        cols, tokens = {  # SQL text only: building it runs no py4j call
             "jaccard": (["__fz_gs", "__fz_n", *B.SIG_COLS], "__fz_gs"),
             "qgram": (["__fz_gs", "__fz_tc", *B.SIG_COLS], "__fz_gs"),
-            "cosine": (["__fz_cm", *B.SIG_COLS], F.map_keys("__fz_cm")),
-            "jw": ([kn, B.char_occurrence_tokens("key").alias("__fz_ts")], "__fz_ts"),
+            "cosine": (["__fz_cm", *B.SIG_COLS], "map_keys(__fz_cm)"),
+            "jw": ([kn, f"{B.char_occurrence_tokens('key')} AS __fz_ts"], "__fz_ts"),
             "edit": (["__fz_gs", kn], "__fz_gs"),
         }["edit" if method in EDIT_METHODS else "jw" if method == "jaro" else method]
-        prof = uniq.select("kid", *cols)
+        prof = uniq.selectExpr("kid", *cols)
         tdf = B.token_df(prof, tokens)
         gram_index = method == "jaccard" or method in EDIT_METHODS
         if gram_index:
@@ -422,12 +414,11 @@ def er_pipeline(
             # scale. Empty-profile pairs (n = 0 both sides) are definite
             # matches (jaccard dist 0), skip the test.
             a = uniq.select("kid", "__fz_n", *B.SIG_COLS)
-            b = a.select([F.col(c).alias("kid2" if c == "kid" else c + "_2") for c in a.columns])
+            b = a.selectExpr(*[f"{c} AS {'kid2' if c == 'kid' else c + '_2'}" for c in a.columns])
             if _n_uniq() < 8_000_000:
                 a, b = F.broadcast(a), F.broadcast(b)
             sn = sn.join(a, "kid").join(b, "kid2").where(
-                B.jaccard_sig_cut(1.0 - max_distance)
-                | ((F.col("__fz_n") == 0) & (F.col("__fz_n_2") == 0))
+                f"{B.jaccard_sig_cut(1.0 - max_distance)} OR (__fz_n = 0 AND __fz_n_2 = 0)"
             ).select("kid", "kid2")
         obs = Observation()
         kw = {"cached": _stage_persists, "obs": obs, "extra": sn}
@@ -456,9 +447,9 @@ def er_pipeline(
     # ---- stage 3: vectorized scoring -> edges (id pairs + distance) --------
     _edge_persists: list[DataFrame] = []  # freed after the edges stage writes
 
-    def _mass_sig(power: int):
-        """Dense per-bin gram-mass array over the precomputed binned
-        entries column `me` (array<struct<b,c>>).
+    def _mass_sig(power: int) -> str:
+        """SQL text: dense per-bin gram-mass array over the precomputed
+        binned entries column `me` (array<struct<b,c>>).
 
         power=2: element i holds sqrt(Σ c²) over the grams landing in bin
         i — PRE-sqrt'd so the per-pair cosine bound is a pure multiply-add
@@ -467,20 +458,12 @@ def er_pipeline(
         element i holds Σ c for the qgram per-bin L1 lower bound.
         O(MASS_BINS * g) cheap JVM ops per key — computed once per
         DISTINCT key at dictionary-build time, never per pair."""
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(MASS_BINS - 1)),
-            lambda i: (F.sqrt if power == 2 else (lambda c: c))(
-                F.aggregate(
-                    F.col("me"),
-                    F.lit(0.0),
-                    lambda acc, e: acc
-                    + F.when(
-                        e["b"] == i,
-                        e["c"] * e["c"] if power == 2 else e["c"],
-                    ).otherwise(F.lit(0.0)),
-                )
-            ),
+        mass = (
+            "aggregate(me, 0.0D, (acc, e) -> acc + CASE WHEN e.b = i THEN "
+            f"{'e.c * e.c' if power == 2 else 'e.c'} ELSE 0.0D END)"
         )
+        per_bin = f"sqrt({mass})" if power == 2 else mass
+        return f"transform(sequence(0, {MASS_BINS - 1}), i -> {per_bin})"
 
     def _edges():
         # JVM expression scoring when the method allows (jaccard/lv/...):
@@ -491,13 +474,13 @@ def er_pipeline(
             # score over the PRECOMPUTED distinct-gram arrays on `uniq` —
             # each key's q-gram extraction runs once per key at cache time,
             # not once per candidate pair (a key appears in ~10+ pairs)
-            dict_a = uniq.select("kid", F.col("__fz_gs").alias("__g1"))
-            dict_b = uniq.select(F.col("kid").alias("kid2"), F.col("__fz_gs").alias("__g2"))
-            inter = F.size(F.array_intersect("__g1", "__g2"))
-            union = F.size("__g1") + F.size("__g2") - inter
-            dist = F.when(
-                (F.size("__g1") == 0) & (F.size("__g2") == 0), F.lit(0.0)
-            ).otherwise(F.lit(1.0) - inter.cast("double") / union.cast("double"))
+            dict_a = uniq.selectExpr("kid", "__fz_gs AS __g1")
+            dict_b = uniq.selectExpr("kid AS kid2", "__fz_gs AS __g2")
+            inter = "size(array_intersect(__g1, __g2))"
+            dist = F.expr(
+                "CASE WHEN size(__g1) = 0 AND size(__g2) = 0 THEN 0.0D ELSE 1.0D - "
+                f"CAST({inter} AS DOUBLE) / CAST(size(__g1) + size(__g2) - {inter} AS DOUBLE) END"
+            )
         elif method in ("qgram", "cosine"):
             # Two-tier per-pair refine before the Arrow scorer. The prefix
             # blocking is lossless but WEAK under hot heavy grams (a shared
@@ -521,67 +504,46 @@ def er_pipeline(
             #   ~g²/MASS_BINS); on kilobyte documents it degrades to
             #   pass-through — never wrong, just toothless there.
             if method == "cosine":
-                nrm = F.sqrt(
-                    F.aggregate(
-                        F.col("me"), F.lit(0.0), lambda acc, e: acc + e["c"] * e["c"]
-                    )
-                )
                 stat = [
-                    nrm.alias("__na"),
-                    F.aggregate(
-                        F.col("me"), F.lit(0.0), lambda acc, e: F.greatest(acc, e["c"])
-                    ).alias("__ca"),
+                    "sqrt(aggregate(me, 0.0D, (acc, e) -> acc + e.c * e.c)) AS __na",
+                    "aggregate(me, 0.0D, (acc, e) -> greatest(acc, e.c)) AS __ca",
                 ]
                 msig = _mass_sig(2)
             else:
-                stat = [F.col("__fz_n").cast("double").alias("__na")]
+                stat = ["CAST(__fz_n AS DOUBLE) AS __na"]
                 msig = _mass_sig(1)
-            base = uniq.select(
-                "kid", F.col("key").alias("__k1"), msig.alias("__qa"), *stat, *B.SIG_COLS
+            base = uniq.selectExpr(
+                "kid", "key AS __k1", f"{msig} AS __qa", *stat, *B.SIG_COLS
             ).persist()
             _edge_persists.append(base)
             dict_a = base
             ren = {"kid": "kid2", "__k1": "__k2", "__qa": "__qb", "__na": "__nb",
                    "__ca": "__cb", **{s: s + "_2" for s in B.SIG_COLS}}
-            dict_b = base.select([F.col(c).alias(ren.get(c, c)) for c in base.columns])
+            dict_b = base.selectExpr(*[f"{c} AS {ren.get(c, c)}" for c in base.columns])
+            t = sql_lit(1.0 - max_distance)
             if method == "cosine":
-                s_min = F.ceil(
-                    F.lit(1.0 - max_distance) * F.col("__na") * F.col("__nb")
-                    / (F.col("__ca") * F.col("__cb"))
-                    - F.lit(1e-9)
-                )
+                s_min = f"ceil({t} * __na * __nb / (__ca * __cb) - 1.0E-9D)"
                 # strictly-lossless tier 2: dot_ub >= t*na*nb (eps guards
                 # ulp-level skew vs the exact scorer; empty profiles score
                 # dist 1.0, unreachable at max_distance < 1 — enforced at
                 # entry — so (na>0 & nb>0) is a valid prune)
-                dot_ub = F.aggregate(
-                    F.zip_with("__qa", "__qb", lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
+                dot_ub = (
+                    "aggregate(zip_with(__qa, __qb, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
                 )
-                tier2 = (F.col("__na") > 0) & (F.col("__nb") > 0) & (
-                    dot_ub
-                    >= F.lit(1.0 - max_distance) * F.col("__na") * F.col("__nb")
-                    - F.lit(1e-9)
-                )
-            else:
-                s_min = F.ceil(
-                    (F.col("__na") + F.col("__nb") - F.lit(float(max_distance))) / 2
-                    - F.lit(1e-9)
-                )
-                dist_lb = F.aggregate(
-                    F.zip_with("__qa", "__qb", lambda x, y: F.abs(x - y)),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                tier2 = dist_lb <= F.lit(float(max_distance) + 1e-9)
-            tier1 = B._popcount_cut(s_min)
-            if method == "cosine":
+                tier2 = f"__na > 0 AND __nb > 0 AND {dot_ub} >= {t} * __na * __nb - 1.0E-9D"
                 # explicit empty-profile guard: cmax = 0 would make s_min
                 # NaN via 0/0 — those pairs score dist 1.0 (> max_distance,
                 # enforced < 1 at entry), so pruning them outright is exact
-                tier1 = (F.col("__ca") > 0) & (F.col("__cb") > 0) & tier1
-            refine = tier1 & tier2
+                tier1 = f"__ca > 0 AND __cb > 0 AND {B._popcount_cut(s_min)}"
+            else:
+                s_min = f"ceil((__na + __nb - {sql_lit(float(max_distance))}) / 2 - 1.0E-9D)"
+                dist_lb = (
+                    "aggregate(zip_with(__qa, __qb, (x, y) -> abs(x - y)), 0.0D, "
+                    "(acc, v) -> acc + v)"
+                )
+                tier2 = f"{dist_lb} <= {sql_lit(float(max_distance) + 1e-9)}"
+                tier1 = B._popcount_cut(s_min)
+            refine = f"({tier1}) AND ({tier2})"
             # ER keys are DOCUMENTS: the JVM profile expressions count
             # each gram via an O(g) array filter => O(g²) per pair,
             # quadratic in document length. The Arrow scorer builds
@@ -589,8 +551,8 @@ def er_pipeline(
             # keys (JVM wins only on name-length strings).
             dist = None
         else:
-            dict_a = uniq.select("kid", F.col("key").alias("__k1"))
-            dict_b = uniq.select(F.col("kid").alias("kid2"), F.col("key").alias("__k2"))
+            dict_a = uniq.selectExpr("kid", "key AS __k1")
+            dict_b = uniq.selectExpr("kid AS kid2", "key AS __k2")
             dist = jvm_distance_col(method, "__k1", "__k2", max_distance, q=q)
         if dist is None:
             extra = (
@@ -599,7 +561,7 @@ def er_pipeline(
                 else {"q": q}
             )
             udf = string_distance_udf(method, max_distance=max_distance, **extra)
-            dist = udf(F.col("__k1"), F.col("__k2"))
+            dist = udf("__k1", "__k2")
         n_u, key_bytes, _ = _uniq_stat()
         # the dictionaries carry the key text (or its gram array — same
         # order of magnitude) PLUS the mass-signature arrays (MASS_BINS
@@ -645,7 +607,7 @@ def er_pipeline(
                 out = out.where(refine).select("kid", "kid2", "__k1", "__k2")
             return (
                 out.withColumn("dist", dist)
-                .where(F.col("dist") <= max_distance)
+                .where(f"dist <= {sql_lit(max_distance)}")
                 .select("kid", "kid2", "dist")
             )
 
@@ -675,9 +637,9 @@ def er_pipeline(
             k_chunks = min(max(1, -(-est // int(edges_chunk_bytes))), 1024)
             if k_chunks > 1:
                 tmp = f"{checkpoint_dir.rstrip('/')}/edges_chunks"
-                sel = F.pmod(F.xxhash64("kid", "kid2"), F.lit(k_chunks))
                 for i in range(k_chunks):
-                    _score(scored_input.where(sel == i)).write.mode(
+                    chunk = scored_input.where(f"pmod(xxhash64(kid, kid2), {k_chunks}) = {i}")
+                    _score(chunk).write.mode(
                         "overwrite" if i == 0 else "append"
                     ).parquet(tmp)
                 _edge_tmpdirs.append(tmp)
@@ -721,7 +683,7 @@ def er_pipeline(
             dst="kid2",
             checkpoint_dir=f"{checkpoint_dir.rstrip('/')}/cc_rounds" if reliable_cc else None,
             driver_finish_bytes=driver_finish_budget(spark, cap=512 << 20),
-        ).select(F.col("node").alias("kid"), F.col("component").alias("entity_kid"))
+        ).selectExpr("node AS kid", "component AS entity_kid")
 
     from fozzie_spark.cluster import _persistent_ids, _unpersist_ids
 
@@ -755,15 +717,12 @@ def er_pipeline(
         if csz is not None and csz <= gate:
             cl = F.broadcast(cl)
         return (
-            docs.withColumn("__fz_kid", key_id(doc_text_key("spans")))
-            .join(cl, F.col("__fz_kid") == F.col("kid"), "left")
-            .withColumn(
-                "entity_id",
-                F.xxhash64(
-                    F.coalesce("entity_kid.h1", "__fz_kid.h1"),
-                    F.coalesce("entity_kid.h2", "__fz_kid.h2"),
-                ),
-            )
+            docs.withColumn("__fz_kid", F.expr(key_id(doc_text_key("spans"))))
+            .join(cl, F.expr("__fz_kid = kid"), "left")
+            .withColumn("entity_id", F.expr(
+                "xxhash64(coalesce(entity_kid.h1, __fz_kid.h1), "
+                "coalesce(entity_kid.h2, __fz_kid.h2))"
+            ))
             .drop("kid", "entity_kid", "__fz_kid")
         )
 

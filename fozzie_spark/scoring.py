@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType
 
 from fozzie_spark import distances
+from fozzie_spark.util import sql_ident, sql_lit
 
 INF = float("inf")
 
@@ -28,68 +29,56 @@ def jvm_distance_col(method: str, lc: str, rc: str, max_distance: float, q: int 
     integer cutoff => +inf; profile distances use the same integer-exact
     accumulation (long sums), so float results are bit-identical.
     """
-    from fozzie_spark.blocking import qgrams_col
+    from fozzie_spark.blocking import qgrams_sql
 
-    l, r = F.col(lc), F.col(rc)
-    null_inf = lambda d: F.when(l.isNull() | r.isNull(), F.lit(INF)).otherwise(d)  # noqa: E731
+    l, r = sql_ident(lc), sql_ident(rc)
+
+    def _expr(d: str):  # null on either side => +inf
+        return F.expr(f"CASE WHEN {l} IS NULL OR {r} IS NULL THEN {sql_lit(INF)} ELSE {d} END")
 
     if method in ("levenshtein", "lv"):
-        cutoff = int(max_distance)
-        lev = F.levenshtein(l, r, cutoff)  # -1 when > cutoff (banded, JVM)
-        return null_inf(F.when(lev < 0, F.lit(INF)).otherwise(lev.cast("double")))
+        # -1 when > cutoff (banded, JVM)
+        lev = f"levenshtein({l}, {r}, {int(max_distance)})"
+        return _expr(f"CASE WHEN {lev} < 0 THEN {sql_lit(INF)} ELSE CAST({lev} AS DOUBLE) END")
 
     if method == "hamming":
-        cutoff = int(max_distance)
-        diff = F.size(
-            F.filter(
-                F.sequence(F.lit(1), F.length(l)),
-                lambda i: F.substring(l, i, F.lit(1)) != F.substring(r, i, F.lit(1)),
-            )
-        ).cast("double")
-        d = F.when(F.length(l) != F.length(r), F.lit(INF)).otherwise(
-            F.when(diff > cutoff, F.lit(INF)).otherwise(diff)
+        differs = f"i -> substring({l}, i, 1) != substring({r}, i, 1)"
+        diff = f"CAST(size(filter(sequence(1, length({l})), {differs})) AS DOUBLE)"
+        return _expr(
+            f"CASE WHEN length({l}) != length({r}) THEN {sql_lit(INF)} "
+            f"ELSE CASE WHEN {diff} > {int(max_distance)} THEN {sql_lit(INF)} ELSE {diff} END END"
         )
-        return null_inf(d)
 
-    ga, gb = qgrams_col(lc, q), qgrams_col(rc, q)
+    ga, gb = qgrams_sql(lc, q), qgrams_sql(rc, q)
 
-    def _cnt(arr, g):
-        return F.size(F.filter(arr, lambda x: x == g)).cast("long")
+    def _cnt(arr: str, g: str) -> str:
+        return f"CAST(size(filter({arr}, x -> x = {g})) AS BIGINT)"
 
     if method == "jaccard":
-        sa, sb = F.array_distinct(ga), F.array_distinct(gb)
-        inter = F.size(F.array_intersect(sa, sb))
-        union = F.size(sa) + F.size(sb) - inter
-        d = F.when((F.size(sa) == 0) & (F.size(sb) == 0), F.lit(0.0)).otherwise(
-            F.lit(1.0) - inter.cast("double") / union.cast("double")
+        sa, sb = f"array_distinct({ga})", f"array_distinct({gb})"
+        inter = f"size(array_intersect({sa}, {sb}))"
+        return _expr(
+            f"CASE WHEN size({sa}) = 0 AND size({sb}) = 0 THEN 0.0D ELSE 1.0D - "
+            f"CAST({inter} AS DOUBLE) / CAST(size({sa}) + size({sb}) - {inter} AS DOUBLE) END"
         )
-        return null_inf(d)
 
     if method == "qgram":
-        u = F.array_distinct(F.concat(ga, gb))
-        d = F.aggregate(
-            u,
-            F.lit(0).cast("long"),
-            lambda acc, g: acc + F.abs(_cnt(ga, g) - _cnt(gb, g)),
-        ).cast("double")
-        return null_inf(d)
+        return _expr(
+            f"CAST(aggregate(array_distinct(concat({ga}, {gb})), CAST(0 AS BIGINT), "
+            f"(acc, g) -> acc + abs({_cnt(ga, 'g')} - {_cnt(gb, 'g')})) AS DOUBLE)"
+        )
 
     if method == "cosine":
-        ua, ub = F.array_distinct(ga), F.array_distinct(gb)
-        dot = F.aggregate(
-            ua, F.lit(0).cast("long"), lambda acc, g: acc + _cnt(ga, g) * _cnt(gb, g)
+        def _sum(u: str, a: str, b: str) -> str:
+            term = f"{_cnt(a, 'g')} * {_cnt(b, 'g')}"
+            return f"aggregate({u}, CAST(0 AS BIGINT), (acc, g) -> acc + {term})"
+
+        ua, ub = f"array_distinct({ga})", f"array_distinct({gb})"
+        return _expr(
+            f"CASE WHEN size({ga}) = 0 OR size({gb}) = 0 THEN 1.0D ELSE 1.0D - "
+            f"CAST({_sum(ua, ga, gb)} AS DOUBLE) / (sqrt(CAST({_sum(ua, ga, ga)} AS DOUBLE)) "
+            f"* sqrt(CAST({_sum(ub, gb, gb)} AS DOUBLE))) END"
         )
-        s1 = F.aggregate(
-            ua, F.lit(0).cast("long"), lambda acc, g: acc + _cnt(ga, g) * _cnt(ga, g)
-        )
-        s2 = F.aggregate(
-            ub, F.lit(0).cast("long"), lambda acc, g: acc + _cnt(gb, g) * _cnt(gb, g)
-        )
-        d = F.when((F.size(ga) == 0) | (F.size(gb) == 0), F.lit(1.0)).otherwise(
-            F.lit(1.0)
-            - dot.cast("double") / (F.sqrt(s1.cast("double")) * F.sqrt(s2.cast("double")))
-        )
-        return null_inf(d)
 
     return None
 
@@ -137,7 +126,7 @@ def score_string_pairs(
         if expr is None:
             if udf is None:
                 udf = string_distance_udf(method, max_distance=max_distance, **params)
-            expr = udf(F.col(lc), F.col(rc))
+            expr = udf(lc, rc)
         out = out.withColumn(dc, expr)
-        out = out.filter(F.col(dc) <= float(max_distance))
+        out = out.where(f"{sql_ident(dc)} <= {sql_lit(float(max_distance))}")
     return out

@@ -141,21 +141,17 @@ def synth_documents(
     return base.mapInPandas(gen, DOC_SCHEMA)
 
 
-def doc_text_key(spans_col: str = "spans"):
-    """The pipeline join key: ordered concatenation of text-span texts.
+def doc_text_key(spans_col: str = "spans") -> str:
+    """SQL text of the pipeline join key: ordered concatenation of
+    text-span texts.
 
     Array order IS span order (offsets ascending by construction); media
     spans contribute nothing. Single JVM-side expression — no UDF.
     """
-    from pyspark.sql import functions as F
+    from fozzie_spark.util import sql_ident
 
-    return F.array_join(
-        F.transform(
-            F.filter(F.col(spans_col), lambda s: s["kind"] == "text"),
-            lambda s: s["text"],
-        ),
-        " ",
-    )
+    spans = sql_ident(spans_col)
+    return f"array_join(transform(filter({spans}, s -> s.kind = 'text'), s -> s.text), ' ')"
 
 
 def synth_documents_skewed(

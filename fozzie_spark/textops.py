@@ -23,40 +23,37 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from fozzie_spark.blocking import qgrams_sql
+from fozzie_spark.util import sql_ident, sql_lit
+
 # --------------------------------------------------------------------------
 # tokenization / shingles (shared)
 # --------------------------------------------------------------------------
 
 
-def tokens_col(text_col: str):
-    """Whitespace tokens of trimmed text; empty text -> empty array."""
-    c = F.trim(F.col(text_col))
-    return F.when(c == "", F.array().cast("array<string>")).otherwise(F.split(c, r"\s+"))
+def tokens_sql(text_col: str) -> str:
+    """SQL text: whitespace tokens of trimmed text; empty text -> empty
+    array."""
+    c, ws = f"trim({sql_ident(text_col)})", sql_lit(r"\s+")
+    return f"CASE WHEN {c} = '' THEN CAST(array() AS ARRAY<STRING>) ELSE split({c}, {ws}) END"
 
 
-def word_shingles_col(text_col: str, w: int):
-    """Array of w-word shingles (space-joined), [] when fewer than w tokens.
+def word_shingles_sql(text_col: str, w: int) -> str:
+    """SQL text: array of w-word shingles (space-joined), [] when fewer
+    than w tokens.
 
-    The token array is BOUND once as a lambda variable (transform over a
-    one-element array): a lambda that references an outer column
+    The token array is BOUND once as a lambda variable `t` (transform over
+    a one-element array): a lambda that references an outer column
     expression gets it inlined and re-evaluated per element, so the
     previous form re-ran the whitespace-split regex once per SHINGLE —
     O(tokens x shingles) regex work per document, measured as the
     dominant cost of the minhash signature stage. Same expressions, same
     values."""
-    toks = tokens_col(text_col)
-
-    def _build(t):
-        n = F.size(t)
-        return F.when(
-            n >= w,
-            F.transform(
-                F.sequence(F.lit(0), n - w),
-                lambda i: F.array_join(F.slice(t, i + 1, w), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return F.element_at(F.transform(F.array(toks), _build), 1)
+    build = (
+        f"CASE WHEN size(t) >= {w} THEN transform(sequence(0, size(t) - {w}), "
+        f"i -> array_join(slice(t, i + 1, {w}), ' ')) ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+    return f"element_at(transform(array({tokens_sql(text_col)}), t -> {build}), 1)"
 
 
 # --------------------------------------------------------------------------
@@ -171,20 +168,32 @@ def jaccard_dedup_pairs(
     shingles (one shingle shared by every doc); `max_shingle_df` remains an
     approximate valve for adversarial corpora.
     """
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles_col(text_col, shingle_w)).alias("sh"),
-    ).where(F.size("sh") > 0)
+    base = _shingle_sets(df, id_col, text_col, shingle_w).where("size(sh) > 0")
     cand = _jaccard_candidates(base, max_distance, max_shingle_df)
-    a = base.select(F.col("id").alias("id1"), F.col("sh").alias("sh1"))
-    b = base.select(F.col("id").alias("id2"), F.col("sh").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
+    return _verify_jaccard(cand, base, max_distance)
+
+
+def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_w: int) -> DataFrame:
+    """(id, sh): each document's distinct word-shingle array."""
+    sh = f"array_distinct({word_shingles_sql(text_col, shingle_w)})"
+    return df.selectExpr(f"{sql_ident(id_col)} AS id", f"{sh} AS sh")
+
+
+def _shingle_rows(df: DataFrame, id_col: str, text_col: str, shingle_w: int) -> DataFrame:
+    """(id, g): one row per distinct word shingle of each document."""
+    sh = f"array_distinct({word_shingles_sql(text_col, shingle_w)})"
+    return df.selectExpr(f"{sql_ident(id_col)} AS id", f"explode({sh}) AS g")
+
+
+def _verify_jaccard(cand: DataFrame, base: DataFrame, max_distance: float) -> DataFrame:
+    """Candidate (id1, id2) pairs with their exact shingle-set jaccard
+    distance, kept when within max_distance."""
+    inter = "size(array_intersect(sh1, sh2))"
     return (
-        cand.join(a, "id1")
-        .join(b, "id2")
-        .withColumn("jaccard_dist", F.lit(1.0) - inter / union)
-        .where(F.col("jaccard_dist") <= max_distance)
+        cand.join(base.selectExpr("id AS id1", "sh AS sh1"), "id1")
+        .join(base.selectExpr("id AS id2", "sh AS sh2"), "id2")
+        .withColumn("jaccard_dist", F.expr(f"1.0D - {inter} / (size(sh1) + size(sh2) - {inter})"))
+        .where(f"jaccard_dist <= {sql_lit(max_distance)}")
         .select("id1", "id2", "jaccard_dist")
     )
 
@@ -210,10 +219,6 @@ def near_dedup(
     dup_group = min doc id in the near-dup component; singletons group
     with themselves. Canonical row = min id per group.
     """
-    from pyspark.sql import Window
-
-    from fozzie_spark.cluster import connected_components
-
     if method == "minhash":
         pairs = minhash_dedup_pairs(
             df, id_col, text_col, num_hashes, bands, shingle_w, max_distance
@@ -224,16 +229,26 @@ def near_dedup(
         )
     else:
         raise ValueError(f"unknown near_dedup method {method!r}")
-    cc = connected_components(pairs, "id1", "id2").select(
-        F.col("node").alias(id_col), F.col("component").alias("__fz_comp")
+    return dup_groups(df, pairs, id_col)
+
+
+def dup_groups(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """`df` rows plus (dup_group, group_size, is_canonical) from the
+    duplicate (id1, id2) `pairs`: dup_group = min id of the row's
+    connected component (singletons group with themselves), canonical
+    row = min id per group."""
+    from fozzie_spark.cluster import connected_components
+
+    i = sql_ident(id_col)
+    cc = connected_components(pairs, "id1", "id2").selectExpr(
+        f"node AS {i}", "component AS __fz_comp"
     )
-    w = Window.partitionBy("dup_group")
     return (
         df.join(cc, id_col, "left")
-        .withColumn("dup_group", F.coalesce("__fz_comp", F.col(id_col)))
+        .withColumn("dup_group", F.expr(f"coalesce(__fz_comp, {i})"))
         .drop("__fz_comp")
-        .withColumn("group_size", F.count(F.lit(1)).over(w))
-        .withColumn("is_canonical", F.col(id_col) == F.min(id_col).over(w))
+        .withColumn("group_size", F.expr("count(1) OVER (PARTITION BY dup_group)"))
+        .withColumn("is_canonical", F.expr(f"{i} = min({i}) OVER (PARTITION BY dup_group)"))
     )
 
 
@@ -250,13 +265,11 @@ def minhash_signatures(
     One explode + one groupBy with k map-side-combining min() aggregates.
     Docs with no shingles get no signature (dropped here).
     """
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(word_shingles_col(text_col, shingle_w))).alias("g"),
+    ex = _shingle_rows(df, id_col, text_col, shingle_w)
+    sig = ex.groupBy("id").agg(
+        *[F.expr(f"min(xxhash64(g, {i})) AS h{i}") for i in range(num_hashes)]
     )
-    aggs = [F.min(F.xxhash64(F.col("g"), F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    sig = ex.groupBy("id").agg(*aggs)
-    return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
+    return sig.selectExpr("id", f"array({', '.join(f'h{i}' for i in range(num_hashes))}) AS sig")
 
 
 def minhash_lsh_pairs(
@@ -274,22 +287,16 @@ def minhash_lsh_pairs(
         r = max(1, k // bands)
     else:
         r = rows_per_band
-    banded = sigs.select(
+    banded = sigs.selectExpr(
         "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"), F.xxhash64(F.slice("sig", b * r + 1, r).cast("string")).alias("bh")
-                ),
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+        f"explode(transform(sequence(0, {bands - 1}), b -> named_struct('band', b, "
+        f"'bh', xxhash64(CAST(slice(sig, b * {r} + 1, {r}) AS STRING))))) AS bb",
+    ).selectExpr("id", "bb.band AS band", "bb.bh AS bh")
     return (
         banded.alias("a")
         .join(banded.alias("b"), ["band", "bh"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+        .where("a.id < b.id")
+        .selectExpr("a.id AS id1", "b.id AS id2")
         .distinct()
     )
 
@@ -307,21 +314,7 @@ def minhash_dedup_pairs(
     exact-over-candidates; recall depends on the band curve)."""
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_w)
     cand = minhash_lsh_pairs(sigs, bands, rows_per_band=max(1, num_hashes // bands))
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles_col(text_col, shingle_w)).alias("sh"),
-    )
-    a = base.select(F.col("id").alias("id1"), F.col("sh").alias("sh1"))
-    b = base.select(F.col("id").alias("id2"), F.col("sh").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    return (
-        cand.join(a, "id1")
-        .join(b, "id2")
-        .withColumn("jaccard_dist", F.lit(1.0) - inter / union)
-        .where(F.col("jaccard_dist") <= max_distance)
-        .select("id1", "id2", "jaccard_dist")
-    )
+    return _verify_jaccard(cand, _shingle_sets(df, id_col, text_col, shingle_w), max_distance)
 
 
 # --------------------------------------------------------------------------
@@ -335,10 +328,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, shingle_w: int = 2) -> Da
     bit b of the result = 1 iff sum over shingles of sign(bit b of hash) > 0.
     Single explode + groupBy with 64 conditional sums (JVM codegen).
     """
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(word_shingles_col(text_col, shingle_w))).alias("g"),
-    ).select("id", F.xxhash64("g").alias("h"))
+    ex = _shingle_rows(df, id_col, text_col, shingle_w).selectExpr("id", "xxhash64(g) AS h")
     one = F.lit(1).cast("long")
     aggs = [
         F.sum(
@@ -420,6 +410,11 @@ _STOPWORDS = {
 }
 
 
+def _stopword_hit(lang: str) -> str:
+    """SQL text: lambda variable `t` is one of `lang`'s stopwords."""
+    return f"array_contains(array({', '.join(sql_lit(w) for w in _STOPWORDS[lang])}), t)"
+
+
 def language_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFrame:
     """Heuristic stopword-overlap language id (en/de/fr/es/unknown).
 
@@ -427,14 +422,11 @@ def language_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> Dat
     when no stopword matched. A real pipeline swaps in fastText/CLD3 as a
     pandas UDF — the plumbing (columnar score + argmax) stays identical.
     """
-    toks = F.transform(tokens_col(text_col), lambda t: F.lower(t))
-    scored = df.withColumn("__toks", toks)
+    scored = df.withColumn("__toks", F.expr(f"transform({tokens_sql(text_col)}, t -> lower(t))"))
     langs = sorted(_STOPWORDS)
     for lang in langs:
-        sw = F.array(*[F.lit(w) for w in _STOPWORDS[lang]])
-        scored = scored.withColumn(
-            f"__s_{lang}", F.size(F.filter(F.col("__toks"), lambda t: F.array_contains(sw, t)))
-        )
+        hits = f"size(filter(__toks, t -> {_stopword_hit(lang)}))"
+        scored = scored.withColumn(f"__s_{lang}", F.expr(hits))
     best = F.greatest(*[F.col(f"__s_{lang}") for lang in langs])
     pred = F.when(best <= 0, F.lit("unknown"))
     for lang in langs:  # ties resolve alphabetically (deterministic)
@@ -445,12 +437,12 @@ def language_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> Dat
 def quality_features(df: DataFrame, text_col: str) -> DataFrame:
     """Adds n_chars_q, n_tokens, mean_token_len, punct_ratio, upper_ratio,
     stopword_ratio, quality_score — all single-pass JVM expressions."""
-    toks = tokens_col(text_col)
+    toks = F.expr(tokens_sql(text_col))
     text = F.col(text_col)
     n_chars = F.length(text)
     n_tokens = F.size(toks)
-    sw = F.array(*[F.lit(w) for w in _STOPWORDS["en"]])
-    n_stop = F.size(F.filter(F.transform(toks, lambda t: F.lower(t)), lambda t: F.array_contains(sw, t)))
+    lowered = f"transform({tokens_sql(text_col)}, t -> lower(t))"
+    n_stop = F.expr(f"size(filter({lowered}, t -> {_stopword_hit('en')}))")
     punct = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", ""))
     upper = F.length(F.regexp_replace(text, r"[^A-Z]", ""))
     out = (
@@ -479,7 +471,7 @@ TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
 
 def token_counts(df: DataFrame, text_col: str) -> DataFrame:
     """ws_tokens (whitespace split) + bpe_tokens (regex pieces)."""
-    return df.withColumn("ws_tokens", F.size(tokens_col(text_col))).withColumn(
+    return df.withColumn("ws_tokens", F.expr(f"size({tokens_sql(text_col)})")).withColumn(
         "bpe_tokens", F.size(F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_REGEX), 0))
     )
 
@@ -515,32 +507,19 @@ def winnow_fingerprints(
     """
     norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
     d2 = df.select(F.col(id_col).alias("id"), norm.alias("__s"))
-    grams = F.when(
-        F.length("__s") >= k,
-        F.expr(f"transform(sequence(1, length(__s) - {k} + 1), i -> substring(__s, i, {k}))"),
-    ).otherwise(F.array().cast("array<string>"))
     if hash_fn == "xxhash64":
-        hs, empty_t = F.transform(grams, lambda g: F.xxhash64(g)), "array<bigint>"
+        empty_t = "ARRAY<BIGINT>"
     elif hash_fn == "md5":
-        hs, empty_t = F.transform(grams, lambda g: F.md5(g)), "array<string>"
+        empty_t = "ARRAY<STRING>"
     else:
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    d2 = d2.select("id", hs.alias("__h"))
-    n = F.size("__h")
+    d2 = d2.selectExpr("id", f"transform({qgrams_sql('__s', k)}, g -> {hash_fn}(g)) AS __h")
+    mins = f"transform(sequence(0, size(__h) - {window}), i -> array_min(slice(__h, i + 1, {window})))"
     fps = (
-        F.when(
-            n >= window,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), n - window),
-                    lambda i: F.array_min(F.slice("__h", i + 1, window)),
-                )
-            ),
-        )
-        .when(n > 0, F.array(F.array_min("__h")))
-        .otherwise(F.array().cast(empty_t))
+        f"CASE WHEN size(__h) >= {window} THEN array_distinct({mins}) "
+        f"WHEN size(__h) > 0 THEN array(array_min(__h)) ELSE CAST(array() AS {empty_t}) END"
     )
-    return d2.select("id", F.explode(fps).alias("fp"))
+    return d2.selectExpr("id", f"explode({fps}) AS fp")
 
 
 def winnow_overlap_pairs(

@@ -4,8 +4,9 @@ avoid (CartesianProduct / BroadcastNestedLoopJoin on paths that must be
 equi-joins, an exact string scorer evaluated inside a join condition —
 once per raw join row instead of once per distinct candidate — a grouping
 result that reruns its candidate lineage, a candidate self-join whose two
-sides each compute their own prefix aggregate, missing whole-stage
-codegen, full-column parquet scans).
+sides each compute their own prefix aggregate, a gram document-frequency
+table computed for an uncapped index that filters nothing, missing
+whole-stage codegen, full-column parquet scans).
 
     python scripts/explain_audit.py [sf_dir]
 """
@@ -35,6 +36,9 @@ _JOIN_LINE = re.compile(r"(\w*HashJoin|SortMergeJoin|BroadcastNestedLoopJoin|Car
 #: the final per-key prefix aggregate of an id-keyed builder (the rarity
 #: sort's collect_list; partial aggregates excluded)
 _PREFIX_AGG = re.compile(r"Aggregate\(keys=.*(?<!partial_)collect_list\(")
+#: the gram document-frequency table (blocking.token_df), an aggregate
+#: keyed on the gram alone
+_GRAM_DF_AGG = re.compile(r"Aggregate\(keys=\[__fz_g#\d+\]")
 
 
 def _outside_caches(plan: str) -> list[str]:
@@ -51,9 +55,11 @@ def _outside_caches(plan: str) -> list[str]:
 
 
 def audit(name: str, df, allow_bnlj: bool = False, lineage_cut: bool = False,
-          self_join: bool = False) -> dict:
+          self_join: bool = False, uncapped: bool = False) -> dict:
     plan = df._jdf.queryExecution().executedPlan().toString()
     flags = []
+    if uncapped and _GRAM_DF_AGG.search(plan):
+        flags.append("UncappedGramDfJoin")
     if lineage_cut and _MINHASH_LINEAGE.search(plan):
         flags.append("CandidateLineageRecomputed")
     if self_join and sum(bool(_PREFIX_AGG.search(ln)) for ln in _outside_caches(plan)) > 1:
@@ -174,17 +180,17 @@ def main() -> int:
     keys = docs.select(
         F.xxhash64("text").alias("kid"), F.col("text").alias("key")
     ).distinct()
-    gs = F.array_distinct(B.qgrams_col("key", 3))
-    sigs = B._bloom_sig_cols(gs)
-    kn = F.length("key").cast("int").alias("__fz_kn")
+    gs = f"array_distinct({B.qgrams_sql('key', 3)})"
+    sigs = B._bloom_sig_sql(gs)
+    kn = "CAST(length(key) AS INT) AS __fz_kn"
     cached = []
-    prof_jc = keys.select("kid", gs.alias("__fz_gs"), F.size(gs).alias("__fz_n"), *sigs)
-    prof_lv = keys.select("kid", gs.alias("__fz_gs"), kn)
-    prof_q = keys.select(
-        "kid", gs.alias("__fz_gs"), F.size(B.qgrams_col("key", 3)).alias("__fz_tc"), *sigs
+    prof_jc = keys.selectExpr("kid", f"{gs} AS __fz_gs", f"size({gs}) AS __fz_n", *sigs)
+    prof_lv = keys.selectExpr("kid", f"{gs} AS __fz_gs", kn)
+    prof_q = keys.selectExpr(
+        "kid", f"{gs} AS __fz_gs", f"size({B.qgrams_sql('key', 3)}) AS __fz_tc", *sigs
     )
-    prof_c = keys.select("kid", B._count_map_col("key", 3).alias("__fz_cm"), *sigs)
-    prof_j = keys.select("kid", kn, B.char_occurrence_tokens("key").alias("__fz_ts"))
+    prof_c = keys.selectExpr("kid", f"{B._count_map_sql('key', 3)} AS __fz_cm", *sigs)
+    prof_j = keys.selectExpr("kid", kn, f"{B.char_occurrence_tokens('key')} AS __fz_ts")
     for name, cand in (
         ("er_jaccard_ids", B.jaccard_candidates_ids(
             prof_jc, "kid", 0.6, B.token_df(prof_jc, "__fz_gs"), cached=cached)),
@@ -196,7 +202,9 @@ def main() -> int:
             prof_c, "kid", 0.25, prefix_mode="prefix", cached=cached)),
         ("er_jw_ids", B.jaro_candidates_ids(prof_j, "kid", 0.25, cached=cached)),
     ):
-        results.append(audit(name, cand, self_join=True))
+        # every entry is uncapped (max_gram_df None); the edit family's
+        # index reads the gram df table only to apply a cap
+        results.append(audit(name, cand, self_join=True, uncapped=name == "er_lv_ids"))
     for f in cached:
         f.unpersist()
     bad = [r["name"] for r in results if r["flags"]]

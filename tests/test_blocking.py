@@ -522,7 +522,7 @@ def test_id_keyed_ngram_builders_lossless(spark):
     import math
     import random
 
-    from fozzie_spark.blocking import SIG_COLS, _bloom_sig_cols, _count_map_col, qgrams_col
+    from fozzie_spark.blocking import SIG_COLS, _bloom_sig_sql, _count_map_sql, qgrams_sql
 
     rnd = random.Random(5)
     base = ["abcdefg", "abcdxfg", "zzzzzzz", "qwerty", "qwertz", "ab", "", "abab", "baba", "a",
@@ -533,7 +533,7 @@ def test_id_keyed_ngram_builders_lossless(spark):
     )
     q = 2
     df = spark.createDataFrame(list(enumerate(keys)), "kid long, key string")
-    gs = F.array_distinct(qgrams_col("key", q))
+    gs = f"array_distinct({qgrams_sql('key', q)})"
 
     def grams(s):
         return [s[i:i + q] for i in range(len(s) - q + 1)]
@@ -570,9 +570,8 @@ def test_id_keyed_ngram_builders_lossless(spark):
         assert all(a < b for a, b in got), what
 
     tau_q = 4
-    prof_q = df.select(
-        "kid", gs.alias("__fz_gs"), F.size(qgrams_col("key", q)).alias("__fz_tc"),
-        *_bloom_sig_cols(gs),
+    prof_q = df.selectExpr(
+        "kid", f"{gs} AS __fz_gs", f"size({qgrams_sql('key', q)}) AS __fz_tc", *_bloom_sig_sql(gs),
     )
     true_q = truth(qgram_dist, tau_q)  # incl. small-profile pairs like "" vs "ab"
     for mode in ("prefix", "simple"):
@@ -580,13 +579,13 @@ def test_id_keyed_ngram_builders_lossless(spark):
         check(got, true_q, f"qgram {mode}")
 
     tau_c = 0.4
-    prof_c = df.select("kid", _count_map_col("key", q).alias("__fz_cm"), *_bloom_sig_cols(gs))
+    prof_c = df.selectExpr("kid", f"{_count_map_sql('key', q)} AS __fz_cm", *_bloom_sig_sql(gs))
     true_c = truth(cos_dist, tau_c)
     for mode in ("prefix", "simple"):
         got = _id_pairs(blocking.cosine_candidates_ids, prof_c, "kid", tau_c, prefix_mode=mode)
         check(got, true_c, f"cosine {mode}")
 
-    prof_j = df.select("kid", gs.alias("__fz_gs"), F.size(gs).alias("__fz_n"), *_bloom_sig_cols(gs))
+    prof_j = df.selectExpr("kid", f"{gs} AS __fz_gs", f"size({gs}) AS __fz_n", *_bloom_sig_sql(gs))
     gdf = blocking.token_df(prof_j, "__fz_gs")
     assert set(prof_j.columns) >= set(SIG_COLS)
     for tau_j in (0.4, 0.7):
@@ -595,7 +594,7 @@ def test_id_keyed_ngram_builders_lossless(spark):
         assert any(keys[i] == "" or keys[j] == "" for i, j in true_j)  # empty profiles
         check(got, true_j, f"jaccard {tau_j}")
 
-    prof_e = df.select("kid", gs.alias("__fz_gs"), F.length("key").cast("int").alias("__fz_kn"))
+    prof_e = df.selectExpr("kid", f"{gs} AS __fz_gs", "CAST(length(key) AS INT) AS __fz_kn")
     gdf = blocking.token_df(prof_e, "__fz_gs")
     for method, tau_e in (("lv", 1), ("lv", 2), ("osa", 1), ("hamming", 1), ("lcs", 2)):
         got = _id_pairs(
@@ -607,6 +606,51 @@ def test_id_keyed_ngram_builders_lossless(spark):
         # short keys share no gram with their matches ("a" vs "b")
         assert any(min(len(keys[i]), len(keys[j])) < q for i, j in true_e), method
         check(got, true_e, f"{method} {tau_e}")
+
+
+def test_edit_ids_cap_join_keeps_uncapped_edges(spark):
+    # edit_candidates_ids joins the gram-df table only under a cap: a cap
+    # at the hottest gram's df removes nothing, so its candidates, and the
+    # exactly scored lv edges, equal the uncapped builder's; a biting cap
+    # drops candidates. Uncapped, the plan has no gram-df aggregate.
+    import random
+    import re
+
+    from fozzie_spark import distances as D
+    from fozzie_spark.blocking import qgrams_sql
+
+    rnd = random.Random(11)
+    keys = sorted(
+        {"".join(rnd.choice("abcde") for _ in range(rnd.randint(0, 9))) for _ in range(120)}
+    )
+    q, tau = 2, 1
+    df = spark.createDataFrame(list(enumerate(keys)), "kid long, key string")
+    prof = df.selectExpr(
+        "kid", f"array_distinct({qgrams_sql('key', q)}) AS __fz_gs",
+        "CAST(length(key) AS INT) AS __fz_kn",
+    )
+    gdf = blocking.token_df(prof, "__fz_gs")
+    top = max(r["__fz_df"] for r in gdf.collect())
+
+    def edges(pairs):
+        return {(a, b) for a, b in pairs
+                if D.score_batch("lv", [keys[a]], [keys[b]], max_distance=tau)[0] <= tau}
+
+    uncapped = _id_pairs(blocking.edit_candidates_ids, prof, "kid", tau, gdf, "lv", q)
+    capped = _id_pairs(
+        blocking.edit_candidates_ids, prof, "kid", tau, gdf, "lv", q, max_gram_df=top
+    )
+    assert capped == uncapped
+    assert edges(capped) == edges(uncapped) and edges(uncapped)
+    biting = _id_pairs(blocking.edit_candidates_ids, prof, "kid", tau, gdf, "lv", q, max_gram_df=2)
+    assert biting < uncapped
+    cached = []
+    plan = blocking.edit_candidates_ids(
+        prof, "kid", tau, gdf, "lv", q, cached=cached
+    )._jdf.queryExecution().executedPlan().toString()
+    for f in cached:
+        f.unpersist()
+    assert not re.search(r"Aggregate\(keys=\[__fz_g#\d+\]", plan), plan
 
 
 def _py_jaro(s1, s2):
@@ -662,7 +706,7 @@ def test_id_keyed_jaro_builder_lossless_and_equivalent(spark):
     prof = df.select(
         "kid",
         F.length("key").cast("int").alias("__fz_kn"),
-        blocking.char_occurrence_tokens("key").alias("__fz_ts"),
+        F.expr(blocking.char_occurrence_tokens("key")).alias("__fz_ts"),
     )
     got = _id_pairs(blocking.jaro_candidates_ids, prof, "kid", tau)
     true_pairs = {
@@ -702,7 +746,7 @@ def test_id_keyed_jaro_builder_no_key_strings_in_shuffles(spark):
     prof = df.select(
         "kid",
         F.length("key").cast("int").alias("__fz_kn"),
-        blocking.char_occurrence_tokens("key").alias("__fz_ts"),
+        F.expr(blocking.char_occurrence_tokens("key")).alias("__fz_ts"),
     )
     cached = []
     cand = blocking.jaro_candidates_ids(prof, "kid", 0.25, cached=cached)
@@ -732,16 +776,16 @@ def test_popcount_cut_boundary(spark):
 
     one_bit, no_bits, two_bits = words(1, 1), words(1, 2), words(3, 3)
     # s_min < 1: always passes, even with zero shared bits
-    assert no_bits.where(_popcount_cut(F.lit(0))).count() == 1
+    assert no_bits.where(_popcount_cut("0")).count() == 1
     # deterministic regime: every s_min in 1..7 requires exactly 1 bit
     for s_min in range(1, 8):
-        assert one_bit.where(_popcount_cut(F.lit(s_min))).count() == 1, s_min
-        assert no_bits.where(_popcount_cut(F.lit(s_min))).count() == 0, s_min
+        assert one_bit.where(_popcount_cut(str(s_min))).count() == 1, s_min
+        assert no_bits.where(_popcount_cut(str(s_min))).count() == 0, s_min
     # boundary: s_min = 8 is the FIRST value requiring 2 shared bits
-    assert one_bit.where(_popcount_cut(F.lit(8))).count() == 0
-    assert two_bits.where(_popcount_cut(F.lit(8))).count() == 1
+    assert one_bit.where(_popcount_cut("8")).count() == 0
+    assert two_bits.where(_popcount_cut("8")).count() == 1
     # and the floor keeps scaling: s_min = 14 requires floor(14/2)-2 = 5
-    assert two_bits.where(_popcount_cut(F.lit(14))).count() == 0
+    assert two_bits.where(_popcount_cut("14")).count() == 0
 
 
 def test_cosine_ids_sig_cut_lossless(spark):
@@ -752,7 +796,7 @@ def test_cosine_ids_sig_cut_lossless(spark):
     import math
     import random
 
-    from fozzie_spark.blocking import _bloom_sig_cols, _count_map_col
+    from fozzie_spark.blocking import _bloom_sig_sql, _count_map_sql
 
     rnd = random.Random(23)
     # dense alphabetic gram space (the er-cosine killer regime): short
@@ -763,10 +807,10 @@ def test_cosine_ids_sig_cut_lossless(spark):
     q = 2
     tau = 0.35
     df = spark.createDataFrame(list(enumerate(keys)), "kid long, key string")
-    prof = df.select(
+    prof = df.selectExpr(
         "kid",
-        _count_map_col("key", q).alias("__fz_cm"),
-        *_bloom_sig_cols(F.array_distinct(blocking.qgrams_col("key", q))),
+        f"{_count_map_sql('key', q)} AS __fz_cm",
+        *_bloom_sig_sql(f"array_distinct({blocking.qgrams_sql('key', q)})"),
     )
 
     def grams(s):

@@ -60,7 +60,7 @@ def test_synth_deterministic(spark):
 
 def test_doc_text_key_matches_local(spark):
     docs = synth_documents(spark, 10, seed=3)
-    got = {r["doc_id"]: r["k"] for r in docs.select("doc_id", doc_text_key().alias("k")).collect()}
+    got = {r["doc_id"]: r["k"] for r in docs.selectExpr("doc_id", f"{doc_text_key()} AS k").collect()}
     for did, key in got.items():
         entity = int(did.split("-")[1])
         variant = int(did.split("-")[2])
@@ -195,6 +195,35 @@ def test_pipeline_short_key_recall(spark, tmp_path, caplog):
     assert ent["d0"] == ent["d1"] != ent["d2"]
     rec = _pairs_decision(caplog)
     assert (rec["short_keys"], rec["short_key_block"]) == (2, True), rec
+
+
+def test_pipeline_jaccard_short_keys_at_tau_one(spark, tmp_path, caplog):
+    # at max_distance >= 1 the empty-profile block is still planned: two
+    # keys shorter than q have jaccard distance 0, and fuzzy_string_join
+    # pairs them too (the long text shares no gram with them: the
+    # share-a-gram quirk at tau >= 1 keeps it apart on both paths)
+    import logging
+
+    import fozzie_spark as fz
+
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+    texts = ["ab", "xy", "regular longer document text here"]
+    docs = spark.createDataFrame(
+        [(f"d{i}", [{"kind": "text", "text": t, "media_ref": None, "offset": 0}])
+         for i, t in enumerate(texts)],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    out = er_pipeline(
+        spark, docs, checkpoint_dir=str(tmp_path), max_distance=1.0, q=4, sn_window=None
+    )
+    ent = {r["doc_id"]: r["entity_id"] for r in out["entities"].collect()}
+    assert ent["d0"] == ent["d1"] != ent["d2"]
+    rec = _pairs_decision(caplog)
+    assert (rec["short_keys"], rec["short_key_block"]) == (2, True), rec
+    keys = spark.createDataFrame([(t,) for t in texts], "k string")
+    got = fz.fuzzy_string_join(keys, keys, by="k", method="jaccard", max_distance=1.0, q=4)
+    pairs = {(r["k.x"], r["k.y"]) for r in got.collect()}
+    assert ("ab", "xy") in pairs and not any(texts[2] in p and "ab" in p for p in pairs)
 
 
 def test_pipeline_input_change_invalidates_resume(spark, tmp_path):

@@ -174,3 +174,23 @@ def test_invalid_args(test_df, whoops):
         fuzzy_string_join(test_df, whoops, by={"int_col": "Name"}, method="lv")
     with pytest.raises(ValueError):
         fuzzy_string_join(test_df, whoops, by={"Name": "Name"}, method="lv", how="sideways")
+
+
+def test_special_column_names_all_modes(spark):
+    # join and carried columns whose names hold a dot, a space and a
+    # backtick give the same rows as plain names, in every join mode
+    from fozzie_spark.merge import HOW_MODES
+
+    rows_l = [("Liam", 1), ("Noah", 2), ("Olivia", 3), (None, 4)]
+    rows_r = [("Laim", 10), ("Noha", 20), ("Emma", 30)]
+    plain_l = spark.createDataFrame(rows_l, "name string, v int")
+    plain_r = spark.createDataFrame(rows_r, "name string, v int")
+    odd = "a.b c`d"
+    odd_l, odd_r = plain_l.toDF(odd, "v.`1"), plain_r.toDF(odd, "v.`1")
+    for how in HOW_MODES:
+        want = fuzzy_string_join(plain_l, plain_r, by="name", method="osa", how=how,
+                                    max_distance=2, distance_col="d").collect()
+        got = fuzzy_string_join(odd_l, odd_r, by=odd, method="osa", how=how,
+                                   max_distance=2, distance_col="d`.x").collect()
+        assert sorted(map(tuple, got), key=repr) == sorted(map(tuple, want), key=repr), how
+        assert want, how

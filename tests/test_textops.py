@@ -134,7 +134,7 @@ def test_jaccard_hot_shingle_stays_linear(spark):
 
     base = df.select(
         "id",
-        F.array_distinct(textops.word_shingles_col("text", 3)).alias("sh"),
+        F.expr(f"array_distinct({textops.word_shingles_sql('text', 3)})").alias("sh"),
     ).where(F.size("sh") > 0)
     n_cand = textops._jaccard_candidates(base, max_distance=0.5).count()
     assert n_cand <= n  # naive share-a-shingle blocking would give ~n^2/2
