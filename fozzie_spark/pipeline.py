@@ -1,14 +1,20 @@
 """The north-rule 3-stage entity-resolution pipeline over interleaved
 text+media documents:
 
-    stage 1   keys      doc_id -> join key (ordered concat of text spans)
-    stage 2   pairs     PPJoin-style blocking (prefix-filtered q-gram
-                        inverted index + positional filter + conditional
-                        sorted neighborhood), FUSED with a 512-bit gram
-                        Bloom-signature refine carried on the gram rows
-                        from the per-key cache -> surviving candidate
-                        KEY-ID pairs (raw candidate counts observed into
-                        the stage manifest)
+    stage 1   keys      doc_id -> join key (ordered concat of text spans);
+                        the write observes upper bounds of the distinct-key
+                        stats (docs with a key, key bytes, short-key docs)
+    stage 2   pairs     tiny inputs (docs bound <= the tiny-cross gate;
+                        jaccard at max_distance < 1, qgram, edit family):
+                        every key-id pair in one broadcast nested-loop
+                        join under a cut the index route applies too.
+                        Otherwise PPJoin-style blocking (prefix-filtered
+                        q-gram inverted index + positional filter +
+                        conditional sorted neighborhood), FUSED with a
+                        512-bit gram Bloom-signature refine carried on the
+                        gram rows from the per-key cache -> surviving
+                        candidate KEY-ID pairs (raw candidate counts
+                        observed into the stage manifest)
     stage 3   edges     Arrow-batched pairwise scoring, threshold
     stage 4   clusters  large-star/small-star connected components
     stage 5   entities  docs join key->entity; spans carried untouched
@@ -24,8 +30,8 @@ I/O) and connected components shuffles fixed-width ids. The key-id
 dictionary lives in the `keys` stage output.
 
 Scale levers (100 TB story):
-- all candidate generation is equi-join on generated block keys; no cross
-  joins anywhere
+- all candidate generation past the tiny-cross gate is equi-join on
+  generated block keys; the one cross join is the gated tiny route
 - hot q-grams (power-law!) are neutralized by PPJoin prefix + positional
   filtering (lossless for jaccard) with `max_gram_df` as a safety valve
 - scoring touches only distinct key pairs (dedup-before-score)
@@ -83,6 +89,22 @@ MASS_BINS = 64
 SUPPORTED_METHODS = frozenset(
     {"jaccard", "qgram", "cosine", "jaro", "jw"} | EDIT_METHODS
 )
+
+
+#: the keys stage's observed metrics: upper bounds of the distinct-key
+#: stats (docs with a key, their key bytes, docs with a short key)
+_KEY_BOUNDS = ("docs_with_key", "key_bytes", "short_key_docs")
+
+
+def _count_key_stats(uniq: DataFrame, short_cut: int) -> tuple[int, int, int]:
+    """(distinct keys, total key bytes, keys shorter than `short_cut`) of
+    the distinct-key frame `uniq`, in one job. octet_length, not length:
+    the broadcast gates measure UTF-8 BYTES — char counts under-estimate
+    non-ASCII keys by up to 4x."""
+    row = uniq.agg(*[F.expr(e) for e in (
+        "count(1)", "sum(octet_length(key))", f"count_if(length(key) < {short_cut})",
+    )]).first()
+    return int(row[0]), int(row[1] or 0), int(row[2])
 
 
 def _input_fingerprint(docs: DataFrame):
@@ -146,8 +168,14 @@ def er_pipeline(
     fixed cost for nothing). When the resolved cap never triggers, PPJoin
     prefix filtering is lossless on its own and the SN pass is skipped.
     The cap applies to every method family's blocking tokens (q-grams;
-    (char, occurrence) tokens for jaro/jw), and the pairs stage logs its
-    decision at DEBUG on logger "fozzie_spark.pipeline".
+    (char, occurrence) tokens for jaro/jw); it is moot on the tiny cross
+    route, which has no token index. The pairs stage logs its decision
+    (the valve's, or the tiny route's) at DEBUG on logger
+    "fozzie_spark.pipeline", and so do the edges dictionary and entities
+    clusters broadcast gates.
+
+    Gates read the keys stage's docs bounds first and count the distinct
+    keys (one job over the cached `uniq`) only when a bound cannot decide.
 
     collect_metrics=False skips the per-partition row-count job each stage
     runs after its write (lineage manifests keep observed metrics) — the
@@ -207,13 +235,37 @@ def er_pipeline(
         table_format=table_format, collect_metrics=collect_metrics,
     )
 
+    # keys the gram index cannot pair losslessly: empty profiles for
+    # jaccard (distance 0 to each other at any max_distance), shorter than
+    # q + damage*tau for the edit family
+    short_cut = (
+        q if method == "jaccard"
+        else q + B.edit_damage(method, q) * int(max_distance) if method in EDIT_METHODS
+        else 0
+    )
+
     # ---- stage 1: derive keys + key ids (pure projection — no shuffle) ----
     def _keys():
-        return docs.selectExpr("doc_id", f"{doc_text_key('spans')} AS key").selectExpr(
+        """The keys table plus an Observation of upper bounds of the
+        distinct-key stats, collected by the write: docs with a key (>=
+        distinct keys), their key bytes (>= the distinct keys' bytes) and
+        docs whose key is shorter than `short_cut` (> 0 exactly when some
+        distinct key is)."""
+        obs = Observation()
+        keys = docs.selectExpr("doc_id", f"{doc_text_key('spans')} AS key").selectExpr(
             "*", f"{key_id('key')} AS kid"
         )
+        return keys.observe(obs, *[F.expr(e) for e in (
+            f"count(key) AS {_KEY_BOUNDS[0]}",
+            f"coalesce(sum(octet_length(key)), 0) AS {_KEY_BOUNDS[1]}",
+            f"count_if(length(key) < {short_cut}) AS {_KEY_BOUNDS[2]}",
+        )]), obs
 
     keys = runner.stage("keys", _keys, params={"q": q})
+    # None when the keys manifest predates the bounds (a resumed run):
+    # every gate then counts
+    bounds = tuple(runner.metric("keys", m) for m in _KEY_BOUNDS)
+    bounds = None if None in bounds else tuple(int(v) for v in bounds)
     # the distinct-key dictionary, EXTENDED map-side with everything the
     # later stages need per key, under the column names the blocking
     # builders read: the distinct q-gram set `__fz_gs` (edges re-scores
@@ -275,35 +327,23 @@ def er_pipeline(
     _stage_persists: list[DataFrame] = []  # freed after the pairs stage writes
 
     _uniq_stats: list[tuple[int, int, int]] = []
-    # keys the gram index cannot pair losslessly: empty profiles for
-    # jaccard (distance 0 to each other at any max_distance), shorter than
-    # q + damage*tau for the edit family
-    short_cut = (
-        q if method == "jaccard"
-        else q + B.edit_damage(method, q) * int(max_distance) if method in EDIT_METHODS
-        else None
-    )
 
-    def _n_uniq() -> int:
-        return _uniq_stat()[0]
-
-    def _uniq_stat() -> tuple[int, int, int]:
-        """(distinct keys, total key bytes, keys shorter than `short_cut`),
-        computed ONCE per run in one job over the persisted `uniq`.
-        Broadcast gates use the first two: a broadcast build collects its
-        child to the driver as task results, so a count-only gate breaks
-        on kilobyte document keys — the 1.5M probe died at
-        spark.driver.maxResultSize with ~3.7M keys that were comfortably
-        under the old 5M-row gate."""
+    def _key_stats(decides=lambda n, nbytes, n_short: True) -> tuple[tuple[int, int, int], str]:
+        """((distinct keys, total key bytes, keys shorter than
+        `short_cut`), source). Bounds first: the keys stage's docs bounds
+        ("docs_bound") when `decides(*bounds)` says they imply the route
+        the exact stats would pick; otherwise the exact stats ("counted"),
+        computed ONCE per run in one job over the persisted `uniq`, which
+        then serve every later gate. Broadcast gates read keys and bytes:
+        a broadcast build collects its child to the driver as task
+        results, so a count-only gate breaks on kilobyte document keys —
+        the 1.5M probe died at spark.driver.maxResultSize with ~3.7M keys
+        that were comfortably under the old 5M-row gate."""
+        if not _uniq_stats and bounds is not None and decides(*bounds):
+            return bounds, "docs_bound"
         if not _uniq_stats:
-            # octet_length, not length: the gate must measure UTF-8 BYTES —
-            # char counts under-estimate non-ASCII keys by up to 4x
-            row = uniq.agg(*[F.expr(e) for e in (
-                "count(1)", "sum(octet_length(key))",
-                f"count_if(length(key) < {short_cut})" if short_cut else "0",
-            )]).first()
-            _uniq_stats.append((int(row[0]), int(row[1] or 0), int(row[2])))
-        return _uniq_stats[0]
+            _uniq_stats.append(_count_key_stats(uniq, short_cut))
+        return _uniq_stats[0], "counted"
 
     def _hot_token_valve(token_df: DataFrame, reused: bool = False, **detail):
         """The hot-token df valve every blocking family shares. Tokens
@@ -324,15 +364,23 @@ def er_pipeline(
         and a join) is skipped.
 
         Tokens are distinct within a key, so df <= distinct keys: a cap at
-        or past that count provably caps nothing and runs no count job (on
-        "auto": up to 10_000 keys). `reused`: the caller reads `token_df`
-        too, so a count persists it in place (freed with the stage).
+        or past that count (or its docs bound) provably caps nothing and
+        runs no count job (on "auto": up to 10_000 keys). An explicit cap
+        below the bound counts its capped tokens directly. `reused`: the
+        caller reads `token_df` too, so a count persists it in place
+        (freed with the stage).
 
         Logs one DEBUG decision record on logger "fozzie_spark.pipeline"
         (also as `record.fz_decision`; `detail` rides along) and returns
         (cap, capped token count, SN pairs or None)."""
-        cap = max(10_000, _n_uniq() // 8) if max_gram_df == "auto" else max_gram_df
-        proven = not cap or cap >= _n_uniq()
+        if max_gram_df == "auto":
+            # the docs bound fixes the cap while n // 8 <= 10_000 either way
+            (n, _, _), src = _key_stats(lambda n, *_: n // 8 <= 10_000)
+            cap = max(10_000, n // 8)
+        else:
+            (n, _, _), src = _key_stats()
+            cap = max_gram_df
+        proven = not cap or cap >= n
         if not proven and reused:
             _stage_persists.append(token_df.persist())
         n_capped = 0 if proven else token_df.where(f"__fz_df > {cap}").count()
@@ -345,9 +393,7 @@ def er_pipeline(
             )
         route = "uncapped" if not n_capped else "capped_sn" if sn is not None else "capped"
         record = {
-            "method": method, "gate": "hot_token_cap",
-            # None only when the cap is off and no gate measured the keys
-            "keys": _uniq_stats[0][0] if _uniq_stats else None,
+            "method": method, "gate": "hot_token_cap", "keys": n, "keys_source": src,
             "threshold": cap, "capped_tokens": n_capped,
             "capped_count": "proven" if proven else "counted", "route": route, **detail,
         }
@@ -357,9 +403,17 @@ def er_pipeline(
     # ---- stage 2: blocking on distinct keys -> candidate id pairs ----------
     def _pairs():
         """Candidate kid pairs plus the Observation carrying
-        `raw_candidates`. One blocking builder per method family, each a
-        self-join over a profile frame off the cached `uniq` (16-byte kids
-        + tokens, never key strings):
+        `raw_candidates`, over profile frames off the cached `uniq`
+        (16-byte kids + tokens, never key strings).
+
+        Tiny route first: when the keys stage proves at most
+        `blocking.TINY_CROSS_KEY_THRESHOLD` distinct keys (`tiny_by_keys`
+        on the docs bound; it never counts just to decide), jaccard at
+        max_distance < 1, qgram and the edit family emit every kid < kid2
+        pair in one broadcast nested-loop join under a cut their index
+        route already applies (`blocking.cross_cut`); `raw_candidates` is
+        the cross size. Otherwise one blocking builder per method family,
+        each a self-join:
 
             family       profile columns            valve tokens  builder (blocking.)
             jaccard      __fz_gs, __fz_n, Bloom     q-grams       jaccard_candidates_ids
@@ -377,11 +431,23 @@ def er_pipeline(
         prefixes in the provable regime enforced above. qgram/cosine take
         the prefix route from 2 x distinct keys (`blocking.prefix_by_keys`).
 
-        Every family runs `_hot_token_valve` on its token df table first.
+        Every builder runs `_hot_token_valve` on its token df table first.
         Its sorted-neighborhood pairs (Bloom-cut here for jaccard) ride into
-        the builder, which unions them under its own final distinct.
+        the builder, which unions them under its own final distinct. Each
+        run logs one pairs decision record: gate `tiny_cross` on the tiny
+        route, the valve's (with the tiny gate's `tiny_*` fields) otherwise.
         """
         kn = "CAST(length(key) AS INT) AS __fz_kn"
+        obs = Observation()
+        cut = B.cross_cut(method, max_distance)
+        (n, _, _), src = _key_stats() if cut is not None else ((None, 0, 0), None)
+        tiny = {"keys": n, "keys_source": src, "threshold": B.TINY_CROSS_KEY_THRESHOLD,
+                "route": "tiny_cross" if n is not None and B.tiny_by_keys(n) else "index"}
+        if tiny["route"] == "tiny_cross":
+            record = {"method": method, "gate": "tiny_cross", **tiny}
+            _log.debug("er_pipeline pairs decision: %s", record, extra={"fz_decision": record})
+            cols = [kn] if method in EDIT_METHODS else ["__fz_n", *B.SIG_COLS]
+            return B.cross_candidates_ids(uniq.selectExpr("kid", *cols), "kid", cut, obs), obs
         cols, tokens = {  # SQL text only: building it runs no py4j call
             "jaccard": (["__fz_gs", "__fz_n", *B.SIG_COLS], "__fz_gs"),
             "qgram": (["__fz_gs", "__fz_tc", *B.SIG_COLS], "__fz_gs"),
@@ -394,15 +460,17 @@ def er_pipeline(
         gram_index = method == "jaccard" or method in EDIT_METHODS
         if gram_index:
             # the builder reads the df table too; the short-key block is
-            # planned only when the stats job found short keys
-            n_short = _uniq_stat()[2]
+            # planned only when short keys exist (the docs bound is exact
+            # for that)
+            (_, _, n_short), _ = _key_stats()
             detail = {"short_keys": n_short, "short_key_block": n_short > 0}
         elif method in ("qgram", "cosine"):
-            mode = "prefix" if B.prefix_by_keys(2 * _n_uniq()) else "simple"
-            detail = {"prefix_mode": mode}
+            (n, _, _), _ = _key_stats(lambda n, *_: not B.prefix_by_keys(2 * n))
+            detail = {"prefix_mode": "prefix" if B.prefix_by_keys(2 * n) else "simple"}
         else:
             detail = {}
-        cap, n_capped, sn = _hot_token_valve(tdf, reused=gram_index, **detail)
+        cap, n_capped, sn = _hot_token_valve(
+            tdf, reused=gram_index, **detail, **{f"tiny_{k}": v for k, v in tiny.items()})
         cap = cap if n_capped else None
         if sn is not None and method == "jaccard":
             # the SN pairs get the same Bloom cut (they are mostly
@@ -415,23 +483,25 @@ def er_pipeline(
             # matches (jaccard dist 0), skip the test.
             a = uniq.select("kid", "__fz_n", *B.SIG_COLS)
             b = a.selectExpr(*[f"{c} AS {'kid2' if c == 'kid' else c + '_2'}" for c in a.columns])
-            if _n_uniq() < 8_000_000:
+            (n, _, _), _ = _key_stats(lambda n, *_: n < 8_000_000)
+            if n < 8_000_000:
                 a, b = F.broadcast(a), F.broadcast(b)
             sn = sn.join(a, "kid").join(b, "kid2").where(
                 f"{B.jaccard_sig_cut(1.0 - max_distance)} OR (__fz_n = 0 AND __fz_n_2 = 0)"
             ).select("kid", "kid2")
-        obs = Observation()
         kw = {"cached": _stage_persists, "obs": obs, "extra": sn}
         if method == "jaccard":
             cand = B.jaccard_candidates_ids(
-                prof, "kid", max_distance, tdf, cap, n_short > 0, **kw)
+                prof, "kid", max_distance, tdf, cap, detail["short_key_block"], **kw)
         elif method in EDIT_METHODS:
             cand = B.edit_candidates_ids(
-                prof, "kid", max_distance, tdf, method, q, cap, n_short > 0, **kw)
+                prof, "kid", max_distance, tdf, method, q, cap, detail["short_key_block"], **kw)
         elif method == "qgram":
-            cand = B.qgram_candidates_ids(prof, "kid", max_distance, mode, cap, **kw)
+            cand = B.qgram_candidates_ids(
+                prof, "kid", max_distance, detail["prefix_mode"], cap, **kw)
         elif method == "cosine":
-            cand = B.cosine_candidates_ids(prof, "kid", max_distance, mode, cap, **kw)
+            cand = B.cosine_candidates_ids(
+                prof, "kid", max_distance, detail["prefix_mode"], cap, **kw)
         else:
             cand = B.jaro_candidates_ids(
                 prof, "kid", max_distance, prefix_weight, cap, **kw)
@@ -562,7 +632,6 @@ def er_pipeline(
             )
             udf = string_distance_udf(method, max_distance=max_distance, **extra)
             dist = udf("__k1", "__k2")
-        n_u, key_bytes, _ = _uniq_stat()
         # the dictionaries carry the key text (or its gram array — same
         # order of magnitude) PLUS the mass-signature arrays (MASS_BINS
         # doubles/key on qgram/cosine), so gate on BYTES as well as rows:
@@ -570,10 +639,10 @@ def er_pipeline(
         # driver's task-result path. Past the gate, the dictionaries
         # shuffle-join (measured equal at 32 cores; on a cluster it
         # parallelizes).
-        dict_bytes = key_bytes + (
+        def _dict_bytes(n: int, key_bytes: int) -> int:
             # msig doubles + Bloom words + per-key stats
-            n_u * (MASS_BINS * 8 + B.NSIG * 8 + 48) if refine is not None else 0
-        )
+            return key_bytes + (n * (MASS_BINS * 8 + B.NSIG * 8 + 48) if refine is not None else 0)
+
         # the broadcast gate derives from the LIVE driver heap (same
         # pattern as cluster.driver_finish_budget): a broadcast build
         # funnels the dictionary through the driver once and pins one
@@ -594,7 +663,13 @@ def er_pipeline(
             EDGES_DICT_BROADCAST_BYTES * 8,
             max(EDGES_DICT_BROADCAST_BYTES, heap // 8),
         )
-        broadcastable = n_u < 5_000_000 and dict_bytes < gate
+
+        def _fits(n: int, key_bytes: int, *_) -> bool:
+            return n < 5_000_000 and _dict_bytes(n, key_bytes) < gate
+
+        # the docs bounds decide when even they fit; else count
+        (n_u, key_bytes, _), src = _key_stats(_fits)
+        broadcastable = _fits(n_u, key_bytes)
         if broadcastable:
             dict_a, dict_b = F.broadcast(dict_a), F.broadcast(dict_b)
 
@@ -611,6 +686,7 @@ def er_pipeline(
                 .select("kid", "kid2", "dist")
             )
 
+        k_chunks = 1
         if refine is not None and not broadcastable:
             # BOUNDED-WORKING-SET refine (r6): past the broadcast gate, the
             # two shuffle dictionary joins move every candidate row through
@@ -635,15 +711,20 @@ def er_pipeline(
             per_side = MASS_BINS * 8 + B.NSIG * 8 + 48 + key_bytes // max(n_u, 1)
             est = int(n_pairs) * 2 * per_side
             k_chunks = min(max(1, -(-est // int(edges_chunk_bytes))), 1024)
-            if k_chunks > 1:
-                tmp = f"{checkpoint_dir.rstrip('/')}/edges_chunks"
-                for i in range(k_chunks):
-                    chunk = scored_input.where(f"pmod(xxhash64(kid, kid2), {k_chunks}) = {i}")
-                    _score(chunk).write.mode(
-                        "overwrite" if i == 0 else "append"
-                    ).parquet(tmp)
-                _edge_tmpdirs.append(tmp)
-                return spark.read.parquet(tmp)
+        record = {
+            "method": method, "gate": "edges_dict_broadcast", "keys": n_u,
+            "dict_bytes": _dict_bytes(n_u, key_bytes), "keys_source": src, "threshold": gate,
+            "route": "broadcast" if broadcastable else "chunked" if k_chunks > 1 else "shuffle",
+            "k_chunks": k_chunks,
+        }
+        _log.debug("er_pipeline edges decision: %s", record, extra={"fz_decision": record})
+        if k_chunks > 1:
+            tmp = f"{checkpoint_dir.rstrip('/')}/edges_chunks"
+            for i in range(k_chunks):
+                chunk = scored_input.where(f"pmod(xxhash64(kid, kid2), {k_chunks}) = {i}")
+                _score(chunk).write.mode("overwrite" if i == 0 else "append").parquet(tmp)
+            _edge_tmpdirs.append(tmp)
+            return spark.read.parquet(tmp)
         return _score(scored_input)
 
     _edge_tmpdirs: list[str] = []
@@ -714,8 +795,15 @@ def er_pipeline(
         gate = 256 << 20
         cl = clusters
         csz = B._plan_size_bytes(cl)
-        if csz is not None and csz <= gate:
+        broadcast = csz is not None and csz <= gate
+        if broadcast:
             cl = F.broadcast(cl)
+        # the input is the optimizer's size estimate of the clusters table
+        # (None when unknown), neither a bound nor a count
+        record = {"gate": "entities_clusters_broadcast", "clusters_bytes": csz,
+                  "bytes_source": "plan_stats", "threshold": gate,
+                  "route": "broadcast" if broadcast else "shuffle"}
+        _log.debug("er_pipeline entities decision: %s", record, extra={"fz_decision": record})
         return (
             docs.withColumn("__fz_kid", F.expr(key_id(doc_text_key("spans"))))
             .join(cl, F.expr("__fz_kid = kid"), "left")

@@ -5,8 +5,9 @@ equi-joins, an exact string scorer evaluated inside a join condition —
 once per raw join row instead of once per distinct candidate — a grouping
 result that reruns its candidate lineage, a candidate self-join whose two
 sides each compute their own prefix aggregate, a gram document-frequency
-table computed for an uncapped index that filters nothing, missing
-whole-stage codegen, full-column parquet scans).
+table computed for an uncapped index that filters nothing, a shuffle on
+the ER tiny route past its cached profile, missing whole-stage codegen,
+full-column parquet scans).
 
     python scripts/explain_audit.py [sf_dir]
 """
@@ -39,6 +40,8 @@ _PREFIX_AGG = re.compile(r"Aggregate\(keys=.*(?<!partial_)collect_list\(")
 #: the gram document-frequency table (blocking.token_df), an aggregate
 #: keyed on the gram alone
 _GRAM_DF_AGG = re.compile(r"Aggregate\(keys=\[__fz_g#\d+\]")
+#: a shuffle exchange (a broadcast's is named BroadcastExchange)
+_SHUFFLE = re.compile(r"\bExchange ")
 
 
 def _outside_caches(plan: str) -> list[str]:
@@ -55,9 +58,11 @@ def _outside_caches(plan: str) -> list[str]:
 
 
 def audit(name: str, df, allow_bnlj: bool = False, lineage_cut: bool = False,
-          self_join: bool = False, uncapped: bool = False) -> dict:
+          self_join: bool = False, uncapped: bool = False, tiny: bool = False) -> dict:
     plan = df._jdf.queryExecution().executedPlan().toString()
     flags = []
+    if tiny and any(_SHUFFLE.search(ln) for ln in _outside_caches(plan)):
+        flags.append("TinyRouteExchange")
     if uncapped and _GRAM_DF_AGG.search(plan):
         flags.append("UncappedGramDfJoin")
     if lineage_cut and _MINHASH_LINEAGE.search(plan):
@@ -205,6 +210,17 @@ def main() -> int:
         # every entry is uncapped (max_gram_df None); the edit family's
         # index reads the gram df table only to apply a cap
         results.append(audit(name, cand, self_join=True, uncapped=name == "er_lv_ids"))
+    # er_pipeline's tiny route: one broadcast nested-loop join over the
+    # cached per-key profile (the BNLJ is the intended plan) and no shuffle
+    # past the cache
+    uniq = prof_jc.persist()
+    cached.append(uniq)
+    results.append(audit(
+        "er_pipeline pairs (tiny route)",
+        B.cross_candidates_ids(uniq.select("kid", "__fz_n", *B.SIG_COLS), "kid",
+                               B.cross_cut("jaccard", 0.6)),
+        allow_bnlj=True, tiny=True,
+    ))
     for f in cached:
         f.unpersist()
     bad = [r["name"] for r in results if r["flags"]]

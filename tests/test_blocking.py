@@ -246,10 +246,13 @@ def test_sorted_neighborhood(spark):
     assert got == expected
 
 
-def test_sorted_neighborhood_in_pipeline(spark, tmp_path):
+def test_sorted_neighborhood_in_pipeline(spark, tmp_path, monkeypatch):
     # a pair whose only shared grams are globally hot gets dropped by an
     # aggressive gram-df cap; the SN pass still pairs the adjacent keys
+    # (the index route pinned: two docs otherwise take the tiny cross route)
     from fozzie_spark.pipeline import er_pipeline
+
+    monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", 0)
 
     rows = [
         ("a", [{"kind": "text", "text": "zqxjwv north", "media_ref": None, "offset": 0}]),

@@ -169,15 +169,28 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
 
 
 def _pairs_decision(caplog):
-    (rec,) = [r.fz_decision for r in caplog.records if hasattr(r, "fz_decision")]
+    """The run's one pairs decision record: the hot-token valve's on the
+    index route, the tiny gate's on the tiny route (the edges and entities
+    gates log on the same logger)."""
+    (rec,) = [r.fz_decision for r in caplog.records
+              if getattr(r, "fz_decision", {}).get("gate") in ("hot_token_cap", "tiny_cross")]
     return rec
 
 
-def test_pipeline_short_key_recall(spark, tmp_path, caplog):
+def _index_route(monkeypatch):
+    """Pin er_pipeline to its id-keyed builders: a small corpus otherwise
+    takes the tiny cross route."""
+    from fozzie_spark import blocking
+
+    monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", 0)
+
+
+def test_pipeline_short_key_recall(spark, tmp_path, caplog, monkeypatch):
     # texts SHORTER than q have empty gram profiles — the dedicated
     # short-key block must still pair them (jaccard(empty, empty) = 0)
     import logging
 
+    _index_route(monkeypatch)
     caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
 
     def doc(i, text):
@@ -237,11 +250,12 @@ def test_pipeline_input_change_invalidates_resume(spark, tmp_path):
     assert out2["entities"].count() == docs2.count() != n1
 
 
-def test_pipeline_edit_method_short_keys(spark, tmp_path, caplog):
+def test_pipeline_edit_method_short_keys(spark, tmp_path, caplog, monkeypatch):
     # edit-family methods: keys shorter than q + q*tau share NO gram yet can
     # be within distance tau — the length-band short-key block must pair them
     import logging
 
+    _index_route(monkeypatch)
     caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
 
     def doc(i, text):
@@ -539,7 +553,7 @@ def test_job_entry_reports_f1(spark, tmp_path, capsys):
     assert "pairwise_f1" not in json.loads(line)
 
 
-def test_pipeline_hot_key_skew(spark, tmp_path):
+def test_pipeline_hot_key_skew(spark, tmp_path, monkeypatch):
     # north rule: hot-key skew must be defused, not suffered. The skewed
     # corpus has one 300-doc NEAR-dup entity sharing a boilerplate text
     # (every shared gram df=300, globally hot) and one 150-doc EXACT-dup
@@ -551,6 +565,7 @@ def test_pipeline_hot_key_skew(spark, tmp_path):
     # the uncapped quadratic run produces.
     from fozzie_spark.synth import synth_documents_skewed
 
+    _index_route(monkeypatch)
     docs = synth_documents_skewed(spark, 120, hot_docs=300, hot_exact=150).cache()
 
     def partition_of(out):
@@ -596,7 +611,7 @@ def test_pipeline_hot_key_skew(spark, tmp_path):
 
 
 @pytest.mark.parametrize("method", ["qgram", "lv", "jw"])
-def test_pipeline_hot_token_valve(spark, tmp_path, caplog, method):
+def test_pipeline_hot_token_valve(spark, tmp_path, caplog, monkeypatch, method):
     # the hot-token df valve, for the q-gram, edit and jaro families: with
     # the cap forced below the boilerplate df (60 hot docs) the capped
     # tokens leave the index and the sorted-neighborhood pass runs. Every
@@ -611,6 +626,7 @@ def test_pipeline_hot_token_valve(spark, tmp_path, caplog, method):
 
     params = {"qgram": {"max_distance": 6, "q": 3}, "lv": {"max_distance": 2, "q": 3},
               "jw": {"max_distance": 0.25}}[method]
+    _index_route(monkeypatch)
     caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
     docs = synth_documents_skewed(spark, 20, hot_docs=60, hot_exact=10)
     runs = {}
@@ -621,7 +637,7 @@ def test_pipeline_hot_token_valve(spark, tmp_path, caplog, method):
         out = er_pipeline(spark, docs, checkpoint_dir=str(ck), method=method,
                           max_gram_df=cap, resume=False, **params)
         edges = {(tuple(r["kid"]), tuple(r["kid2"])) for r in out["edges"].collect()}
-        (rec,) = [r.fz_decision for r in caplog.records if hasattr(r, "fz_decision")]
+        rec = _pairs_decision(caplog)
         runs[name] = (edges, out["runner"].metric("pairs", "raw_candidates"), rec)
         # earlier tests' leftovers may be cleaned up meanwhile: only new ids count
         assert not _persistent_ids(spark) - before, name
@@ -656,6 +672,7 @@ def test_pipeline_prefix_route(spark, tmp_path, caplog, monkeypatch, method):
     params = {"qgram": {"max_distance": 6, "q": 3}, "cosine": {"max_distance": 0.25, "q": 3},
               "jaccard": {}, "lv": {"max_distance": 2, "q": 3},
               "jw": {"max_distance": 0.25}}[method]
+    _index_route(monkeypatch)
     caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
     docs = synth_documents_skewed(spark, 20, hot_docs=30, hot_exact=10)
     routes = ("simple", "prefix") if method in ("qgram", "cosine") else ("prefix",)
@@ -680,7 +697,7 @@ def test_pipeline_prefix_route(spark, tmp_path, caplog, monkeypatch, method):
         assert edges["prefix"] == edges["simple"]
 
 
-def test_pipeline_valve_proven_uncapped(spark, tmp_path, caplog):
+def test_pipeline_valve_proven_uncapped(spark, tmp_path, caplog, monkeypatch):
     # no token can pass the auto cap max(10_000, keys // 8) while there are
     # at most 10_000 distinct keys (a token's df counts distinct keys): the
     # valve takes the uncapped route with no count job, and nothing is
@@ -690,6 +707,7 @@ def test_pipeline_valve_proven_uncapped(spark, tmp_path, caplog):
 
     from fozzie_spark.cluster import _persistent_ids
 
+    _index_route(monkeypatch)
     caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
     docs = synth_documents(spark, 60, seed=3)
     before = _persistent_ids(spark)
@@ -701,6 +719,186 @@ def test_pipeline_valve_proven_uncapped(spark, tmp_path, caplog):
     assert rec["capped_count"] == "proven" and rec["threshold"] == 10_000
     assert 0 < rec["keys"] <= 10_000
     assert (rec["short_keys"], rec["short_key_block"]) == (0, False), rec
+
+
+_DOCS_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
+def _text_docs(spark, texts, prefix="t"):
+    return spark.createDataFrame(
+        [(f"{prefix}{i}", [{"kind": "text", "text": t, "media_ref": None, "offset": 0}])
+         for i, t in enumerate(texts)], _DOCS_SCHEMA,
+    )
+
+
+def _partition(out):
+    byid = {}
+    for r in out["entities"].select("doc_id", "entity_id").collect():
+        byid.setdefault(r["entity_id"], set()).add(r["doc_id"])
+    return {frozenset(v) for v in byid.values()}
+
+
+@pytest.mark.parametrize("method,params", [
+    ("jaccard", {"max_distance": 0.3, "q": 4}),
+    ("jaccard", {"max_distance": 0.6, "q": 4}),
+    ("jaccard", {"max_distance": 0.9, "q": 4}),
+    ("qgram", {"max_distance": 3, "q": 3}),
+    ("lv", {"max_distance": 2, "q": 3}),
+    ("osa", {"max_distance": 1, "q": 2}),
+    ("hamming", {"max_distance": 1, "q": 2}),
+], ids=["jaccard0.3", "jaccard0.6", "jaccard0.9", "qgram", "lv", "osa", "hamming"])
+def test_pipeline_tiny_route_matches_index_route(spark, tmp_path, caplog, monkeypatch,
+                                                 method, params):
+    # a corpus under the tiny-cross gate pairs every kid < kid2 pair in one
+    # broadcast nested-loop join under a cut the family's index route
+    # already applies: edges and entities equal the index route's (gate
+    # patched to 0). The corpus holds keys shorter than q, an empty key,
+    # and equal-length near pairs
+    import logging
+
+    from fozzie_spark import blocking
+    from fozzie_spark.cluster import _persistent_ids
+
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+    docs = synth_documents(spark, 12, seed=5).select("doc_id", "spans").unionByName(
+        _text_docs(spark, ["ab", "xy", "abc", "", "abcd", "abxd", "abcdef", "abcdfe", "zzzzzzzzzzzz"])
+    )
+    runs = {}
+    for route, thr in (("tiny_cross", blocking.TINY_CROSS_KEY_THRESHOLD), ("index", 0)):
+        monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", thr)
+        before = _persistent_ids(spark)
+        caplog.clear()
+        out = er_pipeline(spark, docs, checkpoint_dir=str(tmp_path / route), method=method,
+                          resume=False, **params)
+        edges = {(tuple(r["kid"]), tuple(r["kid2"]), r["dist"]) for r in out["edges"].collect()}
+        runs[route] = (edges, _partition(out), out)
+        rec = _pairs_decision(caplog)
+        # earlier tests' leftovers may be cleaned up meanwhile: only new ids count
+        assert not _persistent_ids(spark) - before, route
+        if route == "tiny_cross":
+            assert (rec["gate"], rec["route"], rec["keys_source"]) == (
+                "tiny_cross", "tiny_cross", "docs_bound"), rec
+            n = out["keys"].select("kid").distinct().count()
+            assert rec["keys"] >= n
+            assert out["runner"].metric("pairs", "raw_candidates") == n * (n - 1) // 2
+        else:
+            assert (rec["gate"], rec["tiny_route"], rec["tiny_threshold"]) == (
+                "hot_token_cap", "index", 0), rec
+    assert runs["tiny_cross"][0] == runs["index"][0] and runs["index"][0], method
+    assert runs["tiny_cross"][1] == runs["index"][1]
+
+
+def test_pipeline_tiny_route_scope(spark, tmp_path, caplog):
+    # jaccard at max_distance >= 1 (the share-a-gram quirk) and cosine
+    # keep their index builders on a tiny corpus
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+    docs = synth_documents(spark, 10, seed=2)
+    for method, tau in (("jaccard", 1.0), ("cosine", 0.25)):
+        caplog.clear()
+        er_pipeline(spark, docs, checkpoint_dir=str(tmp_path / method), method=method,
+                    max_distance=tau, q=3, resume=False)
+        rec = _pairs_decision(caplog)
+        assert (rec["gate"], rec["tiny_route"], rec["tiny_keys"]) == (
+            "hot_token_cap", "index", None), rec
+
+
+def test_pipeline_gates_from_bounds(spark, tmp_path, caplog, monkeypatch):
+    # every er_pipeline gate decides from the keys stage's docs bounds when
+    # they imply the exact route: no distinct-key stats job runs. A keys
+    # manifest without the bounds (an older run resumed) gets the same
+    # routes by counting
+    import logging
+
+    import fozzie_spark.pipeline as P
+    from fozzie_spark import blocking
+
+    calls = []
+    count = P._count_key_stats
+    monkeypatch.setattr(P, "_count_key_stats", lambda *a: calls.append(1) or count(*a))
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+
+    def run(docs, ck, **kw):
+        caplog.clear()
+        calls.clear()
+        out = er_pipeline(spark, docs, checkpoint_dir=str(ck), **kw)
+        recs = {r.fz_decision["gate"]: r.fz_decision
+                for r in caplog.records if hasattr(r, "fz_decision")}
+        edges = {(tuple(r["kid"]), tuple(r["kid2"])) for r in out["edges"].collect()}
+        return recs, edges, len(calls)
+
+    docs = synth_documents(spark, 60, seed=1)
+    default = blocking.TINY_CROSS_KEY_THRESHOLD
+    for thr in (default, 0):
+        monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", thr)
+        ck = tmp_path / f"bounds{thr}"
+        recs, edges, n_calls = run(docs, ck)
+        assert n_calls == 0, recs
+        pairs_gate = "tiny_cross" if thr else "hot_token_cap"
+        assert recs[pairs_gate]["keys_source"] == "docs_bound", recs
+        assert recs["edges_dict_broadcast"]["keys_source"] == "docs_bound"
+        if not thr:
+            assert recs[pairs_gate]["capped_count"] == "proven", recs
+
+        # strip the bounds from the keys manifest, re-run every later stage
+        with open(ck / "keys.manifest.json") as f:
+            m = json.load(f)
+        for k in P._KEY_BOUNDS:
+            del m["metrics"][k]
+        with open(ck / "keys.manifest.json", "w") as f:
+            json.dump(m, f)
+        for stage in ("pairs", "edges", "clusters", "entities"):
+            os.remove(ck / f"{stage}.manifest.json")
+        recs2, edges2, n_calls2 = run(docs, ck)
+        assert n_calls2 == 1 and edges2 == edges
+        assert recs2[pairs_gate]["keys_source"] == "counted"
+        for gate in (pairs_gate, "edges_dict_broadcast"):
+            assert recs2[gate]["route"] == recs[gate]["route"], gate
+
+    # a dup-heavy corpus: more docs than the gate, fewer distinct keys. The
+    # docs bound keeps the index route, and nothing is counted to decide
+    monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", 40)
+    texts = [f"dup text number {i} with some words" for i in range(20)]
+    recs, _, n_calls = run(_text_docs(spark, texts * 3), tmp_path / "dups", resume=False)
+    assert n_calls == 0
+    rec = recs["hot_token_cap"]
+    assert (rec["tiny_route"], rec["tiny_keys"], rec["tiny_keys_source"]) == (
+        "index", 60, "docs_bound"), rec
+
+
+def test_pipeline_edges_entities_decisions(spark, tmp_path, caplog, monkeypatch):
+    # the edges dictionary gate records broadcast, shuffle or chunked (with
+    # k_chunks) and the entities clusters gate its broadcast choice, each
+    # with the source of its inputs
+    import logging
+
+    import fozzie_spark.pipeline as P
+
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+    docs = synth_documents(spark, 30, seed=4)
+
+    def decisions(ck, **kw):
+        caplog.clear()
+        er_pipeline(spark, docs, checkpoint_dir=str(tmp_path / ck), resume=False, **kw)
+        return {r.fz_decision["gate"]: r.fz_decision
+                for r in caplog.records if hasattr(r, "fz_decision")}
+
+    recs = decisions("bc")
+    e, n = recs["edges_dict_broadcast"], recs["entities_clusters_broadcast"]
+    assert (e["route"], e["k_chunks"], e["keys_source"]) == ("broadcast", 1, "docs_bound"), e
+    assert e["dict_bytes"] < e["threshold"] and e["keys"] > 0
+    assert (n["route"], n["bytes_source"]) == ("broadcast", "plan_stats"), n
+    assert n["clusters_bytes"] <= n["threshold"]
+
+    monkeypatch.setattr(P, "EDGES_DICT_BROADCAST_BYTES", 0)
+    e = decisions("sh")["edges_dict_broadcast"]
+    assert (e["route"], e["k_chunks"], e["keys_source"]) == ("shuffle", 1, "counted"), e
+    e = decisions("ch", method="cosine", max_distance=0.25, q=3,
+                  edges_chunk_bytes=64 << 10)["edges_dict_broadcast"]
+    assert e["route"] == "chunked" and e["k_chunks"] > 1, e
 
 
 def test_edge_refine_lossless_vs_bruteforce(spark, tmp_path):

@@ -14,6 +14,8 @@ from fozzie_spark.util import sql_ident, sql_lit
 #: DSL, the same calls sent 1,281 and 5,801.
 JACCARD_PLAN_BUDGET = 272
 ER_RUN_BUDGET = 775
+#: the er_pipeline run on its tiny cross route: 1.25x the measured 478
+ER_TINY_RUN_BUDGET = 598
 
 
 def test_sql_lit_round_trips(spark):
@@ -76,8 +78,9 @@ def test_jaccard_plan_build_round_trips(spark):
     assert n <= JACCARD_PLAN_BUDGET, n
 
 
-def test_er_pipeline_run_round_trips(spark, tmp_path):
-    # one warm er_pipeline run (defaults: jaccard, q 4) on a small corpus
+def _er_run_count(spark, tmp_path) -> int:
+    """py4j commands of one warm er_pipeline run (defaults: jaccard, q 4)
+    on a small corpus."""
     from fozzie_spark.pipeline import er_pipeline
     from fozzie_spark.synth import synth_documents
 
@@ -87,6 +90,21 @@ def test_er_pipeline_run_round_trips(spark, tmp_path):
         er_pipeline(spark, docs, checkpoint_dir=str(tmp_path / d), resume=False)
 
     run("cold")
-    n = _send_count(spark, lambda: run("warm"))
+    return _send_count(spark, lambda: run("warm"))
+
+
+def test_er_pipeline_run_round_trips(spark, tmp_path, monkeypatch):
+    # the id-keyed index builders: the tiny cross route pinned off
+    from fozzie_spark import blocking
+
+    monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", 0)
+    n = _er_run_count(spark, tmp_path)
     print("er_pipeline run py4j commands:", n)
     assert n <= ER_RUN_BUDGET, n
+
+
+def test_er_pipeline_tiny_route_round_trips(spark, tmp_path):
+    # the same corpus on the tiny cross route it takes by default
+    n = _er_run_count(spark, tmp_path)
+    print("er_pipeline tiny-route run py4j commands:", n)
+    assert n <= ER_TINY_RUN_BUDGET, n
