@@ -21,7 +21,7 @@ strings), one per method family: `jaccard_candidates_ids`,
 and `jaro_candidates_ids`. They share one prefix self-join (`_self_join`)
 and one 512-bit Bloom signature (`_bloom_sig_sql`, cut by
 `_popcount_cut`). Under the tiny-cross gate, `cross_candidates_ids` pairs
-the same profiles all-pairs under a family cut (`cross_cut`).
+jaccard profiles all-pairs under the index route's cut (`cross_cut`).
 
 Past the tiny-cross gates, each candidate join is an equi-join on a
 generated block key, so Catalyst plans a shuffled hash / sort-merge join.
@@ -31,7 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fozzie_spark.distances import EDIT_METHODS
 from fozzie_spark.util import sql_ident, sql_lit
 
 #: auto prefix-filter gate (see `use_prefix_filter`): inputs whose combined
@@ -122,9 +121,9 @@ def tiny_cross_gate(lkeys: DataFrame, rkeys: DataFrame) -> dict:
 
 
 def tiny_by_keys(n_keys: int) -> bool:
-    """The tiny-cross rule on a distinct-key count (or an upper bound of
-    it): True => the scored cross product is the cheapest plan. Shared by
-    `tiny_cross_gate` and `er_pipeline`'s pairs stage."""
+    """The tiny-cross rule on a distinct-key count: True => the scored
+    cross product is the cheapest plan. Shared by `tiny_cross_gate` and
+    `er_pipeline`'s pairs stage."""
     return n_keys <= TINY_CROSS_KEY_THRESHOLD
 
 
@@ -644,16 +643,6 @@ def jaccard_size_cut(t: float) -> str:
     return f"least(__fz_n, __fz_n_2) >= ceil({sql_lit(t)} * greatest(__fz_n, __fz_n_2))"
 
 
-def qgram_sig_cut(max_distance: float) -> str:
-    """SQL text of the qgram Bloom cut over `__fz_n` / `__fz_n_2` and the
-    signature words: every distinct gram missing from the other side costs
-    >= 1 of the L1 budget, so a pair within max_distance shares >=
-    ceil((n1 + n2 - tau)/2) distinct grams."""
-    return _popcount_cut(
-        f"ceil((__fz_n + __fz_n_2 - {sql_lit(float(max_distance))}) / 2 - 1.0E-9D)"
-    )
-
-
 def token_df(prof: DataFrame, tokens: str) -> DataFrame:
     """(__fz_g, __fz_df): the document frequency of every token in the
     token-array `tokens` (SQL text over `prof`; tokens are distinct per
@@ -842,42 +831,27 @@ def edit_candidates_ids(
 
 
 def cross_cut(method: str, max_distance: float) -> str | None:
-    """SQL text of the tiny route's pair cut for `method`, over a profile
-    frame's columns and their "_2" twins. Each is a cut the family's index
-    route already applies, so the route is exactly as lossless; None =>
-    the family keeps its builder at every size.
+    """SQL text of the tiny route's pair cut for `method`, over `__fz_n`,
+    SIG_COLS and their "_2" twins; None => the method keeps its builder at
+    every size.
 
-    - jaccard at max_distance < 1: `jaccard_size_cut` and
-      `jaccard_sig_cut`, or two empty profiles (distance 0, which the
-      Bloom cut fails). Reads `__fz_n` and SIG_COLS. At max_distance >= 1
-      a shared Bloom bit is not a shared gram, and the share-a-gram quirk
-      must hold.
-    - qgram: `qgram_sig_cut`, the edges tier-1 predicate. Reads `__fz_n`
-      and SIG_COLS.
-    - edit family: the reference's length band |len - len2| <= tau (equal
-      lengths for hamming). Reads `__fz_kn`.
-    - cosine, jaro/jw: None. A one-shared-bit cut measured flat on cosine;
-      one that discriminates needs per-key norm stats."""
-    if method == "jaccard":
-        t = 1.0 - max_distance
-        if t <= 0:
-            return None
-        return (
-            f"({jaccard_size_cut(t)} AND {jaccard_sig_cut(t)}) OR (__fz_n = 0 AND __fz_n_2 = 0)"
-        )
-    if method == "qgram":
-        return qgram_sig_cut(max_distance)
-    if method in EDIT_METHODS:
-        band = 0 if method == "hamming" else int(max_distance)
-        return f"abs(__fz_kn - __fz_kn_2) <= {band}"
-    return None
+    Only jaccard at max_distance < 1 has one: `jaccard_size_cut` and
+    `jaccard_sig_cut`, as its index route applies, or two empty profiles
+    (distance 0, which the Bloom cut fails). At max_distance >= 1 a shared
+    Bloom bit is not a shared gram, and the share-a-gram quirk must hold.
+    The other families keep their builders until a benchmark workload
+    measures their cross route."""
+    t = 1.0 - max_distance
+    if method != "jaccard" or t <= 0:
+        return None
+    return f"({jaccard_size_cut(t)} AND {jaccard_sig_cut(t)}) OR (__fz_n = 0 AND __fz_n_2 = 0)"
 
 
 def cross_candidates_ids(prof: DataFrame, id_col: str, cut: str, obs=None) -> DataFrame:
     """SELF-join candidates of a tiny profile frame: every (id_col,
     id_col+"2") pair with id < id2 in ONE broadcast nested-loop join — no
     token index, so no exchange beyond the one that built `prof` — then
-    the family's `cut` (SQL text, see `cross_cut`). `obs` counts the cross
+    `cut` (SQL text, see `cross_cut`). `obs` counts the cross
     size n(n-1)/2 before the cut, as the string join's tiny route does.
     Pairs are distinct when the ids are."""
     id2 = id_col + "2"
@@ -965,9 +939,10 @@ def qgram_candidates_ids(
         lp = agg.selectExpr(
             id_col, *carry, f"explode(slice(__fz_s, 1, {plen})) AS __fz_e"
         ).selectExpr(id_col, *carry, "__fz_e.__fz_g AS __fz_g")
+    s_min = f"ceil((__fz_n + __fz_n_2 - {sql_lit(float(max_distance))}) / 2 - 1.0E-9D)"
     pairs = (
         _self_join(lp, id_col, "__fz_g", cached)
-        .where(f"abs(__fz_tc - __fz_tc_2) <= {tau} AND {qgram_sig_cut(max_distance)}")
+        .where(f"abs(__fz_tc - __fz_tc_2) <= {tau} AND {_popcount_cut(s_min)}")
         .select(id_col, id2)
         .unionByName(small)
         .distinct()

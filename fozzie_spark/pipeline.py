@@ -1,20 +1,18 @@
 """The north-rule 3-stage entity-resolution pipeline over interleaved
 text+media documents:
 
-    stage 1   keys      doc_id -> join key (ordered concat of text spans);
-                        the write observes upper bounds of the distinct-key
-                        stats (docs with a key, key bytes, short-key docs)
-    stage 2   pairs     tiny inputs (docs bound <= the tiny-cross gate;
-                        jaccard at max_distance < 1, qgram, edit family):
-                        every key-id pair in one broadcast nested-loop
-                        join under a cut the index route applies too.
-                        Otherwise PPJoin-style blocking (prefix-filtered
-                        q-gram inverted index + positional filter +
-                        conditional sorted neighborhood), FUSED with a
-                        512-bit gram Bloom-signature refine carried on the
-                        gram rows from the per-key cache -> surviving
-                        candidate KEY-ID pairs (raw candidate counts
-                        observed into the stage manifest)
+    stage 1   keys      doc_id -> join key (ordered concat of text spans)
+    stage 2   pairs     tiny inputs (distinct keys <= the tiny-cross gate;
+                        jaccard at max_distance < 1): every key-id pair in
+                        one broadcast nested-loop join under the cut the
+                        index route applies too. Otherwise PPJoin-style
+                        blocking (prefix-filtered q-gram inverted index
+                        + positional filter + conditional sorted
+                        neighborhood), FUSED with a 512-bit gram
+                        Bloom-signature refine carried on the gram rows
+                        from the per-key cache -> surviving candidate
+                        KEY-ID pairs (raw candidate counts observed into
+                        the stage manifest)
     stage 3   edges     Arrow-batched pairwise scoring, threshold
     stage 4   clusters  large-star/small-star connected components
     stage 5   entities  docs join key->entity; spans carried untouched
@@ -91,22 +89,6 @@ SUPPORTED_METHODS = frozenset(
 )
 
 
-#: the keys stage's observed metrics: upper bounds of the distinct-key
-#: stats (docs with a key, their key bytes, docs with a short key)
-_KEY_BOUNDS = ("docs_with_key", "key_bytes", "short_key_docs")
-
-
-def _count_key_stats(uniq: DataFrame, short_cut: int) -> tuple[int, int, int]:
-    """(distinct keys, total key bytes, keys shorter than `short_cut`) of
-    the distinct-key frame `uniq`, in one job. octet_length, not length:
-    the broadcast gates measure UTF-8 BYTES — char counts under-estimate
-    non-ASCII keys by up to 4x."""
-    row = uniq.agg(*[F.expr(e) for e in (
-        "count(1)", "sum(octet_length(key))", f"count_if(length(key) < {short_cut})",
-    )]).first()
-    return int(row[0]), int(row[1] or 0), int(row[2])
-
-
 def _input_fingerprint(docs: DataFrame):
     """Deterministic input identity for the resume config hash.
 
@@ -174,9 +156,6 @@ def er_pipeline(
     "fozzie_spark.pipeline", and so do the edges dictionary and entities
     clusters broadcast gates.
 
-    Gates read the keys stage's docs bounds first and count the distinct
-    keys (one job over the cached `uniq`) only when a bound cannot decide.
-
     collect_metrics=False skips the per-partition row-count job each stage
     runs after its write (lineage manifests keep observed metrics) — the
     right setting at full scale where that extra scan is measurable.
@@ -235,37 +214,13 @@ def er_pipeline(
         table_format=table_format, collect_metrics=collect_metrics,
     )
 
-    # keys the gram index cannot pair losslessly: empty profiles for
-    # jaccard (distance 0 to each other at any max_distance), shorter than
-    # q + damage*tau for the edit family
-    short_cut = (
-        q if method == "jaccard"
-        else q + B.edit_damage(method, q) * int(max_distance) if method in EDIT_METHODS
-        else 0
-    )
-
     # ---- stage 1: derive keys + key ids (pure projection — no shuffle) ----
     def _keys():
-        """The keys table plus an Observation of upper bounds of the
-        distinct-key stats, collected by the write: docs with a key (>=
-        distinct keys), their key bytes (>= the distinct keys' bytes) and
-        docs whose key is shorter than `short_cut` (> 0 exactly when some
-        distinct key is)."""
-        obs = Observation()
-        keys = docs.selectExpr("doc_id", f"{doc_text_key('spans')} AS key").selectExpr(
+        return docs.selectExpr("doc_id", f"{doc_text_key('spans')} AS key").selectExpr(
             "*", f"{key_id('key')} AS kid"
         )
-        return keys.observe(obs, *[F.expr(e) for e in (
-            f"count(key) AS {_KEY_BOUNDS[0]}",
-            f"coalesce(sum(octet_length(key)), 0) AS {_KEY_BOUNDS[1]}",
-            f"count_if(length(key) < {short_cut}) AS {_KEY_BOUNDS[2]}",
-        )]), obs
 
     keys = runner.stage("keys", _keys, params={"q": q})
-    # None when the keys manifest predates the bounds (a resumed run):
-    # every gate then counts
-    bounds = tuple(runner.metric("keys", m) for m in _KEY_BOUNDS)
-    bounds = None if None in bounds else tuple(int(v) for v in bounds)
     # the distinct-key dictionary, EXTENDED map-side with everything the
     # later stages need per key, under the column names the blocking
     # builders read: the distinct q-gram set `__fz_gs` (edges re-scores
@@ -327,23 +282,35 @@ def er_pipeline(
     _stage_persists: list[DataFrame] = []  # freed after the pairs stage writes
 
     _uniq_stats: list[tuple[int, int, int]] = []
+    # keys the gram index cannot pair losslessly: empty profiles for
+    # jaccard (distance 0 to each other at any max_distance), shorter than
+    # q + damage*tau for the edit family
+    short_cut = (
+        q if method == "jaccard"
+        else q + B.edit_damage(method, q) * int(max_distance) if method in EDIT_METHODS
+        else None
+    )
 
-    def _key_stats(decides=lambda n, nbytes, n_short: True) -> tuple[tuple[int, int, int], str]:
-        """((distinct keys, total key bytes, keys shorter than
-        `short_cut`), source). Bounds first: the keys stage's docs bounds
-        ("docs_bound") when `decides(*bounds)` says they imply the route
-        the exact stats would pick; otherwise the exact stats ("counted"),
-        computed ONCE per run in one job over the persisted `uniq`, which
-        then serve every later gate. Broadcast gates read keys and bytes:
-        a broadcast build collects its child to the driver as task
-        results, so a count-only gate breaks on kilobyte document keys —
-        the 1.5M probe died at spark.driver.maxResultSize with ~3.7M keys
-        that were comfortably under the old 5M-row gate."""
-        if not _uniq_stats and bounds is not None and decides(*bounds):
-            return bounds, "docs_bound"
+    def _n_uniq() -> int:
+        return _uniq_stat()[0]
+
+    def _uniq_stat() -> tuple[int, int, int]:
+        """(distinct keys, total key bytes, keys shorter than `short_cut`),
+        computed ONCE per run in one job over the persisted `uniq`.
+        Broadcast gates use the first two: a broadcast build collects its
+        child to the driver as task results, so a count-only gate breaks
+        on kilobyte document keys — the 1.5M probe died at
+        spark.driver.maxResultSize with ~3.7M keys that were comfortably
+        under the old 5M-row gate."""
         if not _uniq_stats:
-            _uniq_stats.append(_count_key_stats(uniq, short_cut))
-        return _uniq_stats[0], "counted"
+            # octet_length, not length: the gate must measure UTF-8 BYTES —
+            # char counts under-estimate non-ASCII keys by up to 4x
+            row = uniq.agg(*[F.expr(e) for e in (
+                "count(1)", "sum(octet_length(key))",
+                f"count_if(length(key) < {short_cut})" if short_cut else "0",
+            )]).first()
+            _uniq_stats.append((int(row[0]), int(row[1] or 0), int(row[2])))
+        return _uniq_stats[0]
 
     def _hot_token_valve(token_df: DataFrame, reused: bool = False, **detail):
         """The hot-token df valve every blocking family shares. Tokens
@@ -364,23 +331,15 @@ def er_pipeline(
         and a join) is skipped.
 
         Tokens are distinct within a key, so df <= distinct keys: a cap at
-        or past that count (or its docs bound) provably caps nothing and
-        runs no count job (on "auto": up to 10_000 keys). An explicit cap
-        below the bound counts its capped tokens directly. `reused`: the
-        caller reads `token_df` too, so a count persists it in place
-        (freed with the stage).
+        or past that count provably caps nothing and runs no count job (on
+        "auto": up to 10_000 keys). `reused`: the caller reads `token_df`
+        too, so a count persists it in place (freed with the stage).
 
         Logs one DEBUG decision record on logger "fozzie_spark.pipeline"
         (also as `record.fz_decision`; `detail` rides along) and returns
         (cap, capped token count, SN pairs or None)."""
-        if max_gram_df == "auto":
-            # the docs bound fixes the cap while n // 8 <= 10_000 either way
-            (n, _, _), src = _key_stats(lambda n, *_: n // 8 <= 10_000)
-            cap = max(10_000, n // 8)
-        else:
-            (n, _, _), src = _key_stats()
-            cap = max_gram_df
-        proven = not cap or cap >= n
+        cap = max(10_000, _n_uniq() // 8) if max_gram_df == "auto" else max_gram_df
+        proven = not cap or cap >= _n_uniq()
         if not proven and reused:
             _stage_persists.append(token_df.persist())
         n_capped = 0 if proven else token_df.where(f"__fz_df > {cap}").count()
@@ -393,7 +352,9 @@ def er_pipeline(
             )
         route = "uncapped" if not n_capped else "capped_sn" if sn is not None else "capped"
         record = {
-            "method": method, "gate": "hot_token_cap", "keys": n, "keys_source": src,
+            "method": method, "gate": "hot_token_cap",
+            # None only when the cap is off and no gate measured the keys
+            "keys": _uniq_stats[0][0] if _uniq_stats else None,
             "threshold": cap, "capped_tokens": n_capped,
             "capped_count": "proven" if proven else "counted", "route": route, **detail,
         }
@@ -406,14 +367,13 @@ def er_pipeline(
         `raw_candidates`, over profile frames off the cached `uniq`
         (16-byte kids + tokens, never key strings).
 
-        Tiny route first: when the keys stage proves at most
+        Tiny route first: jaccard at max_distance < 1 with at most
         `blocking.TINY_CROSS_KEY_THRESHOLD` distinct keys (`tiny_by_keys`
-        on the docs bound; it never counts just to decide), jaccard at
-        max_distance < 1, qgram and the edit family emit every kid < kid2
-        pair in one broadcast nested-loop join under a cut their index
-        route already applies (`blocking.cross_cut`); `raw_candidates` is
-        the cross size. Otherwise one blocking builder per method family,
-        each a self-join:
+        on the one stats count the index route reads anyway) emits every
+        kid < kid2 pair in one broadcast nested-loop join under the cut
+        its index route already applies (`blocking.cross_cut`);
+        `raw_candidates` is the cross size. Otherwise one blocking builder
+        per method family, each a self-join:
 
             family       profile columns            valve tokens  builder (blocking.)
             jaccard      __fz_gs, __fz_n, Bloom     q-grams       jaccard_candidates_ids
@@ -437,17 +397,17 @@ def er_pipeline(
         run logs one pairs decision record: gate `tiny_cross` on the tiny
         route, the valve's (with the tiny gate's `tiny_*` fields) otherwise.
         """
-        kn = "CAST(length(key) AS INT) AS __fz_kn"
         obs = Observation()
         cut = B.cross_cut(method, max_distance)
-        (n, _, _), src = _key_stats() if cut is not None else ((None, 0, 0), None)
-        tiny = {"keys": n, "keys_source": src, "threshold": B.TINY_CROSS_KEY_THRESHOLD,
+        n = _n_uniq() if cut is not None else None
+        tiny = {"keys": n, "threshold": B.TINY_CROSS_KEY_THRESHOLD,
                 "route": "tiny_cross" if n is not None and B.tiny_by_keys(n) else "index"}
         if tiny["route"] == "tiny_cross":
             record = {"method": method, "gate": "tiny_cross", **tiny}
             _log.debug("er_pipeline pairs decision: %s", record, extra={"fz_decision": record})
-            cols = [kn] if method in EDIT_METHODS else ["__fz_n", *B.SIG_COLS]
-            return B.cross_candidates_ids(uniq.selectExpr("kid", *cols), "kid", cut, obs), obs
+            prof = uniq.select("kid", "__fz_n", *B.SIG_COLS)
+            return B.cross_candidates_ids(prof, "kid", cut, obs), obs
+        kn = "CAST(length(key) AS INT) AS __fz_kn"
         cols, tokens = {  # SQL text only: building it runs no py4j call
             "jaccard": (["__fz_gs", "__fz_n", *B.SIG_COLS], "__fz_gs"),
             "qgram": (["__fz_gs", "__fz_tc", *B.SIG_COLS], "__fz_gs"),
@@ -460,13 +420,12 @@ def er_pipeline(
         gram_index = method == "jaccard" or method in EDIT_METHODS
         if gram_index:
             # the builder reads the df table too; the short-key block is
-            # planned only when short keys exist (the docs bound is exact
-            # for that)
-            (_, _, n_short), _ = _key_stats()
+            # planned only when the stats job found short keys
+            n_short = _uniq_stat()[2]
             detail = {"short_keys": n_short, "short_key_block": n_short > 0}
         elif method in ("qgram", "cosine"):
-            (n, _, _), _ = _key_stats(lambda n, *_: not B.prefix_by_keys(2 * n))
-            detail = {"prefix_mode": "prefix" if B.prefix_by_keys(2 * n) else "simple"}
+            mode = "prefix" if B.prefix_by_keys(2 * _n_uniq()) else "simple"
+            detail = {"prefix_mode": mode}
         else:
             detail = {}
         cap, n_capped, sn = _hot_token_valve(
@@ -483,8 +442,7 @@ def er_pipeline(
             # matches (jaccard dist 0), skip the test.
             a = uniq.select("kid", "__fz_n", *B.SIG_COLS)
             b = a.selectExpr(*[f"{c} AS {'kid2' if c == 'kid' else c + '_2'}" for c in a.columns])
-            (n, _, _), _ = _key_stats(lambda n, *_: n < 8_000_000)
-            if n < 8_000_000:
+            if _n_uniq() < 8_000_000:
                 a, b = F.broadcast(a), F.broadcast(b)
             sn = sn.join(a, "kid").join(b, "kid2").where(
                 f"{B.jaccard_sig_cut(1.0 - max_distance)} OR (__fz_n = 0 AND __fz_n_2 = 0)"
@@ -492,16 +450,14 @@ def er_pipeline(
         kw = {"cached": _stage_persists, "obs": obs, "extra": sn}
         if method == "jaccard":
             cand = B.jaccard_candidates_ids(
-                prof, "kid", max_distance, tdf, cap, detail["short_key_block"], **kw)
+                prof, "kid", max_distance, tdf, cap, n_short > 0, **kw)
         elif method in EDIT_METHODS:
             cand = B.edit_candidates_ids(
-                prof, "kid", max_distance, tdf, method, q, cap, detail["short_key_block"], **kw)
+                prof, "kid", max_distance, tdf, method, q, cap, n_short > 0, **kw)
         elif method == "qgram":
-            cand = B.qgram_candidates_ids(
-                prof, "kid", max_distance, detail["prefix_mode"], cap, **kw)
+            cand = B.qgram_candidates_ids(prof, "kid", max_distance, mode, cap, **kw)
         elif method == "cosine":
-            cand = B.cosine_candidates_ids(
-                prof, "kid", max_distance, detail["prefix_mode"], cap, **kw)
+            cand = B.cosine_candidates_ids(prof, "kid", max_distance, mode, cap, **kw)
         else:
             cand = B.jaro_candidates_ids(
                 prof, "kid", max_distance, prefix_weight, cap, **kw)
@@ -632,6 +588,7 @@ def er_pipeline(
             )
             udf = string_distance_udf(method, max_distance=max_distance, **extra)
             dist = udf("__k1", "__k2")
+        n_u, key_bytes, _ = _uniq_stat()
         # the dictionaries carry the key text (or its gram array — same
         # order of magnitude) PLUS the mass-signature arrays (MASS_BINS
         # doubles/key on qgram/cosine), so gate on BYTES as well as rows:
@@ -639,10 +596,10 @@ def er_pipeline(
         # driver's task-result path. Past the gate, the dictionaries
         # shuffle-join (measured equal at 32 cores; on a cluster it
         # parallelizes).
-        def _dict_bytes(n: int, key_bytes: int) -> int:
+        dict_bytes = key_bytes + (
             # msig doubles + Bloom words + per-key stats
-            return key_bytes + (n * (MASS_BINS * 8 + B.NSIG * 8 + 48) if refine is not None else 0)
-
+            n_u * (MASS_BINS * 8 + B.NSIG * 8 + 48) if refine is not None else 0
+        )
         # the broadcast gate derives from the LIVE driver heap (same
         # pattern as cluster.driver_finish_budget): a broadcast build
         # funnels the dictionary through the driver once and pins one
@@ -663,13 +620,7 @@ def er_pipeline(
             EDGES_DICT_BROADCAST_BYTES * 8,
             max(EDGES_DICT_BROADCAST_BYTES, heap // 8),
         )
-
-        def _fits(n: int, key_bytes: int, *_) -> bool:
-            return n < 5_000_000 and _dict_bytes(n, key_bytes) < gate
-
-        # the docs bounds decide when even they fit; else count
-        (n_u, key_bytes, _), src = _key_stats(_fits)
-        broadcastable = _fits(n_u, key_bytes)
+        broadcastable = n_u < 5_000_000 and dict_bytes < gate
         if broadcastable:
             dict_a, dict_b = F.broadcast(dict_a), F.broadcast(dict_b)
 
@@ -713,7 +664,7 @@ def er_pipeline(
             k_chunks = min(max(1, -(-est // int(edges_chunk_bytes))), 1024)
         record = {
             "method": method, "gate": "edges_dict_broadcast", "keys": n_u,
-            "dict_bytes": _dict_bytes(n_u, key_bytes), "keys_source": src, "threshold": gate,
+            "keys_source": "counted", "dict_bytes": dict_bytes, "threshold": gate,
             "route": "broadcast" if broadcastable else "chunked" if k_chunks > 1 else "shuffle",
             "k_chunks": k_chunks,
         }

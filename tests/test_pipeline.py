@@ -178,8 +178,8 @@ def _pairs_decision(caplog):
 
 
 def _index_route(monkeypatch):
-    """Pin er_pipeline to its id-keyed builders: a small corpus otherwise
-    takes the tiny cross route."""
+    """Pin er_pipeline to its id-keyed builders: a small jaccard corpus
+    otherwise takes the tiny cross route."""
     from fozzie_spark import blocking
 
     monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", 0)
@@ -250,12 +250,11 @@ def test_pipeline_input_change_invalidates_resume(spark, tmp_path):
     assert out2["entities"].count() == docs2.count() != n1
 
 
-def test_pipeline_edit_method_short_keys(spark, tmp_path, caplog, monkeypatch):
+def test_pipeline_edit_method_short_keys(spark, tmp_path, caplog):
     # edit-family methods: keys shorter than q + q*tau share NO gram yet can
     # be within distance tau — the length-band short-key block must pair them
     import logging
 
-    _index_route(monkeypatch)
     caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
 
     def doc(i, text):
@@ -611,7 +610,7 @@ def test_pipeline_hot_key_skew(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("method", ["qgram", "lv", "jw"])
-def test_pipeline_hot_token_valve(spark, tmp_path, caplog, monkeypatch, method):
+def test_pipeline_hot_token_valve(spark, tmp_path, caplog, method):
     # the hot-token df valve, for the q-gram, edit and jaro families: with
     # the cap forced below the boilerplate df (60 hot docs) the capped
     # tokens leave the index and the sorted-neighborhood pass runs. Every
@@ -626,7 +625,6 @@ def test_pipeline_hot_token_valve(spark, tmp_path, caplog, monkeypatch, method):
 
     params = {"qgram": {"max_distance": 6, "q": 3}, "lv": {"max_distance": 2, "q": 3},
               "jw": {"max_distance": 0.25}}[method]
-    _index_route(monkeypatch)
     caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
     docs = synth_documents_skewed(spark, 20, hot_docs=60, hot_exact=10)
     runs = {}
@@ -721,14 +719,32 @@ def test_pipeline_valve_proven_uncapped(spark, tmp_path, caplog, monkeypatch):
     assert (rec["short_keys"], rec["short_key_block"]) == (0, False), rec
 
 
+def test_pipeline_valve_proven_on_dup_heavy_corpus(spark, tmp_path, caplog, monkeypatch):
+    # more than 10_000 docs over at most 10_000 distinct keys: the exact
+    # distinct-key count, not the doc count, proves the auto valve
+    # uncapped, so no token-df count job runs
+    import logging
+
+    _index_route(monkeypatch)
+    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
+    docs = spark.range(10_050).selectExpr(
+        "CAST(id AS STRING) AS doc_id",
+        "array(named_struct('kind', 'text', 'text', concat('dup text number ', id % 50, "
+        "' with words'), 'media_ref', CAST(NULL AS STRING), 'offset', 0)) AS spans",
+    )
+    er_pipeline(spark, docs, checkpoint_dir=str(tmp_path), resume=False)
+    rec = _pairs_decision(caplog)
+    assert (rec["keys"], rec["capped_count"], rec["route"]) == (50, "proven", "uncapped"), rec
+
+
 _DOCS_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
 
-def _text_docs(spark, texts, prefix="t"):
+def _text_docs(spark, texts):
     return spark.createDataFrame(
-        [(f"{prefix}{i}", [{"kind": "text", "text": t, "media_ref": None, "offset": 0}])
+        [(f"t{i}", [{"kind": "text", "text": t, "media_ref": None, "offset": 0}])
          for i, t in enumerate(texts)], _DOCS_SCHEMA,
     )
 
@@ -740,19 +756,11 @@ def _partition(out):
     return {frozenset(v) for v in byid.values()}
 
 
-@pytest.mark.parametrize("method,params", [
-    ("jaccard", {"max_distance": 0.3, "q": 4}),
-    ("jaccard", {"max_distance": 0.6, "q": 4}),
-    ("jaccard", {"max_distance": 0.9, "q": 4}),
-    ("qgram", {"max_distance": 3, "q": 3}),
-    ("lv", {"max_distance": 2, "q": 3}),
-    ("osa", {"max_distance": 1, "q": 2}),
-    ("hamming", {"max_distance": 1, "q": 2}),
-], ids=["jaccard0.3", "jaccard0.6", "jaccard0.9", "qgram", "lv", "osa", "hamming"])
+@pytest.mark.parametrize("max_distance", [0.3, 0.6, 0.9])
 def test_pipeline_tiny_route_matches_index_route(spark, tmp_path, caplog, monkeypatch,
-                                                 method, params):
-    # a corpus under the tiny-cross gate pairs every kid < kid2 pair in one
-    # broadcast nested-loop join under a cut the family's index route
+                                                 max_distance):
+    # a jaccard corpus under the tiny-cross gate pairs every kid < kid2
+    # pair in one broadcast nested-loop join under the cut its index route
     # already applies: edges and entities equal the index route's (gate
     # patched to 0). The corpus holds keys shorter than q, an empty key,
     # and equal-length near pairs
@@ -770,103 +778,40 @@ def test_pipeline_tiny_route_matches_index_route(spark, tmp_path, caplog, monkey
         monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", thr)
         before = _persistent_ids(spark)
         caplog.clear()
-        out = er_pipeline(spark, docs, checkpoint_dir=str(tmp_path / route), method=method,
-                          resume=False, **params)
+        out = er_pipeline(spark, docs, checkpoint_dir=str(tmp_path / route),
+                          max_distance=max_distance, q=4, resume=False)
         edges = {(tuple(r["kid"]), tuple(r["kid2"]), r["dist"]) for r in out["edges"].collect()}
-        runs[route] = (edges, _partition(out), out)
+        runs[route] = (edges, _partition(out))
         rec = _pairs_decision(caplog)
         # earlier tests' leftovers may be cleaned up meanwhile: only new ids count
         assert not _persistent_ids(spark) - before, route
+        n = out["keys"].select("kid").distinct().count()
         if route == "tiny_cross":
-            assert (rec["gate"], rec["route"], rec["keys_source"]) == (
-                "tiny_cross", "tiny_cross", "docs_bound"), rec
-            n = out["keys"].select("kid").distinct().count()
-            assert rec["keys"] >= n
+            assert (rec["gate"], rec["route"], rec["keys"]) == ("tiny_cross", "tiny_cross", n), rec
             assert out["runner"].metric("pairs", "raw_candidates") == n * (n - 1) // 2
         else:
-            assert (rec["gate"], rec["tiny_route"], rec["tiny_threshold"]) == (
-                "hot_token_cap", "index", 0), rec
-    assert runs["tiny_cross"][0] == runs["index"][0] and runs["index"][0], method
+            assert (rec["gate"], rec["tiny_route"], rec["tiny_keys"], rec["tiny_threshold"]) == (
+                "hot_token_cap", "index", n, 0), rec
+    assert runs["tiny_cross"][0] == runs["index"][0] and runs["index"][0]
     assert runs["tiny_cross"][1] == runs["index"][1]
 
 
-def test_pipeline_tiny_route_scope(spark, tmp_path, caplog):
-    # jaccard at max_distance >= 1 (the share-a-gram quirk) and cosine
-    # keep their index builders on a tiny corpus
+@pytest.mark.parametrize("method,tau", [
+    ("jaccard", 1.0), ("cosine", 0.25), ("qgram", 3), ("lv", 2),
+])
+def test_pipeline_tiny_route_scope(spark, tmp_path, caplog, method, tau):
+    # only jaccard at max_distance < 1 takes the tiny route: jaccard at
+    # max_distance >= 1 (the share-a-gram quirk), cosine, qgram and the
+    # edit family keep their index builders on a tiny corpus
     import logging
 
     caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
     docs = synth_documents(spark, 10, seed=2)
-    for method, tau in (("jaccard", 1.0), ("cosine", 0.25)):
-        caplog.clear()
-        er_pipeline(spark, docs, checkpoint_dir=str(tmp_path / method), method=method,
-                    max_distance=tau, q=3, resume=False)
-        rec = _pairs_decision(caplog)
-        assert (rec["gate"], rec["tiny_route"], rec["tiny_keys"]) == (
-            "hot_token_cap", "index", None), rec
-
-
-def test_pipeline_gates_from_bounds(spark, tmp_path, caplog, monkeypatch):
-    # every er_pipeline gate decides from the keys stage's docs bounds when
-    # they imply the exact route: no distinct-key stats job runs. A keys
-    # manifest without the bounds (an older run resumed) gets the same
-    # routes by counting
-    import logging
-
-    import fozzie_spark.pipeline as P
-    from fozzie_spark import blocking
-
-    calls = []
-    count = P._count_key_stats
-    monkeypatch.setattr(P, "_count_key_stats", lambda *a: calls.append(1) or count(*a))
-    caplog.set_level(logging.DEBUG, logger="fozzie_spark.pipeline")
-
-    def run(docs, ck, **kw):
-        caplog.clear()
-        calls.clear()
-        out = er_pipeline(spark, docs, checkpoint_dir=str(ck), **kw)
-        recs = {r.fz_decision["gate"]: r.fz_decision
-                for r in caplog.records if hasattr(r, "fz_decision")}
-        edges = {(tuple(r["kid"]), tuple(r["kid2"])) for r in out["edges"].collect()}
-        return recs, edges, len(calls)
-
-    docs = synth_documents(spark, 60, seed=1)
-    default = blocking.TINY_CROSS_KEY_THRESHOLD
-    for thr in (default, 0):
-        monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", thr)
-        ck = tmp_path / f"bounds{thr}"
-        recs, edges, n_calls = run(docs, ck)
-        assert n_calls == 0, recs
-        pairs_gate = "tiny_cross" if thr else "hot_token_cap"
-        assert recs[pairs_gate]["keys_source"] == "docs_bound", recs
-        assert recs["edges_dict_broadcast"]["keys_source"] == "docs_bound"
-        if not thr:
-            assert recs[pairs_gate]["capped_count"] == "proven", recs
-
-        # strip the bounds from the keys manifest, re-run every later stage
-        with open(ck / "keys.manifest.json") as f:
-            m = json.load(f)
-        for k in P._KEY_BOUNDS:
-            del m["metrics"][k]
-        with open(ck / "keys.manifest.json", "w") as f:
-            json.dump(m, f)
-        for stage in ("pairs", "edges", "clusters", "entities"):
-            os.remove(ck / f"{stage}.manifest.json")
-        recs2, edges2, n_calls2 = run(docs, ck)
-        assert n_calls2 == 1 and edges2 == edges
-        assert recs2[pairs_gate]["keys_source"] == "counted"
-        for gate in (pairs_gate, "edges_dict_broadcast"):
-            assert recs2[gate]["route"] == recs[gate]["route"], gate
-
-    # a dup-heavy corpus: more docs than the gate, fewer distinct keys. The
-    # docs bound keeps the index route, and nothing is counted to decide
-    monkeypatch.setattr(blocking, "TINY_CROSS_KEY_THRESHOLD", 40)
-    texts = [f"dup text number {i} with some words" for i in range(20)]
-    recs, _, n_calls = run(_text_docs(spark, texts * 3), tmp_path / "dups", resume=False)
-    assert n_calls == 0
-    rec = recs["hot_token_cap"]
-    assert (rec["tiny_route"], rec["tiny_keys"], rec["tiny_keys_source"]) == (
-        "index", 60, "docs_bound"), rec
+    er_pipeline(spark, docs, checkpoint_dir=str(tmp_path), method=method,
+                max_distance=tau, q=3, resume=False)
+    rec = _pairs_decision(caplog)
+    assert (rec["gate"], rec["tiny_route"], rec["tiny_keys"]) == (
+        "hot_token_cap", "index", None), rec
 
 
 def test_pipeline_edges_entities_decisions(spark, tmp_path, caplog, monkeypatch):
@@ -888,7 +833,7 @@ def test_pipeline_edges_entities_decisions(spark, tmp_path, caplog, monkeypatch)
 
     recs = decisions("bc")
     e, n = recs["edges_dict_broadcast"], recs["entities_clusters_broadcast"]
-    assert (e["route"], e["k_chunks"], e["keys_source"]) == ("broadcast", 1, "docs_bound"), e
+    assert (e["route"], e["k_chunks"], e["keys_source"]) == ("broadcast", 1, "counted"), e
     assert e["dict_bytes"] < e["threshold"] and e["keys"] > 0
     assert (n["route"], n["bytes_source"]) == ("broadcast", "plan_stats"), n
     assert n["clusters_bytes"] <= n["threshold"]
