@@ -6,6 +6,19 @@
 - LSH (random hyperplane) bucketing: the scale path — signature via one
   vectorized NumPy matmul in a pandas UDF, candidates from equi-joins on
   signature bands, exact cosine verification on candidates only.
+- IVF (coarse quantizer) bucketing: candidates from an equi-join on cells.
+
+The bucketed paths (LSH pairs, LSH top-k, IVF top-k) build candidates as
+ID PAIRS: each input's signature (or cell) UDF runs once, a banded row is
+(id, sig, band, bh) with no vector, and a colliding pair is emitted only
+at its FIRST COMMON BAND — the lowest band b with
+shiftright(s1 ^ s2, b*r) & mask = 0 — so every pair appears exactly once
+and no candidate distinct is needed. The vectors and their norms are then
+attached once per side, by id, for the exact cosine verify (`_with_cosine`).
+
+A row whose vector is NULL has no cosine to anything, so it matches
+nothing in every strategy: each path filters `v IS NOT NULL` (and a NULL
+id, which names no pair) before any UDF or join (`_vectors`).
 """
 
 from __future__ import annotations
@@ -127,21 +140,79 @@ def _cosine_from_norms(a: str, b: str, na: str, nb: str) -> str:
     return f"{_dot(a, b)} / ({na} * {nb})"
 
 
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v): the rows of `df` that carry an id and a vector. A NULL
+    vector has no cosine to anything, so it matches nothing in any
+    strategy (and would break the NumPy stack of a pandas UDF batch); a
+    NULL id names no pair."""
+    return df.selectExpr(
+        f"{sql_ident(id_col)} AS id", f"{sql_ident(vec_col)} AS v"
+    ).where("id IS NOT NULL AND v IS NOT NULL")
+
+
+def _with_cosine(pairs: DataFrame, lid: str, rid: str, left: DataFrame,
+                 right: DataFrame) -> DataFrame:
+    """`pairs` plus the exact `cosine` of each id pair: the vectors and
+    their norms are attached once per side, by id, from the (id, v) frames
+    `left` (for `lid`) and `right` (for `rid`). Each norm is computed once
+    per vector row, not per pair; the expression and its evaluation order
+    are those of every other path, so the cosines are bit-identical."""
+    def side(vecs: DataFrame, alias: str) -> DataFrame:
+        return vecs.selectExpr("id", "v", f"{_norm('v')} AS n").alias(alias)
+
+    cos = _cosine_from_norms("__fzA.v", "__fzB.v", "__fzA.n", "__fzB.n")
+    return (
+        pairs.join(side(left, "__fzA"), F.expr(f"{lid} = __fzA.id"))
+        .join(side(right, "__fzB"), F.expr(f"{rid} = __fzB.id"))
+        .selectExpr(*pairs.columns, f"{cos} AS cosine")
+    )
+
+
+def _plan_partitions(df: DataFrame) -> int | None:
+    """Partition count of `df`'s physical plan, read without running a
+    job: the RDD a plan of scans, filters and projections builds knows its
+    partitions (file splits, local slices) before anything executes. A
+    plan with an exchange, a subquery or a cache scan would run jobs to
+    build that RDD (broadcasts, adaptive query stages, the cache fill), so
+    it answers None."""
+    from py4j.protocol import Py4JError
+
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        stack = [plan]
+        while stack:
+            node = stack.pop()
+            name = node.nodeName()
+            if (name == "AdaptiveSparkPlan" or "Exchange" in name
+                    or "InMemoryTableScan" in name or not node.subqueries().isEmpty()):
+                return None
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        return int(plan.execute().getNumPartitions())
+    except Py4JError:
+        return None
+
+
 def _spread_small(df: DataFrame, max_bytes: int = 1 << 30) -> DataFrame:
-    """Round-robin repartition a PROVABLY SMALL frame across the cluster's
-    cores. The exact scoring paths stream one side of a nested-loop join
-    with the side's SCAN partitioning — a small parquet file arrives as
-    one partition and pins the whole quadratic compute to a single core
-    (measured: the 500-vector exact cosine_pairs bench leg ran 4.7 s on
-    one task). Only fires when optimizer plan stats prove the frame small
-    (the linear shuffle is then negligible vs the quadratic compute);
-    unknown or large stats leave the plan untouched."""
+    """Round-robin repartition a PROVABLY SMALL, UNDER-PARTITIONED frame
+    across the cluster's cores. The exact scoring paths stream one side of
+    a nested-loop join with the side's SCAN partitioning — a small parquet
+    file arrives as one partition and pins the whole quadratic compute to
+    a single core (measured: the 500-vector exact cosine_pairs bench leg
+    ran 4.7 s on one task). Only fires when optimizer plan stats prove the
+    frame small (the linear shuffle is then negligible vs the quadratic
+    compute) and it has fewer partitions than `defaultParallelism`; a
+    frame that already has enough partitions, or unknown or large stats,
+    leave the plan untouched."""
     from fozzie_spark.blocking import _plan_size_bytes
 
     sz = _plan_size_bytes(df)
     if sz is None or sz > max_bytes:
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
+    n = _plan_partitions(df)
+    if n is not None and n >= par:
+        return df
     return df.repartition(par)
 
 
@@ -192,12 +263,11 @@ def cosine_pairs(
         return lsh_cosine_pairs(
             df, id_col, vec_col, min_cosine, n_planes, bands, seed, other=other
         )
-    i, v = sql_ident(id_col), sql_ident(vec_col)
-    a = _spread_small(df.selectExpr(f"{i} AS id1", f"{v} AS v1")).withColumn(
+    a = _spread_small(_vectors(df, id_col, vec_col).toDF("id1", "v1")).withColumn(
         "__fz_na", F.expr(_norm("v1"))
     )
-    b = (df if other is None else other).selectExpr(f"{i} AS id2", f"{v} AS v2").withColumn(
-        "__fz_nb", F.expr(_norm("v2"))
+    b = _vectors(df if other is None else other, id_col, vec_col).selectExpr(
+        "id AS id2", "v AS v2", f"{_norm('v')} AS __fz_nb"
     )
     pairs = a.join(b, F.expr("id1 < id2")) if other is None else a.crossJoin(b)
     return (
@@ -232,13 +302,17 @@ def cosine_topk(
     exact cosine + rank over candidates only — approximate; the
     corpus-scale path when the probe set itself is large. With
     `multiprobe` (default on), queries whose buckets yielded fewer than k
-    candidates take a second pass probing every band hash at Hamming
+    candidates also take the candidates of every band hash at Hamming
     distance 1 (Lv et al., multi-probe LSH, VLDB'07) — the starved-query
-    re-probe MITIGATES the silent under-fill of sparse buckets while
-    well-filled queries never pay the extra join volume. One distance-1
-    pass is no fill guarantee: a query whose entire Hamming-1 ball is
-    sparse can still return fewer than k rows (raise bands, or lower
-    n_planes/bands ratio, when that matters).
+    re-probe MITIGATES the silent under-fill of sparse buckets. The
+    Hamming-1 buckets are probed in the same band join as the exact ones
+    (each side's signatures are computed once), and a well-filled query's
+    Hamming-1 id pairs are dropped before the cosine verify. One
+    distance-1 pass is no fill guarantee: a query whose entire Hamming-1
+    ball is sparse can still return fewer than k rows (raise bands, or
+    lower n_planes/bands ratio, when that matters). Candidates are id
+    pairs, each emitted once (see `_lsh_topk_pairs`); rows with a NULL
+    vector match nothing.
     strategy="auto" (default): sizes the probe side plan-stats-first
     (`_exceeds_rows` — a count job only for gray-zone or unknown-stats
     plans, memoized per plan) and routes to LSH above `auto_threshold`
@@ -258,60 +332,61 @@ def cosine_topk(
             " — approximate results (recall < 1)" if strategy == "lsh" else "",
         )
 
+    qv, cv = _vectors(queries, id_col, vec_col), _vectors(corpus, id_col, vec_col)
     if strategy == "lsh":
-        qs = _banded(lsh_signatures(queries, id_col, vec_col, n_planes, seed, dim=dim),
-                     n_planes, bands).selectExpr(
-            "id AS query_id", "v AS qv", "band", "bh", f"{_norm('v')} AS __fz_nq"
-        )
-        cs = _banded(lsh_signatures(corpus, id_col, vec_col, n_planes, seed, dim=dim),
-                     n_planes, bands).selectExpr(
-            "id AS neighbor_id", "v AS cv", "band", "bh", f"{_norm('v')} AS __fz_nc"
-        )
-
-        def _probe(probes):
-            return (
-                probes.join(cs, ["band", "bh"])
-                .where("query_id != neighbor_id")
-                .select("query_id", "neighbor_id", "qv", "cv", "__fz_nq", "__fz_nc")
-                .distinct()
-            )
-
-        scored = _probe(qs)
-        if multiprobe:
-            # starved queries: < k distinct candidates from their exact
-            # buckets (including zero — queries absent from the band join).
-            # Only they re-probe, at every band hash one bit-flip away.
-            r = max(1, n_planes // bands)
-            have = scored.groupBy("query_id").agg(F.expr("count(1) AS __fz_cnt"))
-            starved = (
-                qs.select("query_id")
-                .distinct()
-                .join(have, "query_id", "left")
-                .where(f"coalesce(__fz_cnt, 0) < {k}")
-                .select("query_id")
-            )
-            flips = qs.join(starved, "query_id").selectExpr(
-                "query_id", "qv", "__fz_nq", "band",
-                f"explode(array({', '.join(f'bh ^ {1 << i}' for i in range(r))})) AS bh",
-            )
-            scored = scored.unionByName(_probe(flips)).distinct()
+        pairs = _lsh_topk_pairs(qv, cv, k, n_planes, bands, seed, dim, multiprobe)
+        scored = _with_cosine(pairs, "query_id", "neighbor_id", qv, cv)
     else:
-        i, v = sql_ident(id_col), sql_ident(vec_col)
-        q = queries.selectExpr(f"{i} AS query_id", f"{v} AS qv", f"{_norm(v)} AS __fz_nq")
-        c = _spread_small(corpus.selectExpr(f"{i} AS neighbor_id", f"{v} AS cv")).withColumn(
+        q = qv.selectExpr("id AS query_id", "v AS qv", f"{_norm('v')} AS __fz_nq")
+        c = _spread_small(cv.toDF("neighbor_id", "cv")).withColumn(
             "__fz_nc", F.expr(_norm("cv"))
         )
-        scored = q.crossJoin(c).where("query_id != neighbor_id")
+        scored = q.crossJoin(c).where("query_id != neighbor_id").withColumn(
+            "cosine", F.expr(_cosine_from_norms("qv", "cv", "__fz_nq", "__fz_nc"))
+        )
     return _rank_topk(scored, k)
+
+
+def _lsh_topk_pairs(qv: DataFrame, cv: DataFrame, k: int, n_planes: int, bands: int,
+                    seed: int, dim: int | None, multiprobe: bool) -> DataFrame:
+    """(query_id, neighbor_id) LSH candidates of `cosine_topk`, each pair
+    once: an exact-bucket pair at its first common band; with
+    `multiprobe`, a Hamming-1 pair (no band agrees exactly) at its first
+    band that differs in at most one bit. Both kinds come out of ONE band
+    join, so each side's signature UDF runs once (Spark never reuses an
+    exchange above a Python UDF, so a second pass over the same
+    signatures would run the UDF again); a query keeps its Hamming-1
+    pairs only when it has fewer than k exact ones."""
+    qs = _banded(lsh_signatures(qv, "id", "v", n_planes, seed, dim=dim),
+                 n_planes, bands).toDF("query_id", "qsig", "band", "bh")
+    cs = _banded(lsh_signatures(cv, "id", "v", n_planes, seed, dim=dim),
+                 n_planes, bands).toDF("neighbor_id", "csig", "band", "bh")
+    first = _first_band("qsig ^ csig", n_planes, bands)
+    exact = f"query_id != neighbor_id AND {first} = band"
+    if not multiprobe:
+        return qs.join(cs, ["band", "bh"]).where(exact).select("query_id", "neighbor_id")
+    r = max(1, n_planes // bands)
+    flips = ", ".join(str(1 << i) for i in range(r))
+    probes = qs.selectExpr(
+        "query_id", "qsig", "band", "bh", f"explode(array(0, {flips})) AS __fz_flip"
+    ).withColumn("bh", F.expr("bh ^ __fz_flip"))
+    near = _first_band("qsig ^ csig", n_planes, bands, max_bits=1)
+    return (
+        probes.join(cs, ["band", "bh"])
+        .where(f"CASE WHEN __fz_flip = 0 THEN {exact} ELSE query_id != neighbor_id "
+               f"AND {first} IS NULL AND {near} = band END")
+        .withColumn("__fz_cnt", F.expr("count_if(__fz_flip = 0) OVER (PARTITION BY query_id)"))
+        .where(f"__fz_flip = 0 OR __fz_cnt < {k}")
+        .select("query_id", "neighbor_id")
+    )
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank) for the k best-scored
-    candidates per query (columns qv/cv and their norms __fz_nq/__fz_nc);
-    ties break by (cosine desc, neighbor_id asc)."""
+    candidates per query (column `cosine`); ties break by
+    (cosine desc, neighbor_id asc)."""
     return (
-        scored.withColumn("cosine", F.expr(_cosine_from_norms("qv", "cv", "__fz_nq", "__fz_nc")))
-        .withColumn("rank", F.expr(
+        scored.withColumn("rank", F.expr(
             "row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC)"
         ))
         .where(f"rank <= {k}")
@@ -355,21 +430,38 @@ def lsh_signatures(
             out |= bits[:, b].astype(np.int64) << b
         return pd.Series(out)
 
-    return df.selectExpr(f"{sql_ident(id_col)} AS id", f"{sql_ident(vec_col)} AS v").withColumn(
-        "sig", sig_udf("v")
-    )
+    return _vectors(df, id_col, vec_col).withColumn("sig", sig_udf("v"))
+
+
+def _band_sql(sig: str, b: int, n_planes: int, bands: int) -> str:
+    """SQL text: band `b`'s hash of the signature `sig` (r bits at b*r)."""
+    r = max(1, n_planes // bands)
+    return f"(shiftright({sig}, {b * r}) & {(1 << r) - 1})"
 
 
 def _banded(sigs: DataFrame, n_planes: int, bands: int) -> DataFrame:
-    """(id, v, band, bh): one row per signature band (the LSH bucket key)."""
-    r = max(1, n_planes // bands)
+    """(id, sig, band, bh): one row per signature band (the LSH bucket
+    key). No vector rides along: candidates are id pairs."""
     bb = ", ".join(
-        f"named_struct('band', {b}, 'bh', shiftright(sig, {b * r}) & {(1 << r) - 1})"
+        f"named_struct('band', {b}, 'bh', {_band_sql('sig', b, n_planes, bands)})"
         for b in range(bands)
     )
-    return sigs.selectExpr("id", "v", f"explode(array({bb})) AS bb").selectExpr(
-        "id", "v", "bb.band AS band", "bb.bh AS bh"
+    return sigs.selectExpr("id", "sig", f"explode(array({bb})) AS bb").selectExpr(
+        "id", "sig", "bb.band AS band", "bb.bh AS bh"
     )
+
+
+def _first_band(xor: str, n_planes: int, bands: int, max_bits: int = 0) -> str:
+    """SQL text: the lowest band whose hashes of two signatures differ in
+    at most `max_bits` bits, given the signatures' XOR `xor` (NULL when no
+    band does). A bucket pair is kept only at this band, so it is emitted
+    exactly once however many bands it shares."""
+    whens = " ".join(
+        f"WHEN bit_count({_band_sql(xor, b, n_planes, bands)}) <= {max_bits} THEN {b}"
+        if max_bits else f"WHEN {_band_sql(xor, b, n_planes, bands)} = 0 THEN {b}"
+        for b in range(bands)
+    )
+    return f"(CASE {whens} END)"
 
 
 def lsh_cosine_pairs(
@@ -389,34 +481,46 @@ def lsh_cosine_pairs(
     8 bands in tests/test_ann.py); tune n_planes/bands per threshold.
     Self-join by default (id1 < id2); pass `other` for a two-table join
     (id1 from df, id2 from other, both sides bucketed with the SAME
-    hyperplanes so buckets align)."""
-    sigs = lsh_signatures(df, id_col, vec_col, n_planes, seed, dim=dim)
-    # per-SIDE norms computed before the band join so the verify step reads
-    # them as columns instead of re-aggregating both norms per candidate
-    # pair (bit-identical either way)
-    banded = _banded(sigs, n_planes, bands).withColumn("__fz_n", F.expr(_norm("v")))
+    hyperplanes so buckets align).
+
+    Candidates are id pairs. Each input's signature UDF runs once, and a
+    colliding pair is emitted only at its first common band (the lowest b
+    with shiftright(s1 ^ s2, b*r) & mask = 0), so each pair appears once
+    without a distinct. The self-join collects each bucket's (id, sig)
+    list and pairs within it, which keeps the signatures to one pass (a
+    bucket's list is held as one row, so a hot bucket costs memory linear
+    in its size; its pairs are quadratic under either shape); the
+    two-table join is a band equi-join. Vectors and norms are attached by
+    id only for the verify. Rows with a NULL vector match nothing."""
+    vecs = _vectors(df, id_col, vec_col)
+    banded = _banded(lsh_signatures(vecs, "id", "v", n_planes, seed, dim=dim),
+                     n_planes, bands)
+    first = _first_band("a.sig ^ b.sig", n_planes, bands)
     if other is None:
-        right, pred = banded, "a.id < b.id"
-    else:
-        right = _banded(
-            lsh_signatures(other, id_col, vec_col, n_planes, seed, dim=dim),
-            n_planes, bands,
-        ).withColumn("__fz_n", F.expr(_norm("v")))
-        pred = "true"
-    cand = (
-        banded.alias("a")
-        .join(right.alias("b"), ["band", "bh"])
-        .where(pred)
-        .selectExpr(
-            "a.id AS id1", "b.id AS id2", "a.v AS v1", "b.v AS v2",
-            "a.__fz_n AS __fz_na", "b.__fz_n AS __fz_nb",
+        right = vecs
+        pairs = (
+            banded.groupBy("band", "bh")
+            .agg(F.expr("collect_list(struct(id, sig)) AS __fz_m"))
+            .where("size(__fz_m) > 1")
+            .selectExpr("band", "__fz_m", "explode(__fz_m) AS a")
+            .selectExpr(
+                "a.id AS id1",
+                f"explode(transform(filter(__fz_m, b -> a.id < b.id AND {first} = band),"
+                " b -> b.id)) AS id2",
+            )
         )
-        .distinct()
-    )
+    else:
+        right = _vectors(other, id_col, vec_col)
+        rb = _banded(lsh_signatures(right, "id", "v", n_planes, seed, dim=dim),
+                     n_planes, bands)
+        pairs = (
+            banded.alias("a").join(rb.alias("b"), ["band", "bh"])
+            .where(f"{first} = band")
+            .selectExpr("a.id AS id1", "b.id AS id2")
+        )
     return (
-        cand.withColumn("cosine", F.expr(_cosine_from_norms("v1", "v2", "__fz_na", "__fz_nb")))
+        _with_cosine(pairs, "id1", "id2", vecs, right)
         .where(f"cosine >= {sql_lit(min_cosine)}")
-        .select("id1", "id2", "cosine")
     )
 
 
@@ -438,8 +542,9 @@ def _kmeans_centroids(
     (argmax on exact float64), empty cells keep their previous centroid.
     """
     rows = (
-        df.select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
-        .orderBy("h", F.col(vec_col).cast("string"))
+        _vectors(df, id_col, vec_col)
+        .select("v", F.xxhash64("id").alias("h"))
+        .orderBy("h", F.col("v").cast("string"))
         .limit(int(sample_size))
         .collect()
     )
@@ -469,7 +574,7 @@ def ivf_assign(
     """(id, v, cell): each row exploded to its `n_probe` nearest coarse
     cells by cosine (argpartition over one NumPy matmul per Arrow batch).
     n_probe=1 indexes a corpus; n_probe>1 fans a probe set out to the
-    cells it must search."""
+    cells it must search. Rows with a NULL vector are dropped."""
     from pyspark.sql.types import ArrayType, IntegerType
 
     c = np.ascontiguousarray(centroids, dtype=np.float64)
@@ -490,10 +595,7 @@ def ivf_assign(
             top = np.take_along_axis(part, order, axis=1)
         return pd.Series([row.astype("int32") for row in top])
 
-    return df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        F.explode(cells_udf(F.col(vec_col))).alias("cell"),
-    )
+    return _vectors(df, id_col, vec_col).withColumn("cell", F.explode(cells_udf("v")))
 
 
 def ivf_topk(
@@ -541,19 +643,15 @@ def ivf_topk(
             StructField("rank", IntegerType()),
         ])
         return queries.sparkSession.createDataFrame([], schema)
-    cs = ivf_assign(corpus, id_col, vec_col, cent, n_probe=1).selectExpr(
-        "id AS neighbor_id", "v AS cv", "cell", f"{_norm('v')} AS __fz_nc"
+    qv, cv = _vectors(queries, id_col, vec_col), _vectors(corpus, id_col, vec_col)
+    cs = ivf_assign(cv, "id", "v", cent, n_probe=1).selectExpr("id AS neighbor_id", "cell")
+    qs = ivf_assign(qv, "id", "v", cent, n_probe=n_probe).selectExpr("id AS query_id", "cell")
+    # each corpus row sits in exactly one cell and a query's n_probe cells
+    # are distinct, so every (query, neighbor) pair joins exactly once
+    pairs = qs.join(cs, "cell").where("query_id != neighbor_id").select(
+        "query_id", "neighbor_id"
     )
-    qs = ivf_assign(queries, id_col, vec_col, cent, n_probe=n_probe).selectExpr(
-        "id AS query_id", "v AS qv", "cell", f"{_norm('v')} AS __fz_nq"
-    )
-    scored = (
-        qs.join(cs, "cell")
-        .where("query_id != neighbor_id")
-        .select("query_id", "neighbor_id", "qv", "cv", "__fz_nq", "__fz_nc")
-        .distinct()
-    )
-    return _rank_topk(scored, k)
+    return _rank_topk(_with_cosine(pairs, "query_id", "neighbor_id", qv, cv), k)
 
 
 def embedding_near_dedup(

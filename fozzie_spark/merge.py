@@ -12,7 +12,8 @@ Semantics mirror merge/{inner,left,right,full,semi,anti}.rs:
   (reference pads distances with NaN; we use SQL NULL — documented deviation)
 - anti/semi return df1 rows only, no distance columns (semi.rs, anti.rs)
 - the reference's O(n*m) unmatched-complement scan (merge/left.rs:17-19)
-  becomes a proper left_anti join.
+  becomes an outer join: each mode is one join tree (L x M) x R, which
+  reads the matches once.
 """
 
 from __future__ import annotations
@@ -56,49 +57,24 @@ def materialize(
 
     L, R, M = left.alias("__fzL"), right.alias("__fzR"), matches.alias("__fzM")
 
-    def side_keys(prefix: str) -> DataFrame:
-        """The matched key tuples of one side, as __fz_k0, __fz_k1..."""
-        return matches.selectExpr(
-            *[f"{prefix}{i} AS __fz_k{i}" for i in range(len(by_pairs))]
-        ).distinct()
-
     if how in ("semi", "anti"):
         # semi/anti return df1 rows with ORIGINAL names (no right side in
         # the output, so no suffixing — merge/semi.rs, merge/anti.rs)
         mode = "left_semi" if how == "semi" else "left_anti"
-        return L.join(side_keys("__fz_l"), _on("__fzL", lby, "__fz_k"), mode).selectExpr(
+        keys = matches.selectExpr(
+            *[f"__fz_l{i} AS __fz_k{i}" for i in range(len(by_pairs))]
+        ).distinct()
+        return L.join(keys, _on("__fzL", lby, "__fz_k"), mode).selectExpr(
             *_quals("__fzL", lcols, {c: c for c in lcols})
         )
 
-    inner = (
-        L.join(M, _on("__fzL", lby, "__fzM.__fz_l"))
-        .join(R, _on("__fzR", rby, "__fzM.__fz_r"))
-        .selectExpr(
-            *_quals("__fzL", lcols, lout), *_quals("__fzR", rcols, rout),
-            *[f"__fzM.{sql_ident(d)}" for d in dist_names],
-        )
+    # one join tree (L x M) x R per mode, so `matches` is read once. Every
+    # match row's keys exist on both sides, so an outer join pads exactly
+    # the rows no match names (null keys included: `=` never matches NULL),
+    # with NULL columns for the other side and NULL distances
+    lm = L.join(M, _on("__fzL", lby, "__fzM.__fz_l"),
+                "left" if how in ("left", "full") else "inner")
+    return lm.join(R, _on("__fzR", rby, "__fzM.__fz_r"), how).selectExpr(
+        *_quals("__fzL", lcols, lout), *_quals("__fzR", rcols, rout),
+        *[f"__fzM.{sql_ident(d)}" for d in dist_names],
     )
-    if how == "inner":
-        return inner
-
-    def nulls(frame: DataFrame, cols: list[str], out: dict[str, str]) -> list:
-        types = {f.name: f.dataType for f in frame.schema.fields}
-        return [F.lit(None).cast(types[c]).alias(out[c]) for c in cols]
-
-    dist_nulls = [F.lit(None).cast("double").alias(d) for d in dist_names]
-
-    def left_pad() -> DataFrame:
-        unmatched = L.join(side_keys("__fz_l"), _on("__fzL", lby, "__fz_k"), "left_anti")
-        quals = [F.expr(e) for e in _quals("__fzL", lcols, lout)]
-        return unmatched.select(*quals, *nulls(right, rcols, rout), *dist_nulls)
-
-    def right_pad() -> DataFrame:
-        unmatched = R.join(side_keys("__fz_r"), _on("__fzR", rby, "__fz_k"), "left_anti")
-        quals = [F.expr(e) for e in _quals("__fzR", rcols, rout)]
-        return unmatched.select(*nulls(left, lcols, lout), *quals, *dist_nulls)
-
-    if how == "left":
-        return inner.unionByName(left_pad())
-    if how == "right":
-        return inner.unionByName(right_pad())
-    return inner.unionByName(left_pad()).unionByName(right_pad())  # full

@@ -6,8 +6,10 @@ once per raw join row instead of once per distinct candidate — a grouping
 result that reruns its candidate lineage, a candidate self-join whose two
 sides each compute their own prefix aggregate, a gram document-frequency
 table computed for an uncapped index that filters nothing, a shuffle on
-the ER tiny route past its cached profile, missing whole-stage codegen,
-full-column parquet scans).
+the ER tiny route past its cached profile, an aggregate or hash shuffle
+keyed on an array column, one Python UDF evaluated in more than one
+ArrowEvalPython node, missing whole-stage codegen, full-column parquet
+scans).
 
     python scripts/explain_audit.py [sf_dir]
 """
@@ -42,6 +44,10 @@ _PREFIX_AGG = re.compile(r"Aggregate\(keys=.*(?<!partial_)collect_list\(")
 _GRAM_DF_AGG = re.compile(r"Aggregate\(keys=\[__fz_g#\d+\]")
 #: a shuffle exchange (a broadcast's is named BroadcastExchange)
 _SHUFFLE = re.compile(r"\bExchange ")
+#: one Python UDF call in an ArrowEvalPython node: its name and the
+#: expression id of its result, which names the call (both sides of a
+#: self-join of one frame print the same id)
+_UDF_CALL = re.compile(r"(\w+)\((?:[^()]|\([^()]*\))*\)#(\d+)")
 
 
 def _outside_caches(plan: str) -> list[str]:
@@ -57,10 +63,56 @@ def _outside_caches(plan: str) -> list[str]:
     return out
 
 
+def _repeated_udfs(plan: str) -> list[str]:
+    """Python UDF calls that appear in more than one ArrowEvalPython node:
+    each such node runs the UDF over its input again. An executed adaptive
+    plan prints its initial plan after the final one; only the final one
+    counts."""
+    seen: dict[tuple[str, str], int] = {}
+    for ln in plan.split("== Initial Plan ==")[0].splitlines():
+        m = re.search(r"ArrowEvalPython \[(.*?)\], \[", ln)
+        for call in _UDF_CALL.findall(m.group(1)) if m else ():
+            seen[call] = seen.get(call, 0) + 1
+    return [f"{n}#{i}" for (n, i), c in seen.items() if c > 1]
+
+
+def _array_keyed(plan) -> list[str]:
+    """Names of the aggregates and hash-partitioned shuffles in the JVM
+    physical `plan` whose keys include an array-typed column: such a key
+    hashes and compares the whole array per row, and moves it through the
+    exchange."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    hits, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan" or name.endswith("QueryStage"):
+            stack.append(node.executedPlan() if name == "AdaptiveSparkPlan" else node.plan())
+            continue
+        keys = []
+        if name.endswith("Aggregate"):
+            keys = seq(node.groupingExpressions())
+        elif name == "Exchange":
+            part = node.outputPartitioning()
+            if part.getClass().getSimpleName() == "HashPartitioning":
+                keys = seq(part.expressions())
+        if any(k.dataType().typeName() == "array" for k in keys):
+            hits.append(name)
+        stack.extend(seq(node.children()))
+    return hits
+
+
 def audit(name: str, df, allow_bnlj: bool = False, lineage_cut: bool = False,
           self_join: bool = False, uncapped: bool = False, tiny: bool = False) -> dict:
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    jplan = df._jdf.queryExecution().executedPlan()
+    plan = jplan.toString()
     flags = []
+    if _array_keyed(jplan):
+        flags.append("ArrayGroupingKey")
+    if _repeated_udfs(plan):
+        flags.append("RepeatedArrowEval")
     if tiny and any(_SHUFFLE.search(ln) for ln in _outside_caches(plan)):
         flags.append("TinyRouteExchange")
     if uncapped and _GRAM_DF_AGG.search(plan):
@@ -160,6 +212,17 @@ def main() -> int:
     results.append(audit(
         "lsh_cosine_pairs",
         ann.lsh_cosine_pairs(emb, "vec_id", "v", min_cosine=0.4, n_planes=16, bands=8),
+    ))
+    # the bucketed top-k paths: id-pair candidates, one signature or cell
+    # UDF pass per input
+    probes = emb.where(F.col("vec_id") < 100)
+    results.append(audit(
+        "cosine_topk (lsh)",
+        ann.cosine_topk(probes, emb, "vec_id", "v", k=10, strategy="lsh"),
+    ))
+    results.append(audit(
+        "ivf_topk",
+        ann.ivf_topk(probes, emb, "vec_id", "v", k=10, n_cells=16, n_probe=4),
     ))
     results.append(audit(
         "sessionize", sessionize(ev, "user_id", "ts", "value", 600)

@@ -345,3 +345,155 @@ def test_embedding_near_dedup(spark):
     # 3, 4, 5 are singletons grouping with themselves
     for i in (3, 4, 5):
         assert out[i] == (i, 1, True), out[i]
+
+
+# ---- id-pair candidates ----------------------------------------------------
+
+
+def _final_plan(df):
+    """The executed (AQE final) physical plan of `df`, after collecting it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _audit():
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "scripts", "explain_audit.py")
+    spec = importlib.util.spec_from_file_location("explain_audit", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_lsh_pairs_emitted_once(emb):
+    # every candidate survives a verify at min_cosine -1, so any duplicate
+    # band emission would show as a repeated (id1, id2) row
+    other = emb.select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding")
+    for kw in ({}, {"other": other}):
+        rows = [(r["id1"], r["id2"]) for r in ann.lsh_cosine_pairs(
+            emb, "vec_id", "embedding", min_cosine=-1.0, n_planes=16, bands=4, **kw
+        ).collect()]
+        assert rows and len(rows) == len(set(rows)), kw
+
+
+def test_lsh_pairs_equal_numpy_brute_force(emb):
+    # the pairs are exactly those sharing >= 1 band with cosine >= tau,
+    # over the same signatures (pairs within 1e-9 of tau may go either way)
+    import numpy as np
+
+    n_planes, bands, tau, shift = 16, 4, 0.2, 10_000
+    r = n_planes // bands
+    bs = {  # each id's set of (band, band hash) buckets
+        row["id"]: {(b, (row["sig"] >> (b * r)) & ((1 << r) - 1)) for b in range(bands)}
+        for row in ann.lsh_signatures(emb, "vec_id", "embedding", n_planes).collect()
+    }
+    vecs = {r["vec_id"]: np.array(r["embedding"]) for r in emb.collect()}
+    unit = {i: v / np.linalg.norm(v) for i, v in vecs.items()}
+
+    def want(pairs):
+        keep, edge = set(), set()
+        for a, b in pairs:
+            c = float(unit[a] @ unit[b])
+            if bs[a] & bs[b] and c >= tau - 1e-9:
+                (edge if abs(c - tau) < 1e-9 else keep).add((a, b))
+        return keep, edge
+
+    ids = sorted(vecs)
+    keep, edge = want((a, b) for a in ids for b in ids if a < b)
+    got = _pairs(ann.lsh_cosine_pairs(emb, "vec_id", "embedding", min_cosine=tau,
+                                      n_planes=n_planes, bands=bands))
+    assert keep and not (got ^ keep) - edge
+
+    other = emb.select((F.col("vec_id") + shift).alias("vec_id"), "embedding")
+    keep, edge = want((a, b) for a in ids for b in ids)
+    got = {(a, b - shift) for a, b in _pairs(ann.lsh_cosine_pairs(
+        emb, "vec_id", "embedding", min_cosine=tau, n_planes=n_planes, bands=bands,
+        other=other))}
+    assert keep and not (got ^ keep) - edge
+
+
+def test_lsh_self_join_one_signature_pass(emb):
+    plan = _final_plan(ann.lsh_cosine_pairs(emb, "vec_id", "embedding", min_cosine=0.4,
+                                            n_planes=16, bands=8))
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_bucketed_ann_no_array_keys_or_repeated_udfs(emb):
+    # candidates are id pairs: no aggregate or hash shuffle keyed on a
+    # vector, and each input's signature / cell UDF evaluated once
+    audit = _audit()
+    probes = emb.where(F.col("vec_id") < 50)
+    for df in (
+        ann.lsh_cosine_pairs(emb, "vec_id", "embedding", min_cosine=0.4),
+        ann.lsh_cosine_pairs(emb, "vec_id", "embedding", min_cosine=0.4, other=probes),
+        ann.cosine_topk(probes, emb, "vec_id", "embedding", k=5, strategy="lsh"),
+        ann.cosine_topk(probes, emb, "vec_id", "embedding", k=5, strategy="lsh",
+                        multiprobe=False),
+        ann.ivf_topk(probes, emb, "vec_id", "embedding", k=5, n_cells=8, n_probe=2),
+    ):
+        jplan = df._jdf.queryExecution().executedPlan()
+        assert audit._array_keyed(jplan) == []
+        assert audit._repeated_udfs(_final_plan(df)) == []
+
+
+def test_ann_leaves_no_persisted_rdd(emb):
+    emb.count()
+    jsc = emb.sparkSession.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    probes = emb.where(F.col("vec_id") < 50)
+    ann.lsh_cosine_pairs(emb, "vec_id", "embedding", min_cosine=0.4).collect()
+    ann.cosine_topk(probes, emb, "vec_id", "embedding", k=5, strategy="lsh").collect()
+    ann.ivf_topk(probes, emb, "vec_id", "embedding", k=5, n_cells=8, n_probe=2).collect()
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
+@pytest.fixture(scope="module")
+def with_null(spark):
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    rows = [(i, rng.standard_normal(8).tolist()) for i in range(20)]
+    base = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return base, base.unionByName(
+        spark.createDataFrame([(100, None)], "vec_id long, embedding array<double>")
+    )
+
+
+@pytest.mark.parametrize("run", [
+    lambda d: ann.cosine_pairs(d, "vec_id", "embedding", min_cosine=0.0, strategy="exact"),
+    lambda d: ann.lsh_cosine_pairs(d, "vec_id", "embedding", min_cosine=0.0),
+    lambda d: ann.lsh_cosine_pairs(d, "vec_id", "embedding", min_cosine=0.0, other=d),
+    lambda d: ann.cosine_topk(d, d, "vec_id", "embedding", k=3, strategy="exact"),
+    lambda d: ann.cosine_topk(d, d, "vec_id", "embedding", k=3, strategy="lsh"),
+    lambda d: ann.ivf_topk(d, d, "vec_id", "embedding", k=3, n_cells=4, n_probe=2),
+], ids=["exact_pairs", "lsh_pairs", "lsh_pairs_two_table", "exact_topk", "lsh_topk", "ivf"])
+def test_null_vector_matches_nothing(with_null, run):
+    # a NULL vector has no cosine to anything: it appears in no output row
+    # and leaves every other row as it is without it
+    base, nulled = with_null
+    got = sorted(map(tuple, run(nulled).collect()))
+    assert got and all(100 not in r[:2] for r in got)
+    assert got == sorted(map(tuple, run(base).collect()))
+
+
+def test_spread_small_keeps_enough_partitions(spark):
+    # a frame with at least defaultParallelism partitions is returned
+    # unchanged; an under-partitioned small one is spread. Reading the
+    # partition count runs no job.
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 100, 1, par * 2)
+    assert ann._spread_small(wide) is wide
+    narrow = spark.range(0, 100, 1, 1)
+    assert ann._spread_small(narrow) is not narrow
+    pq = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup("fz_plan_partitions", "partition probe")
+    try:
+        assert ann._plan_partitions(pq) == 1
+        assert ann._plan_partitions(wide) == par * 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("fz_plan_partitions")) == []
