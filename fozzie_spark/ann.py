@@ -16,6 +16,25 @@ shiftright(s1 ^ s2, b*r) & mask = 0 — so every pair appears exactly once
 and no candidate distinct is needed. The vectors and their norms are then
 attached once per side, by id, for the exact cosine verify (`_with_cosine`).
 
+The exact paths (`cosine_topk` and `cosine_pairs` with strategy
+"exact") score every pair in a broadcast nested-loop join. When every
+broadcast side fits Spark's own broadcast budget
+(`spark.sql.autoBroadcastJoinThreshold`), they take a RANGE-SLICED plan
+that moves no vector through a shuffle: `spark.range(0, P, 1, P)`
+(P = defaultParallelism) supplies P partitions without an exchange; the
+probes (or the left side of the pairs) are broadcast and joined to it on
+pmod(xxhash64(id), P) = slice; the other side is broadcast into the
+nested-loop join. Each task then owns whole queries, so a top-k's partial
+window already holds its final rows. The gate (`_sliced_fits`) prices
+each side as an upper bound on its real payload: rows (the plan rowCount,
+else sizeInBytes / Catalyst's default row width, which prices an array at
+its element's width) x the bytes per vector row. The vector width comes
+from the auto route's one-row probe (under strategy="exact", from one
+such probe of its own).
+A budget <= 0, unknown plan stats or a side over budget keep the spread
+plan (`_spread_small`). The expressions are the same in both plans, so the
+cosines are bit-identical.
+
 A row whose vector is NULL has no cosine to anything, so it matches
 nothing in every strategy: each path filters `v IS NOT NULL` (and a NULL
 id, which names no pair) before any UDF or join (`_vectors`).
@@ -34,88 +53,115 @@ from fozzie_spark.util import sql_ident, sql_lit
 
 _log = logging.getLogger("fozzie_spark.ann")
 
-#: memoized routing counts keyed by (plan semanticHash, plan sizeInBytes):
-#: the size component is the freshness signal — overwriting the same
-#: external path in place changes sizeInBytes, so a stale count can no
-#: longer flip exact<->LSH routing silently.
+#: memoized routing counts and probed vector widths, keyed by (plan
+#: semanticHash, plan sizeInBytes[, column]): the size component is the
+#: freshness signal — overwriting the same external path in place changes
+#: sizeInBytes, so a stale count can no longer flip exact<->LSH routing
+#: silently.
 _COUNT_CACHE: dict[tuple, int] = {}
+_DIM_CACHE: dict[tuple, int | None] = {}
 _COUNT_CACHE_MAX = 4096
 
 
-def _plan_row_count(df: DataFrame) -> int | None:
-    """Optimizer rowCount statistic when the plan carries one (CBO /
-    analyzed tables / LocalRelation) — the only row-CONFIDENT signal that
-    costs no job at all."""
+def _memoized(cache: dict, df: DataFrame, compute, *key_extra):
+    """`compute()`, memoized in `cache` per (plan of `df`, its
+    sizeInBytes, *key_extra); computed every time when the plan has no
+    semantic hash."""
+    from fozzie_spark.blocking import _plan_size_bytes
+
     try:
-        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        if rc.isDefined():
-            return int(rc.get().longValue())
+        key = (df.semanticHash(), _plan_size_bytes(df), *key_extra)
     except Exception:
-        pass
-    return None
+        return compute()
+    if key not in cache:
+        if len(cache) >= _COUNT_CACHE_MAX:
+            cache.clear()
+        cache[key] = compute()
+    return cache[key]
+
+
+def _row_bounds(df: DataFrame, row_bytes: int | None = None) -> tuple[float, float] | None:
+    """(lower, upper) bounds on the rows of `df` from optimizer statistics,
+    without a job; None when the plan cannot bound them. A plan rowCount
+    (CBO, analyzed tables, LocalRelation) bounds both ways. Otherwise, with
+    the schema-derived `row_bytes` of a vector frame, sizeInBytes bounds
+    both ways: Catalyst prices an array column at its element's default
+    width (8 bytes for array<double>), never more than the stored vector,
+    so sizeInBytes / Catalyst's default row width is an UPPER bound, and
+    sizeInBytes / `row_bytes` a LOWER bound (a computed array priced at
+    its default width undercounts the rows badly when divided by the real
+    row bytes). Without `row_bytes` the frame is not known to carry wide
+    vectors, so bytes bound nothing."""
+    from fozzie_spark.blocking import _UNKNOWN_SIZE
+
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        stats = plan.stats()
+        rc = stats.rowCount()
+        if rc.isDefined():
+            n = int(rc.get().longValue())
+            return n, n
+        sz = int(stats.sizeInBytes())
+        if not row_bytes or sz >= _UNKNOWN_SIZE:
+            return None
+        # EstimationUtils.getSizePerRow without column stats
+        return sz / row_bytes, sz / (8 + plan.schema().defaultSize())
+    except Exception:
+        return None
+
+
+def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
+    """Width of the vectors of `df`, probed from ONE non-null row (a
+    single-partition job, orders cheaper than a count, memoized per plan);
+    None when `df` has no non-null vector."""
+    def probe():
+        r = df.where(F.col(vec_col).isNotNull()).select(vec_col).first()
+        return None if r is None else len(r[0])
+
+    return _memoized(_DIM_CACHE, df, probe, vec_col)
+
+
+def _row_bytes(df: DataFrame, vec_col: str, dim: int) -> int:
+    """Bytes/row of an embedding frame whose vectors have `dim` elements:
+    the vector payload (dim x element width from the schema) plus an
+    id/overhead pad."""
+    from pyspark.sql.types import ArrayType, FloatType
+
+    t = df.schema[vec_col].dataType
+    elem = 4 if isinstance(t, ArrayType) and isinstance(t.elementType, FloatType) else 8
+    return dim * elem + 16
 
 
 def _vec_row_bytes(df: DataFrame, vec_col: str) -> tuple[int | None, bool]:
-    """Schema-derived bytes/row for an embedding frame: vector payload
-    (dim x element width — dim probed from ONE non-null row, a
-    single-partition job, orders cheaper than the count it replaces) plus
-    id/overhead pad. Returns (row_bytes, is_empty); is_empty
-    short-circuits routing (a side with no non-null vectors produces no
-    pairs under any strategy, so it never exceeds any threshold)."""
-    from pyspark.sql.types import ArrayType, FloatType
-
+    """(row_bytes, is_empty) of an embedding frame, its dim probed by
+    `_vec_dim`; is_empty short-circuits routing (a side with no non-null
+    vectors produces no pairs under any strategy, so it never exceeds any
+    threshold)."""
     try:
-        r = df.where(F.col(vec_col).isNotNull()).select(vec_col).first()
+        dim = _vec_dim(df, vec_col)
     except Exception:
         return None, False
-    if r is None:
-        return None, True
-    elem = 8
-    try:
-        t = df.schema[vec_col].dataType
-        if isinstance(t, ArrayType) and isinstance(t.elementType, FloatType):
-            elem = 4
-    except Exception:
-        pass
-    return len(r[0]) * elem + 16, False
+    return (None, True) if dim is None else (_row_bytes(df, vec_col, dim), False)
 
 
 def _exceeds_rows(df: DataFrame, threshold: int, row_bytes: int | None = None) -> bool:
     """True iff `df` has more than `threshold` rows — resolved WITHOUT an
-    eager count whenever a row-confident signal settles it: (1) the
-    optimizer rowCount statistic when present; (2) est_rows = sizeInBytes /
-    `row_bytes` for confident extremes (>4x / <1/4 of the threshold), but
-    ONLY when the caller supplied a schema-derived `row_bytes` — a generic
+    eager count whenever the plan's row bounds (`_row_bounds`) settle it:
+    "below" only on the upper bound, "above" only on the lower bound. The
+    bytes bounds need the caller's schema-derived `row_bytes`: a generic
     bytes/row guess misroutes wide rows (256+-dim float64 embeddings) to
-    approximate LSH, a silent results change. Gray-zone and unknown-stats
-    plans pay a count job, memoized per (plan, sizeInBytes)."""
-    from fozzie_spark.blocking import _plan_size_bytes
-
-    rows = _plan_row_count(df)
-    if rows is not None:
-        _log.info("_exceeds_rows: plan rowCount=%d vs threshold=%d", rows, threshold)
-        return rows > threshold
-    sz = _plan_size_bytes(df)
-    if row_bytes and sz is not None and threshold > 0:
-        est = sz / row_bytes
-        if est > 4.0 * threshold or est < threshold / 4.0:
+    approximate LSH, a silent results change. Plans the bounds leave
+    undecided pay a count job, memoized per (plan, sizeInBytes)."""
+    bounds = _row_bounds(df, row_bytes)
+    if bounds is not None:
+        lo, hi = bounds
+        if hi <= threshold or lo > threshold:
             _log.info(
-                "_exceeds_rows: plan sizeInBytes=%d / row_bytes=%d -> est_rows=%.0f "
-                "vs threshold=%d (confident)", sz, row_bytes, est, threshold,
+                "_exceeds_rows: plan rows in [%.0f, %.0f] vs threshold=%d (row_bytes=%s)",
+                lo, hi, threshold, row_bytes,
             )
-            return est > threshold
-    try:
-        key = (df.semanticHash(), sz)
-    except Exception:
-        key = None
-    if key is not None and key in _COUNT_CACHE:
-        n = _COUNT_CACHE[key]
-    else:
-        n = df.count()
-        if key is not None:
-            if len(_COUNT_CACHE) >= _COUNT_CACHE_MAX:
-                _COUNT_CACHE.clear()
-            _COUNT_CACHE[key] = n
+            return lo > threshold
+    n = _memoized(_COUNT_CACHE, df, df.count)
     _log.info("_exceeds_rows: counted rows=%d vs threshold=%d", n, threshold)
     return n > threshold
 
@@ -195,11 +241,14 @@ def _plan_partitions(df: DataFrame) -> int | None:
 
 def _spread_small(df: DataFrame, max_bytes: int = 1 << 30) -> DataFrame:
     """Round-robin repartition a PROVABLY SMALL, UNDER-PARTITIONED frame
-    across the cluster's cores. The exact scoring paths stream one side of
-    a nested-loop join with the side's SCAN partitioning — a small parquet
-    file arrives as one partition and pins the whole quadratic compute to
-    a single core (measured: the 500-vector exact cosine_pairs bench leg
-    ran 4.7 s on one task). Only fires when optimizer plan stats prove the
+    across the cluster's cores. It serves only the exact paths' over-budget
+    branch (inputs under the broadcast budget take the range-sliced route,
+    which spreads the work without a shuffle and now covers the measured
+    case below). That branch streams one side of a nested-loop join with
+    the side's SCAN partitioning — a small parquet file arrives as one
+    partition and pins the whole quadratic compute to a single core
+    (measured: the 500-vector exact cosine_pairs bench leg ran 4.7 s on
+    one task). Only fires when optimizer plan stats prove the
     frame small (the linear shuffle is then negligible vs the quadratic
     compute) and it has fewer partitions than `defaultParallelism`; a
     frame that already has enough partitions, or unknown or large stats,
@@ -214,6 +263,48 @@ def _spread_small(df: DataFrame, max_bytes: int = 1 << 30) -> DataFrame:
     if n is not None and n >= par:
         return df
     return df.repartition(par)
+
+
+def _sliced_fits(vec_col: str, dim: int | None, *sides: DataFrame) -> bool:
+    """True iff every one of `sides` (the (id, v) frames an exact path
+    would broadcast) fits Spark's own broadcast budget,
+    `spark.sql.autoBroadcastJoinThreshold`, priced as an upper bound on its
+    real payload: the plan's row upper bound (`_row_bounds`) x the probed
+    bytes per row. A budget <= 0 or an unpriceable side answers False
+    before any job; `dim` is probed (one single-partition job) only when
+    the caller has not already probed it."""
+    spark = sides[0].sparkSession
+    budget = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+    if budget <= 0:
+        return False
+    if dim is None:
+        dim = _vec_dim(sides[0], vec_col)
+        if dim is None:  # no vector on the sliced side: nothing to score
+            return False
+    prices = []
+    for side in sides:
+        rb = _row_bytes(side, vec_col, dim)
+        bounds = _row_bounds(side, rb)
+        prices.append(None if bounds is None else int(bounds[1] * rb))
+    route = "sliced" if all(p is not None and p <= budget for p in prices) else "spread"
+    _log.info("exact ANN decision: %s", {"gate": "sliced_broadcast", "price_bytes": prices,
+                                          "threshold": budget, "route": route})
+    return route == "sliced"
+
+
+def _sliced(df: DataFrame, id_col: str) -> DataFrame:
+    """`df` spread over the cluster's cores WITHOUT an exchange: a
+    `spark.range` of P = defaultParallelism one-row partitions drives a
+    broadcast hash join that hands each partition the rows whose slice
+    pmod(xxhash64(id), P) is its own. The id is hashed so that ids sharing
+    a stride (all multiples of P, say) still reach every slice."""
+    spark = df.sparkSession
+    p = spark.sparkContext.defaultParallelism
+    return (
+        spark.range(0, p, 1, p).toDF("__fz_slice")
+        .join(F.broadcast(df), F.expr(f"__fz_slice = pmod(xxhash64({id_col}), {p})"))
+        .drop("__fz_slice")
+    )
 
 
 def cosine_pairs(
@@ -232,24 +323,28 @@ def cosine_pairs(
 
     strategy:
     - "exact": brute-force all-pairs (the self-join plans a BNLJ) —
-      correct baseline, quadratic; right for small/re-rank inputs.
+      correct baseline, quadratic; right for small/re-rank inputs. Under
+      the broadcast budget it takes the range-sliced route (module
+      docstring) and shuffles nothing.
     - "lsh": hyperplane-LSH bucket join + exact cosine verification —
       precision 1.0, recall < 1 (pinned >= 0.95 at min_cosine 0.4 with the
       default 16 planes / 8 bands in tests) — the 100 TB path.
     - "auto" (default): switches to LSH above `auto_threshold` rows — for
       two-table calls, when EITHER side exceeds it — where the exact BNLJ
       becomes a scale-killer; below it, exact. Sizing is plan-stats-first
-      (`_exceeds_rows`): inputs whose optimizer statistics are confidently
-      above/below the threshold route WITHOUT any job; only gray-zone or
-      unknown-stats plans pay a (memoized) count. The routing decision is
+      (`_exceeds_rows`): inputs whose optimizer statistics bound their
+      rows above or below the threshold route without a count; only plans
+      the bounds leave undecided pay a (memoized) count. The routing decision is
       logged (logger "fozzie_spark.ann") so the recall change is visible;
       pass strategy="exact" to opt out.
     """
     if strategy not in ("exact", "lsh", "auto"):
         raise ValueError(f"unknown strategy {strategy!r}")
+    dim = None
     if strategy == "auto":
-        rb, empty = _vec_row_bytes(df, vec_col)
-        big = (not empty) and _exceeds_rows(df, auto_threshold, row_bytes=rb)
+        dim = _vec_dim(df, vec_col)
+        big = dim is not None and _exceeds_rows(
+            df, auto_threshold, row_bytes=_row_bytes(df, vec_col, dim))
         if not big and other is not None:
             rb2, empty2 = _vec_row_bytes(other, vec_col)
             big = (not empty2) and _exceeds_rows(other, auto_threshold, row_bytes=rb2)
@@ -263,12 +358,16 @@ def cosine_pairs(
         return lsh_cosine_pairs(
             df, id_col, vec_col, min_cosine, n_planes, bands, seed, other=other
         )
-    a = _spread_small(_vectors(df, id_col, vec_col).toDF("id1", "v1")).withColumn(
-        "__fz_na", F.expr(_norm("v1"))
-    )
-    b = _vectors(df if other is None else other, id_col, vec_col).selectExpr(
-        "id AS id2", "v AS v2", f"{_norm('v')} AS __fz_nb"
-    )
+    a = _vectors(df, id_col, vec_col)
+    b = a if other is None else _vectors(other, id_col, vec_col)
+    sliced = _sliced_fits("v", dim, *((a,) if other is None else (a, b)))
+    a = a.toDF("id1", "v1")
+    b = b.selectExpr("id AS id2", "v AS v2", f"{_norm('v')} AS __fz_nb")
+    if sliced:
+        a, b = _sliced(a, "id1"), F.broadcast(b)
+    else:
+        a = _spread_small(a)
+    a = a.withColumn("__fz_na", F.expr(_norm("v1")))
     pairs = a.join(b, F.expr("id1 < id2")) if other is None else a.crossJoin(b)
     return (
         pairs.withColumn("cosine", F.expr(_cosine_from_norms("v1", "v2", "__fz_na", "__fz_nb")))
@@ -295,8 +394,10 @@ def cosine_topk(
 
     Deterministic tie-break: (cosine desc, neighbor_id asc).
 
-    strategy="exact": brute force — the probe side is usually small, so
-    Catalyst broadcasts it and streams the corpus once; exact but O(q x n).
+    strategy="exact": brute force, exact but O(q x n). Under the broadcast
+    budget both sides are broadcast and the probes sliced over the cores
+    (range-sliced route, module docstring); over it, the probe side is
+    usually small, so Catalyst broadcasts it and streams the corpus once.
     strategy="lsh": candidates restricted to corpus vectors sharing >= 1
     signature band with the query (equi-join, IVF-style bucket probe), then
     exact cosine + rank over candidates only — approximate; the
@@ -322,9 +423,11 @@ def cosine_topk(
     """
     if strategy not in ("exact", "lsh", "auto"):
         raise ValueError(f"unknown strategy {strategy!r}")
+    probed = dim
     if strategy == "auto":
-        rb, empty = _vec_row_bytes(queries, vec_col)
-        big = (not empty) and _exceeds_rows(queries, auto_threshold, row_bytes=rb)
+        probed = _vec_dim(queries, vec_col)
+        big = probed is not None and _exceeds_rows(
+            queries, auto_threshold, row_bytes=_row_bytes(queries, vec_col, probed))
         strategy = "lsh" if big else "exact"
         _log.warning(
             "cosine_topk auto routed to %s (probe threshold=%d)%s",
@@ -338,9 +441,12 @@ def cosine_topk(
         scored = _with_cosine(pairs, "query_id", "neighbor_id", qv, cv)
     else:
         q = qv.selectExpr("id AS query_id", "v AS qv", f"{_norm('v')} AS __fz_nq")
-        c = _spread_small(cv.toDF("neighbor_id", "cv")).withColumn(
-            "__fz_nc", F.expr(_norm("cv"))
-        )
+        c = cv.toDF("neighbor_id", "cv")
+        if _sliced_fits("v", probed, qv, cv):
+            q, c = _sliced(q, "query_id"), F.broadcast(c)
+        else:
+            c = _spread_small(c)
+        c = c.withColumn("__fz_nc", F.expr(_norm("cv")))
         scored = q.crossJoin(c).where("query_id != neighbor_id").withColumn(
             "cosine", F.expr(_cosine_from_norms("qv", "cv", "__fz_nq", "__fz_nc"))
         )

@@ -7,9 +7,9 @@ result that reruns its candidate lineage, a candidate self-join whose two
 sides each compute their own prefix aggregate, a gram document-frequency
 table computed for an uncapped index that filters nothing, a shuffle on
 the ER tiny route past its cached profile, an aggregate or hash shuffle
-keyed on an array column, one Python UDF evaluated in more than one
-ArrowEvalPython node, missing whole-stage codegen, full-column parquet
-scans).
+keyed on an array column, a shuffle that moves an array column, one
+Python UDF evaluated in more than one ArrowEvalPython node, missing
+whole-stage codegen, full-column parquet scans).
 
     python scripts/explain_audit.py [sf_dir]
 """
@@ -76,32 +76,52 @@ def _repeated_udfs(plan: str) -> list[str]:
     return [f"{n}#{i}" for (n, i), c in seen.items() if c > 1]
 
 
-def _array_keyed(plan) -> list[str]:
-    """Names of the aggregates and hash-partitioned shuffles in the JVM
-    physical `plan` whose keys include an array-typed column: such a key
-    hashes and compares the whole array per row, and moves it through the
-    exchange."""
-    def seq(s):
-        return [s.apply(i) for i in range(s.size())]
+def _seq(s) -> list:
+    """A Scala Seq as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
 
-    hits, stack = [], [plan]
+
+def _nodes(plan):
+    """The operators of the JVM physical `plan`, read through adaptive
+    plans and their query stages."""
+    stack = [plan]
     while stack:
         node = stack.pop()
         name = node.nodeName()
         if name == "AdaptiveSparkPlan" or name.endswith("QueryStage"):
             stack.append(node.executedPlan() if name == "AdaptiveSparkPlan" else node.plan())
             continue
+        yield node
+        stack.extend(_seq(node.children()))
+
+
+def _array_keyed(plan) -> list[str]:
+    """Names of the aggregates and hash-partitioned shuffles in the JVM
+    physical `plan` whose keys include an array-typed column: such a key
+    hashes and compares the whole array per row, and moves it through the
+    exchange."""
+    hits = []
+    for node in _nodes(plan):
+        name = node.nodeName()
         keys = []
         if name.endswith("Aggregate"):
-            keys = seq(node.groupingExpressions())
+            keys = _seq(node.groupingExpressions())
         elif name == "Exchange":
             part = node.outputPartitioning()
             if part.getClass().getSimpleName() == "HashPartitioning":
-                keys = seq(part.expressions())
+                keys = _seq(part.expressions())
         if any(k.dataType().typeName() == "array" for k in keys):
             hits.append(name)
-        stack.extend(seq(node.children()))
     return hits
+
+
+def _vector_exchanges(plan) -> list[str]:
+    """Names of the shuffle exchanges in the JVM physical `plan` whose
+    output carries an array column: each copies the arrays themselves
+    through the shuffle (a broadcast is named BroadcastExchange and is not
+    counted)."""
+    return [n.nodeName() for n in _nodes(plan) if n.nodeName() == "Exchange" and any(
+        a.dataType().typeName() == "array" for a in _seq(n.output()))]
 
 
 def audit(name: str, df, allow_bnlj: bool = False, lineage_cut: bool = False,
@@ -111,6 +131,8 @@ def audit(name: str, df, allow_bnlj: bool = False, lineage_cut: bool = False,
     flags = []
     if _array_keyed(jplan):
         flags.append("ArrayGroupingKey")
+    if _vector_exchanges(jplan):
+        flags.append("VectorExchange")
     if _repeated_udfs(plan):
         flags.append("RepeatedArrowEval")
     if tiny and any(_SHUFFLE.search(ln) for ln in _outside_caches(plan)):
@@ -219,6 +241,19 @@ def main() -> int:
     results.append(audit(
         "cosine_topk (lsh)",
         ann.cosine_topk(probes, emb, "vec_id", "v", k=10, strategy="lsh"),
+    ))
+    # the exact paths on inputs under the broadcast budget: both sides
+    # broadcast into a nested-loop join sliced by a range (the BNLJ is the
+    # intended plan) and no vector crosses a shuffle
+    results.append(audit(
+        "cosine_topk (exact)",
+        ann.cosine_topk(probes, emb, "vec_id", "v", k=10, strategy="exact"),
+        allow_bnlj=True,
+    ))
+    results.append(audit(
+        "cosine_pairs (exact)",
+        ann.cosine_pairs(emb, "vec_id", "v", min_cosine=0.4, strategy="exact"),
+        allow_bnlj=True,
     ))
     results.append(audit(
         "ivf_topk",

@@ -497,3 +497,144 @@ def test_spread_small_keeps_enough_partitions(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("fz_plan_partitions")) == []
+
+
+# ---- exact route: range-sliced broadcast join -----------------------------
+
+_EXACT_RUNS = {
+    "topk": lambda e: ann.cosine_topk(e.where(F.col("vec_id") < 60), e, "vec_id",
+                                      "embedding", k=5, strategy="exact"),
+    "pairs_self": lambda e: ann.cosine_pairs(e, "vec_id", "embedding", min_cosine=0.3,
+                                             strategy="exact"),
+    "pairs_two_table": lambda e: ann.cosine_pairs(
+        e.where(F.col("vec_id") < 200), "vec_id", "embedding", min_cosine=0.3,
+        other=e.where(F.col("vec_id") >= 100), strategy="exact"),
+}
+
+
+def _rows_hex(df):
+    """Sorted output rows, each float by its exact bits."""
+    return sorted(tuple(v.hex() if isinstance(v, float) else v for v in r)
+                  for r in df.collect())
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("name", list(_EXACT_RUNS))
+def test_sliced_route_equals_spread_route(spark, emb, name):
+    # under the broadcast budget the exact paths take the range-sliced
+    # plan; with broadcasting off they take the spread plan. Same rows,
+    # same cosine bits.
+    run = _EXACT_RUNS[name]
+    sliced = run(emb)
+    got = _rows_hex(sliced)
+    assert "pmod(xxhash64" in _plan(sliced)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        spread = run(emb)
+        want = _rows_hex(spread)
+        assert "pmod(xxhash64" not in _plan(spread)
+    finally:
+        spark.conf.set(key, old)
+    assert got and got == want
+
+
+@pytest.mark.parametrize("name", list(_EXACT_RUNS))
+def test_sliced_plan_shuffles_no_vector(spark, emb, name):
+    # no shuffle exchange carries an array column, and the join stage runs
+    # one task per slice
+    sc = spark.sparkContext
+    df = _EXACT_RUNS[name](emb)
+    group = f"fz_sliced_{name}"
+    sc.setJobGroup(group, "sliced exact route")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jplan = df._jdf.queryExecution().executedPlan()
+    assert "pmod(xxhash64" in jplan.toString()
+    assert _audit()._vector_exchanges(jplan) == []
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(s) for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds]
+    assert sc.defaultParallelism in [s.numTasks for s in stages if s is not None]
+
+
+def test_sliced_spreads_ids_sharing_a_stride(spark):
+    # every id a multiple of P: pmod(id, P) would send them all to slice
+    # 0; the hashed slice key reaches every slice, each row exactly once
+    p = spark.sparkContext.defaultParallelism
+    ids = list(range(0, 64 * p, p))
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    got = ann._sliced(df, "id").selectExpr(
+        "id", "spark_partition_id() AS part", f"pmod(xxhash64(id), {p}) AS slice"
+    ).collect()
+    assert sorted(r["id"] for r in got) == ids
+    assert all(r["part"] == r["slice"] for r in got)
+    assert {r["part"] for r in got} == set(range(p))
+
+
+def _computed(spark, n):
+    """`n` rows of 64-dim vectors computed in the plan: Catalyst prices
+    each array at its element's default width (8 bytes), not at 512."""
+    return spark.range(n).selectExpr(
+        "id AS vec_id", "transform(sequence(1, 64), x -> CAST(x + id AS DOUBLE)) AS embedding"
+    )
+
+
+def test_underpriced_arrays_keep_spread_route(spark):
+    # 2,000 computed vectors: Catalyst's own size fits a 256 KB budget,
+    # their real payload (~1 MB) does not, so the exact path keeps the
+    # spread plan; under the default budget it slices
+    comp = _computed(spark, 2000)
+    assert "pmod(xxhash64" in _plan(ann.cosine_pairs(comp, "vec_id", "embedding",
+                                                     strategy="exact"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(256 << 10))
+    try:
+        for df in (
+            ann.cosine_pairs(comp, "vec_id", "embedding", strategy="exact"),
+            ann.cosine_topk(comp.where("vec_id < 10"), comp, "vec_id", "embedding",
+                            k=3, strategy="exact"),
+        ):
+            assert "pmod(xxhash64" not in _plan(df)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_topk_auto_routes_computed_probe_set_to_lsh(spark, emb):
+    # 50k computed probes: Catalyst's default array width must not make
+    # them look like ~2k rows, which would plan 50k x corpus exactly
+    probes = _computed(spark, 50_000)
+    assert ann._exceeds_rows(probes, 10_000, row_bytes=64 * 8 + 16) is True
+    routed = ann.cosine_topk(probes, emb, "vec_id", "embedding", k=3)
+    plan = _plan(routed)
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
+
+
+def test_topk_auto_parquet_probes_route_without_count(spark, monkeypatch, tmp_path):
+    # a 100-probe parquet frame routes to exact, and its exact plan to the
+    # sliced route, on plan statistics alone: no count job. The file is
+    # read from a copy, so the cached `emb` fixture cannot stand in for it.
+    import shutil
+
+    from pyspark.sql import DataFrame
+
+    path = str(tmp_path / "embeddings.parquet")
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", path)
+    pq = spark.read.parquet(path).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+    def _boom(self):
+        raise AssertionError("count job ran despite known plan stats")
+
+    monkeypatch.setattr(DataFrame, "count", _boom)
+    monkeypatch.setattr(type(pq), "count", _boom)  # see test_auto_routing_plan_stats_skip_count
+    out = ann.cosine_topk(pq.where(F.col("vec_id") < 100), pq, "vec_id", "embedding", k=10)
+    assert "pmod(xxhash64" in _plan(out)
